@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the executed physical plan of named queries (all of
   * them with no args) — the `.explain`-driven iteration loop for plan
@@ -10,22 +9,15 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the engine's injected rules shape the plans being read — without
-      // this the printed plan is NOT the plan Bench/Verify execute (r16:
-      // plan evidence for the optimizer-rule rewrites depends on it).
-      // SPARK_GRAFT_EXPLAIN_EXCLUDE (comma-separated rule names) feeds
-      // spark.sql.optimizer.excludedRules for before/after captures.
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    // the factory's injected rules shape the plans being read, so the
+    // printed plan is the plan Bench/Verify execute (r16: plan evidence for
+    // the optimizer-rule rewrites depends on it).
+    // SPARK_GRAFT_EXPLAIN_EXCLUDE (comma-separated rule names) feeds
+    // spark.sql.optimizer.excludedRules for before/after captures.
+    val spark = GraftSession("local[8]", 8)
     sys.env.get("SPARK_GRAFT_EXPLAIN_EXCLUDE").foreach { ex =>
       spark.conf.set("spark.sql.optimizer.excludedRules", ex)
     }
-    spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
       println(s"\n===== $name =====")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Builds a K× (default 10×) replica of ALL test tables with CONSISTENT
@@ -28,13 +28,7 @@ object ScaleData {
     val k = sys.env.getOrElse("SPARK_GRAFT_SCALE_K", "10").toInt
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/tmp/graft-sf1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(s"local[$cpus]", cpus.toInt)
 
     def span(df: DataFrame, key: String): Long =
       df.agg(max(col(key).cast("long"))).head.getLong(0) + 1

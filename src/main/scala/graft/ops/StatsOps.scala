@@ -1,11 +1,21 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
-/** Distributed order statistics built from window primitives; property-
-  * proven against their defining inequalities in `PropertiesSpec`.
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
+
+/** Distributed order statistics: a window-built weighted median, and the
+  * eager ranks, running sums, exact percentiles and Spearman sums of the
+  * [[OrderedRun]] engine. Property-proven against their defining
+  * inequalities in `PropertiesSpec`.
   */
 object StatsOps {
 
@@ -29,67 +39,150 @@ object StatsOps {
       .agg(min(value).as("wmedian"), max("tw").as("total_weight"))
   }
 
-  /** Per-group `row_number` WITHOUT a per-group window: range-partition on
-    * (group, order...), sort within partitions, count rows per
-    * (partition, group) in one cheap pass (a partitions×groups-sized table
-    * collected to the driver), then assign rank = cross-partition offset +
-    * in-partition position. Identical output contract to
-    * `row_number().over(Window.partitionBy(group).orderBy(order...))`, but
-    * parallelism equals the range-partition count (cluster-sized), never
-    * the group cardinality — the window form runs as at most |groups|
-    * tasks with a full per-group sort, a hard ceiling when the group key
-    * has constant cardinality (VERDICT r9: stats_spearman's 3-value key).
-    *
-    * `order` must be a total order within each group (no ties) or the
-    * assignment is partition-layout-dependent. The driver-side offset
-    * table is bounded by partitions × |groups| — only safe for
-    * constant-cardinality groups, which is exactly the case where the
-    * window form breaks.
-    */
-  def groupedRowNumber(df: DataFrame, group: String, order: Seq[String],
-                       out: String, numPartitions: Int = 32): DataFrame =
-    groupedScan(df, group, order, None, out, numPartitions)
-
-  /** [[groupedRowNumber]] that ALSO appends each row's group total
-    * (`count(*) over (partition by group)`) — r17, guide §2.4/§6: the
-    * ntile/decile/pct-rank consumers all joined a separately scanned
-    * per-group count aggregate back onto the ranked rows, one extra
-    * input scan + exchange + broadcast join for numbers the engine's
-    * pass 1 ALREADY collects (the offset table's column sums). The
-    * totals ride the same broadcast as the offsets and the same codegen
-    * projection as the rank — zero extra passes.
-    */
-  def groupedRowNumberWithCount(df: DataFrame, group: String, order: Seq[String],
-                                outRn: String, outN: String,
-                                numPartitions: Int = 32): DataFrame =
-    groupedScan(df, group, order, None, outRn, numPartitions, Some(outN))
-
-  /** Per-group running SUM (inclusive of the current row) along `order` —
-    * the scalable form of `sum(value).over(Window.partitionBy(group)
-    * .orderBy(order...).rowsBetween(unboundedPreceding, currentRow))` for
-    * constant-cardinality groups. Same engine and contracts as
-    * [[groupedRowNumber]]; `valueCol` must be LongType and non-null.
-    */
-  def groupedRunningSum(df: DataFrame, group: String, order: Seq[String],
-                        valueCol: String, out: String,
-                        numPartitions: Int = 32): DataFrame =
-    groupedScan(df, group, order, Some(valueCol), out, numPartitions)
-
-  /** Shared engine: range-partition + in-partition sort, per-(partition,
-    * group) weight totals to the driver (partitions × |groups| entries),
-    * then a second pass assigns offset + in-partition prefix. `weightCol`
-    * None → weight 1 per row (row_number); Some(c) → running sum of c.
-    * Note the range shuffle's map output is written once and REUSED by
-    * both passes (Spark skips the finished shuffle stage), so the input
-    * lineage is not recomputed — only the in-partition sort runs twice.
-    */
-  /** Hard ceiling on distinct groups the scan engine accepts. The driver
-    * holds a partitions × |groups| offset table; the engine exists FOR
+  /** Hard ceiling on distinct groups the [[OrderedRun]] engine accepts.
+    * The driver holds a partitions × |groups| table; the engine exists FOR
     * constant-cardinality groups (where the window form degenerates), so
     * a high-cardinality key here is a caller bug — without this guard it
     * OOMs the driver instead of failing loudly (VERDICT r10).
     */
   val MaxScanGroups: Int = 10000
+
+  /** The ordered-run engine behind the eager entry points below — the
+    * shape of Kohn, Leis & Neumann (SIGMOD 2021): ranks, percentiles and
+    * rank correlation from partition, sort, and a per-group prefix or
+    * aggregate.
+    *
+    * `df` is range-partitioned on (group, order...) into the session's
+    * `spark.sql.shuffle.partitions` — passed explicitly, so AQE never
+    * coalesces the exchange and the layout stays predictable — and sorted
+    * within partitions. Parallelism is the partition count, never the
+    * group cardinality: the window form runs as at most |groups| tasks
+    * with a full per-group sort, a hard ceiling for a constant-cardinality
+    * key (VERDICT r9: stats_spearman's 3-value key).
+    *
+    * Pass 1 (at construction) folds each partition's rows into one
+    * [[RunAcc]] per group and collects them. The [[MaxScanGroups]] guard
+    * fires executor-side, BEFORE a giant map ships (a range partition
+    * sees a superset of the global group count only when groups
+    * interleave, so that bound is conservative but loud and early), and
+    * again on the driver. From the accumulators' weights come `offsets(p)`
+    * — each group's weight in the partitions before p — and `totals`.
+    *
+    * Both passes run over the INTERNAL row RDD: `.rdd` would convert every
+    * row to an external Row, a per-row tax on a path whose point is a
+    * cheap linear scan. `toRdd` is a lazy val on the QueryExecution, so
+    * [[prefixPass]] shares pass 1's lineage: the range shuffle's map
+    * output is written once and reused (Spark skips the finished stage),
+    * and only the in-partition sort and the scan run per pass.
+    */
+  private final class OrderedRun[A <: RunAcc](df: DataFrame, group: String,
+                                              order: Seq[Column], what: String)
+                                             (newAcc: () => A) {
+    private val rows: RDD[InternalRow] = {
+      val keys = col(group) +: order
+      val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+      df.repartitionByRange(n, keys: _*).sortWithinPartitions(keys: _*)
+        .queryExecution.toRdd
+    }
+    private val keyOf: InternalRow => Any = {
+      val (gi, f) = (df.schema.fieldIndex(group), df.schema(group))
+      val read = InternalRow.getAccessor(f.dataType, f.nullable)
+      r => read(r, gi)
+    }
+
+    // closures capture these locals, never the engine itself
+    val accs: Array[Map[Any, A]] = {
+      val (key, mk, name, g) = (keyOf, newAcc, what, group)
+      rows.mapPartitionsWithIndex { (p, it) =>
+        val m = mutable.HashMap.empty[Any, A]
+        it.foreach { r =>
+          accFor(m, key(r), mk).add(r)
+          require(m.size <= MaxScanGroups,
+            s"$name on '$g': partition $p holds > $MaxScanGroups distinct " +
+              "groups — this engine is for constant-cardinality group keys (the " +
+              "driver offset table is partitions × |groups|); use a window or a " +
+              "two-phase aggregate for high-cardinality keys")
+        }
+        Iterator.single(m.toMap)
+      }.collect()
+    }
+    require(accs.iterator.flatMap(_.keysIterator).toSet.size <= MaxScanGroups,
+      s"$what on '$group': > $MaxScanGroups distinct groups across partitions — " +
+        "constant-cardinality keys only")
+    private val cumulative = accs.scanLeft(Map.empty[Any, Long]) { (run, m) =>
+      m.foldLeft(run) { case (t, (g, a)) => t.updated(g, t.getOrElse(g, 0L) + a.weight) }
+    }
+    val offsets: Array[Map[Any, Long]] = cumulative.init
+    val totals: Map[Any, Long] = cumulative.last
+
+    /** Pass 2 over the same shuffle output: `f` maps one partition's
+      * sorted rows, ranking each with the partition's [[Prefix]].
+      */
+    def prefixPass[T: ClassTag](f: (Prefix[A], Iterator[InternalRow]) => Iterator[T]): RDD[T] = {
+      val bc = df.sparkSession.sparkContext.broadcast(offsets)
+      val (key, mk) = (keyOf, newAcc)
+      rows.mapPartitionsWithIndex((p, it) => f(new Prefix(bc.value(p), key, mk), it))
+    }
+  }
+
+  /** Pass-2 state of one partition: `apply(r)` replays pass 1's
+    * accumulation and returns r's inclusive weight prefix within its
+    * group across ALL partitions (the group's offset + the in-partition
+    * prefix). `group` is the key of the row last ranked — buffer-backed,
+    * so copy it with [[stableKey]] to keep it.
+    */
+  private final class Prefix[A <: RunAcc](offset: Map[Any, Long],
+                                          key: InternalRow => Any, newAcc: () => A) {
+    private val local = mutable.HashMap.empty[Any, A]
+    var group: Any = _
+    def apply(r: InternalRow): Long = {
+      group = key(r)
+      val a = accFor(local, group, newAcc)
+      a.add(r)
+      offset.getOrElse(group, 0L) + a.weight
+    }
+  }
+
+  /** Pass-1 state of one (partition, group) run. `weight` is the run's
+    * weight so far: the engine's offsets and totals are sums of it.
+    */
+  private[ops] trait RunAcc extends Serializable {
+    def add(r: InternalRow): Unit
+    def weight: Long
+  }
+
+  /** Row count (`wi` < 0), or the sum of the non-null LongType column at `wi`. */
+  private final class WeightAcc(wi: Int) extends RunAcc {
+    var weight = 0L
+    def add(r: InternalRow): Unit = weight += (if (wi < 0) 1L else r.getLong(wi))
+  }
+
+  /** Spearman's run state: n, and the exact Σa and Σa² of a = rq − the
+    * row's in-partition position (rq read from column `ri`). The Long
+    * fast paths spill into BigInt before they can wrap: a sum once it
+    * reaches 2⁶², and a² is taken in BigInt whenever |a| > 2³¹, where the
+    * Long product itself could overflow.
+    */
+  private[ops] final class SpearmanAcc(ri: Int) extends RunAcc {
+    var n = 0L
+    private var sa, sq = 0L
+    private var saBig, sqBig = BigInt(0)
+    def weight: Long = n
+    def add(r: InternalRow): Unit = add(r.getLong(ri) - (n + 1))
+    def add(a: Long): Unit = {
+      n += 1
+      if (a > SquareSafe || a < -SquareSafe) { saBig += a; sqBig += BigInt(a) * a }
+      else { // |sa| < 2⁶² and sq < 2⁶² before, a² ≤ 2⁶²: neither add wraps
+        sa += a; sq += a * a
+        if (sa >= Spill || sa <= -Spill) { saBig += sa; sa = 0L }
+        if (sq >= Spill) { sqBig += sq; sq = 0L }
+      }
+    }
+    def saTotal: BigInt = saBig + sa
+    def sqTotal: BigInt = sqBig + sq
+  }
+  private val SquareSafe = 1L << 31
+  private val Spill = 1L << 62
 
   /** Stable copy of a group-key value read from a reused InternalRow
     * buffer — UnsafeRow-backed UTF8Strings point into the row's bytes and
@@ -100,229 +193,144 @@ object StatsOps {
     case x => x
   }
 
-  /** Accumulate `w` under (possibly buffer-backed) key `g`, copying the
-    * key only when it is first inserted (updates reuse the stored key).
+  /** `m`'s accumulator for (possibly buffer-backed) key `g`, created and
+    * stored under a stable key copy on first sight.
     */
-  private def bump(m: scala.collection.mutable.Map[Any, Long], g: Any, w: Long): Unit =
-    m.get(g) match {
-      case Some(prev) => m(g) = prev + w
-      case None => m(stableKey(g)) = w
-    }
+  private def accFor[A](m: mutable.HashMap[Any, A], g: Any, newAcc: () => A): A =
+    m.getOrElse(g, { val a = newAcc(); m(stableKey(g)) = a; a })
 
-  private def groupedScan(df: DataFrame, group: String, order: Seq[String],
-                          weightCol: Option[String], out: String,
-                          numPartitions: Int,
-                          totalOut: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val keys = (group +: order).map(col)
-    val sorted = df.repartitionByRange(numPartitions, keys: _*)
-      .sortWithinPartitions(keys: _*)
-    val gi = sorted.schema.fieldIndex(group)
-    val gType = sorted.schema(group).dataType
-    val gAcc = InternalRow.getAccessor(gType, sorted.schema(group).nullable)
-    val wi = weightCol.map(sorted.schema.fieldIndex)
-    def weightOf(r: InternalRow): Long =
-      wi.map(r.getLong).getOrElse(1L)
-    // Both passes run over the INTERNAL row RDD: `sorted.rdd` would
-    // deserialize every row to an external Row (and the output would be
-    // converted back) — a per-row tax on a path whose entire point is a
-    // cheap linear scan (guide §1.2: per-task work). `toRdd` is a lazy
-    // val on the QueryExecution, so the two passes share one RDD lineage
-    // and the range shuffle's map output is written once and reused
-    // (Spark skips the finished stage); only the in-partition sort and
-    // this scan run per pass.
-    val internal = sorted.queryExecution.toRdd
-    // pass 1: per-(partition, group) totals — tiny by construction; the
-    // cardinality guard fires executor-side, BEFORE a giant map ships to
-    // the driver (a range partition sees a superset of the global group
-    // count only when groups interleave, so the per-partition bound is
-    // conservative but the failure is loud and early)
-    val counts: Array[(Int, Map[Any, Long])] = internal
-      .mapPartitionsWithIndex { (p, it) =>
-        val m = scala.collection.mutable.Map.empty[Any, Long]
-        it.foreach { r =>
-          bump(m, gAcc(r, gi), weightOf(r))
-          require(m.size <= MaxScanGroups,
-            s"groupedScan on '$group': partition $p holds > $MaxScanGroups distinct " +
-              "groups — this engine is for constant-cardinality group keys (the " +
-              "driver offset table is partitions × |groups|); use a window or a " +
-              "two-phase aggregate for high-cardinality keys")
-        }
-        Iterator((p, m.toMap))
-      }.collect()
-    require(counts.iterator.flatMap(_._2.keysIterator).toSet.size <= MaxScanGroups,
-      s"groupedScan on '$group': > $MaxScanGroups distinct groups across partitions — " +
-        "constant-cardinality keys only")
-    // cumulative offsets: weight of group g in partitions before p
-    val byPart = counts.toMap
-    val nPart = counts.map(_._1).foldLeft(-1)(math.max) + 1
-    val offsets: Array[Map[Any, Long]] = {
-      val run = scala.collection.mutable.Map.empty[Any, Long]
-      (0 until nPart).map { p =>
-        val snap = run.toMap
-        byPart.getOrElse(p, Map.empty).foreach { case (g, c) =>
-          run(g) = run.getOrElse(g, 0L) + c
-        }
-        snap
-      }.toArray
-    }
-    val schema = StructType(sorted.schema.fields ++
-      (StructField(out, LongType, nullable = false) +:
-        totalOut.map(StructField(_, LongType, nullable = false)).toSeq))
-    val bc = sorted.sparkSession.sparkContext.broadcast(offsets)
-    // per-group totals (= the offset table's column sums) for the
-    // WithCount variant — already driver-resident from pass 1
-    val bcTotals = totalOut.map { _ =>
-      val t = counts.iterator.flatMap(_._2).toSeq.groupBy(_._1)
-        .map { case (g, xs) => g -> xs.map(_._2).sum }
-      sorted.sparkSession.sparkContext.broadcast(t)
-    }
-    // pass 2: append rank = cross-partition offset + in-partition prefix
-    // (and, for WithCount, the group total from the same pass-1 data).
-    // The appended columns ride a JoinedRow through one codegen'd
-    // UnsafeProjection — no external-Row construction; the result
-    // re-enters SQL through the internal-row seam with zero conversion.
-    val nAppended = 1 + totalOut.size
-    val rows = internal.mapPartitionsWithIndex { (p, it) =>
-      val local = scala.collection.mutable.Map.empty[Any, Long]
-      val base = bc.value(p)
+  /** A small driver-built result: one row per group, the key then
+    * `cellsOf(g)`. Groups sort by their string form with null first (null
+    * keys are legal — the built-in percentile aggregates a null group,
+    * ADVICE r11), and each Catalyst key (UTF8String etc.) is converted
+    * once to its external form.
+    */
+  private def groupRows(spark: SparkSession, key: StructField, groups: Iterable[Any],
+                        cells: Seq[StructField])(cellsOf: Any => Seq[Any]): DataFrame = {
+    val toScala = CatalystTypeConverters.createToScalaConverter(key.dataType)
+    val rows = groups.toSeq.sortBy(g => Option(g).fold("")(_.toString))
+      .map(g => Row.fromSeq(toScala(g) +: cellsOf(g)))
+    spark.createDataFrame(rows.asJava, StructType(key +: cells))
+  }
+
+  /** Per-group `row_number` WITHOUT a per-group window: the
+    * [[OrderedRun]] engine's pass 1 counts rows per (partition, group),
+    * then each row's rank = cross-partition offset + in-partition
+    * position. Identical output contract to
+    * `row_number().over(Window.partitionBy(group).orderBy(order...))`.
+    *
+    * `order` must be a total order within each group (no ties) or the
+    * assignment is partition-layout-dependent. Constant-cardinality group
+    * keys only ([[MaxScanGroups]]) — exactly the case where the window
+    * form breaks.
+    */
+  def groupedRowNumber(df: DataFrame, group: String, order: Seq[String],
+                       out: String): DataFrame =
+    prefixColumns(df, group, order, None, out, None)
+
+  /** [[groupedRowNumber]] that ALSO appends each row's group total
+    * (`count(*) over (partition by group)`) — r17, guide §2.4/§6: the
+    * ntile/decile/pct-rank consumers all joined a separately scanned
+    * per-group count aggregate back onto the ranked rows, one extra
+    * input scan + exchange + broadcast join for numbers the engine's
+    * pass 1 ALREADY collects (its totals). The totals ride the same
+    * codegen projection as the rank — zero extra passes.
+    */
+  def groupedRowNumberWithCount(df: DataFrame, group: String, order: Seq[String],
+                                outRn: String, outN: String): DataFrame =
+    prefixColumns(df, group, order, None, outRn, Some(outN))
+
+  /** Per-group running SUM (inclusive of the current row) along `order` —
+    * the scalable form of `sum(value).over(Window.partitionBy(group)
+    * .orderBy(order...).rowsBetween(unboundedPreceding, currentRow))` for
+    * constant-cardinality groups. Same engine and contracts as
+    * [[groupedRowNumber]]; `valueCol` must be LongType and non-null.
+    */
+  def groupedRunningSum(df: DataFrame, group: String, order: Seq[String],
+                        valueCol: String, out: String): DataFrame =
+    prefixColumns(df, group, order, Some(valueCol), out, None)
+
+  /** The prefix projection behind the three entry points above: pass 2
+    * appends each row's weight prefix (weight 1 per row, or `weightCol`)
+    * and, with `totalOut`, its group total from pass 1. The appended
+    * columns ride a JoinedRow through one codegen'd UnsafeProjection — no
+    * external-Row construction; the result re-enters SQL through the
+    * internal-row seam with zero conversion.
+    */
+  private def prefixColumns(df: DataFrame, group: String, order: Seq[String],
+                            weightCol: Option[String], out: String,
+                            totalOut: Option[String]): DataFrame = {
+    val wi = weightCol.fold(-1)(df.schema.fieldIndex)
+    val run = new OrderedRun(df, group, order.map(col),
+      if (weightCol.isEmpty) "groupedRowNumber" else "groupedRunningSum")(
+      () => new WeightAcc(wi))
+    val schema = StructType(df.schema.fields ++
+      (out +: totalOut.toSeq).map(StructField(_, LongType, nullable = false)))
+    val bcTotals = totalOut.map(_ => df.sparkSession.sparkContext.broadcast(run.totals))
+    val rows = run.prefixPass { (prefix, it) =>
       val totals = bcTotals.map(_.value)
       val proj = UnsafeProjection.create(schema)
       val joined = new JoinedRow
-      val rank = new GenericInternalRow(nAppended)
+      val appended = new GenericInternalRow(1 + totals.size)
       it.map { r =>
-        val g = gAcc(r, gi)
-        val pos = local.getOrElse(g, 0L) + weightOf(r)
-        bump(local, g, weightOf(r)) // stores a stable key copy on first insert
-        rank.setLong(0, base.getOrElse(g, 0L) + pos)
-        totals.foreach(t => rank.setLong(1, t.getOrElse(g, 0L)))
-        proj(joined(r, rank)): InternalRow
+        appended.setLong(0, prefix(r))
+        totals.foreach(t => appended.setLong(1, t.getOrElse(prefix.group, 0L)))
+        proj(joined(r, appended)): InternalRow
       }
     }
-    org.apache.spark.sql.GraftSqlBridge.internalDf(
-      sorted.sparkSession, rows, schema)
+    org.apache.spark.sql.GraftSqlBridge.internalDf(df.sparkSession, rows, schema)
   }
 
   /** Spearman final stage (r17, guide §1.2/§2.4 — VERDICT r16 item 4):
     * given rows carrying their rank `rqCol` under the FIRST order, compute
     * per group n and sd2 = Σ (rq − rc)² where rc is each row's rank under
-    * `order` — WITHOUT materializing rc. The generic spelling ran a full
-    * second [[groupedRowNumber]] engine (2 in-partition sorts + a rank
-    * projection) and then a hash aggregate over every row; but sd2
-    * telescopes over the engine's own offset algebra: with a_j =
-    * rq_j − localPos_j inside one (partition, group) run and off the
-    * group's cross-partition offset, rc_j = off + localPos_j, so
+    * `order` — WITHOUT materializing rc. sd2 telescopes over the engine's
+    * offset algebra: with a_j = rq_j − localPos_j inside one (partition,
+    * group) run and off the group's cross-partition offset,
+    * rc_j = off + localPos_j, so
     *
     *   Σ_j (rq_j − rc_j)² = Σ a² − 2·off·Σ a + n_p·off².
     *
-    * One range shuffle + ONE sorted linear pass therefore collects just
-    * (n, Σa, Σa²) per (partition, group) — driver metadata bounded like
-    * the scan engine's offset table — and the driver combines the closed
-    * form exactly (BigInt; the executor accumulators batch-spill Longs
-    * into BigInt so no sf overflows them). Replaces: the second engine's
-    * rank-assignment pass (sort + scan + UnsafeProjection), the final
-    * row-level hash aggregate, and its exchange. Same contracts as
-    * [[groupedRowNumber]]: `order` must be total within groups,
-    * constant-cardinality group keys only ([[MaxScanGroups]]).
+    * One range shuffle + ONE sorted linear pass (the engine's pass 1,
+    * with [[SpearmanAcc]] as its accumulator) therefore collects just
+    * (n, Σa, Σa²) per (partition, group), and the driver combines the
+    * closed form in BigInt. Both the executor sums and the combine are
+    * exact for any Long ranks. Same contracts as [[groupedRowNumber]]:
+    * `order` must be total within groups, constant-cardinality group keys
+    * only ([[MaxScanGroups]]).
     *
     * Output: one row per group — (group, n: long, sd2: decimal-exact
     * long, rho: double) with rho replicating the SQL double expression
     * `1.0 − 6.0·sd2 / (n·(n²−1))` operation-for-operation.
     */
   def spearmanAgg(withRq: DataFrame, group: String, order: Seq[String],
-                  rqCol: String, outCols: (String, String, String),
-                  numPartitions: Int = 32): DataFrame = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-    val keys = (group +: order).map(col)
-    val sorted = withRq.repartitionByRange(numPartitions, keys: _*)
-      .sortWithinPartitions(keys: _*)
-    val gi = sorted.schema.fieldIndex(group)
-    val gType = sorted.schema(group).dataType
-    val gAcc = InternalRow.getAccessor(gType, sorted.schema(group).nullable)
-    val ri = sorted.schema.fieldIndex(rqCol)
-    // mutable per-(partition, group) accumulator with Long fast paths
-    // that spill into BigInt well before overflow (Σa² adds ≤ n² per row;
-    // the spill threshold leaves 2⁶² headroom, so no data size can wrap)
-    final class Acc {
-      var n = 0L
-      var sa = 0L // Σ a — |a| ≤ n so a 2⁶² guard bounds it safely
-      var saBig: BigInt = null
-      var sq = 0L // Σ a²
-      var sqBig: BigInt = null
-      def add(a: Long): Unit = {
-        n += 1
-        sa += a
-        if (sa > (1L << 62) || sa < -(1L << 62)) {
-          saBig = (if (saBig == null) BigInt(0) else saBig) + sa; sa = 0L
+                  rqCol: String, outCols: (String, String, String)): DataFrame = {
+    val ri = withRq.schema.fieldIndex(rqCol)
+    val run = new OrderedRun(withRq, group, order.map(col), "spearmanAgg")(
+      () => new SpearmanAcc(ri))
+    val sd2: Map[Any, BigInt] = run.accs.iterator.zip(run.offsets.iterator)
+      .flatMap { case (accs, offs) =>
+        accs.iterator.map { case (g, a) =>
+          val off = BigInt(offs.getOrElse(g, 0L))
+          g -> (a.sqTotal - off * 2 * a.saTotal + off * off * a.n)
         }
-        sq += a * a
-        if (sq > (1L << 62)) {
-          sqBig = (if (sqBig == null) BigInt(0) else sqBig) + sq; sq = 0L
-        }
-      }
-      def saTotal: BigInt = (if (saBig == null) BigInt(0) else saBig) + sa
-      def sqTotal: BigInt = (if (sqBig == null) BigInt(0) else sqBig) + sq
-    }
-    // ONE pass over the sorted internal rows: local position is the
-    // running per-group count, a = rq − localPos
-    val parts: Array[(Int, Map[Any, (Long, BigInt, BigInt)])] =
-      sorted.queryExecution.toRdd.mapPartitionsWithIndex { (p, it) =>
-        val m = scala.collection.mutable.Map.empty[Any, Acc]
-        it.foreach { r =>
-          val g = gAcc(r, gi)
-          val acc = m.get(g) match {
-            case Some(a) => a
-            case None =>
-              val a = new Acc
-              m(stableKey(g)) = a
-              require(m.size <= MaxScanGroups,
-                s"spearmanAgg on '$group': partition $p holds > $MaxScanGroups " +
-                  "distinct groups — constant-cardinality keys only")
-              a
-          }
-          val localPos = acc.n + 1
-          acc.add(r.getLong(ri) - localPos)
-        }
-        Iterator((p, m.map { case (g, a) => g -> (a.n, a.saTotal, a.sqTotal) }.toMap))
-      }.collect()
-    // driver combine: ascending partitions, off = group rows seen so far
-    val run = scala.collection.mutable.Map.empty[Any, Long]
-    val nTot = scala.collection.mutable.LinkedHashMap.empty[Any, Long]
-    val sd2 = scala.collection.mutable.Map.empty[Any, BigInt]
-    parts.sortBy(_._1).foreach { case (_, m) =>
-      m.foreach { case (g, (np, sa, sq)) =>
-        val off = BigInt(run.getOrElse(g, 0L))
-        sd2(g) = sd2.getOrElse(g, BigInt(0)) + (sq - off * 2 * sa + off * off * np)
-        nTot(g) = nTot.getOrElse(g, 0L) + np
-        run(g) = run.getOrElse(g, 0L) + np
-      }
-    }
-    val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToScalaConverter(gType)
+      }.toSeq.groupMapReduce(_._1)(_._2)(_ + _)
     val (nName, sd2Name, rhoName) = outCols
-    val rows = nTot.toSeq
-      .sortBy(kv => Option(kv._1).map(_.toString).getOrElse(""))
-      .map { case (g, n) =>
-        val s = sd2(g)
-        val nD = n.toDouble
-        // exactly the retired SQL spelling's double ops, in its order:
-        // 1.0 − (6.0·CAST(sd2 AS DOUBLE)) / (n · (n·n − 1.0))
-        val rho = 1.0 - 6.0 * s.toDouble / (nD * (nD * nD - 1.0))
-        org.apache.spark.sql.Row(toScala(g), n,
-          if (s.isValidLong) java.lang.Long.valueOf(s.toLong) else null, rho)
-      }
-    val schema = StructType(Seq(
-      sorted.schema(group).copy(),
+    groupRows(withRq.sparkSession, withRq.schema(group), run.totals.keys, Seq(
       StructField(nName, LongType, nullable = false),
       StructField(sd2Name, LongType, nullable = true),
-      StructField(rhoName, DoubleType, nullable = true)))
-    withRq.sparkSession.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
+      StructField(rhoName, DoubleType, nullable = true))) { g =>
+      val (n, s) = (run.totals(g), sd2(g))
+      val nD = n.toDouble
+      // exactly the retired SQL spelling's double ops, in its order:
+      // 1.0 − (6.0·CAST(sd2 AS DOUBLE)) / (n · (n·n − 1.0))
+      Seq(n, if (s.isValidLong) s.toLong else null,
+        1.0 - 6.0 * s.toDouble / (nD * (nD * nD - 1.0)))
+    }
   }
+
+  /** Distinct (group, value) pairs a partition combines before the rest pass through. */
+  private val CombineSlots = 1 << 12
 
   /** EXACT interpolated percentiles per group in bounded memory — the
     * scale-safe replacement for Spark's `percentile`, whose
@@ -332,18 +340,18 @@ object StatsOps {
     * This form never materializes a group: it is two linear passes plus
     * constant-size metadata.
     *
-    *  1. range-partition + in-partition sort on (group, value) — the
-    *     [[groupedRowNumber]] engine shape, so parallelism stays
-    *     cluster-sized even for a 3-value group key (ties are fine:
-    *     only the VALUE at a rank is consumed, and the k-th smallest of
-    *     a multiset is well-defined under any tie ordering);
-    *  2. pass 1 collects per-(partition, group) counts (bounded by the
-    *     [[MaxScanGroups]] guard), from which the driver derives each
-    *     group's n, rank offsets, and the two boundary ranks per
+    *  1. equal (group, value) rows are combined map-side into weighted
+    *     rows, then the [[OrderedRun]] engine runs on (group, value), so
+    *     parallelism stays cluster-sized even for a 3-value group key
+    *     (ties are fine: only the VALUE at a rank is consumed, and the
+    *     k-th smallest of a multiset is well-defined under any tie
+    *     ordering);
+    *  2. its pass 1 sums row weights per (partition, group), from which
+    *     the driver derives each group's n and the two boundary ranks per
     *     requested fraction;
-    *  3. pass 2 re-reads the SAME shuffle output (Spark skips the
-    *     finished map stage) and emits ONLY boundary-rank rows —
-    *     ≤ |groups|·|ps|·2 of them — which the driver interpolates.
+    *  3. pass 2 re-reads the SAME shuffle output and emits ONLY the rows
+    *     covering boundary ranks — ≤ |groups|·|ps|·2 of them — which the
+    *     driver interpolates.
     *
     * The arithmetic replicates `PercentileBase.getPercentile` exactly
     * (verified against the Spark 4.1.2 bytecode): pos = p·(n−1) in
@@ -358,9 +366,7 @@ object StatsOps {
     */
   def groupedExactPercentiles(df: DataFrame, group: String, value: String,
                               ps: Seq[(String, Double)],
-                              numPartitions: Int = 32,
                               expectedGroups: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
     require(ps.nonEmpty && ps.forall { case (_, p) => p >= 0 && p <= 1 })
     val spark = df.sparkSession
     val nn = df.filter(col(value).isNotNull)
@@ -373,108 +379,72 @@ object StatsOps {
     // probe — the HLL probe re-executes the whole upstream plan, a full
     // extra pass that the low-cardinality callers (the common case)
     // shouldn't pay. Unhinted calls probe. A wrong hint is never silent:
-    // the executor-side require below stays as the loud backstop.
+    // the engine's executor-side guard stays as the loud backstop.
     val estGroups = expectedGroups.getOrElse(
-      nn.select(approx_count_distinct(group)).head.getLong(0))
+      nn.select(approx_count_distinct(group)).head().getLong(0))
     if (estGroups > MaxScanGroups * 8 / 10)
       return groupedExactPercentilesHighCard(df, group, value, ps)
-    val keys = Seq(col(group), col("__pct_v"))
-    val sorted = nn.repartitionByRange(numPartitions, keys: _*)
-      .sortWithinPartitions(keys: _*)
-    val gType = sorted.schema(group).dataType
-    val gAcc = org.apache.spark.sql.catalyst.InternalRow
-      .getAccessor(gType, sorted.schema(group).nullable)
-    // Internal-row passes sharing one lineage — same rationale and
-    // shuffle-reuse contract as groupedScan above.
-    val internal = sorted.queryExecution.toRdd
-    // pass 1: per-(partition, group) counts — the groupedScan shape,
-    // with the same executor-side cardinality guard
-    val counts: Array[(Int, Map[Any, Long])] = internal
-      .mapPartitionsWithIndex { (p, it) =>
-        val m = scala.collection.mutable.Map.empty[Any, Long]
-        it.foreach { r =>
-          bump(m, gAcc(r, 0), 1L)
-          require(m.size <= MaxScanGroups,
-            s"groupedExactPercentiles on '$group': partition $p holds > " +
-              s"$MaxScanGroups distinct groups — constant-cardinality keys only")
+    // Map-side combine before the range shuffle: a partition's rows with
+    // equal (group, value) fold into one row weighted by their count (the
+    // value at a rank does not depend on how ties group), so percentiles
+    // over a small value domain (quantities, ratings) shuffle and sort a
+    // handful of rows. Once a partition shows CombineSlots distinct pairs,
+    // its remaining rows pass through with weight 1.
+    val weighted = nn.withColumn("__pct_w", lit(1L))
+    val combined = weighted.queryExecution.toRdd.mapPartitions { it =>
+      val m = mutable.HashMap.empty[InternalRow, Long]
+      while (it.hasNext && m.size < CombineSlots) {
+        val r = it.next()
+        m.get(r) match {
+          case Some(w) => m(r) = w + 1
+          case None => m(r.copy()) = 1L
         }
-        Iterator((p, m.toMap))
-      }.collect()
-    require(counts.iterator.flatMap(_._2.keysIterator).toSet.size <= MaxScanGroups,
-      s"groupedExactPercentiles on '$group': > $MaxScanGroups distinct groups")
-    val byPart = counts.toMap
-    val nPart = counts.map(_._1).foldLeft(-1)(math.max) + 1
-    val offsets: Array[Map[Any, Long]] = {
-      val run = scala.collection.mutable.Map.empty[Any, Long]
-      (0 until nPart).map { p =>
-        val snap = run.toMap
-        byPart.getOrElse(p, Map.empty).foreach { case (g, c) =>
-          run(g) = run.getOrElse(g, 0L) + c
-        }
-        snap
-      }.toArray
-    }
-    val nByGroup: Map[Any, Long] =
-      counts.iterator.flatMap(_._2).toSeq.groupBy(_._1).map { case (g, xs) =>
-        g -> xs.map(_._2).sum
       }
+      // the keys are owned copies and never looked up again
+      m.iterator.map { case (r, w) => r.setLong(2, w); r } ++ it
+    }
+    val run = new OrderedRun(
+      org.apache.spark.sql.GraftSqlBridge.internalDf(spark, combined, weighted.schema),
+      group, Seq(col("__pct_v")), "groupedExactPercentiles")(() => new WeightAcc(2))
     // the boundary ranks each fraction needs, per group — driver-side
     // metadata bounded by |groups| × |ps| × 2
-    val needed: Map[Any, Set[Long]] = nByGroup.map { case (g, n) =>
+    val needed: Map[Any, Set[Long]] = run.totals.map { case (g, n) =>
       g -> ps.iterator.flatMap { case (_, p) =>
         val pos = p * (n - 1).toDouble
         Seq(pos.floor.toLong + 1, pos.ceil.toLong + 1)
       }.toSet
     }
-    val bcOff = spark.sparkContext.broadcast(offsets)
     val bcNeed = spark.sparkContext.broadcast(needed)
-    // pass 2: emit ONLY the boundary rows (≤ |groups|·|ps|·2 of them);
-    // the range shuffle's map output is reused from pass 1
-    val sel: Array[(Any, Long, Double)] = internal
-      .mapPartitionsWithIndex { (p, it) =>
-        val local = scala.collection.mutable.Map.empty[Any, Long]
-        val base = bcOff.value(p)
-        it.flatMap { r =>
-          val g = gAcc(r, 0)
-          val pos = local.getOrElse(g, 0L) + 1L
-          bump(local, g, 1L)
-          val rank = base.getOrElse(g, 0L) + pos
-          if (bcNeed.value.getOrElse(g, Set.empty[Long]).contains(rank))
-            Iterator.single((stableKey(g), rank, r.getDouble(1)))
-          else Iterator.empty
-        }
-      }.collect()
+    val sel: Array[(Any, Long, Double)] = run.prefixPass { (rank, it) =>
+      it.flatMap { r =>
+        val hi = rank(r)
+        val lo = hi - r.getLong(2) // the row stands for ranks lo+1..hi
+        bcNeed.value.getOrElse(rank.group, Set.empty[Long]).iterator
+          .filter(k => k > lo && k <= hi)
+          .map(k => (stableKey(rank.group), k, r.getDouble(1)))
+      }
+    }.collect()
     val valsByGroup = sel.groupBy(_._1).map { case (g, rows) =>
       g -> rows.map(t => t._2 -> t._3).toMap
     }
     // interpolation on the bounded boundary set, replicating the
-    // built-in's double arithmetic verbatim. Null group keys are legal
-    // (the built-in percentile aggregates a null group fine — ADVICE
-    // r11), so the deterministic output ordering sorts them first rather
-    // than NPE-ing on toString.
-    val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToScalaConverter(gType)
-    val out = nByGroup.toSeq
-      .sortBy(kv => Option(kv._1).map(_.toString).getOrElse(""))
-      .map { case (g, n) =>
-        val vals = valsByGroup(g)
-        // group keys were read as Catalyst values (UTF8String etc.);
-        // convert once per group for the external-Row output seam
-        org.apache.spark.sql.Row.fromSeq(toScala(g) +: ps.map { case (_, p) =>
-          val pos = p * (n - 1).toDouble
-          val lo = pos.floor.toLong
-          val hi = pos.ceil.toLong
-          val vlo = vals(lo + 1)
-          if (hi == lo) vlo
-          else {
-            val vhi = vals(hi + 1)
-            if (vhi == vlo) vlo else (hi - pos) * vlo + (pos - lo) * vhi
-          }
-        })
+    // built-in's double arithmetic verbatim
+    groupRows(spark, nn.schema.head, run.totals.keys,
+      ps.map(p => StructField(p._1, DoubleType, nullable = false))) { g =>
+      val n = run.totals(g)
+      val vals = valsByGroup(g)
+      ps.map { case (_, p) =>
+        val pos = p * (n - 1).toDouble
+        val lo = pos.floor.toLong
+        val hi = pos.ceil.toLong
+        val vlo = vals(lo + 1)
+        if (hi == lo) vlo
+        else {
+          val vhi = vals(hi + 1)
+          if (vhi == vlo) vlo else (hi - pos) * vlo + (pos - lo) * vhi
+        }
       }
-    val schema = StructType(nn.schema.fields.head +:
-      ps.map(p => StructField(p._1, DoubleType, nullable = false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
+    }
   }
 
   /** EXACT interpolated percentiles for HIGH-cardinality group keys —

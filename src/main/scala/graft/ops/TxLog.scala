@@ -891,7 +891,10 @@ object TxLog {
     if (renames.isEmpty) {
       val base = schemaOpt match {
         case Some(s) => spark.read.schema(s).parquet(files: _*)
-        case None => spark.read.parquet(files: _*)
+        // no recorded schema: the first segment's footer defines it. A
+        // later append may omit a column, and Spark would otherwise infer
+        // from whichever footer it happens to list first.
+        case None => spark.read.schema(spark.read.parquet(files.head).schema).parquet(files: _*)
       }
       coords.fold(base) { case (fp, ri) =>
         base.select(fcol("*") +: coordCols(fp, ri): _*)

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.ops.{Cleaning, TextOps, VectorOps}
+import graft.ops.{Cleaning, Scratch, TextOps, VectorOps}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -18,18 +18,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object CorpusQueries extends QueryPack {
 
-  // Shared-subplan materialization (LlmQueries discipline): iterative
-  // trains (BPE merges) write each round to scratch parquet so plan
-  // lineage stays linear in iterations, not exponential.
-  private def cached(kind: String, s: SparkSession, d: String)(build: => DataFrame): DataFrame =
-    graft.ops.Scratch.materialize(kind, s, d)(build)
-
   /** Upper-triangle Gram matrix Σ v·vᵀ, scratch-materialized once per
     * (session, dir) — both linalg queries read the same 2080-cell
     * artifact, so the corpus pass runs once.
     */
   private def gramUpper(s: SparkSession, d: String): DataFrame =
-    cached("gram_upper", s, d) {
+    Scratch.materialize("gram_upper", s, d) {
       Tables.embeddings(s, d).filter(col("vec_id") >= 8)
         .select(col("embedding").as("v"), posexplode(col("embedding")).as(Seq("i", "xi")))
         .select(col("i"),
@@ -53,7 +47,7 @@ object CorpusQueries extends QueryPack {
     */
   private def eigvec(s: SparkSession, d: String): DataFrame = {
     val up = gramUpper(s, d)
-    cached("eigvec", s, d) {
+    Scratch.materialize("eigvec", s, d) {
       val full = up.select(col("i"), col("j"), col("gram_milli2"))
         .unionAll(up.filter(col("i") =!= col("j"))
           .select(col("j").as("i"), col("i").as("j"), col("gram_milli2")))
@@ -201,8 +195,10 @@ object CorpusQueries extends QueryPack {
             expr(s"replace(rep, concat('$sep', p1, '$sep', p2), concat('$sep', p1, p2))"))
           .select("w", "cnt", "rep")
       }
+      // each merge round goes to scratch parquet, so plan lineage stays
+      // linear in iterations, not exponential
       val vocab = (0 to 4).foldLeft[DataFrame](null) { (v, i) =>
-        cached(s"bpe_vocab_$i", s, d) {
+        Scratch.materialize(s"bpe_vocab_$i", s, d) {
           if (i == 0)
             words0.groupBy("w").agg(count(lit(1)).as("cnt"))
               .withColumn("rep", regexp_replace(col("w"), "(.)", sep + "$1"))
@@ -218,7 +214,7 @@ object CorpusQueries extends QueryPack {
       // per (session, dir) through the same scratch ledger as the vocab
       // iterations themselves (nonce-keyed, rebuilt every JVM). Per-rep
       // work drops to words ⋈ perWord + the final per-doc aggregate.
-      val perWord = cached("bpe_perword", s, d) {
+      val perWord = Scratch.materialize("bpe_perword", s, d) {
         val symId = vocab
           .select(explode(expr(s"slice(split(rep, '$sep'), 2, 1000000)")).as("sym"))
           .distinct()
@@ -1192,7 +1188,7 @@ object CorpusQueries extends QueryPack {
     * aggregates it to per-source or scalar counts.
     */
   private def prefGames(s: SparkSession, d: String): DataFrame =
-    cached("pref_games", s, d) {
+    Scratch.materialize("pref_games", s, d) {
       val scored = Tables.documents(s, d)
         .withColumn("toks", TextOps.tokens(col("text")))
         .select(col("doc_id"), col("source"), expr("doc_id div 2").as("pid"),

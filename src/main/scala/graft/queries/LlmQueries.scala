@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.ops.{TextOps, VectorOps}
+import graft.ops.{Scratch, TextOps, VectorOps}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -20,17 +20,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * identical signatures bit-for-bit.
   */
 object LlmQueries extends QueryPack {
-
-  // The band/signature subplans are each consumed up to 4× per pair query
-  // (twice per self-join side), and by several queries in one run. They are
-  // materialized ONCE per (session, dir) to scratch parquet and every
-  // consumer reads the artifact back — the production discipline for LSH
-  // dedup (build the band table, write it to the lake, self-join against
-  // it). See [[graft.ops.Scratch]] for why this replaced the round-6
-  // memoized persist (leaked storage memory made bench times depend on
-  // which JVM ran them).
-  private def cached(kind: String, s: SparkSession, d: String)(build: => DataFrame): DataFrame =
-    graft.ops.Scratch.materialize(kind, s, d)(build)
 
   /** The standing MinHash band table's cross-run artifact location —
     * deliberately nonce-FREE and derived only from the sf dir's basename,
@@ -53,7 +42,7 @@ object LlmQueries extends QueryPack {
     * grows with corpus scale.
     */
   private[graft] def minhashBands(s: SparkSession, d: String): DataFrame =
-    cached("minhash_bands", s, d) {
+    Scratch.materialize("minhash_bands", s, d) {
       TextOps.minhashBandTable(Tables.documents(s, d))
         // map-only signatures inherit the scan's split count (ONE partition
         // per ~128MB input file) — fine for the table itself, but every
@@ -71,7 +60,7 @@ object LlmQueries extends QueryPack {
     * Docs with < 5 tokens carry no rows (consumers outer-join as needed).
     */
   private[queries] def gram5Hashes(s: SparkSession, d: String): DataFrame =
-    cached("gram5_hashes", s, d) {
+    Scratch.materialize("gram5_hashes", s, d) {
       Tables.documents(s, d)
         .select(col("doc_id"),
           explode(TextOps.wordShingles(TextOps.tokens(col("text")), 5)).as("g"))
@@ -79,7 +68,7 @@ object LlmQueries extends QueryPack {
     }
 
   private def simhashSigs(s: SparkSession, d: String): DataFrame =
-    cached("simhash_sigs", s, d) {
+    Scratch.materialize("simhash_sigs", s, d) {
       // native one-pass signature: pure map work, no explode, no shuffle
       // (previously TextOps.simHashAgg over exploded (doc_id, hash60)
       // rows — same bits, pinned in TextVectorOpsSpec)
@@ -98,7 +87,7 @@ object LlmQueries extends QueryPack {
     // ("Recursive update" when the keys share a bin — found via the r9
     // full-suite flake)
     val b = minhashBands(s, d)
-    cached("cc_labels", s, d) {
+    Scratch.materialize("cc_labels", s, d) {
       val pairs = b.as("x").join(b.as("y"),
           col("x.band") === col("y.band") && col("x.band_key") === col("y.band_key") &&
             col("x.doc_id") < col("y.doc_id"))
@@ -569,7 +558,7 @@ object LlmQueries extends QueryPack {
         .distinct()
       // same memoization as the band table: the exact shingle sets feed
       // BOTH join sides, so compute them once per (session, dir)
-      val sh = cached("jaccard_shingles", s, d) {
+      val sh = Scratch.materialize("jaccard_shingles", s, d) {
         Tables.documents(s, d)
           .select(col("doc_id"),
             array_distinct(TextOps.wordShingles(TextOps.tokens(col("text")), 3)).as("sh"))
@@ -599,7 +588,7 @@ object LlmQueries extends QueryPack {
             col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
         .distinct()
-      val sh = cached("jaccard_shingles", s, d) {
+      val sh = Scratch.materialize("jaccard_shingles", s, d) {
         Tables.documents(s, d)
           .select(col("doc_id"),
             array_distinct(TextOps.wordShingles(TextOps.tokens(col("text")), 3)).as("sh"))
@@ -633,7 +622,7 @@ object LlmQueries extends QueryPack {
             col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
         .distinct()
-      val sh = cached("jaccard_shingles", s, d) {
+      val sh = Scratch.materialize("jaccard_shingles", s, d) {
         Tables.documents(s, d)
           .select(col("doc_id"),
             array_distinct(TextOps.wordShingles(TextOps.tokens(col("text")), 3)).as("sh"))
@@ -663,14 +652,14 @@ object LlmQueries extends QueryPack {
             col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
         .distinct()
-      val sigs = cached("minhash_sigs", s, d) {
+      val sigs = Scratch.materialize("minhash_sigs", s, d) {
         Tables.documents(s, d)
           .filter(size(TextOps.tokens(col("text"))) >= 3)
           .select(col("doc_id"),
             TextOps.minHashSigNative(
               TextOps.wordShingles(TextOps.tokens(col("text")), 3)).as("sig"))
       }
-      val sh = cached("jaccard_shingles", s, d) {
+      val sh = Scratch.materialize("jaccard_shingles", s, d) {
         Tables.documents(s, d)
           .select(col("doc_id"),
             array_distinct(TextOps.wordShingles(TextOps.tokens(col("text")), 3)).as("sh"))
@@ -1134,7 +1123,7 @@ object LlmQueries extends QueryPack {
       // consume the exploded segment relation — scratch parquet beats
       // re-running the explode per consumer (same discipline as the LSH
       // band tables)
-      val segs = cached("line_segments", s, d) {
+      val segs = Scratch.materialize("line_segments", s, d) {
         Tables.documents(s, d)
           .select(col("doc_id"), posexplode(expr(
             s"""transform(sequence(0, CAST((size(split(text, ' ')) - 1) div $L AS INT)),

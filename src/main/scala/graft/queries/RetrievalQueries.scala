@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.ops.{Cleaning, TextOps, VectorOps}
+import graft.ops.{Cleaning, Scratch, TextOps, VectorOps}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -24,14 +24,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object RetrievalQueries extends QueryPack {
 
-  // Same pattern as LlmQueries' subplan cache: shared intermediates
-  // (PQ assignment, BM25 scores) are written once per (session, dir) to
-  // scratch parquet and read back, so the queries that fan out from them
-  // don't recompute the corpus pass and no storage memory is held — see
-  // [[graft.ops.Scratch]].
-  private def cached(kind: String, s: SparkSession, d: String)(build: => DataFrame): DataFrame =
-    graft.ops.Scratch.materialize(kind, s, d)(build)
-
   private val bm25Terms = Seq("vector", "merge", "scan")
 
   /** Integer-exact BM25 (k1=1.2, b=0.75 in milli units): one explode +
@@ -42,7 +34,7 @@ object RetrievalQueries extends QueryPack {
     * the index-probe volume, not the corpus.
     */
   private def bm25Scores(s: SparkSession, d: String): DataFrame =
-    cached("bm25", s, d)(bm25Build(s, d))
+    Scratch.materialize("bm25", s, d)(bm25Build(s, d))
 
   /** The unmaterialized BM25 build plan — package-visible so the plan
     * guard can pin its broadcast-stats shape (the query plans themselves
@@ -78,7 +70,7 @@ object RetrievalQueries extends QueryPack {
     * broadcast codebook (×4 subspaces) — the standard PQ training-free
     * assignment, linear in corpus size.
     */
-  private def pqAssign(s: SparkSession, d: String): DataFrame = cached("pq_assign", s, d) {
+  private def pqAssign(s: SparkSession, d: String): DataFrame = Scratch.materialize("pq_assign", s, d) {
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding").as("v"))
     val cw = e.filter(col("vec_id") < 8).select(col("vec_id").as("cw_id"), col("v").as("cv"))
     // argmin as min(struct(d2, cw_id)) — a hash aggregate with map-side

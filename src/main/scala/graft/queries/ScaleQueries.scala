@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.ops.TextOps
+import graft.ops.{Scratch, TextOps}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
@@ -27,14 +27,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 object ScaleQueries extends QueryPack {
 
   private val runNonce: String = java.util.UUID.randomUUID.toString.take(8)
-
-  // Same scratch-parquet discipline as LlmQueries: subplans consumed
-  // several times within one query (the triangle query reads the oriented
-  // edge list three times) are written once per (session, dir) and read
-  // back — see [[graft.ops.Scratch]] for why this replaced the round-6
-  // memoized persist.
-  private def cached(kind: String, s: SparkSession, d: String)(build: => DataFrame): DataFrame =
-    graft.ops.Scratch.materialize(kind, s, d)(build)
 
   // partitioned fact + dim table written once per (session, sf-dir)
   private val dppTables = scala.collection.concurrent.TrieMap
@@ -74,7 +66,7 @@ object ScaleQueries extends QueryPack {
     * 119 → 41M wedges at sf0.1), which measures density, not the operator.
     */
   private def copurchaseEdges(s: SparkSession, d: String): DataFrame =
-    cached("copurchase_edges", s, d) {
+    Scratch.materialize("copurchase_edges", s, d) {
       val po = Tables.lineitem(s, d).filter(col("l_quantity") >= 40)
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
       val po2 = po.select(col("o").as("o2"), col("p").as("p2"))
@@ -92,7 +84,7 @@ object ScaleQueries extends QueryPack {
     * CTE, so the derivation itself is under the correctness gate.
     */
   private def partsupp(s: SparkSession, d: String): DataFrame =
-    cached("partsupp_derived", s, d) {
+    Scratch.materialize("partsupp_derived", s, d) {
       Tables.lineitem(s, d)
         .groupBy(col("l_partkey").as("ps_partkey"), col("l_suppkey").as("ps_suppkey"))
         .agg(
@@ -233,7 +225,7 @@ object ScaleQueries extends QueryPack {
     // dedupe the subplans). The max then arrives as a broadcast 1-row
     // aggregate, so no driver round-trip either.
     "tpch_q15" -> ((s, d) => {
-      val rev = cached("q15_rev", s, d) {
+      val rev = Scratch.materialize("q15_rev", s, d) {
         Tables.lineitem(s, d)
           .filter(col("l_shipdate") >= "1996-01-01" && col("l_shipdate") < "1996-04-01")
           .groupBy(col("l_suppkey"))
@@ -550,7 +542,7 @@ object ScaleQueries extends QueryPack {
 
     "graph_triangles" -> ((s, d) => {
       val e = copurchaseEdges(s, d)
-      val oriented = cached("oriented_edges", s, d) {
+      val oriented = Scratch.materialize("oriented_edges", s, d) {
         val deg = e.select(col("u").as("node")).union(e.select(col("v").as("node")))
           .groupBy("node").agg(count(lit(1)).as("dg"))
         val du = deg.select(col("node").as("u"), col("dg").as("du"))
@@ -607,7 +599,7 @@ object ScaleQueries extends QueryPack {
     // integer division.
     "graph_clustering_coeff" -> ((s, d) => {
       val e = copurchaseEdges(s, d)
-      val oriented = cached("oriented_edges", s, d) {
+      val oriented = Scratch.materialize("oriented_edges", s, d) {
         val deg = e.select(col("u").as("node")).union(e.select(col("v").as("node")))
           .groupBy("node").agg(count(lit(1)).as("dg"))
         val du = deg.select(col("node").as("u"), col("dg").as("du"))
@@ -692,7 +684,7 @@ object ScaleQueries extends QueryPack {
       // UnionLoop iteration planned and ran 2 scans + a union. The
       // symmetric edge list is scratch-materialized once (same ledger as
       // the edges), making each recursion step one plain parquet scan.
-      cached("copurchase_sym", s, d) {
+      Scratch.materialize("copurchase_sym", s, d) {
         val e = copurchaseEdges(s, d)
         e.select(col("u"), col("v"))
           .unionAll(e.select(col("v").as("u"), col("u").as("v")))
@@ -737,7 +729,7 @@ object ScaleQueries extends QueryPack {
       // throws "Recursive update" when the two keys share a hash bin
       // (caught as a flaky full-suite failure in r9)
       val e = copurchaseEdges(s, d)
-      val sym = cached("lpa_sym", s, d) {
+      val sym = Scratch.materialize("lpa_sym", s, d) {
         e.select(col("u"), col("v"))
           .union(e.select(col("v").as("u"), col("u").as("v")))
       }
@@ -774,7 +766,7 @@ object ScaleQueries extends QueryPack {
       // re-executes it per consumer — the iterate-then-persist discipline
       // every multi-round graph loop needs (round 0 reads the already-
       // persisted copurchase edges)
-      val round1 = cached("kcore_round1", s, d) { peel(sym) }
+      val round1 = Scratch.materialize("kcore_round1", s, d) { peel(sym) }
       peel(round1)
         .groupBy("u").agg(count(lit(1)).as("degree"))
         .orderBy("u")
@@ -986,7 +978,7 @@ object ScaleQueries extends QueryPack {
     // plan Pregel-style engines lower to.
     "pagerank_iter" -> ((s, d) => {
       val e = copurchaseEdges(s, d)
-      val adj = cached("pagerank_adj", s, d) {
+      val adj = Scratch.materialize("pagerank_adj", s, d) {
         e.select(col("u").as("src"), col("v").as("dst"))
           .union(e.select(col("v").as("src"), col("u").as("dst")))
       }
@@ -1156,7 +1148,7 @@ object ScaleQueries extends QueryPack {
         .join(broadcast(n.join(r, n("n_regionkey") === r("r_regionkey"))),
           col("s_nationkey") === col("n_nationkey"))
         .select(col("s_suppkey"), col("s_name"), col("s_acctbal"), col("n_name"))
-      val cand = cached("q2_cand", s, d) {
+      val cand = Scratch.materialize("q2_cand", s, d) {
         partsupp(s, d)
           .join(p, col("ps_partkey") === col("p_partkey"))
           .join(eur, col("ps_suppkey") === col("s_suppkey"))
@@ -1183,7 +1175,7 @@ object ScaleQueries extends QueryPack {
     // two-consumers-of-one-subplan discipline as tpch_q15.
     "tpch_q11" -> ((s, d) => {
       val nat = Tables.nation(s, d).filter(col("n_name") === "NATION_7")
-      val byPart = cached("q11_bypart", s, d) {
+      val byPart = Scratch.materialize("q11_bypart", s, d) {
         partsupp(s, d)
           .join(Tables.supplier(s, d), col("ps_suppkey") === col("s_suppkey"))
           .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))

@@ -8,21 +8,21 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = () // session shared across suites; JVM exit cleans up
+
+  /** Runs `body` with `spark.sql.shuffle.partitions` at `n` on the shared
+    * session, restoring the previous value afterwards.
+    */
+  def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toLong)
+    try body
+    finally spark.conf.set(key, prev)
+  }
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // production session config: suites exercise the same optimizer
-      // rules + SQL functions Verify/Bench run with
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  // production session config: suites exercise the same optimizer rules +
+  // SQL functions Verify/Bench run with
+  lazy val session: SparkSession = GraftSession("local[4]", 4)
 }

@@ -152,6 +152,15 @@ class PropertiesSpec extends SparkSpec {
     val one = Seq(("solo", 7L)).toDF("g", "v")
     assert(StatsOps.groupedExactPercentiles(one, "g", "v", Seq("p50" -> 0.5))
       .as[(String, Double)].head() === ("solo", 7.0))
+    // one partition: 9000 rows over 150 (g, v) pairs combine into weighted
+    // rows, then 21000 distinct values overflow the combine table and pass
+    // through with weight 1 — boundary ranks fall on both kinds
+    val mixed = spark.range(0, 30000, 1, 1)
+      .selectExpr("CAST(id % 3 AS STRING) AS g", "IF(id < 9000, id % 50, id) AS v")
+    val fs = Seq("p01" -> 0.01, "p25" -> 0.25, "p50" -> 0.5, "p99" -> 0.99)
+    assert(StatsOps.groupedExactPercentiles(mixed, "g", "v", fs).collect().toSet ===
+      mixed.groupBy("g").agg(expr("percentile(v, 0.01)"), expr("percentile(v, 0.25)"),
+        expr("percentile(v, 0.5)"), expr("percentile(v, 0.99)")).collect().toSet)
   }
 
   test("high-card percentile engine is bit-identical to the built-in; router routes") {
@@ -200,19 +209,43 @@ class PropertiesSpec extends SparkSpec {
     assert(got === want, "WithCount must match the window spelling row-for-row")
   }
 
+  test("rank engine results do not depend on the shuffle partition count") {
+    // the engine range-partitions into the session's shuffle partitions;
+    // ranks, running sums, Spearman sums and percentiles must not move
+    val df = spark.range(500)
+      .selectExpr("CAST(id % 5 AS STRING) AS g", "(id * 53) % 101 AS v", "id")
+    def results(n: Int) = withShufflePartitions(n) {
+      val ranked = StatsOps.groupedRowNumberWithCount(df, "g", Seq("v", "id"), "rn", "nn")
+      assert(ranked.rdd.getNumPartitions == n, s"layout must follow the session ($n)")
+      Seq(ranked.collect().toSet,
+        StatsOps.groupedRunningSum(df, "g", Seq("v", "id"), "v", "cum").collect().toSet,
+        StatsOps.spearmanAgg(ranked, "g", Seq("id"), "rn", ("n", "sd2", "rho"))
+          .collect().toSeq,
+        StatsOps.groupedExactPercentiles(df, "g", "v",
+          Seq("p10" -> 0.1, "p50" -> 0.5, "p95" -> 0.95)).collect().toSeq)
+    }
+    val one = results(1)
+    assert(one.forall(_.nonEmpty))
+    Seq(3, 7).foreach(n => assert(results(n) == one, s"results moved at $n partitions"))
+  }
+
   test("groupedScan rejects high-cardinality group keys loudly") {
     // the engine's driver offset table is partitions × |groups|; a key
     // with > MaxScanGroups distinct values must fail with the contract
     // message, not OOM the driver (VERDICT r10)
     val wide = spark.range(StatsOps.MaxScanGroups * 2L)
       .selectExpr("id AS g", "id AS v")
-    val e = intercept[Exception] {
-      StatsOps.groupedRowNumber(wide, "g", Seq("v"), "rn").count()
-    }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => x.getMessage +: messages(x.getCause))
-    assert(messages(e).exists(m => m != null && m.contains("distinct")),
-      s"want the cardinality-contract message, got: ${e.getMessage}")
+    Seq[() => Any](
+      () => StatsOps.groupedRowNumber(wide, "g", Seq("v"), "rn").count(),
+      () => StatsOps.spearmanAgg(wide.withColumn("rq", col("v")), "g", Seq("v"), "rq",
+        ("n", "sd2", "rho"))
+    ).foreach { call =>
+      val e = intercept[Exception](call())
+      assert(messages(e).exists(m => m != null && m.contains("distinct")),
+        s"want the cardinality-contract message, got: ${e.getMessage}")
+    }
   }
 
   test("property: z-order key is a bijection that preserves per-dimension order") {

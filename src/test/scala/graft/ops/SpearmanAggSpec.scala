@@ -56,12 +56,42 @@ class SpearmanAggSpec extends SparkSpec {
       ("b", 1L, 5L),
       ("c", 1L, 9L), ("c", 2L, 3L)
     ).toDF("g", "x", "y")
-    val rq = StatsOps.groupedRowNumber(df, "g", Seq("x", "y"), "rq", numPartitions = 3)
-    val out = StatsOps.spearmanAgg(rq, "g", Seq("y", "x"), "rq",
-      ("n", "sd2", "rho"), numPartitions = 3).orderBy("g").collect()
+    // 3 range partitions for 7 rows: runs split across partitions
+    val out = withShufflePartitions(3) {
+      val rq = StatsOps.groupedRowNumber(df, "g", Seq("x", "y"), "rq")
+      StatsOps.spearmanAgg(rq, "g", Seq("y", "x"), "rq", ("n", "sd2", "rho"))
+        .orderBy("g").collect()
+    }
     // closed-form by hand: a: x-order 1..4, y-order pairs (10,30,20,40) →
     // rc of x-ranks (1,2,3,4) under y = (1,3,2,4) → sd2 = 0+1+1+0 = 2
     assert(out.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq ==
       Seq(("a", 4L, 2L), ("b", 1L, 0L), ("c", 2L, 2L)))
+  }
+
+  test("spearmanAgg's accumulator is exact at and beyond |a| = 2^31") {
+    // a² wraps a Long once |a| > ~3.04e9, and two a² of 2⁶² already sum
+    // past Long.MaxValue: both must land exactly, against BigInt sums
+    val edge = Seq(1L << 31, -(1L << 31), (1L << 31) + 1, -(1L << 31) - 1,
+      3037000500L, -4000000000L, 1L << 40, Long.MaxValue / 3, 7L, -5L, 0L)
+    val as = Seq.fill(25)(edge).flatten
+    val acc = new StatsOps.SpearmanAcc(-1)
+    as.foreach(a => acc.add(a))
+    assert(acc.n == as.size)
+    assert(acc.saTotal == as.map(BigInt(_)).sum)
+    assert(acc.sqTotal == as.map(a => BigInt(a) * a).sum)
+  }
+
+  test("spearmanAgg stays exact when rq - rc passes 2^31") {
+    import spark.implicits._
+    // rc = x (x is a total order within g); every other rq is ~3.5e9·x,
+    // so (rq − rc)² overflows a Long and sd2 only fits a BigInt
+    val rows = (1L to 12L).map(x => ("g", x, if (x % 2 == 0) 3500000000L * x else x))
+    val out = StatsOps.spearmanAgg(rows.toDF("g", "x", "rq"), "g", Seq("x"), "rq",
+      ("n", "sd2", "rho")).collect()
+    val sd2 = rows.map { case (_, x, rq) => BigInt(rq - x).pow(2) }.sum
+    val n = rows.size.toDouble
+    assert(out.length == 1 && out(0).getLong(1) == rows.size)
+    assert(!sd2.isValidLong && out(0).isNullAt(2), "sd2 past Long range is null")
+    assert(out(0).getDouble(3) == 1.0 - 6.0 * sd2.toDouble / (n * (n * n - 1.0)))
   }
 }
