@@ -193,15 +193,23 @@ object TxLog {
     Files.createDirectories(Paths.get(table, "data"))
   }
 
-  private def listVersions(table: String): Seq[Long] = {
+  private val ManifestName = """(\d{20})\.json""".r
+  private val CheckpointName = """(\d{20})\.checkpoint\.json""".r
+
+  /** One `_txlog` listing: (manifest versions, checkpoint versions), both
+    * ascending.
+    */
+  private def listLog(table: String): (Seq[Long], Seq[Long]) = {
     val dir = logDir(table)
-    if (!Files.isDirectory(dir)) Seq.empty
-    else listClosed(Files.list(dir))
-      .map(_.getFileName.toString)
-      .filter(_.matches("\\d{20}\\.json"))
-      .map(_.stripSuffix(".json").toLong)
-      .sorted
+    if (!Files.isDirectory(dir)) (Seq.empty, Seq.empty)
+    else {
+      val names = listClosed(Files.list(dir)).map(_.getFileName.toString)
+      (names.collect { case ManifestName(v) => v.toLong }.sorted,
+        names.collect { case CheckpointName(v) => v.toLong }.sorted)
+    }
   }
+
+  private def listVersions(table: String): Seq[Long] = listLog(table)._1
 
   def currentVersion(table: String): Long =
     listVersions(table).lastOption.getOrElse(0L)
@@ -282,51 +290,11 @@ object TxLog {
         .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
   }
 
-  /** The wall-clock millis of commit `v`, WITHOUT a full manifest parse:
-    * the writer emits `ts` as the manifest's FINAL field, so the true
-    * match is `"ts":<digits>` immediately followed by the `}` that closes
-    * the manifest. The tail anchor matters because `schemaJson` is
-    * embedded VERBATIM (not as an escaped string): a schema metadata key
-    * named `ts` CAN put a literal `"ts":` inside the body (ADVICE r14),
-    * and on a pre-r13 manifest without a trailing ts it would otherwise
-    * be mistaken for the commit time. A non-tail match falls back to the
-    * full Jackson parse (authoritative, just slower); no ts anywhere
-    * falls back to the file's mtime, exactly as the full parse did.
+  /** The wall-clock millis of commit `v`, WITHOUT a full manifest parse
+    * (the fast path in [[logFile]]).
     */
-  /** Memo for [[commitTimeMillis]] — same immutable-manifest argument and
-    * size guard as `manifestCache` (timestampAsOf resolution scans commit
-    * times per call; the bench's lake family pays it per rep).
-    */
-  private val commitTimeCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), (Long, Long)]()
-
-  private def commitTimeMillis(table: String, v: Long): Long = {
-    val p = logDir(table).resolve(fmt(v))
-    val size = Files.size(p)
-    Option(commitTimeCache.get((table, v))) match {
-      case Some((sz, t)) if sz == size => t
-      case _ =>
-        val t = commitTimeMillisUncached(table, v, p)
-        commitTimeCache.put((table, v), (size, t))
-        t
-    }
-  }
-
-  private def commitTimeMillisUncached(table: String, v: Long, p: Path): Long = {
-    val s = Files.readString(p)
-    val i = s.lastIndexOf("\"ts\":")
-    val parsed =
-      if (i < 0) None
-      else {
-        val after = s.substring(i + 5)
-        val digits = after.takeWhile(c => c.isDigit || c == '-')
-        if (digits.nonEmpty && digits != "-" &&
-            after.substring(digits.length).trim == "}")
-          Some(digits.toLong)
-        else readManifest(table, v).ts // mid-body match: parse for real
-      }
-    parsed.getOrElse(Files.getLastModifiedTime(p).toMillis)
-  }
+  private def commitTimeMillis(table: String, v: Long): Long =
+    logFile(logDir(table).resolve(fmt(v)), full = false).ts
 
   /** [[snapshot]] at the version in force at wall-clock `tsMillis`. */
   def snapshotAtTimestamp(spark: SparkSession, table: String,
@@ -423,35 +391,95 @@ object TxLog {
     */
   private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  /** In-process memo of DECODED manifests keyed by (table, version) —
-    * r17, the VERDICT r16 "manifest cache" item (guide §5/§6 metadata
-    * caching, the same argument as `headMetaCache`): a published manifest
-    * is immutable (atomic no-overwrite link), so a decoded (table,
-    * version) pair stays true for the life of the JVM. Every snapshot /
-    * liveFiles / history / CDF call re-read and re-parsed the whole log
-    * tail per call — ~0.1 s of replay per lake query per rep at sf0.1,
-    * 50 queries in the family. The entry carries the manifest FILE SIZE
-    * at parse time and every hit re-stats the file (~1 µs vs a full
-    * read+parse): a table directory deleted and rebuilt at the same path
-    * in one JVM (the one way a version file can change) is detected
-    * unless the byte length collides exactly. Metadata only — segment
-    * data, file listings and query results are untouched, and a cold JVM
-    * always re-reads from disk.
+  /** One decoded `_txlog` file as of its (size, mtime) when decoded: the
+    * commit time, plus the full manifest once some caller needed it.
     */
-  private val manifestCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), (Long, Manifest)]()
+  private final case class LogFile(size: Long,
+                                   mtime: java.nio.file.attribute.FileTime,
+                                   ts: Long, manifest: Option[Manifest])
 
-  def readManifest(table: String, v: Long): Manifest = {
-    val p = logDir(table).resolve(fmt(v))
-    val size = Files.size(p) // throws like the uncached read if deleted
-    Option(manifestCache.get((table, v))) match {
-      case Some((sz, m)) if sz == size => m
-      case _ =>
-        val m = parseManifestNode(jsonMapper.readTree(Files.readString(p)))
-        manifestCache.put((table, v), (size, m))
-        m
-    }
+  /** Bound on [[logFiles]]. A fold reads the nearest checkpoint plus at
+    * most one checkpoint interval of manifests (10 by default), so this
+    * holds the hot tail of hundreds of tables. An entry is one decoded
+    * manifest (kilobytes of paths and stats, never data), so the bound
+    * keeps the memo to megabytes on a driver that lives as long as its
+    * tables. A timestampAsOf scan over a longer log evicts older entries
+    * and re-reads them later: slower, never wrong.
+    */
+  private val MaxLogFiles = 4096
+
+  /** The one in-process memo of decoded log files — manifests and
+    * checkpoints, keyed by file path, least recently used evicted past
+    * [[MaxLogFiles]]. A published file never changes in place (atomic
+    * no-overwrite link), but a table deleted and rebuilt at the same path
+    * reuses every file name, and its version files often keep the old
+    * byte length: segment names are fixed-length UUIDs, so two commits of
+    * the same shape have equal lengths. Every lookup therefore re-stats
+    * the file (~1 µs against a read and parse) and a hit needs both the
+    * size and the mtime (at the filesystem's timestamp resolution) to
+    * match. Metadata only — segment data, listings and query results are
+    * never memoized here.
+    */
+  private val logFiles = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[Path, LogFile](256, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[Path, LogFile]): Boolean = size() > MaxLogFiles
+    })
+
+  /** Decode `p` through [[logFiles]]. With `full = false` only the commit
+    * time is needed, and it is taken WITHOUT a full parse when it can be
+    * (per-segment stats maps dominate manifest size; a timestampAsOf
+    * resolution must not deserialize them all — ADVICE r13): the writer
+    * emits `ts` as the manifest's FINAL field, so the true match is
+    * `"ts":<digits>` immediately followed by the `}` that closes the
+    * manifest. The tail anchor matters because `schemaJson` is embedded
+    * VERBATIM: a schema metadata key named `ts` CAN put a literal `"ts":`
+    * inside the body (ADVICE r14). A non-tail match falls back to the
+    * full Jackson parse; no ts anywhere (pre-r13 manifests) falls back to
+    * the file's mtime.
+    */
+  private def logFile(p: Path, full: Boolean): LogFile = {
+    // throws NoSuchFileException like the read itself when p is gone
+    val attrs = Files.readAttributes(p,
+      classOf[java.nio.file.attribute.BasicFileAttributes])
+    val (size, mtime) = (attrs.size, attrs.lastModifiedTime)
+    Option(logFiles.get(p))
+      .filter(e => e.size == size && e.mtime == mtime &&
+        (e.manifest.nonEmpty || !full))
+      .getOrElse {
+        val s = Files.readString(p)
+        val fastTs =
+          if (full) None
+          else {
+            val i = s.lastIndexOf("\"ts\":")
+            if (i < 0) Some(mtime.toMillis)
+            else {
+              val after = s.substring(i + 5)
+              val digits = after.takeWhile(c => c.isDigit || c == '-')
+              if (digits.nonEmpty && digits != "-" &&
+                  after.substring(digits.length).trim == "}")
+                Some(digits.toLong)
+              else None // mid-body match: parse for real
+            }
+          }
+        val e = fastTs.fold {
+          val m = parseManifestNode(jsonMapper.readTree(s))
+          LogFile(size, mtime, m.ts.getOrElse(mtime.toMillis), Some(m))
+        }(t => LogFile(size, mtime, t, None))
+        logFiles.put(p, e)
+        e
+      }
   }
+
+  def readManifest(table: String, v: Long): Manifest =
+    logFile(logDir(table).resolve(fmt(v)), full = true).manifest.get
+
+  /** A checkpoint is a manifest of the whole state (see [[checkpoint]]),
+    * written and parsed by the same code.
+    */
+  private def readCheckpoint(table: String, v: Long): Manifest =
+    logFile(logDir(table).resolve(f"$v%020d.checkpoint.json"), full = true)
+      .manifest.get
 
   private def parseManifestNode(
       node: com.fasterxml.jackson.databind.JsonNode): Manifest = {
@@ -529,101 +557,74 @@ object TxLog {
       }.toSeq
     }
 
-  /** Live segment paths at `asOf` (default: latest). Resolved once —
-    * this list IS the reader's isolation boundary. Resolution goes
-    * through the nearest checkpoint when one exists (see [[checkpoint]]);
-    * `TxLogSpec` pins the equivalence with the full fold.
+  /** The table state at one version: everything a read or a write guard
+    * resolves from the log. All but `stats` is exactly what a checkpoint
+    * persists; `stats` keeps every segment's record ever committed, so a
+    * RESTORE that re-adds a removed segment finds it again.
     */
-  def liveFiles(table: String, asOf: Option[Long] = None): Seq[String] =
-    liveFilesViaCheckpoint(table, asOf).map(_._1)
+  private[ops] final case class LogState(
+      live: Vector[String] = Vector.empty,
+      stats: Map[String, SegStats] = Map.empty,
+      dv: Vector[String] = Vector.empty,
+      renames: Vector[Rename] = Vector.empty,
+      drops: Vector[Drop] = Vector.empty,
+      schemaJson: Option[String] = None,
+      checks: Seq[(String, String)] = Seq.empty,
+      props: Map[String, String] = Map.empty,
+      ingests: Set[String] = Set.empty) {
+    def segments: Vector[(String, Option[SegStats])] =
+      live.map(p => p -> stats.get(p))
+    def tableState: TableState = TableState(segments, dv, renames)
+    def schema: Option[org.apache.spark.sql.types.StructType] =
+      schemaJson.map(j => org.apache.spark.sql.types.DataType.fromJson(j)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+  }
 
-  /** Table schema recorded by the latest `evolve` commit at or before
-    * `asOf`; None for tables that never evolved (their schema is whatever
-    * the parquet footers carry — the pre-evolution contract).
-    *
-    * Resolution is O(delta), not O(all commits) (ADVICE r10 — this is on
-    * the path of EVERY snapshot/merge/append): manifests after the
-    * nearest checkpoint are scanned newest-first and the walk STOPS at
-    * the first one carrying a schema; failing that, the checkpoint's own
-    * recorded schema answers (checkpoints persist it at write time). A
-    * never-checkpointed, never-evolved table still walks its whole log —
-    * same cost as before; [[checkpoint]] is the documented fix for logs
-    * long enough to care.
+  /** Apply one manifest. A checkpoint is the whole state written as one
+    * manifest, so applying it to the empty state restores that state.
     */
-  def recordedSchema(table: String,
-                     asOf: Option[Long] = None): Option[org.apache.spark.sql.types.StructType] =
-    (asOf match {
-      case Some(_) => recordedSchemaJsonAt(table, asOf)
-      case None => headMeta(table)._1 // memoized O(delta) head path
-    }).map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-      .asInstanceOf[org.apache.spark.sql.types.StructType])
+  private def step(s: LogState, m: Manifest): LogState = {
+    val removed = m.removes.toSet
+    LogState(s.live.filterNot(removed) ++ m.adds, s.stats ++ m.stats,
+      foldDvChain(s.dv, m), s.renames ++ m.renames, s.drops ++ m.drops,
+      m.schemaJson.orElse(s.schemaJson),
+      (s.checks ++ m.checks).filterNot(c => m.dropChecks.contains(c._1)),
+      (s.props ++ m.props) -- m.unsetProps, s.ingests ++ m.ingests)
+  }
 
-  /** After [[cleanupLog]], a fold with no surviving checkpoint at or
-    * below `asOf` would silently answer from a truncated prefix — refuse
-    * instead. ckpt is the asOf-filtered nearest checkpoint the caller
-    * resolved; a floor of 1 means nothing was cleaned.
+  /** THE log replay every metadata read goes through (Delta's): list
+    * `_txlog` once, start from the nearest checkpoint at or below `asOf`
+    * (the empty state when there is none) and step through the manifests
+    * after it — O(commits since that checkpoint), which auto-checkpointing
+    * bounds. After [[cleanupLog]], a version no surviving checkpoint
+    * covers would fold from a truncated prefix: refused instead.
     */
-  private def requireFoldable(table: String, ckpt: Option[Long],
-                              asOf: Option[Long]): Unit =
-    require(ckpt.nonEmpty || listVersions(table).headOption.forall(_ == 1L),
+  private[ops] def stateAt(table: String, asOf: Option[Long] = None): LogState = {
+    val (versions, ckpts) = listLog(table)
+    def within(v: Long): Boolean = asOf.forall(v <= _)
+    val ckpt = ckpts.filter(within).lastOption
+    require(ckpt.nonEmpty || versions.headOption.forall(_ == 1L),
       s"$table: version ${asOf.map(_.toString).getOrElse("head")} predates " +
         "the cleaned log floor and no surviving checkpoint covers it — " +
         "unavailable (graft.logRetentionDuration cleanup removed it)")
-
-  private def recordedSchemaJsonAt(table: String,
-                                   asOf: Option[Long]): Option[String] = {
-    val vs = listVersions(table).filter(v => asOf.forall(v <= _))
-    val ckpt = checkpointVersions(table).filter(v => asOf.forall(v <= _)).lastOption
-    requireFoldable(table, ckpt, asOf)
-    val after = ckpt.fold(vs)(cv => vs.filter(_ > cv))
-    after.reverseIterator
-      .map(v => readManifest(table, v).schemaJson)
-      .collectFirst { case Some(j) => j }
-      .orElse(ckpt.flatMap(cv => readCheckpoint(table, cv).schemaJson))
+    val base = ckpt.fold(LogState())(cv => step(LogState(), readCheckpoint(table, cv)))
+    versions.filter(v => within(v) && ckpt.forall(v > _))
+      .foldLeft(base)((s, v) => step(s, readManifest(table, v)))
   }
 
-  /** In-process memo of the HEAD's table metadata (latest schema JSON +
-    * cumulative constraints) keyed by log version. Sound because the
-    * manifest log is an immutable prefix: versions only grow and a
-    * published manifest never changes, so a cached (version, meta) pair
-    * stays true forever and advancing it only reads the (cached, head]
-    * delta. Without it, EVERY write to a never-evolved, never-
-    * checkpointed table walked the whole log looking for a schema that
-    * is not there (the ADVICE-r10 class, reintroduced by constraints,
-    * which cannot early-stop because they accumulate). Two racing
-    * writers at worst both fold the same delta; last-put wins and the
-    * next read re-folds — correctness never depends on the cache.
+  /** Live segment paths at `asOf` (default: latest). Resolved once —
+    * this list IS the reader's isolation boundary.
     */
-  private val headMetaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, Option[String], Seq[(String, String)], Map[String, String])]()
+  def liveFiles(table: String, asOf: Option[Long] = None): Seq[String] =
+    stateAt(table, asOf).live
 
-  private def headMeta(table: String):
-      (Option[String], Seq[(String, String)], Map[String, String]) = {
-    val cur = currentVersion(table)
-    if (cur == 0L) return (None, Seq.empty, Map.empty)
-    Option(headMetaCache.get(table)) match {
-      case Some((v, sc, ck, pr)) if v == cur => (sc, ck, pr)
-      case Some((v, sc, ck, pr)) if v < cur =>
-        var s = sc
-        var cks = ck
-        var props = pr
-        ((v + 1) to cur).foreach { vv =>
-          val m = readManifest(table, vv)
-          m.schemaJson.foreach(j => s = Some(j))
-          cks = (cks ++ m.checks).filterNot(c => m.dropChecks.contains(c._1))
-          props = (props ++ m.props) -- m.unsetProps
-        }
-        val res = (s, cks, props)
-        headMetaCache.put(table, (cur, res._1, res._2, res._3))
-        res
-      case _ => // first touch (or a foreign cache regression): full resolve
-        val res = (recordedSchemaJsonAt(table, Some(cur)),
-          activeConstraintsAt(table, Some(cur)),
-          tablePropertiesAt(table, Some(cur)))
-        headMetaCache.put(table, (cur, res._1, res._2, res._3))
-        res
-    }
-  }
+  /** Table schema recorded by the latest schema-carrying commit at or
+    * before `asOf`; None for tables that never evolved (their schema is
+    * whatever the parquet footers carry — the pre-evolution contract).
+    */
+  def recordedSchema(table: String,
+                     asOf: Option[Long] = None): Option[org.apache.spark.sql.types.StructType] =
+    stateAt(table, asOf).schema
 
   /** SCHEMA EVOLUTION as a metadata commit: record `newSchema` in the
     * manifest so every subsequent read resolves old segments under it —
@@ -714,10 +715,10 @@ object TxLog {
     // footers instead of nulls (see dropColumn) — refuse until they are
     // rewritten away (compact)
     if (added.nonEmpty) {
-      val liveNow = liveFiles(table, Some(rv)).toSet
-      val renamesAll = tableStateViaCheckpoint(table, Some(rv)).renames
+      val st = stateAt(table, Some(rv))
+      val liveNow = st.live.toSet
       added.foreach { nf =>
-        dropHistory(table).find(dr =>
+        st.drops.find(dr =>
             dr.name == nf.name && dr.segs.intersect(liveNow).nonEmpty).foreach { dr =>
           throw new IllegalArgumentException(
             s"evolve of $table re-adds dropped column '${nf.name}' while " +
@@ -733,7 +734,7 @@ object TxLog {
         // every snapshot throws until compact). Refuse both (ADVICE r12,
         // high): the added name must not be any rename's oldName whose
         // affected segments are still live.
-        renamesAll.find(r =>
+        st.renames.find(r =>
             r.oldName == nf.name && r.segs.intersect(liveNow).nonEmpty).foreach { r =>
           throw new IllegalArgumentException(
             s"evolve of $table re-adds '${nf.name}', the pre-rename physical " +
@@ -799,9 +800,8 @@ object TxLog {
     *    would resurrect the old values out of those footers instead of
     *    reading nulls. Compaction rewrites the segments (under the
     *    current logical schema, which no longer has the column), after
-    *    which the name is free again. The drop history walk reads raw
-    *    manifests (never deleted, even by vacuum), so the guard survives
-    *    checkpoints.
+    *    which the name is free again. Drops accumulate in the log state
+    *    and checkpoints carry them, so the guard survives [[cleanupLog]].
     *
     * CAS-conflicts with any concurrent commit, like every metadata
     * decision.
@@ -834,12 +834,6 @@ object TxLog {
       drops = Seq(Drop(name, liveFiles(table, Some(rv)).toSet)))
   }
 
-  /** Every [[Drop]] ever committed (full raw-manifest walk — evolve-path
-    * only, and manifests are never deleted; see [[dropColumn]]).
-    */
-  private def dropHistory(table: String): Seq[Drop] =
-    listVersions(table).flatMap(v => readManifest(table, v).drops)
-
   /** Snapshot read: the live segments as one parquet relation. When the
     * log carries an evolved schema (≤ asOf), segments are read UNDER it:
     * Spark's parquet reader null-fills columns absent from a file's
@@ -850,10 +844,9 @@ object TxLog {
     */
   def snapshot(spark: SparkSession, table: String,
                asOf: Option[Long] = None): DataFrame = {
-    val st = tableStateViaCheckpoint(table, asOf)
-    val files = st.segments.map(_._1)
-    require(files.nonEmpty, s"no committed segments in $table at $asOf")
-    readSegments(spark, files, recordedSchema(table, asOf), st)
+    val st = stateAt(table, asOf)
+    require(st.live.nonEmpty, s"no committed segments in $table at $asOf")
+    readSegments(spark, st.live, st)
   }
 
   /** Segment scan, COLUMN-MAPPING aware, optionally exposing each row's
@@ -941,12 +934,11 @@ object TxLog {
     * the scan (collision-proof helper names) and dropped after the join.
     */
   private def readSegments(spark: SparkSession, files: Seq[String],
-                           schemaOpt: Option[org.apache.spark.sql.types.StructType],
-                           st: TableState): DataFrame =
-    if (st.dv.isEmpty) readFiles(spark, files, schemaOpt, st.renames)
+                           st: LogState): DataFrame =
+    if (st.dv.isEmpty) readFiles(spark, files, st.schema, st.renames)
     else {
       import org.apache.spark.sql.functions.{col => fcol}
-      val (rel, fp, ri) = readSegmentsWithCoords(spark, files, schemaOpt, st.renames)
+      val (rel, fp, ri) = readSegmentsWithCoords(spark, files, st)
       val taken = rel.columns.toSet
       val dfp = freshName(taken, "__dv_fp")
       val dri = freshName(taken + dfp, "__dv_ri")
@@ -962,13 +954,13 @@ object TxLog {
     * logical schema at once. Returns (relation, fpCol, riCol).
     */
   private def readSegmentsWithCoords(spark: SparkSession, files: Seq[String],
-                                     schemaOpt: Option[org.apache.spark.sql.types.StructType],
-                                     renames: Seq[Rename]): (DataFrame, String, String) = {
+                                     st: LogState): (DataFrame, String, String) = {
+    val schemaOpt = st.schema
     val logicalNames = schemaOpt.map(_.fieldNames.toSet).getOrElse(
       spark.read.parquet(files: _*).columns.toSet)
     val fp = freshName(logicalNames, "__fp")
     val ri = freshName(logicalNames + fp, "__ri")
-    (readFiles(spark, files, schemaOpt, renames, Some((fp, ri))), fp, ri)
+    (readFiles(spark, files, schemaOpt, st.renames, Some((fp, ri))), fp, ri)
   }
 
   /** Helper-column name guaranteed absent from `taken`: the preferred
@@ -1005,11 +997,10 @@ object TxLog {
     import org.apache.spark.sql.functions.{col => fcol}
     requireNotAppendOnly(table, "deleteWhere")
     val rv = currentVersion(table)
-    val st = tableStateViaCheckpoint(table, Some(rv))
-    val files = st.segments.map(_._1)
+    val st = stateAt(table, Some(rv))
+    val files = st.live
     require(files.nonEmpty, s"delete from empty table $table")
-    val (withMeta, fp, ri) = readSegmentsWithCoords(
-      spark, files, recordedSchema(table, Some(rv)), st.renames)
+    val (withMeta, fp, ri) = readSegmentsWithCoords(spark, files, st)
     val taken = withMeta.columns.toSet
     val dfp = freshName(taken, "__dv_fp")
     val dri = freshName(taken + dfp, "__dv_ri")
@@ -1064,11 +1055,10 @@ object TxLog {
     require(sets.nonEmpty, s"update of $table needs at least one SET assignment")
     requireNotAppendOnly(table, "updateWhere")
     val rv = currentVersion(table)
-    val st = tableStateViaCheckpoint(table, Some(rv))
-    val files = st.segments.map(_._1)
+    val st = stateAt(table, Some(rv))
+    val files = st.live
     require(files.nonEmpty, s"update of empty table $table")
-    val (withMeta, fp, ri) = readSegmentsWithCoords(
-      spark, files, recordedSchema(table, Some(rv)), st.renames)
+    val (withMeta, fp, ri) = readSegmentsWithCoords(spark, files, st)
     val taken = withMeta.columns.toSet
     val dfp = freshName(taken, "__dv_fp")
     val dri = freshName(taken + dfp, "__dv_ri")
@@ -1141,7 +1131,7 @@ object TxLog {
     */
   def compactDv(spark: SparkSession, table: String): Long = {
     val rv = currentVersion(table)
-    val st = tableStateViaCheckpoint(table, Some(rv))
+    val st = stateAt(table, Some(rv))
     if (st.dv.length <= 1) return rv
     // fold under the explicit coordinate schema: enriched (CDC-persisting)
     // chain entries carry extra data columns the consolidated vector
@@ -1229,12 +1219,12 @@ object TxLog {
           "(UNSET it to allow row-removing writes)")
 
   /** DROP CONSTRAINT as a metadata commit (Delta's `ALTER TABLE … DROP
-    * CONSTRAINT`): the name is tombstoned in the manifest; every
-    * constraint fold (head memo, time travel, checkpoint) removes it
-    * from the version it lands. CAS-conflicts like addConstraint (the
-    * "exists" check is only meaningful against the head it read) — but
-    * a drop is NOT in the data-commit metadata-conflict scan: data
-    * staged under MORE constraints stays valid under fewer.
+    * CONSTRAINT`): the name is tombstoned in the manifest; the log fold
+    * (and so every checkpoint after it) removes it from the version it
+    * lands. CAS-conflicts like addConstraint (the "exists" check is only
+    * meaningful against the head it read) — but a drop is NOT in the
+    * data-commit metadata-conflict scan: data staged under MORE
+    * constraints stays valid under fewer.
     */
   def dropConstraint(table: String, name: String): Long = {
     val rv = currentVersion(table)
@@ -1400,7 +1390,7 @@ object TxLog {
                           asOf: Option[Long] = None): Seq[String] = {
     require(partitionLayout(table, asOf).contains(col),
       s"$table has no partition column '$col'")
-    tableStateViaCheckpoint(table, asOf).segments
+    stateAt(table, asOf).segments
       .map { case (p, _) => segPartValues(p, Seq(col)).head }.distinct
   }
 
@@ -1500,56 +1490,17 @@ object TxLog {
   }
   private val IntervalRe = """interval\s+(\d+)\s+(hour|day|week)s?""".r
 
-  /** Constraints in force at `asOf` — the head path answers from the
-    * [[headMeta]] memo (O(delta) manifests since the last call); time
-    * travel resolves through the nearest checkpoint (which carries the
-    * cumulative list) plus only the manifests after it.
-    */
+  /** CHECK constraints in force at `asOf` (default: head). */
   def activeConstraints(table: String,
                         asOf: Option[Long] = None): Seq[(String, String)] =
-    asOf match {
-      case Some(_) => activeConstraintsAt(table, asOf)
-      case None => headMeta(table)._2
-    }
+    stateAt(table, asOf).checks
 
-  private def activeConstraintsAt(table: String,
-                                  asOf: Option[Long]): Seq[(String, String)] = {
-    val vs = listVersions(table).filter(v => asOf.forall(v <= _))
-    val ckpt = checkpointVersions(table).filter(v => asOf.forall(v <= _)).lastOption
-    requireFoldable(table, ckpt, asOf)
-    val after = ckpt.fold(vs)(cv => vs.filter(_ > cv))
-    val base = ckpt.map(cv => readCheckpoint(table, cv).checks).getOrElse(Seq.empty)
-    after.foldLeft(base) { (acc, v) =>
-      val m = readManifest(table, v)
-      (acc ++ m.checks).filterNot(c => m.dropChecks.contains(c._1))
-    }
-  }
-
-  /** Table properties in force at `asOf` (default: head, answered from
-    * the [[headMeta]] memo). Same fold shape as constraints: the nearest
-    * checkpoint's cumulative map, then each later manifest's SETs applied
-    * over it and its UNSETs removed.
+  /** Table properties in force at `asOf` (default: head): each commit's
+    * SETs applied over the map and its UNSETs removed.
     */
   def tableProperties(table: String,
                       asOf: Option[Long] = None): Map[String, String] =
-    asOf match {
-      case Some(_) => tablePropertiesAt(table, asOf)
-      case None => headMeta(table)._3
-    }
-
-  private def tablePropertiesAt(table: String,
-                                asOf: Option[Long]): Map[String, String] = {
-    val vs = listVersions(table).filter(v => asOf.forall(v <= _))
-    val ckpt = checkpointVersions(table).filter(v => asOf.forall(v <= _)).lastOption
-    requireFoldable(table, ckpt, asOf)
-    val after = ckpt.fold(vs)(cv => vs.filter(_ > cv))
-    val base = ckpt.map(cv => readCheckpoint(table, cv).props)
-      .getOrElse(Map.empty[String, String])
-    after.foldLeft(base) { (acc, v) =>
-      val m = readManifest(table, v)
-      (acc ++ m.props) -- m.unsetProps
-    }
-  }
+    stateAt(table, asOf).props
 
   /** Stage a dataframe as a new immutable segment directory — NOT yet
     * visible to any reader (no manifest references it until commit).
@@ -1659,11 +1610,11 @@ object TxLog {
         // the property that keeps a million-commit table readable without
         // anyone remembering to call checkpoint(). N defaults to 10 and
         // is tunable per table via `graft.checkpointInterval` (Delta's
-        // delta.checkpointInterval; headMeta answers in O(delta)
-        // manifests, so the lookup is commit-priced). Deterministic
-        // content, atomic no-overwrite publish, and never on the commit's
-        // critical correctness path: a failure here leaves a valid (just
-        // uncheckpointed) log.
+        // delta.checkpointInterval; the property fold reads at most one
+        // interval of manifests, so the lookup is commit-priced).
+        // Deterministic content, atomic no-overwrite publish, and never on
+        // the commit's critical correctness path: a failure here leaves a
+        // valid (just uncheckpointed) log.
         val ckptEvery = tableProperties(table).get("graft.checkpointInterval")
           .flatMap(_.toLongOption).filter(_ > 0).getOrElse(AutoCheckpointInterval)
         if (target % ckptEvery == 0)
@@ -1858,7 +1809,7 @@ object TxLog {
     require(statsCols.nonEmpty, s"analyze($table) needs >= 1 stats column")
     val rv = currentVersion(table)
     require(rv > 0, s"analyze of uninitialized table $table")
-    val st = tableStateViaCheckpoint(table, Some(rv))
+    val st = stateAt(table, Some(rv))
     val todo = st.segments.collect {
       case (p, s) if force ||
         !statsCols.forall(c => s.exists(_.statsFor(c).nonEmpty)) => p
@@ -1930,7 +1881,7 @@ object TxLog {
     */
   def estimatedRangeRows(table: String, col: String, lo: Long, hi: Long,
                          asOf: Option[Long] = None): Option[Double] = {
-    val st = tableStateViaCheckpoint(table, asOf)
+    val st = stateAt(table, asOf)
     if (st.dv.nonEmpty || hi < lo) return None
     val per = st.segments.map(_._2.flatMap(_.statsFor(col)).flatMap(s =>
       (s.rows, s.hist) match {
@@ -1967,7 +1918,7 @@ object TxLog {
     * reading a byte of data.
     */
   def tableRowCount(table: String, asOf: Option[Long] = None): Option[Long] = {
-    val st = tableStateViaCheckpoint(table, asOf)
+    val st = stateAt(table, asOf)
     // a standing deletion vector makes segment-level counts an
     // overcount (soft-deleted rows are still in the files) — refuse to
     // answer rather than lie; compaction materializes and restores stats
@@ -1986,7 +1937,7 @@ object TxLog {
     */
   def tableMinMax(table: String, col: String,
                   asOf: Option[Long] = None): Option[(Long, Long)] = {
-    val st = tableStateViaCheckpoint(table, asOf)
+    val st = stateAt(table, asOf)
     if (st.dv.nonEmpty || st.segments.isEmpty) return None
     val per = st.segments.map(_._2.flatMap(_.statsFor(col)))
     // a string-tracked column's long pair is a placeholder — refuse
@@ -2005,7 +1956,7 @@ object TxLog {
     */
   def tableMinMaxString(table: String, col: String,
                         asOf: Option[Long] = None): Option[(String, String)] = {
-    val st = tableStateViaCheckpoint(table, asOf)
+    val st = stateAt(table, asOf)
     if (st.dv.nonEmpty || st.segments.isEmpty) return None
     val per = st.segments.map(_._2.flatMap(_.statsFor(col)))
     if (per.exists(_.isEmpty)) return None
@@ -2027,7 +1978,7 @@ object TxLog {
     */
   def ndvBounds(table: String, col: String,
                 asOf: Option[Long] = None): Option[(Long, Long)] = {
-    val st = tableStateViaCheckpoint(table, asOf)
+    val st = stateAt(table, asOf)
     if (st.dv.nonEmpty) return None // soft deletes may have removed values
     val ndvs = st.segments.map(_._2.flatMap(_.statsFor(col)).flatMap(_.ndv))
     if (ndvs.isEmpty || ndvs.exists(_.isEmpty)) None
@@ -2169,7 +2120,7 @@ object TxLog {
     import org.apache.spark.sql.functions.lit
     val pos = spark.range(1).select(bloomPositions(lit(key)).as("p"))
       .head().getSeq[Long](0)
-    val st = tableStateViaCheckpoint(table)
+    val st = stateAt(table)
     val all = st.segments
     val keep = all.collect {
       case (p, None) => p
@@ -2180,7 +2131,7 @@ object TxLog {
           cs.bloomHex.forall(bloomMightContain(_, pos)))) => p
     }
     require(keep.nonEmpty, s"key $key pruned from every segment of $table")
-    val rel = readSegments(spark, keep, recordedSchema(table), st)
+    val rel = readSegments(spark, keep, st)
     (rel, keep.size, all.size)
   }
 
@@ -2196,7 +2147,7 @@ object TxLog {
     import org.apache.spark.sql.functions.lit
     val pos = spark.range(1).select(bloomPositionsStr(lit(key)).as("p"))
       .head().getSeq[Long](0)
-    val st = tableStateViaCheckpoint(table)
+    val st = stateAt(table)
     val all = st.segments
     val keep = all.collect {
       case (p, None) => p
@@ -2205,7 +2156,7 @@ object TxLog {
           (!cs.isString || cs.bloomHex.forall(bloomMightContain(_, pos)))) => p
     }
     require(keep.nonEmpty, s"key '$key' pruned from every segment of $table")
-    val rel = readSegments(spark, keep, recordedSchema(table), st)
+    val rel = readSegments(spark, keep, st)
     (rel, keep.size, all.size)
   }
 
@@ -2215,16 +2166,16 @@ object TxLog {
     * contract applies.
     */
   def dvInForce(table: String, asOf: Option[Long] = None): Boolean =
-    tableStateViaCheckpoint(table, asOf).dv.nonEmpty
+    stateAt(table, asOf).dv.nonEmpty
 
   /** Live segments carrying their accumulated stats (None for segments
     * committed without stats — those can never be pruned).
     */
   def liveFilesWithStats(table: String,
                          asOf: Option[Long] = None): Seq[(String, Option[SegStats])] =
-    tableStateViaCheckpoint(table, asOf).segments
+    stateAt(table, asOf).segments
 
-  /** DV-chain fold rule, shared by both resolution paths:
+  /** DV-chain fold rule of [[step]]:
     *  - RESTORE and [[compactDv]] commits REPLACE the chain with exactly
     *    the paths they carry (possibly none — how a restore to a
     *    pre-delete version clears standing marks without staging bytes);
@@ -2244,22 +2195,12 @@ object TxLog {
     else if (m.dv.nonEmpty) chain ++ m.dv
     else chain
 
-  /** Full-fold snapshot resolution, deletion-vector chain included (fold
-    * rules in [[foldDvChain]]).
+  /** Snapshot resolution: live segments with their stats, the
+    * deletion-vector chain (fold rules in [[foldDvChain]]) and the
+    * renames in force.
     */
-  def tableState(table: String, asOf: Option[Long] = None): TableState = {
-    requireFoldable(table, None, asOf) // full fold: only valid from v1
-    val vs = listVersions(table).filter(v => asOf.forall(v <= _))
-    val (live, stats, dv, ren) = vs.foldLeft(
-      (Vector.empty[String], Map.empty[String, SegStats], Vector.empty[String],
-        Vector.empty[Rename])) {
-      case ((liveAcc, statAcc, dvAcc, renAcc), v) =>
-        val m = readManifest(table, v)
-        (liveAcc.filterNot(m.removes.contains) ++ m.adds, statAcc ++ m.stats,
-          foldDvChain(dvAcc, m), renAcc ++ m.renames)
-    }
-    TableState(live.map(p => p -> stats.get(p)), dv, ren)
-  }
+  def tableState(table: String, asOf: Option[Long] = None): TableState =
+    stateAt(table, asOf).tableState
 
   /** Stats-pruned snapshot: only segments whose [min, max] on `statsCol`
     * intersects [lo, hi] are read (stat-less segments are conservatively
@@ -2268,7 +2209,7 @@ object TxLog {
     */
   def snapshotPruned(spark: SparkSession, table: String, statsCol: String,
                      lo: Long, hi: Long): (DataFrame, Int, Int) = {
-    val st = tableStateViaCheckpoint(table)
+    val st = stateAt(table)
     val all = st.segments
     val keep = all.collect {
       case (p, None) => p
@@ -2276,7 +2217,7 @@ object TxLog {
         cs.isString || (cs.max >= lo && cs.min <= hi)) => p
     }
     require(keep.nonEmpty, s"predicate [$lo,$hi] prunes every segment of $table")
-    val rel = readSegments(spark, keep, recordedSchema(table), st)
+    val rel = readSegments(spark, keep, st)
     (rel, keep.size, all.size)
   }
 
@@ -2296,7 +2237,7 @@ object TxLog {
                           asOf: Option[Long] = None,
                           strBounds: Seq[(String, Option[String], Option[String])] =
                             Seq.empty): (DataFrame, Int, Int) = {
-    val st = tableStateViaCheckpoint(table, asOf)
+    val st = stateAt(table, asOf)
     val all = st.segments
     require(all.nonEmpty, s"no committed segments in $table")
     val keep = all.collect {
@@ -2308,12 +2249,11 @@ object TxLog {
           s.statsFor(c).forall(cs => strOverlaps(cs, lo, hi)) } => p
     }
     if (keep.isEmpty) {
-      val schema = readSegments(spark, all.map(_._1),
-        recordedSchema(table, asOf), st).schema
+      val schema = readSegments(spark, all.map(_._1), st).schema
       (spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
         0, all.size)
-    } else (readSegments(spark, keep, recordedSchema(table, asOf), st),
+    } else (readSegments(spark, keep, st),
       keep.size, all.size)
   }
 
@@ -2348,7 +2288,7 @@ object TxLog {
     */
   def snapshotPrunedStr(spark: SparkSession, table: String, statsCol: String,
                         lo: String, hi: String): (DataFrame, Int, Int) = {
-    val st = tableStateViaCheckpoint(table)
+    val st = stateAt(table)
     val all = st.segments
     val keep = all.collect {
       case (p, None) => p
@@ -2357,7 +2297,7 @@ object TxLog {
     }
     require(keep.nonEmpty,
       s"predicate ['$lo','$hi'] prunes every segment of $table")
-    val rel = readSegments(spark, keep, recordedSchema(table), st)
+    val rel = readSegments(spark, keep, st)
     (rel, keep.size, all.size)
   }
 
@@ -2525,7 +2465,7 @@ object TxLog {
   def snapshotPartitionPruned(spark: SparkSession, table: String,
                               partCol: String, value: Option[String],
                               asOf: Option[Long] = None): (DataFrame, Int, Int) = {
-    val st = tableStateViaCheckpoint(table, asOf)
+    val st = stateAt(table, asOf)
     val tagged = st.segments.map { case (p, _) =>
       val name = Paths.get(p).getFileName.toString
       require(name.startsWith(partCol + "="),
@@ -2536,9 +2476,8 @@ object TxLog {
     val keep = value.fold(tagged)(v => tagged.filter(_._2 == v))
     require(keep.nonEmpty,
       s"partition $partCol=${value.getOrElse("*")} prunes every segment of $table")
-    val schemaOpt = recordedSchema(table, asOf)
     val rel = keep.groupBy(_._2).toSeq.sortBy(_._1).map { case (v, segs) =>
-      readSegments(spark, segs.map(_._1), schemaOpt, st)
+      readSegments(spark, segs.map(_._1), st)
         .withColumn(partCol, partValueLit(v))
     }.reduce(_.unionByName(_))
     (rel, keep.size, st.segments.size)
@@ -2562,7 +2501,7 @@ object TxLog {
                               asOf: Option[Long]): (DataFrame, Int, Int) = {
     require(specs.nonEmpty, "snapshotPartitionPruned needs >= 1 level")
     val partCols = specs.map(_._1)
-    val st = tableStateViaCheckpoint(table, asOf)
+    val st = stateAt(table, asOf)
     val tagged = st.segments.map { case (p, _) =>
       val path = Paths.get(p)
       val n = path.getNameCount
@@ -2582,11 +2521,10 @@ object TxLog {
     require(keep.nonEmpty, "partition " +
       specs.map { case (c, f) => s"$c=${f.getOrElse("*")}" }.mkString("/") +
       s" prunes every segment of $table")
-    val schemaOpt = recordedSchema(table, asOf)
     val rel = keep.groupBy(_._2).toSeq.sortBy(_._1.mkString("/")).map {
       case (vals, segs) =>
         partCols.zip(vals).foldLeft(
-          readSegments(spark, segs.map(_._1), schemaOpt, st)) {
+          readSegments(spark, segs.map(_._1), st)) {
           case (d, (pc, v)) => d.withColumn(pc, partValueLit(v))
         }
     }.reduce(_.unionByName(_))
@@ -2610,7 +2548,7 @@ object TxLog {
                                      Option[String])] = Seq.empty)
       : (Option[DataFrame], Int, Int) = {
     val partCols = partIn.map(_._1)
-    val st = tableStateViaCheckpoint(table, asOf)
+    val st = stateAt(table, asOf)
     val tagged = st.segments.map { case (p, ss) =>
       (p, ss, segPartValues(p, partCols))
     }
@@ -2625,11 +2563,10 @@ object TxLog {
         }
     }
     if (keep.isEmpty) return (None, 0, st.segments.size)
-    val schemaOpt = recordedSchema(table, asOf)
     val rel = keep.groupBy(_._3).toSeq.sortBy(_._1.mkString("/")).map {
       case (vals, segs) =>
         partCols.zip(vals).foldLeft(
-          readSegments(spark, segs.map(_._1), schemaOpt, st)) {
+          readSegments(spark, segs.map(_._1), st)) {
           case (d, (pc, v)) => d.withColumn(pc, partValueLit(v))
         }
     }.reduce(_.unionByName(_))
@@ -2697,7 +2634,7 @@ object TxLog {
     // dir-name match must escape the user's value the same way
     val escDir = partCol + "=" + org.apache.spark.sql.catalyst.catalog
       .ExternalCatalogUtils.escapePathName(value)
-    val old = tableStateViaCheckpoint(table, Some(rv)).segments.map(_._1)
+    val old = stateAt(table, Some(rv)).live
       .filter(p => Paths.get(p).getFileName.toString == escDir)
     val base = s"$table/data/${java.util.UUID.randomUUID}"
     w.write.mode(SaveMode.ErrorIfExists).partitionBy(partCol).parquet(base)
@@ -2718,7 +2655,7 @@ object TxLog {
     * plain segments again).
     */
   def partitionLayout(table: String, asOf: Option[Long] = None): Seq[String] = {
-    val segs = tableStateViaCheckpoint(table, asOf).segments.map(_._1)
+    val segs = stateAt(table, asOf).live
     if (segs.isEmpty) return Seq.empty
     def levels(p: String): Seq[String] = {
       val path = Paths.get(p)
@@ -2788,7 +2725,7 @@ object TxLog {
     val layout = partitionLayout(table, asOf)
     val idx = layout.indexOf(partCol)
     if (idx < 0) return None
-    val st = tableStateViaCheckpoint(table, asOf)
+    val st = stateAt(table, asOf)
     if (st.dv.nonEmpty) return None
     val per = st.segments.map { case (p, ss) =>
       ss.flatMap(_.rows).map(r =>
@@ -2812,7 +2749,7 @@ object TxLog {
     val layout = partitionLayout(table, asOf)
     val idxs = partCols.map(layout.indexOf)
     if (partCols.isEmpty || idxs.exists(_ < 0)) return None
-    val st = tableStateViaCheckpoint(table, asOf)
+    val st = stateAt(table, asOf)
     if (st.dv.nonEmpty) return None
     val per = st.segments.map { case (p, ss) =>
       ss.flatMap(_.rows).map { r =>
@@ -2835,7 +2772,7 @@ object TxLog {
                           asOf: Option[Long] = None): Option[Seq[SegStats]] = {
     val layout = partitionLayout(table, asOf)
     if (partEq.exists { case (c, _) => !layout.contains(c) }) return None
-    val st = tableStateViaCheckpoint(table, asOf)
+    val st = stateAt(table, asOf)
     if (st.dv.nonEmpty) return None
     val matching = st.segments.filter { case (p, _) =>
       val vals = segPartValues(p, layout)
@@ -2860,7 +2797,7 @@ object TxLog {
     require(idx >= 0, s"$table is not partitioned by $partCol" +
       (if (layout.isEmpty) " (no partitioned layout)"
        else s" (layout: ${layout.mkString("/")})"))
-    tableStateViaCheckpoint(table, asOf).segments
+    stateAt(table, asOf).segments
       .map { case (p, _) => segPartValues(p, layout)(idx) }
       .distinct.sorted
   }
@@ -2876,7 +2813,7 @@ object TxLog {
                       asOf: Option[Long] = None): (Seq[String], Seq[Seq[String]]) = {
     val layout = partitionLayout(table, asOf)
     require(layout.nonEmpty, s"$table has no partitioned layout")
-    val leaves = tableStateViaCheckpoint(table, asOf).segments
+    val leaves = stateAt(table, asOf).segments
       .map { case (p, _) => segPartValues(p, layout) }
       .distinct.sortBy(_.mkString("/"))
     (layout, leaves)
@@ -2898,14 +2835,14 @@ object TxLog {
     validateUpdates(updates, key)
     val u = fillGoverned(updates, table) // governed upsert rows agree too
     validateWrite(u, table)
-    val live = liveFiles(table, Some(rv))
+    val st = stateAt(table, Some(rv))
+    val live = st.live
     require(live.nonEmpty, s"merge into empty table $table")
     // base resolves under the recorded schema (rename-mapped, null-filled
     // for pre-evolve segments) with any deletion vector applied, so the
     // rewrite MATERIALIZES the deletes (and the commit's removes clear
     // the dv) and writes segments under the CURRENT logical names
-    val base = readSegments(spark, live, recordedSchema(table, Some(rv)),
-      tableStateViaCheckpoint(table, Some(rv)))
+    val base = readSegments(spark, live, st)
     val merged = u.unionByName(
       base.join(u.select(key), Seq(key), "left_anti"),
       allowMissingColumns = true)
@@ -2967,11 +2904,10 @@ object TxLog {
     // agree with the declarations like every other writer
     val u = fillGoverned(updates, table)
     validateWrite(u, table)
-    val st = tableStateViaCheckpoint(table, Some(rv))
-    val files = st.segments.map(_._1)
+    val st = stateAt(table, Some(rv))
+    val files = st.live
     require(files.nonEmpty, s"merge into empty table $table")
-    val (withMeta0, fp, ri) = readSegmentsWithCoords(
-      spark, files, recordedSchema(table, Some(rv)), st.renames)
+    val (withMeta0, fp, ri) = readSegmentsWithCoords(spark, files, st)
     val rel = withMeta0.drop(fp, ri) // logical shape for the checks below
     val extra = u.columns.filterNot(rel.columns.contains)
     require(extra.isEmpty,
@@ -3064,7 +3000,7 @@ object TxLog {
                       key: String, batchId: Long): Long = {
     init(table)
     if (batchId <= maxCommittedAnyBatch(table)) -1L
-    else if (tableStateViaCheckpoint(table).segments.isEmpty) {
+    else if (stateAt(table).segments.isEmpty) {
       val rv = currentVersion(table) // before validation — see append
       validateUpdates(updates, key)
       val u = fillGoverned(updates, table)
@@ -3107,8 +3043,8 @@ object TxLog {
     */
   def compact(spark: SparkSession, table: String): Long = {
     val rv = currentVersion(table)
-    val st = tableStateViaCheckpoint(table, Some(rv))
-    val live = st.segments.map(_._1)
+    val st = stateAt(table, Some(rv))
+    val live = st.live
     require(live.nonEmpty, s"compact of empty table $table")
     // snapshot() applies any deletion vector: compaction is the moment
     // soft deletes become physical (dv cleared by the removes)
@@ -3135,16 +3071,15 @@ object TxLog {
                        value: String): Long = {
     import org.apache.spark.sql.functions.{col => fcol}
     val rv = currentVersion(table)
-    val st = tableStateViaCheckpoint(table, Some(rv))
+    val st = stateAt(table, Some(rv))
     val escDir = partCol + "=" + org.apache.spark.sql.catalyst.catalog
       .ExternalCatalogUtils.escapePathName(value)
-    val (target, _) = st.segments.map(_._1)
+    val (target, _) = st.live
       .partition(p => Paths.get(p).getFileName.toString == escDir)
     require(target.nonEmpty,
       s"optimize: no live segments for $partCol=$value in $table")
     // DV-applied read of ONLY the target partition's segments
-    val (withMeta, fp, ri) = readSegmentsWithCoords(
-      spark, target, recordedSchema(table, Some(rv)), st.renames)
+    val (withMeta, fp, ri) = readSegmentsWithCoords(spark, target, st)
     val visible =
       if (st.dv.isEmpty) withMeta
       else {
@@ -3198,7 +3133,7 @@ object TxLog {
     require(layout.nonEmpty,
       s"compactPartitioned on unpartitioned $table — use compact")
     val rv = currentVersion(table)
-    val st = tableStateViaCheckpoint(table, Some(rv))
+    val st = stateAt(table, Some(rv))
     def chain(p: String): String = {
       val parts = Paths.get(p)
       (parts.getNameCount - layout.size until parts.getNameCount)
@@ -3211,7 +3146,7 @@ object TxLog {
     // coordinates record the scan's URI form (file:/…) — containment
     // with a '/' boundary, exactly like compactPartition's chain match
     def marked(seg: String): Boolean = dvFiles.exists(_.contains(seg + "/"))
-    val byChain = st.segments.map(_._1).groupBy(chain)
+    val byChain = st.live.groupBy(chain)
     // a chain rewrites when fragmented OR when any of its segments
     // carries deletes (the rewrite is the moment they materialize)
     val doomed = byChain.filter { case (_, segs) =>
@@ -3220,8 +3155,7 @@ object TxLog {
     if (doomed.isEmpty) return rv
     val base = s"$table/data/${java.util.UUID.randomUUID}"
     val adds = doomed.toSeq.sortBy(_._1).map { case (c, segs) =>
-      val (withMeta, fp, ri) = readSegmentsWithCoords(
-        spark, segs, recordedSchema(table, Some(rv)), st.renames)
+      val (withMeta, fp, ri) = readSegmentsWithCoords(spark, segs, st)
       val visible =
         if (st.dv.isEmpty) withMeta
         else {
@@ -3307,11 +3241,10 @@ object TxLog {
     require(partitionLayout(table).isEmpty,
       s"compactSmall on partitioned $table — compact per leaf via compactPartition")
     val rv = currentVersion(table)
-    val st = tableStateViaCheckpoint(table, Some(rv))
-    val small = st.segments.map(_._1).filter(p => segmentBytes(p) <= maxBytes)
+    val st = stateAt(table, Some(rv))
+    val small = st.live.filter(p => segmentBytes(p) <= maxBytes)
     if (small.size < minNumFiles) return rv
-    val (withMeta, fp, ri) = readSegmentsWithCoords(
-      spark, small, recordedSchema(table, Some(rv)), st.renames)
+    val (withMeta, fp, ri) = readSegmentsWithCoords(spark, small, st)
     val visible =
       if (st.dv.isEmpty) withMeta
       else {
@@ -3372,7 +3305,7 @@ object TxLog {
           // visa=A vs country=FR/visa=A); nested tables compact via
           // the explicit OPTIMIZE statement (compactPartitioned)
           val leafCol = layout.last
-          tableStateViaCheckpoint(table).segments.map(_._1)
+          stateAt(table).live
             .filter(p => segmentBytes(p) <= maxB)
             .groupBy(p => Paths.get(p).getFileName.toString)
             .collect { case (leaf, segs)
@@ -3403,9 +3336,9 @@ object TxLog {
   def purge(spark: SparkSession, table: String): Long = {
     import org.apache.spark.sql.functions.{col => fcol}
     val rv = currentVersion(table)
-    val st = tableStateViaCheckpoint(table, Some(rv))
+    val st = stateAt(table, Some(rv))
     if (st.dv.isEmpty) return rv
-    val live = st.segments.map(_._1)
+    val live = st.live
     // distinct marked FILES are metadata-sized (bounded by the table's
     // file count); segments resolve driver-side by path containment
     // (coordinates record the scan's URI form — compactPartition's trick)
@@ -3415,11 +3348,9 @@ object TxLog {
     // leaves can share a value prefix under one staging uuid)
     val marked = live.filter(seg => markedFiles.exists(_.contains(seg + "/")))
     if (marked.isEmpty) return rv // only stale marks on dead segments
-    val schemaOpt = recordedSchema(table, Some(rv))
     val adds = marked.groupBy(segLeaf(table, _)).toSeq.sortBy(_._1).map {
       case (leaf, segs) =>
-        val (withMeta, fp, ri) = readSegmentsWithCoords(
-          spark, segs, schemaOpt, st.renames)
+        val (withMeta, fp, ri) = readSegmentsWithCoords(spark, segs, st)
         val taken = withMeta.columns.toSet
         val dfp = freshName(taken, "__dv_fp")
         val dri = freshName(taken + dfp, "__dv_ri")
@@ -3464,11 +3395,11 @@ object TxLog {
     * a directory walk of the live segments, no data bytes read.
     */
   def generateSymlinkManifest(table: String): Seq[String] = {
-    val st = tableStateViaCheckpoint(table)
+    val st = stateAt(table)
     val root = Paths.get(table, "_symlink_format_manifest")
     if (Files.isDirectory(root))
       listClosed(Files.walk(root)).reverse.foreach(Files.deleteIfExists(_))
-    st.segments.map(_._1).groupBy(segLeaf(table, _)).toSeq.sortBy(_._1)
+    st.live.groupBy(segLeaf(table, _)).toSeq.sortBy(_._1)
       .map { case (leaf, segs) =>
         val files = segs.flatMap(s =>
           listClosed(Files.walk(Paths.get(s)))
@@ -3491,7 +3422,7 @@ object TxLog {
     * segment whose stats col differs from the requested one, so a
     * sentinel entry is never used to skip anything.
     */
-  private def rewriteStats(spark: SparkSession, p: String, st: TableState,
+  private def rewriteStats(spark: SparkSession, p: String, st: LogState,
                            op: String): Map[String, SegStats] = {
     import org.apache.spark.sql.functions.{count, lit}
     val tracked = st.segments.flatMap(_._2).flatMap(_.trackedCols).distinct
@@ -3838,14 +3769,14 @@ object TxLog {
     val statCol = s"zorder(${cols.mkString(",")})"
     val zlo = ZOrder.zkeyScalarN(box.map(_._1))
     val zhi = ZOrder.zkeyScalarN(box.map(_._2 - 1))
-    val st = tableStateViaCheckpoint(table)
+    val st = stateAt(table)
     val all = st.segments
     val keep = all.collect {
       case (p, None) => p
       case (p, Some(s)) if s.col != statCol || (s.max >= zlo && s.min <= zhi) => p
     }
     require(keep.nonEmpty, s"box pruned every segment of $table")
-    val rel = readSegments(spark, keep, recordedSchema(table), st)
+    val rel = readSegments(spark, keep, st)
     (rel, keep.size, all.size)
   }
 
@@ -3873,9 +3804,9 @@ object TxLog {
     val rv = currentVersion(table)
     require(toVersion >= 1 && toVersion < rv,
       s"restore of $table to $toVersion: need 1 <= v < head ($rv)")
-    val target = tableStateViaCheckpoint(table, Some(toVersion))
+    val target = stateAt(table, Some(toVersion))
     val live = liveFiles(table, Some(rv))
-    val targetSegs = target.segments.map(_._1)
+    val targetSegs = target.live
     // a vacuum below toVersion may have collected the target's bytes —
     // restoring then would publish a manifest referencing missing data
     // (Delta refuses RESTORE past the vacuum horizon for the same reason)
@@ -3905,16 +3836,21 @@ object TxLog {
             GeneratedPropPrefix + c
         }.toSeq
       }
-    commit(table, s"restore_v$toVersion", adds, removes, rv, Map.empty,
+    // re-added segments carry their stats again: a checkpoint written
+    // while they were removed holds none for them
+    commit(table, s"restore_v$toVersion", adds, removes, rv,
+      target.segments.collect { case (p, Some(s)) if adds.contains(p) => p -> s }.toMap,
       () => false, None, dv = target.dv, casAlways = true,
       unsetProps = staleGen)
   }
 
   /** CHECKPOINT the manifest log (Delta's _last_checkpoint / Iceberg's
     * snapshot metadata): collapse the fold of manifests 1..V into one
-    * `<V>.checkpoint.json` carrying the live segment list, accumulated
-    * stats, and the recorded schema AT V. Readers then resolve a snapshot
-    * from the nearest checkpoint ≤ asOf plus only the manifests after it —
+    * `<V>.checkpoint.json`: the whole [[LogState]] at V (live segments
+    * with their stats, dv chain, renames, drops, schema, constraints,
+    * properties, ingest ledger) as one manifest. Readers then resolve a
+    * snapshot from the nearest checkpoint ≤ asOf plus only the manifests
+    * after it —
     * O(commits since last checkpoint) instead of O(all commits), which is
     * what keeps a table with millions of commits readable. Writing a
     * checkpoint is pure metadata: no CAS needed (its content is a
@@ -3928,12 +3864,11 @@ object TxLog {
     // full fold): the write itself is then O(commits since the last
     // checkpoint), which is what lets the auto-checkpoint hook amortize
     // to O(1) manifests per commit on a million-commit log
-    val st = tableStateViaCheckpoint(table, Some(v))
-    val schema = recordedSchema(table, Some(v))
+    val st = stateAt(table, Some(v))
     val stats = st.segments.collect { case (p, Some(s)) => p -> s }.toMap
-    val m = Manifest(v, "checkpoint", st.segments.map(_._1), Seq.empty, v, stats,
-      schema.map(_.json), st.dv, activeConstraints(table, Some(v)), st.renames,
-      props = tableProperties(table, Some(v)))
+    val m = Manifest(v, "checkpoint", st.live, Seq.empty, v, stats,
+      st.schemaJson, st.dv, st.checks, st.renames, st.drops,
+      ingests = st.ingests.toSeq.sorted, props = st.props)
     val tmp = Files.createTempFile(logDir(table), s".ckpt$v-", ".tmp")
     Files.writeString(tmp, manifestJson(m))
     try Files.createLink(logDir(table).resolve(f"$v%020d.checkpoint.json"), tmp)
@@ -3960,8 +3895,8 @@ object TxLog {
     * `graft.logRetentionDuration`): delete manifests and superseded
     * checkpoints STRICTLY BELOW the newest checkpoint whose commit time
     * is older than the retention window. The surviving checkpoint carries
-    * the cumulative table state at its version (segments, stats, schema,
-    * constraints, properties, dv, renames), so every read at or above it
+    * the cumulative table state at its version (see [[checkpoint]]),
+    * drops and the ingest ledger included, so every read at or above it
     * resolves exactly as before; reads BELOW it error loudly (the
     * foldability guards) instead of answering from a truncated fold.
     * This is what bounds the `_txlog` file count on a million-commit
@@ -3993,80 +3928,7 @@ object TxLog {
   }
 
   /** Checkpoint versions present in the log, ascending. */
-  def checkpointVersions(table: String): Seq[Long] = {
-    val dir = logDir(table)
-    if (!Files.isDirectory(dir)) Seq.empty
-    else listClosed(Files.list(dir))
-      .map(_.getFileName.toString)
-      .filter(_.matches("\\d{20}\\.checkpoint\\.json"))
-      .map(_.stripSuffix(".checkpoint.json").toLong)
-      .sorted
-  }
-
-  /** Same memo as `manifestCache` for checkpoint files (immutable once
-    * published: two racers write identical bytes), same size guard.
-    */
-  private val checkpointCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), (Long, Manifest)]()
-
-  private def readCheckpoint(table: String, v: Long): Manifest = {
-    val p = logDir(table).resolve(f"$v%020d.checkpoint.json")
-    val size = Files.size(p)
-    Option(checkpointCache.get((table, v))) match {
-      case Some((sz, m)) if sz == size => m
-      case _ =>
-        val m = parseCheckpointNode(jsonMapper.readTree(Files.readString(p)))
-        checkpointCache.put((table, v), (size, m))
-        m
-    }
-  }
-
-  private def parseCheckpointNode(
-      node: com.fasterxml.jackson.databind.JsonNode): Manifest = {
-    def arr(field: String): Seq[String] =
-      node.get(field).elements().asScala.map(_.asText()).toSeq
-    Manifest(node.get("version").asLong(), node.get("op").asText(),
-      arr("adds"), arr("removes"), node.get("readVersion").asLong(),
-      statsField(node),
-      Option(node.get("schema")).map(_.toString),
-      dvField(node),
-      Option(node.get("checks")).map(_.elements().asScala.map(c =>
-        (c.get("name").asText(), c.get("expr").asText())).toSeq).getOrElse(Seq.empty),
-      renamesField(node), props = propsField(node))
-  }
-
-  /** Snapshot resolution through the nearest checkpoint: the fold starts
-    * from the checkpoint's live set and only replays manifests after it.
-    * Returns the same (segments, stats) a full fold produces — `TxLogSpec`
-    * pins the equivalence — while reading O(delta) manifests.
-    */
-  def liveFilesViaCheckpoint(table: String,
-                             asOf: Option[Long] = None): Seq[(String, Option[SegStats])] =
-    tableStateViaCheckpoint(table, asOf).segments
-
-  /** [[tableState]] resolved through the nearest checkpoint (same fold
-    * rules, O(delta) manifests; the checkpoint carries the dv in force at
-    * its version as the fold's starting value).
-    */
-  def tableStateViaCheckpoint(table: String,
-                              asOf: Option[Long] = None): TableState = {
-    val ckpt = checkpointVersions(table).filter(v => asOf.forall(v <= _)).lastOption
-    ckpt match {
-      case None => tableState(table, asOf)
-      case Some(cv) =>
-        val base = readCheckpoint(table, cv)
-        val vs = listVersions(table).filter(v => v > cv && asOf.forall(v <= _))
-        val (live, stats, dv, ren) = vs.foldLeft(
-          (base.adds.toVector, base.stats, base.dv.toVector,
-            base.renames.toVector)) {
-          case ((liveAcc, statAcc, dvAcc, renAcc), v) =>
-            val m = readManifest(table, v)
-            (liveAcc.filterNot(m.removes.contains) ++ m.adds, statAcc ++ m.stats,
-              foldDvChain(dvAcc, m), renAcc ++ m.renames)
-        }
-        TableState(live.map(p => p -> stats.get(p)), dv, ren)
-    }
-  }
+  def checkpointVersions(table: String): Seq[Long] = listLog(table)._2
 
   /** FSCK REPAIR (Delta's `FSCK REPAIR TABLE`): drop manifest references
     * to live segments whose directories are GONE from storage (manual
@@ -4081,13 +3943,13 @@ object TxLog {
     */
   def fsck(table: String, dryRun: Boolean = false): Seq[String] = {
     val rv = currentVersion(table) // pin BEFORE the state read: the CAS
-    val st = tableStateViaCheckpoint(table, Some(rv)) // must guard what we saw
+    val st = stateAt(table, Some(rv)) // must guard what we saw
     val missingDv = st.dv.filterNot(p => Files.exists(Paths.get(p)))
     require(missingDv.isEmpty,
       s"FSCK $table: deletion-vector segment(s) missing " +
         s"(${missingDv.mkString(", ")}) — repairing would RESURRECT their " +
         "deleted rows; restore the files or rewrite the table instead")
-    val missing = st.segments.map(_._1)
+    val missing = st.live
       .filterNot(p => Files.exists(Paths.get(p)))
     if (missing.nonEmpty && !dryRun)
       commit(table, "fsck", Seq.empty, missing, rv,
@@ -4115,9 +3977,7 @@ object TxLog {
       s"clone target $dst already has commits — clone only creates tables")
     val rv = currentVersion(src)
     require(rv > 0, s"clone of uninitialized table $src")
-    val st = tableStateViaCheckpoint(src, Some(rv))
-    val (schemaJson, checks) = (recordedSchemaJsonAt(src, Some(rv)),
-      headMeta(src)._2)
+    val st = stateAt(src, Some(rv))
     init(dst)
     // the SOURCE's drop history rides into the clone's first commit,
     // filtered to the segments the clone actually references: evolve's
@@ -4125,40 +3985,21 @@ object TxLog {
     // these records re-adding a column dropped in the source would
     // resurrect the old physical bytes out of the shared live segments —
     // the same evolve the source itself refuses (ADVICE r15, medium)
-    val liveSet = st.segments.map(_._1).toSet
-    val drops = dropHistory(src)
+    val liveSet = st.live.toSet
+    val drops = st.drops
       .map(dr => Drop(dr.name, dr.segs.intersect(liveSet)))
       .filter(_.segs.nonEmpty)
-    commit(dst, "clone", st.segments.map(_._1), Seq.empty, 0L,
+    commit(dst, "clone", st.live, Seq.empty, 0L,
       st.segments.collect { case (p, Some(s)) => p -> s }.toMap,
-      () => false, schemaJson, dv = st.dv, checks = checks,
+      () => false, st.schemaJson, dv = st.dv, checks = st.checks,
       renames = st.renames, drops = drops)
   }
 
-  /** In-process memo of the source-file identities [[copyInto]] has
-    * ingested, keyed by table and advanced incrementally: only manifests
-    * after the cached version are parsed on a later call (the same
-    * immutable-prefix argument as `headMetaCache`). Correctness never
-    * depends on the cache — a cold JVM re-folds the log.
-    */
-  private val ingestCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, Set[String])]()
-
   /** Every source-file identity previously ingested into `table` by
-    * [[copyInto]] — the union of the manifests' `ingest` fields.
+    * [[copyInto]] — the union of the manifests' `ingest` fields, carried
+    * across checkpoints by the log state.
     */
-  def ingestedSources(table: String): Set[String] = {
-    val head = currentVersion(table)
-    val (from, base) = Option(ingestCache.get(table)) match {
-      case Some((v, s)) if v <= head => (v + 1, s)
-      case _ => (1L, Set.empty[String])
-    }
-    val acc = (from to head).foldLeft(base) { (s, v) =>
-      s ++ readManifest(table, v).ingests
-    }
-    ingestCache.put(table, (head, acc))
-    acc
-  }
+  def ingestedSources(table: String): Set[String] = stateAt(table).ingests
 
   /** Idempotent file ingest (Delta/Databricks `COPY INTO`): each source
     * parquet file is loaded AT MOST ONCE per table, keyed by its path —
@@ -4306,9 +4147,9 @@ object TxLog {
       .flatMap { v =>
         // checkpoint-resolved (O(delta) per version, and the only sound
         // resolution once log-retention cleanup raised the floor)
-        val st = tableStateViaCheckpoint(table, Some(v))
+        val st = stateAt(table, Some(v))
         val m = readManifest(table, v)
-        st.segments.map(_._1) ++ st.dv ++
+        st.live ++ st.dv ++
           m.changeDeleteSrcs ++ m.changeInsertSrcs
       }.toSet
     val dataDir = Paths.get(table, "data")

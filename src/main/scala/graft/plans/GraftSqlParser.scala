@@ -625,7 +625,8 @@ final case class GenerateManifestCommand(name: String, isPath: Boolean)
 
 /** `SHOW TBLPROPERTIES '<path>'` — the table's property map in force at
   * the head, one (key, value) row per entry, key-sorted. Pure manifest
-  * metadata (the headMeta memo answers in O(delta) manifests).
+  * metadata (the log fold reads O(delta) manifests since the nearest
+  * checkpoint).
   */
 final case class ShowTblPropertiesCommand(path: String)
     extends LeafRunnableCommand {

@@ -1982,7 +1982,7 @@ object StatsQueries extends QueryPack {
     "lake_txlog_purge" -> ((s, d) => {
       val t = txPurgeTable(s, d)
       val m = graft.ops.TxLog.readManifest(t, 4L)
-      val st = graft.ops.TxLog.tableStateViaCheckpoint(t)
+      val st = graft.ops.TxLog.tableState(t)
       graft.ops.TxLog.snapshot(s, t)
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
         .select(lit(m.op).as("op"),

@@ -43,8 +43,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   *    comes from a segment-uuid → version literal map over
   *    `_metadata.file_path`, not from one union branch per commit — the
   *    plan's node count is O(rewrites), never O(commits).
-  *  - manifests are parsed at most once per read (and the stream source
-  *    shares its per-stream memo), never once per consumer branch.
+  *  - manifests are decoded through TxLog's memo of log files, never
+  *    once per consumer branch.
   */
 object TxLogCdf {
   val ChangeTypeCol: String = TxLog.ChangeTypeColName
@@ -103,10 +103,8 @@ object TxLogCdf {
       s"txlog CDF on $table: startingVersion $fromV predates the cleaned " +
         s"log floor $floor (graft.logRetentionDuration cleanup) — the " +
         "change history below it no longer exists")
-    val memo = new java.util.concurrent.ConcurrentHashMap[Long, TxLog.Manifest]
     changeRows(spark, table, fromV, toV, cdcKey,
-      dataSchemaAt(spark, table, toV), pinV = toV, withVersion = true,
-      manifestOf = v => memo.computeIfAbsent(v, TxLog.readManifest(table, _)))
+      dataSchemaAt(spark, table, toV), pinV = toV, withVersion = true)
       .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         fullSchema(spark, table, toV)))
   }
@@ -121,10 +119,9 @@ object TxLogCdf {
                                   fromV: Long, toV: Long,
                                   cdcKey: Option[String],
                                   dataSchema: StructType, pinV: Long,
-                                  withVersion: Boolean,
-                                  manifestOf: Long => TxLog.Manifest)
-      : Option[DataFrame] = {
+                                  withVersion: Boolean): Option[DataFrame] = {
     require(toV >= fromV, s"txlog CDF: endingVersion $toV < startingVersion $fromV")
+    def manifestOf(v: Long): TxLog.Manifest = TxLog.readManifest(table, v)
     val ms = ((fromV + 1) to toV).map(v => v -> manifestOf(v))
     // the rename log once, WITH versions, to the horizon both walks need.
     // After log-retention cleanup the pre-floor manifests are gone: the
@@ -139,7 +136,7 @@ object TxLogCdf {
       if (floor <= 1L)
         (1L to horizon).flatMap(v => manifestOf(v).renames.map(v -> _))
       else
-        TxLog.tableStateViaCheckpoint(table, Some(floor)).renames.map(floor -> _) ++
+        TxLog.tableState(table, Some(floor)).renames.map(floor -> _) ++
           ((floor + 1) to horizon).flatMap(v => manifestOf(v).renames.map(v -> _))
     val inserts = ms.collect {
       case (v, m) if insertShaped(m.op) && m.adds.nonEmpty => v -> m.adds
@@ -151,7 +148,7 @@ object TxLogCdf {
         val f = persistedChanges(spark, table, m, dataSchema, v, pinV,
           renamesV, cdcKey)
           .getOrElse(diffFrame(spark, table, dataSchema, v, pinV, cdcKey,
-            manifestOf, renamesV))
+            renamesV))
         if (withVersion) f.withColumn(CommitVersionCol, lit(v)) else f
     }
     val frames = insertsFrame.toSeq ++ rewriteFrames
@@ -397,7 +394,6 @@ object TxLogCdf {
   private[sources] def diffFrame(spark: SparkSession, table: String,
                                  dataSchema: StructType, v: Long, pinV: Long,
                                  cdcKey: Option[String],
-                                 manifestOf: Long => TxLog.Manifest,
                                  renamesV: Seq[(Long, TxLog.Rename)]): DataFrame = {
     import org.apache.spark.sql.functions.{sum => fsum}
     def aligned(atV: Long): DataFrame = {

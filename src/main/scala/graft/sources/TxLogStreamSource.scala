@@ -167,16 +167,7 @@ private final class TxLogSource(spark: SparkSession, table: String,
                                 cdcKey: Option[String] = None)
     extends Source with SupportsAdmissionControl with SupportsTriggerAvailableNow {
 
-  /** Version files are immutable once published (hard-link commit), so a
-    * per-source memo of parsed manifests is safe and bounds getBatch's
-    * fixed cost to one parse per version per STREAM, not per micro-batch
-    * retry/restart replay. Size is log-length-bounded (one small JSON
-    * node per commit), never data-sized.
-    */
-  private val manifestMemo =
-    new java.util.concurrent.ConcurrentHashMap[Long, TxLog.Manifest]
-  private def manifest(v: Long): TxLog.Manifest =
-    manifestMemo.computeIfAbsent(v, TxLog.readManifest(table, _))
+  private def manifest(v: Long): TxLog.Manifest = TxLog.readManifest(table, v)
 
   /** Trigger.AvailableNow fence: the log head captured at stream start.
     * The run drains micro-batches up to exactly this version and
@@ -378,10 +369,9 @@ private final class TxLogSource(spark: SparkSession, table: String,
     // the shared CDC engine (TxLogCdf): write-time artifacts for
     // merge/delete commits, coalesced insert scans, snapshot bag-diff
     // only as the legacy/overwrite fallback. Computed as an ordinary
-    // batch frame and re-flagged streaming once at the end; the per-
-    // stream manifest memo rides through so nothing is parsed twice.
+    // batch frame and re-flagged streaming once at the end.
     TxLogCdf.changeRows(spark, table, s, e, cdcKey, dataSchema,
-        pinV = pinVersion, withVersion = withVersion, manifestOf = manifest) match {
+        pinV = pinVersion, withVersion = withVersion) match {
       case None => StreamBridge.emptyStreamingBatch(spark, schema)
       case Some(df) => StreamBridge.streamingFromBatch(df)
     }
@@ -389,8 +379,8 @@ private final class TxLogSource(spark: SparkSession, table: String,
   /** Every rename committed at or before `upTo`, in version order — the
     * full history the per-file physical-name walk needs. Versions are
     * immutable, so the scan extends monotonically and re-reads nothing
-    * (manifest parses are memoized); the no-rename common case costs one
-    * memoized-manifest sweep per micro-batch, all driver-side metadata.
+    * (TxLog memoizes manifest parses); the no-rename common case costs
+    * one memoized-manifest sweep per micro-batch, all driver-side metadata.
     */
   @volatile private var renameCache: (Long, Seq[TxLog.Rename]) = (0L, Seq.empty)
   private def renameLog(upTo: Long): Seq[TxLog.Rename] = {
@@ -407,7 +397,7 @@ private final class TxLogSource(spark: SparkSession, table: String,
       val floor = TxLog.logFloor(table)
       val (seed, seedTo) =
         if (cachedTo == 0L && floor > 1L)
-          (TxLog.tableStateViaCheckpoint(table, Some(floor)).renames, floor)
+          (TxLog.tableState(table, Some(floor)).renames, floor)
         else (cached, cachedTo)
       val ext = seed ++ ((seedTo + 1) to upTo).flatMap(v => manifest(v).renames)
       renameCache = (upTo, ext)
@@ -462,7 +452,7 @@ private final class TxLogSource(spark: SparkSession, table: String,
   private lazy val renamesThroughPin: Int =
     // the checkpoint-resolved state at the pin carries the CUMULATIVE
     // rename list — correct on both intact and retention-cleaned logs
-    TxLog.tableStateViaCheckpoint(table, Some(pinVersion)).renames.size
+    TxLog.tableState(table, Some(pinVersion)).renames.size
 
   override def commit(end: V1Offset): Unit = ()
   override def stop(): Unit = ()

@@ -623,7 +623,7 @@ class ExtensionsSpec extends SparkSpec {
     val t2 = java.nio.file.Files.createTempDirectory("txfsck2-").resolve("t").toString
     graft.ops.TxLog.append(Seq((1L, 10L), (2L, 20L)).toDF("k", "v"), t2)
     graft.ops.TxLog.deleteWhere(spark, t2, col("k") === 1L)
-    val dvSeg = graft.ops.TxLog.tableStateViaCheckpoint(t2).dv.head
+    val dvSeg = graft.ops.TxLog.tableState(t2).dv.head
     java.nio.file.Files.walk(java.nio.file.Paths.get(dvSeg))
       .sorted(java.util.Comparator.reverseOrder())
       .forEach(p => java.nio.file.Files.deleteIfExists(p))
@@ -652,7 +652,7 @@ class ExtensionsSpec extends SparkSpec {
     assert(m.removes === Seq(graft.ops.TxLog.readManifest(t, 1L).adds.head))
     assert(m.adds.size === 1)
     // untouched segment still referenced, chain cleared, rows unchanged
-    val st = graft.ops.TxLog.tableStateViaCheckpoint(t)
+    val st = graft.ops.TxLog.tableState(t)
     assert(st.segments.map(_._1).contains(seg2))
     assert(st.dv.isEmpty)
     assert(graft.ops.TxLog.snapshot(spark, t)
@@ -719,7 +719,7 @@ class ExtensionsSpec extends SparkSpec {
     assert(spark.sql(
       s"ANALYZE TABLE '$t' COMPUTE STATISTICS FOR COLUMNS k, v")
       .head().getLong(0) === 2L)
-    val st = graft.ops.TxLog.tableStateViaCheckpoint(t)
+    val st = graft.ops.TxLog.tableState(t)
     val stats = st.segments.head._2.get
     assert(stats.statsFor("k").exists(s => s.min === 1L && s.max === 4L))
     assert(stats.statsFor("v").exists(s => s.min === 10L && s.max === 40L))
@@ -898,7 +898,7 @@ class ExtensionsSpec extends SparkSpec {
     val snap = spark.read.format("txlog").load(t)
     assert(snap.select("k").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 4L))
     // the delete materialized: the chain is clear
-    assert(graft.ops.TxLog.tableStateViaCheckpoint(t).dv.isEmpty)
+    assert(graft.ops.TxLog.tableState(t).dv.isEmpty)
     // path pruning still answers on the preserved layout (sum keeps the
     // scan real — a bare count would answer from the manifest)
     assert(snap.filter(col("p") === "a").agg(sum("k")).head().getLong(0) === 3L)

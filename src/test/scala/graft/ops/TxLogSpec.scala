@@ -21,6 +21,18 @@ class TxLogSpec extends SparkSpec {
   private def rows(xs: (Long, Long)*) =
     xs.toSeq.toDF("k", "v")
 
+  /** `body` evaluated with the table's checkpoint files moved aside, so
+    * every read replays the manifests alone — the fold a checkpoint must
+    * reproduce.
+    */
+  private def withoutCheckpoints[T](t: String)(body: => T): T = {
+    val log = Paths.get(t, "_txlog")
+    val aside = Files.createTempDirectory("txlog-ckpt-aside-")
+    val names = TxLog.checkpointVersions(t).map(v => f"$v%020d.checkpoint.json")
+    names.foreach(n => Files.move(log.resolve(n), aside.resolve(n)))
+    try body finally names.foreach(n => Files.move(aside.resolve(n), log.resolve(n)))
+  }
+
   test("crash before publish: staged segments are invisible to readers") {
     val t = freshTable()
     TxLog.append(rows(1L -> 10L, 2L -> 20L), t)
@@ -473,10 +485,10 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.checkpoint(t) === 3L)
     TxLog.appendWithStats(rows(3L -> 30L), t, "k")            // v4 (post-ckpt)
     // head, at-checkpoint, and pre-checkpoint resolutions all equal the
-    // full fold (pre-checkpoint falls back to it)
+    // full fold of the same log with its checkpoint moved aside
     for (asOf <- Seq(None, Some(4L), Some(3L), Some(2L), Some(1L)))
-      assert(TxLog.liveFilesViaCheckpoint(t, asOf)
-        === TxLog.liveFilesWithStats(t, asOf), s"asOf=$asOf")
+      assert(TxLog.liveFilesWithStats(t, asOf)
+        === withoutCheckpoints(t)(TxLog.liveFilesWithStats(t, asOf)), s"asOf=$asOf")
     // reads keep working through the checkpoint path (snapshot uses it)
     assert(TxLog.snapshot(spark, t).as[(Long, Long)].collect().toMap
       === Map(1L -> 11L, 2L -> 21L, 3L -> 30L))
@@ -489,6 +501,109 @@ class TxLogSpec extends SparkSpec {
     // a second checkpoint at the same head is a no-op (identical content)
     assert(TxLog.checkpoint(t) === 4L)
     assert(TxLog.checkpointVersions(t) === Seq(3L, 4L))
+  }
+
+  test("checkpoint and log cleanup leave every projection of the log state unchanged") {
+    val land = Files.createTempDirectory("txlog-eq-land-")
+    val f1 = land.resolve("f1").toString
+    rows(4L -> 40L).write.parquet(f1)
+    val t = freshTable()
+    TxLog.appendWithStats(rows(1L -> 10L, 2L -> 20L), t, "k")   // v1
+    TxLog.copyInto(spark, t, Seq(f1))                           // v2: ingest
+    TxLog.setProperties(t, Map("owner" -> "ops", "tmp" -> "x",
+      "graft.checkpointInterval" -> "100"))                     // v3
+    TxLog.deleteWhere(spark, t, col("k") === 2L)                // v4: dv
+    TxLog.overwrite(rows(5L -> 50L), t)                         // v5
+    // everything a reader or a write guard resolves at one version
+    def projections(v: Long) = {
+      val s = TxLog.stateAt(t, Some(v))
+      (TxLog.liveFilesWithStats(t, Some(v)), s.dv, s.renames,
+        TxLog.recordedSchema(t, Some(v)), TxLog.activeConstraints(t, Some(v)),
+        TxLog.tableProperties(t, Some(v)), s.drops, s.ingests)
+    }
+    val before1 = (1L to 5L).map(v => v -> projections(v)).toMap
+    assert(TxLog.checkpoint(t) === 5L)
+    TxLog.restore(spark, t, 4L)                                 // v6: re-adds v1, v2
+    TxLog.addConstraint(spark, t, "pos", "k > 0")               // v7
+    TxLog.unsetProperties(t, Seq("tmp"))                        // v8
+    TxLog.renameColumn(spark, t, "v", "w")                      // v9
+    TxLog.dropColumn(spark, t, "w")                             // v10
+    // v6..v10 fold from the v5 checkpoint; without it they replay v1..
+    val before = before1 ++
+      withoutCheckpoints(t)((6L to 10L).map(v => v -> projections(v)).toMap)
+    assert(before(6L)._1.forall(_._2.nonEmpty), "restored segments keep their stats")
+    assert(before(10L)._7.map(_.name) === Seq("w") && before(10L)._8.size === 1)
+    def same(vs: Seq[Long], when: String): Unit =
+      vs.foreach(v => assert(projections(v) === before(v), s"v$v $when"))
+    same(1L to 10L, "after checkpoint")
+    TxLog.cleanupLog(t, Some(0L))
+    assert(TxLog.logFloor(t) === 5L)
+    same(5L to 10L, "after cleanup")
+    intercept[IllegalArgumentException](TxLog.stateAt(t, Some(4L)))
+    assert(TxLog.checkpoint(t) === 10L)
+    same(5L to 10L, "after a second checkpoint")
+  }
+
+  test("a dropped column stays guarded after log cleanup, in the table and its clone") {
+    val t = freshTable()
+    TxLog.append(rows(1L -> 10L, 2L -> 20L), t)           // v1
+    TxLog.dropColumn(spark, t, "v")                       // v2
+    TxLog.append(Seq(3L).toDF("k"), t)                    // v3
+    assert(TxLog.checkpoint(t) === 3L)
+    TxLog.cleanupLog(t, Some(0L))
+    assert(TxLog.logFloor(t) === 3L, "the drop's manifest is gone")
+    // the v1 segment still carries v's bytes: re-adding v would read
+    // them back instead of nulls
+    val readd = TxLog.recordedSchema(t).get.add("v", "long")
+    val e = intercept[IllegalArgumentException](TxLog.evolve(t, readd))
+    assert(e.getMessage.contains("re-adds dropped column 'v'"), e.getMessage)
+    assert(TxLog.snapshot(spark, t).columns.toSeq === Seq("k"))
+    val dst = freshTable()
+    TxLog.cloneShallow(spark, t, dst)
+    val e2 = intercept[IllegalArgumentException](TxLog.evolve(dst, readd))
+    assert(e2.getMessage.contains("re-adds dropped column 'v'"), e2.getMessage)
+  }
+
+  test("the COPY INTO ledger survives log cleanup") {
+    val land = Files.createTempDirectory("txlog-ledger-")
+    val files = (1L to 2L).map { b =>
+      val f = land.resolve(s"f$b").toString
+      rows(b -> b * 10).write.parquet(f)
+      f
+    }
+    val t = freshTable()
+    TxLog.copyInto(spark, t, files.take(1))               // v1
+    TxLog.copyInto(spark, t, files)                       // v2
+    assert(TxLog.checkpoint(t) === 2L)
+    TxLog.cleanupLog(t, Some(0L))
+    assert(TxLog.logFloor(t) === 2L)
+    // `t + "/."` names the same table through paths no earlier read used
+    for (path <- Seq(t, t + "/.")) {
+      val (v, ingested) = TxLog.copyInto(spark, path, files)
+      assert(v === 2L && ingested.isEmpty, s"$path re-ingested $ingested")
+    }
+    assert(TxLog.snapshot(spark, t).count() === 2L)
+  }
+
+  test("a table deleted and rebuilt at the same path reads its new rows and metadata") {
+    val t = freshTable()
+    // two builds commit manifests of the same shape: equal versions and,
+    // with fixed-length segment UUIDs, equal byte lengths
+    def build(owner: String, kv: (Long, Long)): Unit = {
+      TxLog.append(rows(kv), t)
+      TxLog.setProperties(t, Map("owner" -> owner))
+    }
+    build("alice", 1L -> 10L)
+    assert(TxLog.snapshot(spark, t).as[(Long, Long)].collect().toSeq === Seq(1L -> 10L))
+    assert(TxLog.tableProperties(t) === Map("owner" -> "alice"))
+    val s = Files.walk(Paths.get(t))
+    try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(p => Files.delete(p))
+    finally s.close()
+    build("carol", 2L -> 20L)
+    assert(TxLog.snapshot(spark, t).as[(Long, Long)].collect().toSeq === Seq(2L -> 20L))
+    assert(TxLog.tableProperties(t) === Map("owner" -> "carol"))
+    assert(TxLog.liveFiles(t).forall(p => Files.exists(Paths.get(p))))
   }
 
   test("deleteWhere is a pure metadata+marks commit: rows vanish, bytes stay") {
@@ -551,7 +666,7 @@ class TxLogSpec extends SparkSpec {
     // checkpoint carries the chain; post-checkpoint resolution matches
     TxLog.checkpoint(t)
     TxLog.deleteWhere(spark, t, col("k") === 50L)
-    assert(TxLog.tableStateViaCheckpoint(t).dv.length === 2)
+    assert(TxLog.tableState(t).dv.length === 2)
     assert(TxLog.snapshot(spark, t).count() === (100 - k - 1).toLong)
   }
 
@@ -789,7 +904,7 @@ class TxLogSpec extends SparkSpec {
     // identical to the full fold
     TxLog.checkpoint(t)
     TxLog.append(Seq((4L, 40L)).toDF("k", "amt"), t)   // v6
-    assert(TxLog.tableStateViaCheckpoint(t).renames.map(r =>
+    assert(TxLog.tableState(t).renames.map(r =>
       (r.oldName, r.newName)) === Seq(("v", "amount"), ("amount", "amt")))
     assert(TxLog.snapshot(spark, t).as[(Long, Long)].collect().toMap
       === Map(1L -> 10L, 3L -> 30L, 4L -> 40L))
@@ -1147,7 +1262,7 @@ class TxLogSpec extends SparkSpec {
     val df = spark.range(300).selectExpr("id AS k",
       "CASE WHEN id % 3 = 0 THEN 'red' WHEN id % 3 = 1 THEN 'green' ELSE 'blue' END AS color")
     TxLog.appendPartitioned(df, t, "color")
-    val untouchedBefore = TxLog.tableStateViaCheckpoint(t).segments.map(_._1)
+    val untouchedBefore = TxLog.tableState(t).segments.map(_._1)
       .filterNot(_.endsWith("color=green")).toSet
     // replace green wholesale with a 10-row reload
     val reload = spark.range(10)
@@ -1158,7 +1273,7 @@ class TxLogSpec extends SparkSpec {
     assert(greens.agg(org.apache.spark.sql.functions.min("k"))
       .head().getLong(0) === 1000L, "green is wholly the reload")
     // other partitions: same physical segment paths — zero bytes touched
-    val untouchedAfter = TxLog.tableStateViaCheckpoint(t).segments.map(_._1)
+    val untouchedAfter = TxLog.tableState(t).segments.map(_._1)
       .filterNot(_.endsWith("color=green")).toSet
     assert(untouchedAfter === untouchedBefore)
     assert(TxLog.snapshotPartitionPruned(spark, t, "color", Some("red"))
@@ -1884,8 +1999,8 @@ class TxLogSpec extends SparkSpec {
     // resolution through the checkpoints equals the full fold, at head
     // and across history
     assert(TxLog.snapshot(spark, t).count() === 23L)
-    assert(TxLog.tableState(t).segments.map(_._1).sorted ===
-      TxLog.tableStateViaCheckpoint(t).segments.map(_._1).sorted)
+    assert(TxLog.tableState(t) ===
+      withoutCheckpoints(t)(TxLog.tableState(t)))
     assert(TxLog.snapshot(spark, t, Some(15L)).count() === 15L)
     // a checkpoint written THROUGH a prior checkpoint carries the same
     // cumulative state (the O(delta) checkpoint path)
