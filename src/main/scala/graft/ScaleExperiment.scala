@@ -117,9 +117,9 @@ object ScaleExperiment {
         deleteRecursively(root)
       graft.ops.TxLog.appendPartitioned(
         Tables.documents(spark, dir).select(col("doc_id"), col("lang")), t, "lang")
-      val (rel, scanned, total) = graft.ops.TxLog.snapshotPartitionPruned(
-        spark, t, "lang", Some("en"))
-      val n = rel.count()
+      val sc = graft.ops.TxLog.scan(spark, t,
+        graft.ops.TxLog.Prune(parts = Seq("lang" -> Some(Set("en")))))
+      val (scanned, total, n) = (sc.scanned, sc.total, sc.orEmpty.count())
       println(s"""{"partition_prune":"$tag","scanned":$scanned,"total":$total,"rows":$n}""")
       (scanned, total)
     }
@@ -146,9 +146,9 @@ object ScaleExperiment {
         base.filter(col("n_chars") < charsCut), t, Seq("doc_id", "n_chars"))
       graft.ops.TxLog.appendWithStats(
         base.filter(col("n_chars") >= charsCut), t, Seq("doc_id", "n_chars"))
-      val (rel, scanned, total) = graft.ops.TxLog.snapshotPrunedMulti(
-        spark, t, Seq(("n_chars", charsCut, Long.MaxValue)))
-      val n = rel.count()
+      val sc = graft.ops.TxLog.scan(spark, t,
+        graft.ops.TxLog.Prune(longBounds = Seq(("n_chars", charsCut, Long.MaxValue))))
+      val (scanned, total, n) = (sc.scanned, sc.total, sc.orEmpty.count())
       graft.plans.ManifestCountRule.lastAnswered = None
       val cnt = spark.read.format("txlog").load(t).count()
       require(graft.plans.ManifestCountRule.lastAnswered.exists(_._1 == t),
@@ -187,8 +187,9 @@ object ScaleExperiment {
       require(cloneBytes * 20 < tableBytes,
         s"[$tag] shallow clone wrote $cloneBytes bytes against a " +
           s"$tableBytes-byte table — not metadata-only")
-      val (_, scanned, total) =
-        graft.ops.TxLog.snapshotPrunedStr(spark, t, "lang", "aa", "eo")
+      val sc = graft.ops.TxLog.scan(spark, t,
+        graft.ops.TxLog.Prune(strBounds = Seq(("lang", Some("aa"), Some("eo")))))
+      val (scanned, total) = (sc.scanned, sc.total)
       val (v1, in1) = graft.ops.TxLog.copyInto(spark, tc,
         Seq(s"$dir/documents.parquet"))
       val (v2, in2) = graft.ops.TxLog.copyInto(spark, tc,

@@ -80,7 +80,8 @@ object TxLog {
                             ingests: Seq[String] = Seq.empty,
                             props: Map[String, String] = Map.empty,
                             unsetProps: Seq[String] = Seq.empty,
-                            dropChecks: Seq[String] = Seq.empty) {
+                            dropChecks: Seq[String] = Seq.empty,
+                            marks: Map[String, Long] = Map.empty) {
     /** Persisted CDC pre-image sources (`d:` entries of `changes`):
       * parquet staged at commit time whose rows this commit DELETED
       * (they may carry extra helper columns, e.g. the DV coordinates —
@@ -377,12 +378,17 @@ object TxLog {
     val dropChecks =
       if (m.dropChecks.isEmpty) ""
       else s""","dropChecks":${m.dropChecks.map(jstr).mkString("[", ",", "]")}"""
+    // stream/txn high-water marks (checkpoints only; commits carry theirs in `op`)
+    val marks =
+      if (m.marks.isEmpty) ""
+      else m.marks.toSeq.sortBy(_._1).map { case (k, v) => s"${jstr(k)}:$v" }
+        .mkString(""","marks":{""", ",", "}")
     // ts stays the FINAL field — commitTimeMillis's fast path anchors on it
     val ts = m.ts.map(t => s""","ts":$t""").getOrElse("")
     s"""{"version":${m.version},"op":${jstr(m.op)},"adds":${arr(m.adds)},""" +
       s""""removes":${arr(m.removes)},"readVersion":${m.readVersion},""" +
       s""""stats":$stats$schema$dv$check$renames$drops$changes$ingests""" +
-      s"""$props$unset$dropChecks$ts}"""
+      s"""$props$unset$dropChecks$marks$ts}"""
   }
 
   /** Shared Jackson mapper: thread-safe for reads, and constructing one
@@ -502,7 +508,9 @@ object TxLog {
       Option(node.get("unsetProps")).fold(Seq.empty[String])(
         _.elements().asScala.map(_.asText()).toSeq),
       Option(node.get("dropChecks")).fold(Seq.empty[String])(
-        _.elements().asScala.map(_.asText()).toSeq))
+        _.elements().asScala.map(_.asText()).toSeq),
+      Option(node.get("marks")).fold(Map.empty[String, Long])(
+        _.properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap))
   }
 
   private def propsField(
@@ -560,7 +568,9 @@ object TxLog {
   /** The table state at one version: everything a read or a write guard
     * resolves from the log. All but `stats` is exactly what a checkpoint
     * persists; `stats` keeps every segment's record ever committed, so a
-    * RESTORE that re-adds a removed segment finds it again.
+    * RESTORE that re-adds a removed segment finds it again. `marks` holds
+    * the exactly-once high-water marks, keyed by op family (see
+    * [[MarkOp]]), so a replay stays skipped after [[cleanupLog]].
     */
   private[ops] final case class LogState(
       live: Vector[String] = Vector.empty,
@@ -571,7 +581,8 @@ object TxLog {
       schemaJson: Option[String] = None,
       checks: Seq[(String, String)] = Seq.empty,
       props: Map[String, String] = Map.empty,
-      ingests: Set[String] = Set.empty) {
+      ingests: Set[String] = Set.empty,
+      marks: Map[String, Long] = Map.empty) {
     def segments: Vector[(String, Option[SegStats])] =
       live.map(p => p -> stats.get(p))
     def tableState: TableState = TableState(segments, dv, renames)
@@ -585,12 +596,30 @@ object TxLog {
     */
   private def step(s: LogState, m: Manifest): LogState = {
     val removed = m.removes.toSet
+    // a family's marks only ascend (its writers skip ids at or below the
+    // mark, re-checked inside the CAS), so the latest one is the highest
+    val opMark = m.op match {
+      case MarkOp(family, n) => Map(family -> n.toLong)
+      case _ => Map.empty[String, Long]
+    }
     LogState(s.live.filterNot(removed) ++ m.adds, s.stats ++ m.stats,
       foldDvChain(s.dv, m), s.renames ++ m.renames, s.drops ++ m.drops,
       m.schemaJson.orElse(s.schemaJson),
       (s.checks ++ m.checks).filterNot(c => m.dropChecks.contains(c._1)),
-      (s.props ++ m.props) -- m.unsetProps, s.ingests ++ m.ingests)
+      (s.props ++ m.props) -- m.unsetProps, s.ingests ++ m.ingests,
+      s.marks ++ m.marks ++ opMark)
   }
+
+  /** The ops that carry an exactly-once high-water mark: a streaming
+    * append or merge batch (`stream_append_b<id>`, `stream_merge_b<id>`)
+    * and an idempotent writer transaction (`txn:<appId>:v<n>`). The mark
+    * is the number, keyed by everything before it.
+    */
+  private val MarkOp = """(stream_append_b|stream_merge_b|txn:[^:]*:v)(\d+)""".r
+
+  /** The highest mark of one op family at the head, or -1 when none. */
+  private def highWater(table: String, family: String): Long =
+    stateAt(table).marks.getOrElse(family, -1L)
 
   /** THE log replay every metadata read goes through (Delta's): list
     * `_txlog` once, start from the nearest checkpoint at or below `asOf`
@@ -1681,7 +1710,7 @@ object TxLog {
     * declared column, all computed in the SAME single aggregate pass over
     * the staged segment (Delta/Iceberg record per-file stats for N
     * columns for the same reason — real tables prune on several keys).
-    * Any of them then drives manifest skipping ([[snapshotPrunedMulti]])
+    * Any of them then drives manifest skipping ([[scan]])
     * and range selectivity ([[estimatedRangeRows]]).
     */
   def appendWithStats(df: DataFrame, table: String, statsCols: Seq[String]): Long = {
@@ -2110,56 +2139,6 @@ object TxLog {
       (word & bit) != 0
     }
 
-  /** Point lookup pruned by manifest stats: a segment is skipped when its
-    * [min,max] excludes the key OR its Bloom filter proves absence —
-    * the latter is what works when segment key ranges interleave.
-    * Stat-less segments are conservatively scanned.
-    */
-  def snapshotPointLookup(spark: SparkSession, table: String, keyCol: String,
-                          key: Long): (DataFrame, Int, Int) = {
-    import org.apache.spark.sql.functions.lit
-    val pos = spark.range(1).select(bloomPositions(lit(key)).as("p"))
-      .head().getSeq[Long](0)
-    val st = stateAt(table)
-    val all = st.segments
-    val keep = all.collect {
-      case (p, None) => p
-      // a string-tracked record's bounds AND bloom are string-hashed —
-      // a LONG-key probe must not consult either (conservative scan)
-      case (p, Some(s)) if s.statsFor(keyCol).forall(cs =>
-        cs.isString || ((key >= cs.min && key <= cs.max) &&
-          cs.bloomHex.forall(bloomMightContain(_, pos)))) => p
-    }
-    require(keep.nonEmpty, s"key $key pruned from every segment of $table")
-    val rel = readSegments(spark, keep, st)
-    (rel, keep.size, all.size)
-  }
-
-  /** STRING point lookup pruned by manifest stats — the
-    * [[snapshotPointLookup]] twin for string keys (URL, doc id, content
-    * hash: the key shapes a 100-TB corpus actually looks up). A segment
-    * is skipped when its recorded [strMin, strMax] excludes the key OR
-    * its string-hashed Bloom filter proves absence; stat-less or
-    * numerically-tracked segments are conservatively scanned.
-    */
-  def snapshotPointLookupStr(spark: SparkSession, table: String,
-                             keyCol: String, key: String): (DataFrame, Int, Int) = {
-    import org.apache.spark.sql.functions.lit
-    val pos = spark.range(1).select(bloomPositionsStr(lit(key)).as("p"))
-      .head().getSeq[Long](0)
-    val st = stateAt(table)
-    val all = st.segments
-    val keep = all.collect {
-      case (p, None) => p
-      case (p, Some(s)) if s.statsFor(keyCol).forall(cs =>
-        strOverlaps(cs, Some(key), Some(key)) &&
-          (!cs.isString || cs.bloomHex.forall(bloomMightContain(_, pos)))) => p
-    }
-    require(keep.nonEmpty, s"key '$key' pruned from every segment of $table")
-    val rel = readSegments(spark, keep, st)
-    (rel, keep.size, all.size)
-  }
-
   /** Is a deletion-vector chain in force at the head (or `asOf`)? The
     * one-bit answer DESCRIBE DETAIL and stats consumers report — when
     * true, segment-level counts overcount and the metadata refusal
@@ -2202,59 +2181,113 @@ object TxLog {
   def tableState(table: String, asOf: Option[Long] = None): TableState =
     stateAt(table, asOf).tableState
 
-  /** Stats-pruned snapshot: only segments whose [min, max] on `statsCol`
-    * intersects [lo, hi] are read (stat-less segments are conservatively
-    * kept). Returns the pruned relation plus (scanned, total) segment
-    * counts so callers can assert the skipping actually happened.
+  /** The segment-pruning predicate of [[scan]]. Every part is conjunctive:
+    *  - `parts`: partition levels in LAYOUT ORDER, each with the values it
+    *    admits (None admits every value); decided from segment paths;
+    *  - `longBounds`: inclusive [lo, hi] on a tracked numeric column;
+    *  - `strBounds`: inclusive string [lo, hi] (None = open side) on a
+    *    string-tracked column, compared in UTF-8 binary order;
+    *  - `bloomKey`: an equality key probed against per-segment Bloom
+    *    filters ([[Prune.point]] pairs it with the key's own bound).
+    * Pruning is an optimization, never the filter: callers still apply
+    * their predicate to the rows.
     */
-  def snapshotPruned(spark: SparkSession, table: String, statsCol: String,
-                     lo: Long, hi: Long): (DataFrame, Int, Int) = {
-    val st = stateAt(table)
-    val all = st.segments
-    val keep = all.collect {
-      case (p, None) => p
-      case (p, Some(s)) if s.statsFor(statsCol).forall(cs =>
-        cs.isString || (cs.max >= lo && cs.min <= hi)) => p
-    }
-    require(keep.nonEmpty, s"predicate [$lo,$hi] prunes every segment of $table")
-    val rel = readSegments(spark, keep, st)
-    (rel, keep.size, all.size)
+  final case class Prune(parts: Seq[(String, Option[Set[String]])] = Seq.empty,
+                         longBounds: Seq[(String, Long, Long)] = Seq.empty,
+                         strBounds: Seq[(String, Option[String], Option[String])] =
+                           Seq.empty,
+                         bloomKey: Option[(String, Either[Long, String])] = None)
+
+  object Prune {
+    /** Point lookup on a numeric key: its [key, key] bound plus the Bloom
+      * probe, which is what prunes when segment key ranges interleave.
+      */
+    def point(col: String, key: Long): Prune =
+      Prune(longBounds = Seq((col, key, key)), bloomKey = Some(col -> Left(key)))
+
+    /** Point lookup on a string key (URL, doc id, content hash). */
+    def point(col: String, key: String): Prune =
+      Prune(strBounds = Seq((col, Some(key), Some(key))),
+        bloomKey = Some(col -> Right(key)))
   }
 
-  /** Stats-pruned snapshot over SEVERAL conjunctive range predicates at
-    * once — the multi-column skipping read ([[appendWithStats]] records
-    * per-segment stats for N columns; a segment is skipped when ANY
-    * constrained column's recorded [min, max] misses its range;
-    * stat-less columns/segments are conservatively kept). LENIENT on the
-    * all-pruned case: a legal query whose predicate excludes every
-    * segment gets an EMPTY relation of the snapshot schema, not an error
-    * (ADVICE r12 — `spark.read.format("txlog")` routes pushed predicates
-    * here, and a zero-row query is an ordinary query). The assert-style
-    * [[snapshotPruned]] keeps its require for callers pinning geometry.
+  /** A pruned scan: the (scanned, total) segment counts, so callers can
+    * assert the skipping happened, and the relation over the kept
+    * segments (None when every segment is pruned), built on first use —
+    * a caller reading only the counts opens no file index. The caller
+    * picks what an all-pruned scan means.
     */
-  def snapshotPrunedMulti(spark: SparkSession, table: String,
-                          bounds: Seq[(String, Long, Long)],
-                          asOf: Option[Long] = None,
-                          strBounds: Seq[(String, Option[String], Option[String])] =
-                            Seq.empty): (DataFrame, Int, Int) = {
+  final class Scan private[TxLog] (val scanned: Int, val total: Int, refusal: String,
+                                   keptRel: () => DataFrame, emptyRel: () => DataFrame) {
+    lazy val rel: Option[DataFrame] = if (scanned == 0) None else Some(keptRel())
+
+    /** The relation, refusing when every segment is pruned — for callers
+      * pinning pruning geometry.
+      */
+    def required: DataFrame =
+      rel.getOrElse(throw new IllegalArgumentException(refusal))
+
+    /** The relation, or an empty one of the table's schema when every
+      * segment is pruned: a zero-row query is an ordinary query.
+      */
+    def orEmpty: DataFrame = rel.getOrElse(emptyRel())
+  }
+
+  /** THE pruned snapshot read: keep each live segment at `asOf` (default:
+    * head) that may hold a row matching `prune`, decided driver-side from
+    * the manifest, and read only those. The keep rule:
+    *  - a segment outside an admitted partition value is skipped; when
+    *    `parts` is set, a segment without the full `c1=v1/.../cN=vN`
+    *    layout refuses loudly (a maintenance rewrite dropped it — read
+    *    via [[snapshot]]);
+    *  - a long bound consults only numeric records, a string bound only
+    *    string records ([[strOverlaps]]);
+    *  - a Bloom filter is consulted only when the record's type matches
+    *    the key's;
+    *  - stat-less segments and untracked columns are always kept.
+    * Kept segments are read per partition-value group, in sorted value
+    * order, each with its partition columns re-attached from the
+    * (unescaped) path; deletion vectors in force anti-join away.
+    */
+  def scan(spark: SparkSession, table: String, prune: Prune,
+           asOf: Option[Long] = None): Scan = {
     val st = stateAt(table, asOf)
-    val all = st.segments
-    require(all.nonEmpty, s"no committed segments in $table")
-    val keep = all.collect {
-      case (p, None) => p
-      case (p, Some(s)) if bounds.forall { case (c, lo, hi) =>
-        s.statsFor(c).forall(cs =>
-          cs.isString || (cs.max >= lo && cs.min <= hi)) } &&
-        strBounds.forall { case (c, lo, hi) =>
-          s.statsFor(c).forall(cs => strOverlaps(cs, lo, hi)) } => p
+    val partCols = prune.parts.map(_._1)
+    lazy val probe: Seq[Long] = prune.bloomKey.fold(Seq.empty[Long]) { case (_, k) =>
+      import org.apache.spark.sql.functions.lit
+      spark.range(1)
+        .select(k.fold(l => bloomPositions(lit(l)), s => bloomPositionsStr(lit(s))))
+        .head().getSeq[Long](0)
     }
-    if (keep.isEmpty) {
-      val schema = readSegments(spark, all.map(_._1), st).schema
-      (spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
-        0, all.size)
-    } else (readSegments(spark, keep, st),
-      keep.size, all.size)
+    def keeps(s: SegStats): Boolean =
+      prune.longBounds.forall { case (c, lo, hi) =>
+        s.statsFor(c).forall(cs => cs.isString || (cs.max >= lo && cs.min <= hi))
+      } && prune.strBounds.forall { case (c, lo, hi) =>
+        s.statsFor(c).forall(strOverlaps(_, lo, hi))
+      } && prune.bloomKey.forall { case (c, k) =>
+        s.statsFor(c).forall(cs =>
+          cs.isString != k.isRight || cs.bloomHex.forall(bloomMightContain(_, probe)))
+      }
+    val tagged = st.segments.map { case (p, ss) => (p, ss, segPartValues(p, partCols)) }
+    val keep = tagged.filter { case (_, ss, vals) =>
+      prune.parts.map(_._2).zip(vals).forall { case (f, v) => f.forall(_.contains(v)) } &&
+        ss.forall(keeps)
+    }
+    new Scan(keep.size, tagged.size, s"$prune prunes every segment of $table",
+      () => keep.groupBy(_._3).toSeq.sortBy(_._1.mkString("/")).map {
+        case (vals, segs) =>
+          partCols.zip(vals).foldLeft(readSegments(spark, segs.map(_._1), st)) {
+            case (d, (pc, v)) => d.withColumn(pc, partValueLit(v))
+          }
+      }.reduce(_.unionByName(_)),
+      () => {
+        import org.apache.spark.sql.types.{StringType, StructField, StructType}
+        require(st.live.nonEmpty, s"no committed segments in $table at $asOf")
+        val base = readSegments(spark, st.live, st).schema
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(base.fields ++
+          partCols.filterNot(base.fieldNames.contains)
+            .map(StructField(_, StringType, nullable = true))))
+      })
   }
 
   /** Does a segment's recorded range intersect the INCLUSIVE string
@@ -2277,30 +2310,6 @@ object TxLog {
       case _ => true
     }
 
-  /** Assert-style STRING-range pruned snapshot (the [[snapshotPruned]]
-    * twin for string-tracked columns): only segments whose recorded
-    * [strMin, strMax] on `statsCol` intersects the inclusive [lo, hi]
-    * are read; stat-less or numerically-tracked segments are
-    * conservatively kept. Lexicographic bounds are exactly what Delta
-    * and Iceberg prune string predicates with — at 100 TB a sorted or
-    * range-partitioned string key (URL, domain, doc id) skips the same
-    * way a long key does.
-    */
-  def snapshotPrunedStr(spark: SparkSession, table: String, statsCol: String,
-                        lo: String, hi: String): (DataFrame, Int, Int) = {
-    val st = stateAt(table)
-    val all = st.segments
-    val keep = all.collect {
-      case (p, None) => p
-      case (p, Some(s)) if s.statsFor(statsCol).forall(
-        strOverlaps(_, Some(lo), Some(hi))) => p
-    }
-    require(keep.nonEmpty,
-      s"predicate ['$lo','$hi'] prunes every segment of $table")
-    val rel = readSegments(spark, keep, st)
-    (rel, keep.size, all.size)
-  }
-
   /** Hive-style PARTITIONED append: one distributed write fans the frame
     * into `partCol=value` segment directories (the layout every lake
     * partitions by), and ONE manifest publishes every partition
@@ -2313,7 +2322,7 @@ object TxLog {
     * Contract: `partCol` must be a string column (values become path
     * components; Spark's partitionBy escaping applies), and a table
     * written partitioned should be read back through
-    * [[snapshotPartitionPruned]] — the physical segments do NOT store
+    * [[scan]] with [[Prune]] `parts` — the physical segments do NOT store
     * the partition column (partitionBy's layout), the reader re-derives
     * it from the path. At 100 TB this is the first-order pruning
     * primitive: an eq-predicate on the partition column reads only its
@@ -2429,13 +2438,7 @@ object TxLog {
         else r.getString(i)).toSeq -> r
     }.toMap
     leaves.flatMap { leaf =>
-      val p = Paths.get(leaf)
-      val n = p.getNameCount
-      val vals = partCols.zipWithIndex.map { case (pc, i) =>
-        val name = p.getName(n - partCols.size + i).toString
-        ExternalCatalogUtils.unescapePathName(name.substring(pc.length + 1))
-      }
-      byVals.get(vals).map { r =>
+      byVals.get(segPartValues(leaf, partCols)).map { r =>
         val cnt = r.getLong(partCols.size)
         val per = readStats(r, partCols.size + 1, cnt)
         per match {
@@ -2444,133 +2447,6 @@ object TxLog {
         }
       }
     }.toMap
-  }
-
-  /** Partition-pruned snapshot: `value = Some(v)` reads ONLY the
-    * `partCol=v` segments (pruned driver-side from manifest paths — no
-    * listing, no footer, no data touched for skipped partitions);
-    * `None` reads every partition. Returns (relation, scanned, total)
-    * segment counts so callers can assert the skipping happened.
-    *
-    * The partition column is re-added from the path per value group
-    * (the physical files do not store it), so the relation is
-    * |values-read| parquet scans unioned — partition counts are
-    * metadata-scale, never data-scale. Honest-pruning contract: if ANY
-    * live segment lacks a `partCol=` path (e.g. a compaction rewrote
-    * the layout), the read REFUSES loudly rather than silently dropping
-    * the column — the same no-partial-answers rule as [[tableRowCount]].
-    * Deletion vectors in force anti-join away per group; time travel
-    * composes via `asOf`.
-    */
-  def snapshotPartitionPruned(spark: SparkSession, table: String,
-                              partCol: String, value: Option[String],
-                              asOf: Option[Long] = None): (DataFrame, Int, Int) = {
-    val st = stateAt(table, asOf)
-    val tagged = st.segments.map { case (p, _) =>
-      val name = Paths.get(p).getFileName.toString
-      require(name.startsWith(partCol + "="),
-        s"$table segment $p carries no $partCol= partition path — a " +
-          "maintenance rewrite dropped the partitioned layout; read via snapshot()")
-      p -> segPartValues(p, Seq(partCol)).head
-    }
-    val keep = value.fold(tagged)(v => tagged.filter(_._2 == v))
-    require(keep.nonEmpty,
-      s"partition $partCol=${value.getOrElse("*")} prunes every segment of $table")
-    val rel = keep.groupBy(_._2).toSeq.sortBy(_._1).map { case (v, segs) =>
-      readSegments(spark, segs.map(_._1), st)
-        .withColumn(partCol, partValueLit(v))
-    }.reduce(_.unionByName(_))
-    (rel, keep.size, st.segments.size)
-  }
-
-  /** N-LEVEL partition-pruned snapshot over a nested
-    * `c1=v1/.../cN=vN` layout ([[appendPartitioned]] with multiple
-    * columns): `specs` gives the partition columns in LAYOUT ORDER, each
-    * with an optional equality filter — `Seq(("country", Some("US")),
-    * ("visa", None))` reads every visa under country=US. Pruning is the
-    * same driver-side path decision as the single-level read: each live
-    * segment's trailing N path components carry the values, any level's
-    * filter can drop it, and only surviving leaves are ever opened. All
-    * partition columns are re-derived from the path per leaf group
-    * (physical files store none of them), so a pruned read still returns
-    * the full logical schema. Honest-pruning contract unchanged: a live
-    * segment without the full layout refuses loudly.
-    */
-  def snapshotPartitionPruned(spark: SparkSession, table: String,
-                              specs: Seq[(String, Option[String])],
-                              asOf: Option[Long]): (DataFrame, Int, Int) = {
-    require(specs.nonEmpty, "snapshotPartitionPruned needs >= 1 level")
-    val partCols = specs.map(_._1)
-    val st = stateAt(table, asOf)
-    val tagged = st.segments.map { case (p, _) =>
-      val path = Paths.get(p)
-      val n = path.getNameCount
-      require(n >= partCols.size + 1,
-        s"$table segment $p is shallower than the ${partCols.size}-level layout")
-      partCols.zipWithIndex.foreach { case (pc, i) =>
-        val name = path.getName(n - partCols.size + i).toString
-        require(name.startsWith(pc + "="),
-          s"$table segment $p carries no $pc= path at level ${i + 1} — a " +
-            "maintenance rewrite dropped the partitioned layout; read via snapshot()")
-      }
-      p -> segPartValues(p, partCols)
-    }
-    val keep = tagged.filter { case (_, vals) =>
-      specs.map(_._2).zip(vals).forall { case (f, v) => f.forall(_ == v) }
-    }
-    require(keep.nonEmpty, "partition " +
-      specs.map { case (c, f) => s"$c=${f.getOrElse("*")}" }.mkString("/") +
-      s" prunes every segment of $table")
-    val rel = keep.groupBy(_._2).toSeq.sortBy(_._1.mkString("/")).map {
-      case (vals, segs) =>
-        partCols.zip(vals).foldLeft(
-          readSegments(spark, segs.map(_._1), st)) {
-          case (d, (pc, v)) => d.withColumn(pc, partValueLit(v))
-        }
-    }.reduce(_.unionByName(_))
-    (rel, keep.size, st.segments.size)
-  }
-
-  /** The FORMAT relation's partitioned scan: partition-value equality
-    * pruning (per level, sets from pushed EqualTo/In filters) composed
-    * with per-segment stats bounds pruning, both decided driver-side
-    * from the manifest; surviving leaves read grouped per value
-    * combination with every partition column re-attached. LENIENT on
-    * all-pruned (returns None — a zero-row query is an ordinary query,
-    * the ADVICE-r12 buildScan contract), so callers with a pinned schema
-    * build their own empty relation.
-    */
-  def snapshotPartitionStatsPruned(spark: SparkSession, table: String,
-                                   partIn: Seq[(String, Option[Set[String]])],
-                                   bounds: Seq[(String, Long, Long)],
-                                   asOf: Option[Long] = None,
-                                   strBounds: Seq[(String, Option[String],
-                                     Option[String])] = Seq.empty)
-      : (Option[DataFrame], Int, Int) = {
-    val partCols = partIn.map(_._1)
-    val st = stateAt(table, asOf)
-    val tagged = st.segments.map { case (p, ss) =>
-      (p, ss, segPartValues(p, partCols))
-    }
-    val keep = tagged.filter { case (_, ss, vals) =>
-      partIn.map(_._2).zip(vals).forall { case (f, v) => f.forall(_.contains(v)) } &&
-        bounds.forall { case (c, lo, hi) =>
-          ss.flatMap(_.statsFor(c)).forall(s =>
-            s.isString || (s.max >= lo && s.min <= hi))
-        } &&
-        strBounds.forall { case (c, lo, hi) =>
-          ss.flatMap(_.statsFor(c)).forall(strOverlaps(_, lo, hi))
-        }
-    }
-    if (keep.isEmpty) return (None, 0, st.segments.size)
-    val rel = keep.groupBy(_._3).toSeq.sortBy(_._1.mkString("/")).map {
-      case (vals, segs) =>
-        partCols.zip(vals).foldLeft(
-          readSegments(spark, segs.map(_._1), st)) {
-          case (d, (pc, v)) => d.withColumn(pc, partValueLit(v))
-        }
-    }.reduce(_.unionByName(_))
-    (Some(rel), keep.size, st.segments.size)
   }
 
   /** Full-table overwrite STAGED PARTITIONED (the `df.write.format("txlog")
@@ -2689,9 +2565,11 @@ object TxLog {
     val path = Paths.get(p)
     val n = path.getNameCount
     partCols.zipWithIndex.map { case (pc, i) =>
-      val name = path.getName(n - partCols.size + i).toString
+      val level = n - partCols.size + i
+      val name = if (level >= 0) path.getName(level).toString else ""
       require(name.startsWith(pc + "="),
-        s"segment $p carries no $pc= path at level ${i + 1}")
+        s"segment $p carries no $pc= partition path at level ${i + 1} — a " +
+          "maintenance rewrite dropped the partitioned layout; read via snapshot()")
       ExternalCatalogUtils.unescapePathName(name.substring(pc.length + 1))
     }
   }
@@ -2966,16 +2844,11 @@ object TxLog {
       changes = if (canPersist) Seq("d:" + dvSeg, "i:" + newSeg) else Seq.empty)
   }
 
-  private val StreamMergeOp = "stream_merge_b(\\d+)".r
-
   /** Highest micro-batch id ever committed by [[streamingMergeDv]], or -1
-    * (same newest-first early-stop argument as [[maxCommittedBatch]]).
+    * (a projection of the log state, like [[maxCommittedBatch]]).
     */
   def maxCommittedMergeBatch(table: String): Long =
-    listVersions(table).reverseIterator
-      .map(v => readManifest(table, v).op)
-      .collectFirst { case StreamMergeOp(b) => b.toLong }
-      .getOrElse(-1L)
+    highWater(table, "stream_merge_b")
 
   /** Highest batch id committed by EITHER streaming op family — the dedup
     * line for the native update-mode sink, whose history legitimately
@@ -3468,22 +3341,13 @@ object TxLog {
         "a key may match at most one update row")
   }
 
-  private val StreamOp = "stream_append_b(\\d+)".r
-
-  /** Highest micro-batch id ever committed by [[streamingAppend]], or -1.
-    * O(distance to the last stream commit), not O(log): committed stream
-    * batch ids are strictly increasing in version order (streamingAppend
-    * only publishes batchId > maxCommittedBatch, re-checked inside the
-    * CAS), so the NEWEST `stream_append_b` manifest carries the max — the
-    * walk runs newest-first and stops there (ADVICE r10: the old
-    * full-scan ran inside every CAS attempt, quadratic-ish on long
-    * streaming logs).
+  /** Highest micro-batch id ever committed by [[streamingAppend]], or -1:
+    * the `stream_append_b` mark of the log state, so it costs one fold
+    * from the nearest checkpoint and survives [[cleanupLog]] (the
+    * checkpoint persists the marks).
     */
   def maxCommittedBatch(table: String): Long =
-    listVersions(table).reverseIterator
-      .map(v => readManifest(table, v).op)
-      .collectFirst { case StreamOp(b) => b.toLong }
-      .getOrElse(-1L)
+    highWater(table, "stream_append_b")
 
   /** Exactly-once streaming sink step (the foreachBatch body): append a
     * micro-batch as one atomic commit carrying its batch id in the
@@ -3541,18 +3405,11 @@ object TxLog {
   }
 
   /** Latest transaction version committed by `appId` (−1 when none):
-    * the read half of the Delta `txn` action. Newest-first with early
-    * stop — an app's versions ascend, so its first (most recent) match
-    * is its maximum.
+    * the read half of the Delta `txn` action, the app's mark in the log
+    * state (an app's versions ascend, so its mark is its maximum).
     */
   def lastTxnVersion(table: String, appId: String): Long =
-    listVersions(table).reverseIterator
-      .map(v => readManifest(table, v).op)
-      .collectFirst {
-        case op if op.startsWith(s"txn:$appId:v") =>
-          op.stripPrefix(s"txn:$appId:v").toLong
-      }
-      .getOrElse(-1L)
+    highWater(table, s"txn:$appId:v")
 
   /** IDEMPOTENT WRITER TRANSACTIONS — Delta's `txn` (appId, version)
     * action generalized from the streaming sink: any batch writer
@@ -3656,7 +3513,7 @@ object TxLog {
     * stats on the z-key, in one atomic swap. A one-dimensional layout
     * ([[compactClustered]]) prunes range reads on that one column only;
     * after this rewrite a TWO-dimensional box read prunes from the
-    * manifest alone ([[snapshotZOrderBox]]) because an aligned box is a
+    * manifest alone ([[zorderBound]]) because an aligned box is a
     * contiguous z-range. Dimensions use the low 16 bits (`& 65535`) —
     * the [[graft.ops.ZOrder]] contract. Content-preserving (row-count
     * asserted before the swap); soft deletes materialize like every
@@ -3672,7 +3529,7 @@ object TxLog {
     * 2-D form, with dimensions masked to [[ZOrder.bitsFor]] bits each
     * (16 up to 3 columns) and the key interleaved by [[ZOrder.zkeyN]].
     * An N-dim aligned power-of-two box is one contiguous z-range, so
-    * [[snapshotZOrderBoxN]] prunes it from the manifest alone.
+    * [[zorderBound]] prunes it from the manifest alone.
     */
   def compactZOrderN(spark: SparkSession, table: String, cols: Seq[String],
                      buckets: Int): Long = {
@@ -3725,33 +3582,17 @@ object TxLog {
     commit(table, "optimize_zorder", adds, live, rv, staged.toMap ++ residualStats)
   }
 
-  /** Manifest-pruned TWO-DIMENSIONAL box read over a z-ordered table:
-    * the box `[x0, x1) × [y0, y1)` must be an ALIGNED power-of-two
-    * square (side a power of 2, corners multiples of the side) — exactly
-    * then its z-curve image is the contiguous range
-    * `[z(x0,y0), z(x1-1,y1-1)]`, and segments whose z min/max stats miss
-    * that range are skipped without opening a footer. Stat-less segments
-    * (incl. the null residual) are conservatively read. The caller still
-    * applies the box predicate reader-side — stats pruning is an
-    * optimization, never the filter. Returns (relation, scanned, total).
+  /** The z-range bound of a box read over an N-column z-ordered table
+    * ([[compactZOrderN]]), as a [[Prune]] long bound on the z-key stats.
+    * The box `[lo, hi)` per column must be an ALIGNED power-of-two
+    * HYPERCUBE (equal power-of-two sides, corners multiples of the side)
+    * inside the dimension domain — exactly then its z-curve image is the
+    * one contiguous range [z(lo…), z(hi-1…)], and segments whose recorded
+    * z bounds miss it are skipped without opening a footer. Stat-less
+    * segments (incl. the null residual) are kept, and the caller still
+    * applies the box predicate to the rows.
     */
-  def snapshotZOrderBox(spark: SparkSession, table: String, xCol: String,
-                        yCol: String, x0: Long, x1: Long,
-                        y0: Long, y1: Long): (DataFrame, Int, Int) =
-    snapshotZOrderBoxN(spark, table, Seq(xCol, yCol),
-      Seq((x0, x1), (y0, y1)))
-
-  /** N-DIMENSIONAL box read over an N-column z-ordered table: the box
-    * must be an aligned power-of-two HYPERCUBE (equal power-of-two sides,
-    * corners multiples of the side) — exactly then its z-curve image is
-    * the one contiguous range [z(lo…), z(hi-1…)], and segments whose
-    * recorded z bounds miss it are skipped without opening a footer.
-    * Same conservative-keep and reader-side-predicate contract as the
-    * 2-D form.
-    */
-  def snapshotZOrderBoxN(spark: SparkSession, table: String,
-                         cols: Seq[String],
-                         box: Seq[(Long, Long)]): (DataFrame, Int, Int) = {
+  def zorderBound(cols: Seq[String], box: Seq[(Long, Long)]): (String, Long, Long) = {
     require(cols.size >= 2 && cols.size == box.size,
       s"z-order box needs one (lo, hi) per column: ${cols.size} columns, " +
         s"${box.size} ranges")
@@ -3766,18 +3607,8 @@ object TxLog {
       s"box ${box.mkString("x")} exceeds the ${ZOrder.bitsFor(cols.size)}-bit " +
         s"dimension domain — coordinates past ${domain - 1} would alias " +
         "under the dimension mask")
-    val statCol = s"zorder(${cols.mkString(",")})"
-    val zlo = ZOrder.zkeyScalarN(box.map(_._1))
-    val zhi = ZOrder.zkeyScalarN(box.map(_._2 - 1))
-    val st = stateAt(table)
-    val all = st.segments
-    val keep = all.collect {
-      case (p, None) => p
-      case (p, Some(s)) if s.col != statCol || (s.max >= zlo && s.min <= zhi) => p
-    }
-    require(keep.nonEmpty, s"box pruned every segment of $table")
-    val rel = readSegments(spark, keep, st)
-    (rel, keep.size, all.size)
+    (s"zorder(${cols.mkString(",")})", ZOrder.zkeyScalarN(box.map(_._1)),
+      ZOrder.zkeyScalarN(box.map(_._2 - 1)))
   }
 
   /** RESTORE TABLE to `toVersion` as a NEW commit (Delta RESTORE): the
@@ -3848,7 +3679,7 @@ object TxLog {
     * snapshot metadata): collapse the fold of manifests 1..V into one
     * `<V>.checkpoint.json`: the whole [[LogState]] at V (live segments
     * with their stats, dv chain, renames, drops, schema, constraints,
-    * properties, ingest ledger) as one manifest. Readers then resolve a
+    * properties, ingest ledger, stream and txn marks) as one manifest. Readers then resolve a
     * snapshot from the nearest checkpoint ≤ asOf plus only the manifests
     * after it —
     * O(commits since last checkpoint) instead of O(all commits), which is
@@ -3868,7 +3699,7 @@ object TxLog {
     val stats = st.segments.collect { case (p, Some(s)) => p -> s }.toMap
     val m = Manifest(v, "checkpoint", st.live, Seq.empty, v, stats,
       st.schemaJson, st.dv, st.checks, st.renames, st.drops,
-      ingests = st.ingests.toSeq.sorted, props = st.props)
+      ingests = st.ingests.toSeq.sorted, props = st.props, marks = st.marks)
     val tmp = Files.createTempFile(logDir(table), s".ckpt$v-", ".tmp")
     Files.writeString(tmp, manifestJson(m))
     try Files.createLink(logDir(table).resolve(f"$v%020d.checkpoint.json"), tmp)
@@ -3896,7 +3727,8 @@ object TxLog {
     * checkpoints STRICTLY BELOW the newest checkpoint whose commit time
     * is older than the retention window. The surviving checkpoint carries
     * the cumulative table state at its version (see [[checkpoint]]),
-    * drops and the ingest ledger included, so every read at or above it
+    * drops, the ingest ledger and the stream/txn marks included, so every
+    * read and every exactly-once replay check at or above it
     * resolves exactly as before; reads BELOW it error loudly (the
     * foldability guards) instead of answering from a truncated fold.
     * This is what bounds the `_txlog` file count on a million-commit

@@ -1641,20 +1641,17 @@ object StatsQueries extends QueryPack {
     "lake_txlog_optimize" -> ((s, d) => {
       val t = txOptimizeTable(s, d)
       val q = Tables.orders(s, d).agg(max("o_orderkey")).head().getLong(0) / 4 + 1
+      val range = graft.ops.TxLog.Prune(longBounds = Seq(("o_orderkey", q, 2 * q - 1)))
       // post-optimize: stats-pruned range read on the clustered head
-      val (df, scanAfter, totAfter) =
-        graft.ops.TxLog.snapshotPruned(s, t, "o_orderkey", q, 2 * q - 1)
+      val after = graft.ops.TxLog.scan(s, t, range)
       // pre-optimize: same read against version 4's modulus layout
-      val beforeStats = graft.ops.TxLog.liveFilesWithStats(t, Some(4L))
-      val scanBefore = beforeStats.count {
-        case (_, Some(st)) => st.max >= q && st.min <= 2 * q - 1
-        case _ => true
-      }
-      df.filter(col("o_orderkey") >= q && col("o_orderkey") < 2 * q)
+      val before = graft.ops.TxLog.scan(s, t, range, Some(4L))
+      after.required.filter(col("o_orderkey") >= q && col("o_orderkey") < 2 * q)
         .agg(count(lit(1)).as("n_rows"), sum("cents").as("sum_cents"))
-        .select(lit(scanBefore.toLong).as("scan_before"),
-          lit(beforeStats.size.toLong).as("total_before"),
-          lit(scanAfter.toLong).as("scan_after"), lit(totAfter.toLong).as("total_after"),
+        .select(lit(before.scanned.toLong).as("scan_before"),
+          lit(before.total.toLong).as("total_before"),
+          lit(after.scanned.toLong).as("scan_after"),
+          lit(after.total.toLong).as("total_after"),
           col("n_rows"), col("sum_cents"))
     }),
 
@@ -1669,11 +1666,10 @@ object StatsQueries extends QueryPack {
     "lake_txlog_bloom_lookup" -> ((s, d) => {
       val t = txBloomTable(s, d)
       val key = Tables.orders(s, d).agg(max("o_orderkey")).head().getLong(0)
-      val (df, scanned, total) =
-        graft.ops.TxLog.snapshotPointLookup(s, t, "o_orderkey", key)
-      df.filter(col("o_orderkey") === key)
+      val sc = graft.ops.TxLog.scan(s, t, graft.ops.TxLog.Prune.point("o_orderkey", key))
+      sc.required.filter(col("o_orderkey") === key)
         .agg(count(lit(1)).as("n_rows"), sum("cents").as("key_cents"))
-        .select(lit(scanned.toLong).as("n_scanned"), lit(total.toLong).as("n_total"),
+        .select(lit(sc.scanned.toLong).as("n_scanned"), lit(sc.total.toLong).as("n_total"),
           col("n_rows"), col("key_cents"))
     }),
 
@@ -1712,11 +1708,11 @@ object StatsQueries extends QueryPack {
     "lake_txlog_pruned_scan" -> ((s, d) => {
       val t = txStatsTable(s, d)
       val q = Tables.orders(s, d).agg(max("o_orderkey")).head().getLong(0) / 4 + 1
-      val (df, scanned, total) =
-        graft.ops.TxLog.snapshotPruned(s, t, "o_orderkey", q, 2 * q - 1)
-      df.filter(col("o_orderkey") >= q && col("o_orderkey") < 2 * q)
+      val sc = graft.ops.TxLog.scan(s, t,
+        graft.ops.TxLog.Prune(longBounds = Seq(("o_orderkey", q, 2 * q - 1))))
+      sc.required.filter(col("o_orderkey") >= q && col("o_orderkey") < 2 * q)
         .agg(count(lit(1)).as("n_rows"), sum("cents").as("sum_cents"))
-        .select(lit(scanned.toLong).as("n_scanned"), lit(total.toLong).as("n_total"),
+        .select(lit(sc.scanned.toLong).as("n_scanned"), lit(sc.total.toLong).as("n_total"),
           col("n_rows"), col("sum_cents"))
     }),
 
@@ -2000,7 +1996,7 @@ object StatsQueries extends QueryPack {
     // with tight z-key min/max stats. The SAME aligned box read
     // [0,4)×[0,4) now scans exactly 1 of 16 segments, decided from the
     // manifest alone (an aligned power-of-2 box is one contiguous
-    // z-range — snapshotZOrderBox). The box predicate is still applied
+    // z-range — TxLog.zorderBound). The box predicate is still applied
     // reader-side as the residual. 1-D clustering cannot do this: a
     // px-sorted layout prunes px ranges only; the z-curve prunes BOTH
     // dimensions at once.
@@ -2010,13 +2006,14 @@ object StatsQueries extends QueryPack {
       // the pre-optimize modulus layout: o_orderkey stats can never
       // prune a 2-D box → all segments scanned
       val scanBefore = beforeSegs.size.toLong
-      val (df, scanAfter, totAfter) =
-        graft.ops.TxLog.snapshotZOrderBox(s, t, "px", "py", 0L, 4L, 0L, 4L)
-      df.filter(col("px") < 4 && col("py") < 4)
+      val after = graft.ops.TxLog.scan(s, t, graft.ops.TxLog.Prune(longBounds = Seq(
+        graft.ops.TxLog.zorderBound(Seq("px", "py"), Seq((0L, 4L), (0L, 4L))))))
+      after.required.filter(col("px") < 4 && col("py") < 4)
         .agg(count(lit(1)).as("n_rows"), sum("cents").as("sum_cents"))
         .select(lit(scanBefore).as("scan_before"),
           lit(beforeSegs.size.toLong).as("total_before"),
-          lit(scanAfter.toLong).as("scan_after"), lit(totAfter.toLong).as("total_after"),
+          lit(after.scanned.toLong).as("scan_after"),
+          lit(after.total.toLong).as("total_after"),
           col("n_rows"), col("sum_cents"))
     }),
 
@@ -2157,14 +2154,14 @@ object StatsQueries extends QueryPack {
       graft.plans.ManifestCountRule.lastAnswered = None
       val n = s.read.format("txlog").load(t).count()
       val counted = graft.plans.ManifestCountRule.lastAnswered.exists(_._1 == t)
-      val (rel, scanned, total) = graft.ops.TxLog.snapshotPrunedMulti(
-        s, t, Seq(("cents", MultiStatsCut, Long.MaxValue)))
+      val sc = graft.ops.TxLog.scan(s, t,
+        graft.ops.TxLog.Prune(longBounds = Seq(("cents", MultiStatsCut, Long.MaxValue))))
       val est = graft.ops.TxLog.estimatedRangeRows(
         t, "o_orderkey", 0L, Long.MaxValue)
-      rel.agg(count(lit(1)).as("n_pruned_rows"), sum("cents").as("sum_cents"))
+      sc.orEmpty.agg(count(lit(1)).as("n_pruned_rows"), sum("cents").as("sum_cents"))
         .select(lit(counted).as("manifest_count_answered"),
           lit(n).as("n_rows"),
-          lit(scanned < total).as("pruned_second_col"),
+          lit(sc.scanned < sc.total).as("pruned_second_col"),
           lit(est.exists(e => math.abs(e - n) < 1.0 + n * 0.02))
             .as("range_est_sane"),
           col("n_pruned_rows"), col("sum_cents"))
@@ -2220,10 +2217,10 @@ object StatsQueries extends QueryPack {
     // path; `pruned` pins that skipping actually happened.
     "lake_txlog_partitioned" -> ((s, d) => {
       val t = txPartTable(s, d)
-      val (rel, scanned, total) = graft.ops.TxLog.snapshotPartitionPruned(
-        s, t, "lang", Some("en"))
-      rel.agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-        .select(lit(scanned < total).as("pruned"),
+      val sc = graft.ops.TxLog.scan(s, t,
+        graft.ops.TxLog.Prune(parts = Seq("lang" -> Some(Set("en")))))
+      sc.required.agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
+        .select(lit(sc.scanned < sc.total).as("pruned"),
           lit(graft.ops.TxLog.partitionValues(t, "lang").size).as("n_partitions"),
           col("n_docs"), col("sum_chars"))
     }),
@@ -2238,13 +2235,13 @@ object StatsQueries extends QueryPack {
     // the lake seam's headline write path (VERDICT r13 item 1).
     "lake_txlog_partitioned2" -> ((s, d) => {
       val t = txPart2Table(s, d)
-      val (_, s1, t1) = graft.ops.TxLog.snapshotPartitionPruned(
-        s, t, Seq("lang" -> Some("en"), "src" -> None), None)
-      val (leaf, s2, t2) = graft.ops.TxLog.snapshotPartitionPruned(
-        s, t, Seq("lang" -> Some("en"), "src" -> Some("web")), None)
-      leaf.agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-        .select(lit(s1 == 2 && s1 < t1).as("pruned_l1"),
-          lit(s2 == 1 && t2 == t1).as("pruned_l2"),
+      def parts(p: (String, Option[Set[String]])*) =
+        graft.ops.TxLog.scan(s, t, graft.ops.TxLog.Prune(parts = p))
+      val l1 = parts("lang" -> Some(Set("en")), "src" -> None)
+      val l2 = parts("lang" -> Some(Set("en")), "src" -> Some(Set("web")))
+      l2.required.agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
+        .select(lit(l1.scanned == 2 && l1.scanned < l1.total).as("pruned_l1"),
+          lit(l2.scanned == 1 && l2.total == l1.total).as("pruned_l2"),
           col("n_docs"), col("sum_chars"))
     }),
 
@@ -2289,11 +2286,11 @@ object StatsQueries extends QueryPack {
       val t = txStrStatsTable(s, d)
       val q = Tables.customer(s, d).agg(max("c_custkey")).head().getLong(0) / 4 + 1
       def nm(k: Long) = f"Customer#$k%09d"
-      val (df, scanned, total) =
-        graft.ops.TxLog.snapshotPrunedStr(s, t, "name", nm(q), nm(2 * q - 1))
-      df.filter(col("name") >= nm(q) && col("name") < nm(2 * q))
+      val sc = graft.ops.TxLog.scan(s, t, graft.ops.TxLog.Prune(
+        strBounds = Seq(("name", Some(nm(q)), Some(nm(2 * q - 1))))))
+      sc.required.filter(col("name") >= nm(q) && col("name") < nm(2 * q))
         .agg(count(lit(1)).as("n_rows"), sum("cents").as("sum_cents"))
-        .select(lit(scanned.toLong).as("n_scanned"), lit(total.toLong).as("n_total"),
+        .select(lit(sc.scanned.toLong).as("n_scanned"), lit(sc.total.toLong).as("n_total"),
           col("n_rows"), col("sum_cents"))
     }),
 
@@ -2307,12 +2304,11 @@ object StatsQueries extends QueryPack {
       val t = txBloomStrTable(s, d)
       val mk = Tables.orders(s, d).agg(max("o_orderkey")).head().getLong(0)
       val key = f"Order#$mk%09d"
-      val (df, scanned, total) =
-        graft.ops.TxLog.snapshotPointLookupStr(s, t, "name", key)
-      df.filter(col("name") === key)
+      val sc = graft.ops.TxLog.scan(s, t, graft.ops.TxLog.Prune.point("name", key))
+      sc.required.filter(col("name") === key)
         .agg(count(lit(1)).as("n_rows"), sum("cents").as("key_cents"))
-        .select(lit(scanned.toLong).as("n_scanned"),
-          lit(total.toLong).as("n_total"), col("n_rows"), col("key_cents"))
+        .select(lit(sc.scanned.toLong).as("n_scanned"),
+          lit(sc.total.toLong).as("n_total"), col("n_rows"), col("key_cents"))
     }),
 
     // STRING MIN/MAX FROM THE MANIFEST: min(c_name)/max(c_name)/count(*)
@@ -2430,8 +2426,8 @@ object StatsQueries extends QueryPack {
     // full partitioned read must show exactly the composed head.
     "lake_txlog_part_overwrite" -> ((s, d) => {
       val t = txPartOvwTable(s, d)
-      graft.ops.TxLog.snapshotPartitionPruned(s, t, "lang", None)._1
-        .groupBy("lang")
+      graft.ops.TxLog.scan(s, t, graft.ops.TxLog.Prune(parts = Seq("lang" -> None)))
+        .required.groupBy("lang")
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
         .orderBy("lang")
     }),
@@ -2546,14 +2542,14 @@ object StatsQueries extends QueryPack {
     "lake_txlog_zorder3" -> ((s, d) => {
       val t = txZOrder3Table(s, d)
       val beforeSegs = graft.ops.TxLog.liveFilesWithStats(t, Some(4L))
-      val (df, scanAfter, totAfter) =
-        graft.ops.TxLog.snapshotZOrderBoxN(s, t, Seq("px", "py", "pz"),
-          Seq((0L, 2L), (0L, 2L), (0L, 2L)))
-      df.filter(col("px") < 2 && col("py") < 2 && col("pz") < 2)
+      val after = graft.ops.TxLog.scan(s, t, graft.ops.TxLog.Prune(longBounds = Seq(
+        graft.ops.TxLog.zorderBound(Seq("px", "py", "pz"),
+          Seq((0L, 2L), (0L, 2L), (0L, 2L))))))
+      after.required.filter(col("px") < 2 && col("py") < 2 && col("pz") < 2)
         .agg(count(lit(1)).as("n_rows"), sum("cents").as("sum_cents"))
         .select(lit(beforeSegs.size.toLong).as("total_before"),
-          lit(scanAfter.toLong).as("scan_after"),
-          lit(totAfter.toLong).as("total_after"),
+          lit(after.scanned.toLong).as("scan_after"),
+          lit(after.total.toLong).as("total_after"),
           col("n_rows"), col("sum_cents"))
     }),
 

@@ -28,7 +28,7 @@ import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode, SparkSession}
   * pushable predicates and required columns, and `buildScan` turns
   * range/point predicates on ANY of the table's tracked stats columns
   * into MANIFEST SEGMENT PRUNING (min/max skipping via
-  * [[TxLog.snapshotPrunedMulti]]) before any file is opened. A predicate
+  * [[TxLog.scan]]) before any file is opened. A predicate
   * that prunes EVERY segment yields an empty relation, not an error
   * (ADVICE r12) — a zero-row query is an ordinary query. Every filter is
   * reported unhandled, so Spark re-applies predicates row-level —
@@ -391,46 +391,33 @@ final class TxLogRelation(ctx: SQLContext, val table: String, val asOf: Option[L
         tracked.filter(strTracked).flatMap(c =>
           strFilterBounds(c, filters).map { case (lo, hi) => (c, lo, hi) })
       else Seq.empty
-    val df =
-      if (partitionCols.nonEmpty) {
-        // partitioned layout: equality/IN filters on partition columns
-        // prune whole leaf directories; stats bounds prune within.
-        // GENERATED partition columns additionally derive admissible
-        // values from filters on their SOURCE column (head only — the
-        // declaration's invariant is validated against current history,
-        // not arbitrary past versions)
-        val genDecls =
-          if (asOf.isEmpty)
-            TxLog.generatedColumns(table)
-              .filter { case (c, _) => partitionCols.contains(c) }
-          else Map.empty[String, String]
-        val partIn = partitionCols.map { c =>
-          val eq = eqStringValues(c, filters)
-          val derived = genDecls.get(c).flatMap(e =>
-            GeneratedColumnPrune.admissibleValues(e, filters,
-              TxLog.livePartitionValues(table, c, asOf)))
-          c -> ((eq, derived) match {
-            case (Some(a), Some(b)) => Some(a intersect b)
-            case (a, b) => a.orElse(b)
-          })
-        }
-        val (relOpt, scanned, total) = TxLog.snapshotPartitionStatsPruned(
-          spark, table, partIn, bounds, asOf, strBounds)
-        TxLogBatchSource.lastPrune = Some((scanned, total))
-        relOpt.getOrElse(spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], schema))
-      } else if (bounds.nonEmpty || strBounds.nonEmpty) {
-        val (rel, scanned, total) =
-          TxLog.snapshotPrunedMulti(spark, table, bounds, None, strBounds)
-        TxLogBatchSource.lastPrune = Some((scanned, total))
-        rel
-      } else {
-        TxLogBatchSource.lastPrune = None
-        TxLog.snapshot(spark, table, asOf)
-      }
+    // partitioned layout: equality/IN filters on partition columns prune
+    // whole leaf directories; stats bounds prune within. GENERATED
+    // partition columns additionally derive admissible values from
+    // filters on their SOURCE column (head only — the declaration's
+    // invariant is validated against current history, not arbitrary
+    // past versions)
+    val genDecls =
+      if (asOf.isEmpty && partitionCols.nonEmpty)
+        TxLog.generatedColumns(table).filter { case (c, _) => partitionCols.contains(c) }
+      else Map.empty[String, String]
+    val partIn = partitionCols.map { c =>
+      val eq = eqStringValues(c, filters)
+      val derived = genDecls.get(c).flatMap(e =>
+        GeneratedColumnPrune.admissibleValues(e, filters,
+          TxLog.livePartitionValues(table, c, asOf)))
+      c -> ((eq, derived) match {
+        case (Some(a), Some(b)) => Some(a intersect b)
+        case (a, b) => a.orElse(b)
+      })
+    }
+    val prune = TxLog.Prune(partIn, bounds, strBounds)
+    val sc = TxLog.scan(spark, table, prune, asOf)
+    TxLogBatchSource.lastPrune =
+      if (prune == TxLog.Prune()) None else Some((sc.scanned, sc.total))
     // internal rows must match the REQUESTED width exactly — a zero-column
     // request (bare count) gets zero-field rows, not the full frame
-    val projected = df.select(requiredColumns
+    val projected = sc.orEmpty.select(requiredColumns
       .map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
     projected.queryExecution.toRdd.asInstanceOf[RDD[Row]]
   }

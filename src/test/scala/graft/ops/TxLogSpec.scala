@@ -21,6 +21,20 @@ class TxLogSpec extends SparkSpec {
   private def rows(xs: (Long, Long)*) =
     xs.toSeq.toDF("k", "v")
 
+  import TxLog.Prune
+
+  /** A strict pruned scan as (relation, scanned, total): a predicate that
+    * prunes every segment refuses with IllegalArgumentException.
+    */
+  private def strictScan(t: String, p: Prune, asOf: Option[Long] = None)
+      : (org.apache.spark.sql.DataFrame, Int, Int) = {
+    val sc = TxLog.scan(spark, t, p, asOf)
+    (sc.required, sc.scanned, sc.total)
+  }
+
+  private def longRange(c: String, lo: Long, hi: Long): Prune =
+    Prune(longBounds = Seq((c, lo, hi)))
+
   /** `body` evaluated with the table's checkpoint files moved aside, so
     * every read replays the manifests alone — the fold a checkpoint must
     * reproduce.
@@ -163,18 +177,18 @@ class TxLogSpec extends SparkSpec {
     TxLog.appendWithStats(rows(10L -> 100L, 15L -> 150L), t, "k") // k in [10,15]
     TxLog.appendWithStats(rows(20L -> 200L), t, "k")              // k in [20,20]
     // a range inside the middle segment reads exactly ONE of three
-    val (df, scanned, total) = TxLog.snapshotPruned(spark, t, "k", 9L, 16L)
+    val (df, scanned, total) = strictScan(t, longRange("k", 9L, 16L))
     assert((scanned, total) === (1, 3))
     assert(df.as[(Long, Long)].collect().toMap === Map(10L -> 100L, 15L -> 150L))
     // a stats-less commit can never be pruned — correctness over skipping
     TxLog.append(rows(99L -> 999L), t)
-    val (df2, scanned2, total2) = TxLog.snapshotPruned(spark, t, "k", 9L, 16L)
+    val (df2, scanned2, total2) = strictScan(t, longRange("k", 9L, 16L))
     assert((scanned2, total2) === (2, 4), "unknown-range segment must be scanned")
     assert(df2.count() === 3L)
     // a predicate that would prune EVERYTHING refuses instead of
     // returning a schemaless empty relation
     intercept[IllegalArgumentException] {
-      TxLog.snapshotPruned(spark, freshTableWithOneStatSeg(), "k", 1000L, 2000L)
+      strictScan(freshTableWithOneStatSeg(), longRange("k", 1000L, 2000L))
     }
   }
 
@@ -189,17 +203,17 @@ class TxLogSpec extends SparkSpec {
     // modulus split: every segment's [min,max] covers the key space
     TxLog.appendWithBloom(rows(1L -> 10L, 3L -> 30L, 5L -> 50L), t, "k")  // odd
     TxLog.appendWithBloom(rows(2L -> 20L, 4L -> 40L, 6L -> 60L), t, "k")  // even
-    val (df, scanned, total) = TxLog.snapshotPointLookup(spark, t, "k", 4L)
+    val (df, scanned, total) = strictScan(t, Prune.point("k", 4L))
     assert(total === 2)
     assert(scanned === 1, "bloom must prove 4 absent from the odd segment")
     assert(df.filter(col("k") === 4L).as[(Long, Long)].collect().toSeq === Seq((4L, 40L)))
     // a key in NO segment prunes everything → loud refusal, not empty scan
     intercept[IllegalArgumentException] {
-      TxLog.snapshotPointLookup(spark, t, "k", 999L)
+      strictScan(t, Prune.point("k", 999L))
     }
     // stat-less segments are always scanned
     TxLog.append(rows(7L -> 70L), t)
-    val (_, scanned2, total2) = TxLog.snapshotPointLookup(spark, t, "k", 4L)
+    val (_, scanned2, total2) = strictScan(t, Prune.point("k", 4L))
     assert((scanned2, total2) === (2, 3))
   }
 
@@ -208,12 +222,12 @@ class TxLogSpec extends SparkSpec {
     // modulus layout: both segments span keys 1..6 — range stats prune nothing
     TxLog.appendWithStats(rows(1L -> 10L, 3L -> 30L, 5L -> 50L), t, "k")
     TxLog.appendWithStats(rows(2L -> 20L, 4L -> 40L, 6L -> 60L), t, "k")
-    val (_, s0, t0) = TxLog.snapshotPruned(spark, t, "k", 1L, 3L)
+    val (_, s0, t0) = strictScan(t, longRange("k", 1L, 3L))
     assert((s0, t0) === (2, 2), "interleaved ranges: nothing prunable")
     val v = TxLog.compactClustered(spark, t, "k", 2)
     assert(v === 3L)
     // same read now prunes; content identical
-    val (df, s1, t1) = TxLog.snapshotPruned(spark, t, "k", 1L, 3L)
+    val (df, s1, t1) = strictScan(t, longRange("k", 1L, 3L))
     assert(t1 === 2 && s1 === 1, s"clustered layout must prune: scanned $s1/$t1")
     assert(TxLog.snapshot(spark, t).as[(Long, Long)].collect().toMap
       === Map(1L -> 10L, 2L -> 20L, 3L -> 30L, 4L -> 40L, 5L -> 50L, 6L -> 60L))
@@ -229,7 +243,7 @@ class TxLogSpec extends SparkSpec {
     val intRows = Seq((1, 10L), (3, 30L)).toDF("k", "v") // k is IntegerType
     TxLog.appendWithBloom(intRows, t, "k")
     TxLog.appendWithBloom(Seq((2, 20L), (4, 40L)).toDF("k", "v"), t, "k")
-    val (df, scanned, total) = TxLog.snapshotPointLookup(spark, t, "k", 3L)
+    val (df, scanned, total) = strictScan(t, Prune.point("k", 3L))
     assert(total === 2 && scanned === 1, "even segment bloom-pruned, odd kept")
     assert(df.filter(col("k") === 3).count() === 1L,
       "the segment containing the key must NOT be bloom-pruned")
@@ -495,7 +509,7 @@ class TxLogSpec extends SparkSpec {
     // stats survive the checkpoint: the post-checkpoint segment's
     // min/max (k in [3,3]) prunes it from a [1,1] read; the stat-less
     // overwrite segment is conservatively kept
-    val (_, scanned, total) = TxLog.snapshotPruned(spark, t, "k", 1L, 1L)
+    val (_, scanned, total) = strictScan(t, longRange("k", 1L, 1L))
     assert(total === 2 && scanned === 1,
       "v4 segment must prune from a [1,1] read via the checkpoint path")
     // a second checkpoint at the same head is a no-op (identical content)
@@ -583,6 +597,22 @@ class TxLogSpec extends SparkSpec {
       assert(v === 2L && ingested.isEmpty, s"$path re-ingested $ingested")
     }
     assert(TxLog.snapshot(spark, t).count() === 2L)
+  }
+
+  test("stream and txn high-water marks survive log cleanup") {
+    val t = freshTable()
+    assert(TxLog.streamingAppend(rows(1L -> 10L), t, 0L) === 1L)
+    assert(TxLog.idempotentAppend(rows(2L -> 20L), t, "app", 1L) === 2L)
+    TxLog.append(rows(3L -> 30L), t)                      // v3
+    assert(TxLog.checkpoint(t) === 3L)
+    TxLog.cleanupLog(t, Some(0L))
+    assert(TxLog.logFloor(t) === 3L, "the manifests carrying the marks are gone")
+    // replays of the committed batch and transaction still skip
+    assert(TxLog.streamingAppend(rows(1L -> 10L), t, 0L) === -1L)
+    assert(TxLog.idempotentAppend(rows(2L -> 20L), t, "app", 1L) === -1L)
+    assert(TxLog.snapshot(spark, t).count() === 3L)
+    assert((TxLog.maxCommittedBatch(t), TxLog.lastTxnVersion(t, "app"),
+      TxLog.maxCommittedMergeBatch(t)) === ((0L, 1L, -1L)))
   }
 
   test("a table deleted and rebuilt at the same path reads its new rows and metadata") {
@@ -797,26 +827,28 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.snapshot(spark, t).count() === 65L)
     // aligned 4×4 box = one contiguous z-range → prunes; the stat-less
     // residual is conservatively kept, so scanned < total but > 1
-    val (rel, scanned, total) = TxLog.snapshotZOrderBox(spark, t, "x", "y", 0L, 4L, 0L, 4L)
+    def box(side: Long) = Prune(longBounds = Seq(
+      TxLog.zorderBound(Seq("x", "y"), Seq((0L, side), (0L, side)))))
+    val (rel, scanned, total) = strictScan(t, box(4L))
     assert(scanned < total, s"box read must prune ($scanned/$total)")
     assert(rel.filter(fcol("x") < 4 && fcol("y") < 4).count() === 16L)
     // full-plane box keeps everything
-    val (_, s2, t2) = TxLog.snapshotZOrderBox(spark, t, "x", "y", 0L, 8L, 0L, 8L)
+    val (_, s2, t2) = strictScan(t, box(8L))
     assert(s2 === t2)
     // misaligned / non-square / non-power-of-2 boxes reject loudly — the
     // contiguity argument only holds for aligned power-of-2 squares
     intercept[IllegalArgumentException] {
-      TxLog.snapshotZOrderBox(spark, t, "x", "y", 1L, 5L, 0L, 4L)
+      TxLog.zorderBound(Seq("x", "y"), Seq((1L, 5L), (0L, 4L)))
     }
     intercept[IllegalArgumentException] {
-      TxLog.snapshotZOrderBox(spark, t, "x", "y", 0L, 3L, 0L, 3L)
+      TxLog.zorderBound(Seq("x", "y"), Seq((0L, 3L), (0L, 3L)))
     }
     intercept[IllegalArgumentException] {
-      TxLog.snapshotZOrderBox(spark, t, "x", "y", 0L, 4L, 0L, 8L)
+      TxLog.zorderBound(Seq("x", "y"), Seq((0L, 4L), (0L, 8L)))
     }
     // coordinates past the 16-bit domain would alias under the mask
     intercept[IllegalArgumentException] {
-      TxLog.snapshotZOrderBox(spark, t, "x", "y", 65536L, 65540L, 0L, 4L)
+      TxLog.zorderBound(Seq("x", "y"), Seq((65536L, 65540L), (0L, 4L)))
     }
     // scalar and Column z-keys agree (the pruning range is driver-computed)
     val colZ = spark.range(64).select(
@@ -1203,7 +1235,7 @@ class TxLogSpec extends SparkSpec {
     TxLog.compactClustered(spark, t2, "k", 2)
     assert(TxLog.tableRowCount(t2) === Some(4L),
       "rows survive clustered optimize incl. the null-key residual")
-    val (_, scanned, total) = TxLog.snapshotPruned(spark, t2, "k", 0L, 5L)
+    val (_, scanned, total) = strictScan(t2, longRange("k", 0L, 5L))
     assert(total >= 2 && scanned < total,
       "range prune still works post-optimize and keeps the residual conservatively")
     // z-order OPTIMIZE: per-segment rows recorded on the synthetic z stats
@@ -1225,35 +1257,34 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.currentVersion(t) === 2L, "each load is one atomic commit")
     assert(TxLog.partitionValues(t, "color") === Seq("blue", "green", "red"))
     // pruned read: 2 of 6 segments, rows exactly the color's slice
-    val (rel, scanned, total) = TxLog.snapshotPartitionPruned(
-      spark, t, "color", Some("red"))
+    val (rel, scanned, total) = strictScan(t, Prune(parts = Seq("color" -> Some(Set("red")))))
     assert((scanned, total) === ((2, 6)), "prune to the color's two segments")
     assert(rel.count() === df.filter(col("color") === "red").count())
     assert(rel.columns.toSet === Set("k", "color"),
       "partition column re-added from the path")
     // full read: every partition, column reconstructed, same bag of rows
-    val (all, s2, t2) = TxLog.snapshotPartitionPruned(spark, t, "color", None)
+    val (all, s2, t2) = strictScan(t, Prune(parts = Seq("color" -> None)))
     assert((s2, t2) === ((6, 6)))
     assert(all.count() === 1000L)
     assert(all.groupBy("color").count().as[(String, Long)].collect().toMap
       === Map("red" -> 334L, "green" -> 333L, "blue" -> 333L))
     // deletion vector composes: soft-delete one red row, pruned read drops it
     TxLog.deleteWhere(spark, t, col("k") === 0L)
-    val (rel2, _, _) = TxLog.snapshotPartitionPruned(spark, t, "color", Some("red"))
+    val (rel2, _, _) = strictScan(t, Prune(parts = Seq("color" -> Some(Set("red")))))
     assert(rel2.count() === 333L, "DV anti-join applies inside the pruned read")
     // time travel: version 1 sees only the first load's partitions
-    val (old, sOld, tOld) = TxLog.snapshotPartitionPruned(
-      spark, t, "color", Some("red"), asOf = Some(1L))
+    val (old, sOld, tOld) =
+      strictScan(t, Prune(parts = Seq("color" -> Some(Set("red")))), asOf = Some(1L))
     assert((sOld, tOld) === ((1, 3)) && old.count() === 167L)
     // vacuum safety: live subdir-referenced staging parents are NOT garbage
     val collected = TxLog.vacuum(t, keepVersionsFrom = 1L, minAgeMillis = 0L)
     assert(collected.isEmpty, s"vacuum must keep subdir-referenced parents: $collected")
-    assert(TxLog.snapshotPartitionPruned(spark, t, "color", Some("blue"))
+    assert(strictScan(t, Prune(parts = Seq("color" -> Some(Set("blue")))))
       ._1.count() === 333L)
     // honest-pruning refusal: a compaction drops the partitioned layout
     TxLog.compact(spark, t)
     val e = intercept[IllegalArgumentException](
-      TxLog.snapshotPartitionPruned(spark, t, "color", Some("red")))
+      strictScan(t, Prune(parts = Seq("color" -> Some(Set("red"))))))
     assert(e.getMessage.contains("partition path"))
   }
 
@@ -1268,7 +1299,7 @@ class TxLogSpec extends SparkSpec {
     val reload = spark.range(10)
       .selectExpr("id + 1000 AS k", "'green' AS color")
     TxLog.overwritePartition(reload, t, "color", "green")
-    val (greens, s1, t1) = TxLog.snapshotPartitionPruned(spark, t, "color", Some("green"))
+    val (greens, s1, t1) = strictScan(t, Prune(parts = Seq("color" -> Some(Set("green")))))
     assert((s1, t1) === ((1, 3)) && greens.count() === 10L)
     assert(greens.agg(org.apache.spark.sql.functions.min("k"))
       .head().getLong(0) === 1000L, "green is wholly the reload")
@@ -1276,7 +1307,7 @@ class TxLogSpec extends SparkSpec {
     val untouchedAfter = TxLog.tableState(t).segments.map(_._1)
       .filterNot(_.endsWith("color=green")).toSet
     assert(untouchedAfter === untouchedBefore)
-    assert(TxLog.snapshotPartitionPruned(spark, t, "color", Some("red"))
+    assert(strictScan(t, Prune(parts = Seq("color" -> Some(Set("red")))))
       ._1.count() === 100L)
     // cross-partition payload rejects BEFORE staging anything
     val bad = spark.range(2).selectExpr("id AS k",
@@ -1285,7 +1316,7 @@ class TxLogSpec extends SparkSpec {
       TxLog.overwritePartition(bad, t, "color", "green"))
     assert(e.getMessage.contains("other partitions"))
     // history: time travel still sees the original green rows
-    assert(TxLog.snapshotPartitionPruned(spark, t, "color", Some("green"),
+    assert(strictScan(t, Prune(parts = Seq("color" -> Some(Set("green")))),
       asOf = Some(1L))._1.count() === 100L)
   }
 
@@ -1367,8 +1398,8 @@ class TxLogSpec extends SparkSpec {
     val st = TxLog.liveFilesWithStats(t).flatMap(_._2)
     assert(st.forall(_.trackedCols === Seq("a", "b")))
     // the SECOND column prunes too
-    val (relB, scannedB, totalB) = TxLog.snapshotPrunedMulti(spark, t,
-      Seq(("b", 0L, 300L)))
+    val scB = TxLog.scan(spark, t, longRange("b", 0L, 300L))
+    val (relB, scannedB, totalB) = (scB.orEmpty, scB.scanned, scB.total)
     assert((scannedB, totalB) === (1, 2))
     assert(relB.count() === 2L)
     // planner surfaces answer on either column
@@ -1378,8 +1409,8 @@ class TxLogSpec extends SparkSpec {
     // conjunctive multi-column bounds compose (skip when ANY col
     // excludes): each range alone keeps one segment, together they
     // keep none — seg1 fails the b range, seg2 fails the a range
-    assert(TxLog.snapshotPrunedMulti(spark, t,
-      Seq(("a", 0L, 10L), ("b", 4000L, 9999L)))._2 === 0)
+    assert(TxLog.scan(spark, t,
+      Prune(longBounds = Seq(("a", 0L, 10L), ("b", 4000L, 9999L)))).scanned === 0)
     // OPTIMIZE re-records BOTH columns' stats on the rewritten segment
     TxLog.compact(spark, t)
     val after = TxLog.liveFilesWithStats(t).flatMap(_._2)
@@ -1388,11 +1419,11 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.tableRowCount(t) === Some(4L))
   }
 
-  test("snapshotPrunedMulti is lenient: an all-pruning predicate yields empty, not an error") {
+  test("lenient pruned scan: an all-pruning predicate yields empty, not an error") {
     val t = freshTable()
     TxLog.appendWithStats(rows(1L -> 10L, 2L -> 20L), t, "k")
-    val (rel, scanned, total) = TxLog.snapshotPrunedMulti(spark, t,
-      Seq(("k", 1000L, 2000L)))
+    val sc = TxLog.scan(spark, t, longRange("k", 1000L, 2000L))
+    val (rel, scanned, total) = (sc.orEmpty, sc.scanned, sc.total)
     assert((scanned, total) === (0, 1))
     assert(rel.count() === 0L)
     assert(rel.columns.toSeq === Seq("k", "v"))
@@ -1446,14 +1477,14 @@ class TxLogSpec extends SparkSpec {
     val df = Seq((1L, "en"), (2L, "de"), (3L, "en")).toDF("id", "lang")
     df.write.format("txlog").mode("append").partitionBy("lang").save(t)
     assert(TxLog.currentVersion(t) === 1L, "one atomic manifest for all partitions")
-    val (rel, scanned, total) = TxLog.snapshotPartitionPruned(spark, t, "lang", Some("en"))
+    val (rel, scanned, total) = strictScan(t, Prune(parts = Seq("lang" -> Some(Set("en")))))
     assert((scanned, total) === (1, 2))
     assert(rel.count() === 2L)
     // partitioned OVERWRITE replaces the whole table, still path-laid-out
     Seq((9L, "fr")).toDF("id", "lang").write.format("txlog")
       .mode("overwrite").partitionBy("lang").save(t)
     assert(TxLog.partitionValues(t, "lang") === Seq("fr"))
-    assert(TxLog.snapshotPartitionPruned(spark, t, "lang", None)._1.count() === 1L)
+    assert(strictScan(t, Prune(parts = Seq("lang" -> None)))._1.count() === 1L)
   }
 
   test("df.write.format(\"txlog\").option(\"statsCols\"): skipping stats ride the writer API") {
@@ -1479,15 +1510,15 @@ class TxLogSpec extends SparkSpec {
       .partitionBy("country", "visa").option("statsCols", "score").save(t)
     assert(TxLog.currentVersion(t) === 1L, "one atomic manifest for all leaves")
     // level-1 pruning: country=US reads 2 of 4 leaves, path-decided
-    val (us, s1, t1) = TxLog.snapshotPartitionPruned(
-      spark, t, Seq("country" -> Some("US"), "visa" -> None), None)
+    val (us, s1, t1) =
+      strictScan(t, Prune(parts = Seq("country" -> Some(Set("US")), "visa" -> None)))
     assert((s1, t1) === (2, 4))
     assert(us.select("id").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 5L))
     assert(us.columns.toSet === Set("id", "country", "visa", "score"),
       "both partition columns re-derive from the path")
     // level-2 pruning: (US, B1) is exactly one leaf
-    val (leaf, s2, t2) = TxLog.snapshotPartitionPruned(
-      spark, t, Seq("country" -> Some("US"), "visa" -> Some("B1")), None)
+    val (leaf, s2, t2) = strictScan(t,
+      Prune(parts = Seq("country" -> Some(Set("US")), "visa" -> Some(Set("B1")))))
     assert((s2, t2) === (1, 4))
     assert(leaf.select("id").as[Long].collect().sorted.toSeq === Seq(1L, 5L))
     // per-LEAF stats on the NON-partition column drive manifest skipping
@@ -1500,8 +1531,7 @@ class TxLogSpec extends SparkSpec {
     Seq((9L, "FR", "B9", 90L)).toDF("id", "country", "visa", "score")
       .write.format("txlog").mode("overwrite")
       .partitionBy("country", "visa").option("statsCols", "score").save(t)
-    val (all, s3, t3) = TxLog.snapshotPartitionPruned(
-      spark, t, Seq("country" -> None, "visa" -> None), None)
+    val (all, s3, t3) = strictScan(t, Prune(parts = Seq("country" -> None, "visa" -> None)))
     assert((s3, t3) === (1, 1))
     assert(all.select("id").as[Long].head() === 9L)
     // statsCols naming a partition column is refused, not silently wrong
@@ -1574,7 +1604,7 @@ class TxLogSpec extends SparkSpec {
       "the write-time bloom must survive an analyze of another column")
     assert(s.statsFor("v").exists(cs => cs.min == 10L && cs.max == 20L))
     // the preserved bloom still prunes point lookups
-    val (_, scanned, total) = TxLog.snapshotPointLookup(spark, t, "k", 1L)
+    val (_, scanned, total) = strictScan(t, Prune.point("k", 1L))
     assert((scanned, total) === (1, 1))
     // re-analyzing k itself refreshes values but keeps the bloom
     TxLog.analyze(spark, t, Seq("k"), force = true)
@@ -1610,7 +1640,7 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.tableMinMax(t, "b") === Some((100L, 5000L)))
     assert(TxLog.ndvBounds(t, "a") === Some((2L, 3L)))
     assert(TxLog.estimatedRangeRows(t, "b", 0L, 10000L).exists(_ > 2.9))
-    assert(TxLog.snapshotPrunedMulti(spark, t, Seq(("b", 0L, 300L)))._2 === 1)
+    assert(TxLog.scan(spark, t, longRange("b", 0L, 300L)).scanned === 1)
     // nothing left to analyze: no new commit published
     assert(TxLog.analyze(spark, t, Seq("a", "b")) === 3L)
     assert(TxLog.currentVersion(t) === 3L)
@@ -1795,7 +1825,7 @@ class TxLogSpec extends SparkSpec {
       Seq(10L))
     // single-level pruned read under the user value
     val (pruned, scanned, total) =
-      TxLog.snapshotPartitionPruned(spark, t, "lang", Some("x%y"))
+      strictScan(t, Prune(parts = Seq("lang" -> Some(Set("x%y")))))
     assert((scanned, total) === ((1, 4)) &&
       pruned.select("k").as[Long].collect().toSeq === Seq(2L))
   }
@@ -1885,7 +1915,7 @@ class TxLogSpec extends SparkSpec {
       Seq(("apple", "cherry"), ("mango", "peach")))
     assert(per.forall(_.isString))
     // a range inside the second segment prunes the first from metadata
-    val (df, scanned, total) = TxLog.snapshotPrunedStr(spark, t, "name", "k", "n")
+    val (df, scanned, total) = strictScan(t, Prune(strBounds = Seq(("name", Some("k"), Some("n")))))
     assert((scanned, total) === (1, 2))
     assert(df.filter(col("name") >= "k" && col("name") <= "n")
       .as[(String, Long)].collect().toSeq === Seq("mango" -> 3L))
@@ -2152,18 +2182,18 @@ class TxLogSpec extends SparkSpec {
     TxLog.appendWithBloom(strRows("beta" -> 3L, "zulu" -> 4L), t, "name")
     val per = TxLog.liveFilesWithStats(t).flatMap(_._2)
     assert(per.forall(s => s.isString && s.bloomHex.nonEmpty))
-    val (df, scanned, total) = TxLog.snapshotPointLookupStr(spark, t, "name", "beta")
+    val (df, scanned, total) = strictScan(t, Prune.point("name", "beta"))
     assert((scanned, total) === (1, 2))
     assert(df.filter(col("name") === "beta").as[(String, Long)].collect()
       .toSeq === Seq("beta" -> 3L))
     // a definitively-absent key prunes everything — the require is the
     // loud contract, never a silent wrong answer
     intercept[IllegalArgumentException] {
-      TxLog.snapshotPointLookupStr(spark, t, "name", "missing-key")
+      strictScan(t, Prune.point("name", "missing-key"))
     }
     // the LONG probe must not consult string-hashed bounds or bloom:
     // conservative full scan, not a false prune
-    val (_, scannedLong, totalLong) = TxLog.snapshotPointLookup(spark, t, "name", 42L)
+    val (_, scannedLong, totalLong) = strictScan(t, Prune.point("name", 42L))
     assert((scannedLong, totalLong) === (2, 2))
   }
 
@@ -2219,7 +2249,7 @@ class TxLogSpec extends SparkSpec {
     // both — conservative; and under the inverse predicate it WRONGLY
     // pruned the emoji segment — see the format path below)
     val (df, scanned, total) =
-      TxLog.snapshotPrunedStr(spark, t, "name", emojiLo, emojiHi)
+      strictScan(t, Prune(strBounds = Seq(("name", Some(emojiLo), Some(emojiHi)))))
     assert((scanned, total) === (1, 2))
     assert(df.count() === 2L)
     // the wrong-answer case pre-fix: name >= '' matches ALL FOUR

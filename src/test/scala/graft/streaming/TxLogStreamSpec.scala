@@ -219,7 +219,8 @@ class TxLogStreamSpec extends SparkSpec {
       .option("checkpointLocation", Files.createTempDirectory("sink-ckpt-").toString)
       .trigger(Trigger.AvailableNow()).start(dst)
     try q.awaitTermination() finally q.stop()
-    val (rel, scanned, total) = TxLog.snapshotPartitionPruned(spark, dst, "lang", Some("en"))
+    val sc = TxLog.scan(spark, dst, TxLog.Prune(parts = Seq("lang" -> Some(Set("en")))))
+    val (rel, scanned, total) = (sc.required, sc.scanned, sc.total)
     assert((scanned, total) === (1, 2))
     assert(rel.select("id").as[Long].collect().toSeq === Seq(1L))
   }
