@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
 
@@ -65,47 +65,61 @@ object Conform {
       else acc.withColumn(f.name, lit(null).cast(StringType))
     }
 
-  /** Data-quality gate (pyspark.py:22-39): non-empty + exact column-name
-    * order vs the registry schema. Throws on failure; returns the input for
-    * chaining. The non-emptiness probe is `limit(1).count()` — O(first
-    * partition with a row), not a full scan, exactly as the reference does.
+  /** One gate rule: an aggregate observed over the gated rows, the test
+    * its value must pass, and the failure message for a value that does not.
+    */
+  final case class Rule(metric: String, agg: Column, pass: Long => Boolean,
+                        failure: Long => String)
+
+  /** The reference's gate contract (pyspark.py:22-39) past column order:
+    * the table is non-empty.
+    */
+  val quality: Seq[Rule] = Seq(
+    Rule("n_rows", count(lit(1)), _ > 0, _ => "table is empty"))
+
+  /** The one gate path. Exact column-name order against the registry
+    * schema is checked before anything runs; each rule's aggregate is
+    * then taken as an `Observation` while `action` runs the frame, so the
+    * gate adds no pass of its own. Rules see the rows the action pulls.
+    * The metrics arrive after the action, so an action that writes must
+    * write to a staging location and publish only once this returns.
+    * Throws on the first failing rule; returns every observed value.
+    */
+  def gate(df: DataFrame, schema: StructType, table: String, rules: Seq[Rule])
+          (action: DataFrame => Unit): Map[String, Long] = {
+    val expected = schema.fieldNames.toSeq
+    require(df.columns.toSeq == expected,
+      s"quality gate [$table]: column order mismatch; expected=$expected actual=${df.columns.toSeq}")
+    val obs = Observation(s"gate_$table")
+    val aggs = rules.map(r => r.agg.as(r.metric))
+    action(df.observe(obs, aggs.head, aggs.tail: _*))
+    val m = obs.get
+    // a metric is absent, or null, when no row reached the observation
+    val values = rules.map(r =>
+      r.metric -> m.get(r.metric).collect { case n: Long => n }.getOrElse(0L)).toMap
+    rules.foreach { r =>
+      require(r.pass(values(r.metric)), s"quality gate [$table]: ${r.failure(values(r.metric))}")
+    }
+    values
+  }
+
+  /** Data-quality gate (pyspark.py:22-39) as a standalone probe: the
+    * [[quality]] rules over `limit(1)` — O(first partition with a row),
+    * not a full scan, exactly as the reference does. Throws on failure;
+    * returns the input for chaining.
     */
   def qualityGate(df: DataFrame, schema: StructType, table: String): DataFrame = {
-    val expected = schema.fieldNames.toSeq
-    val actual = df.columns.toSeq
-    require(actual == expected,
-      s"quality gate [$table]: column order mismatch; expected=$expected actual=$actual")
-    require(df.select(col(expected.head)).limit(1).count() > 0,
-      s"quality gate [$table]: table is empty")
+    gate(df, schema, table, quality)(_.limit(1).count())
     df
   }
 
-  /** SINGLE-PASS metric gate: row/null-key counts are collected as
-    * `Observation` metrics DURING the caller's write action — no second
-    * scan, no persist-to-avoid-recompute (the two costs `Lake.build`
-    * pays to gate before writing). The trade: metrics arrive after the
-    * bytes are written, so at scale the write targets a staging location
-    * and the caller promotes it only when this returns (atomic-rename
-    * promote — the standard audit-publish pattern). Throws on an empty
-    * frame or null keys; returns the metrics for lineage logging.
+  /** [[quality]] plus no null in the first (key) column, observed during
+    * the caller's write. Returns the metrics for lineage logging.
     */
   def observedWrite(df: DataFrame, schema: StructType, table: String)
                    (write: DataFrame => Unit): Map[String, Long] = {
-    val expected = schema.fieldNames.toSeq
-    require(df.columns.toSeq == expected,
-      s"observed gate [$table]: column order mismatch; expected=$expected actual=${df.columns.toSeq}")
-    val keyCol = expected.head
-    val obs = org.apache.spark.sql.Observation(s"gate_$table")
-    val observed = df.observe(obs,
-      count(lit(1)).as("n_rows"),
-      sum(when(col(keyCol).isNull, 1L).otherwise(0L)).as("n_null_keys"))
-    write(observed)
-    val m = obs.get
-    val nRows = m("n_rows").asInstanceOf[Long]
-    val nNullKeys = Option(m("n_null_keys")).fold(0L)(_.asInstanceOf[Long])
-    require(nRows > 0, s"observed gate [$table]: table is empty")
-    require(nNullKeys == 0,
-      s"observed gate [$table]: $nNullKeys null keys in $keyCol")
-    Map("n_rows" -> nRows, "n_null_keys" -> nNullKeys)
+    val key = schema.fieldNames.head
+    gate(df, schema, table, quality :+ Rule("n_null_keys",
+      sum(when(col(key).isNull, 1L).otherwise(0L)), _ == 0, n => s"$n null keys in $key"))(write)
   }
 }

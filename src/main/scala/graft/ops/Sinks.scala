@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Sinks and format round-trips.
   *
@@ -10,11 +11,16 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object Sinks {
 
-  /** Partitioned, overwriting parquet write (pyspark.py:306-322). */
-  def writePartitionedParquet(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(path)
-  }
+  /** Partitioned, overwriting parquet write (pyspark.py:306-322). Rows are
+    * first clustered by the partition columns (a `rebalance` hint), so each
+    * partition value is written by one task — one file of a useful size
+    * per directory instead of one small file per task and value — while
+    * AQE still splits a skewed value across tasks.
+    */
+  def writePartitionedParquet(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
+    if (partitionCols.isEmpty) df.write.mode(SaveMode.Overwrite).parquet(path)
+    else df.hint("rebalance", partitionCols.map(col): _*)
+      .write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(path)
 
   /** Dynamic partition overwrite: replace ONLY the partitions present in
     * `df`, leaving every other partition directory untouched — the

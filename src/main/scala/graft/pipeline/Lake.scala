@@ -1,21 +1,25 @@
 package graft.pipeline
 
 import graft.ops.{Conform, Schemas, Sinks}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 /** End-to-end lake build (`/root/reference/scripts/pyspark.py:432-475`):
   * parse the four sources, derive time + fact, quality-gate each of the six
   * outputs, drop staging columns, and write partitioned parquet.
   *
   * Two engine-level fixes over the reference:
-  *   - every output is persisted (MEMORY_AND_DISK) before its gate+write
-  *     pair — the reference recomputed the whole lineage twice per table
-  *     (its gate `count()` and `save()` were separate jobs over an
-  *     uncached plan, ~12 full recomputes per run);
-  *   - the gate runs BEFORE the staging-column drop, like the reference,
-  *     but against the registry schema so a positionally-corrupted union
-  *     cannot reach storage.
+  *   - each output is ONE job: the gate ([[Conform.quality]]: column order,
+  *     non-empty) is observed during the write itself, and the reported
+  *     row count is the observed one — the reference ran a gate `count()`
+  *     and a `save()` as separate jobs over an uncached plan, recomputing
+  *     the whole lineage twice per table. The write lands in a
+  *     `_`-prefixed staging directory beside the table and replaces the
+  *     table only once the gate passes; a failing gate deletes it, so the
+  *     previous table stays as it was;
+  *   - the gate checks the frame BEFORE the staging-column drop, like the
+  *     reference, but against the registry schema so a
+  *     positionally-corrupted union cannot reach storage.
   */
 object Lake {
 
@@ -37,7 +41,7 @@ object Lake {
     "country" -> "temperatures", "asylum" -> "asylum", "visitor" -> "visitors",
     "worker" -> "workers", "time" -> "time", "fact" -> "immigration_facts")
 
-  /** Build the full lake; returns per-table row counts (post-gate). */
+  /** Build the full lake; returns per-table row counts as each gate observed them. */
   def build(spark: SparkSession, inputPath: String, outputPath: String): Map[String, Long] = {
     val country = Pipelines.parseClimate(spark, inputPath)
     val asylum = Pipelines.parseAsylum(spark, inputPath)
@@ -49,15 +53,19 @@ object Lake {
       "country" -> country, "asylum" -> asylum, "visitor" -> visitor,
       "worker" -> worker, "time" -> time, "fact" -> fact)
 
+    val fs = new Path(outputPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     outputs.map { case (key, df) =>
-      val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
+      val table = new Path(outputPath, outputDirs(key))
+      val staging = new Path(outputPath, s"_${outputDirs(key)}")
       try {
-        Conform.qualityGate(cached, Schemas.all(key), key)
-        val finalDf = cached.drop(stagingDrops(key): _*)
-        Sinks.writePartitionedParquet(finalDf,
-          s"$outputPath/${outputDirs(key)}", Schemas.partitioning(key))
-        key -> cached.count()
-      } finally cached.unpersist()
+        val observed = Conform.gate(df, Schemas.all(key), key, Conform.quality) { gated =>
+          Sinks.writePartitionedParquet(gated.drop(stagingDrops(key): _*),
+            staging.toString, Schemas.partitioning(key))
+        }
+        fs.delete(table, true)
+        require(fs.rename(staging, table), s"lake [$key]: could not promote $staging to $table")
+        key -> observed("n_rows")
+      } finally fs.delete(staging, true)
     }.toMap
   }
 }

@@ -27,14 +27,16 @@ object Pipelines {
     * callers dedupe first, so no ties exist), then `zipWithIndex`, whose
     * ids equal global rank regardless of partition boundaries. Identical
     * contract to `row_number().over(Window.orderBy(all)) - 1` but the sort
-    * runs as 32 parallel range partitions — the id-assignment path that
-    * survives the worker table growing 100× (VERDICT r6 flagged the global
-    * window here as the lake build's only single-task stage).
+    * runs in parallel, one range partition per `spark.sql.shuffle.partitions`
+    * — the id-assignment path that survives the worker table growing 100×
+    * (VERDICT r6 flagged the global window here as the lake build's only
+    * single-task stage). The ids do not depend on that count.
     */
   private def withDenseId(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val cols = df.columns.map(col).toIndexedSeq
-    val sorted = df.repartitionByRange(32, cols: _*).sortWithinPartitions(cols: _*)
+    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val sorted = df.repartitionByRange(n, cols: _*).sortWithinPartitions(cols: _*)
     val schema = StructType(
       sorted.schema.fields :+ StructField("id", LongType, nullable = false))
     val rows = sorted.rdd.zipWithIndex()

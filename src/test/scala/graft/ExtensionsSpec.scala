@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 class ExtensionsSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
+  private val nonce = java.util.UUID.randomUUID.toString.take(8)
 
   test("cosine_sim / dot_product are SQL-callable and hit the native expressions") {
     val row = spark.sql(
@@ -110,37 +111,39 @@ class ExtensionsSpec extends SparkSpec {
     val t = java.nio.file.Files.createTempDirectory("txsql-").resolve("t").toString
     graft.ops.TxLog.append(
       Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("k", "v"), t)
-    spark.sql(s"CREATE TABLE graft_sql_spec USING txlog LOCATION '$t'")
+    // nonce-keyed, like the other fixtures: no fixed name to collide on
+    val tbl = s"graft_sql_spec_$nonce"
+    spark.sql(s"CREATE TABLE $tbl USING txlog LOCATION '$t'")
     try {
       // SELECT resolves through the V1 relation
-      assert(spark.sql("SELECT sum(v) FROM graft_sql_spec").head().getLong(0) === 60L)
+      assert(spark.sql(s"SELECT sum(v) FROM $tbl").head().getLong(0) === 60L)
       // DESCRIBE HISTORY — both the table and the quoted-path spelling
-      val h1 = spark.sql("DESCRIBE HISTORY graft_sql_spec").collect()
+      val h1 = spark.sql(s"DESCRIBE HISTORY $tbl").collect()
       assert(h1.map(r => (r.getLong(0), r.getString(1))).toSeq === Seq(1L -> "append"))
       assert(spark.sql(s"DESCRIBE HISTORY '$t'").count() === 1L)
       // MERGE INTO routes through TxLog.mergeDv — one merge-on-read commit
       Seq((2L, 222L), (9L, 999L)).toDF("k", "v").createOrReplaceTempView("upd")
       val v = spark.sql(
-        """MERGE INTO graft_sql_spec t USING upd s ON t.k = s.k
+        s"""MERGE INTO $tbl t USING upd s ON t.k = s.k
           |WHEN MATCHED THEN UPDATE SET *
           |WHEN NOT MATCHED THEN INSERT *""".stripMargin).head().getLong(0)
       assert(v === 2L)
       assert(graft.ops.TxLog.readManifest(t, 2L).op === "merge_dv")
-      assert(spark.sql("SELECT k, v FROM graft_sql_spec ORDER BY k")
+      assert(spark.sql(s"SELECT k, v FROM $tbl ORDER BY k")
         .as[(Long, Long)].collect().toSeq ===
         Seq(1L -> 10L, 2L -> 222L, 3L -> 30L, 9L -> 999L))
       // history reflects the merge, newest first
-      val h2 = spark.sql("DESCRIBE HISTORY graft_sql_spec").collect()
+      val h2 = spark.sql(s"DESCRIBE HISTORY $tbl").collect()
       assert(h2.map(_.getString(1)).toSeq === Seq("merge_dv", "append"))
       // an unsupported shape fails with the routing rule's message, not
       // Spark's generic v2 complaint
       val err = intercept[Exception] {
         spark.sql(
-          """MERGE INTO graft_sql_spec t USING upd s ON t.k = s.k
+          s"""MERGE INTO $tbl t USING upd s ON t.k = s.k
             |WHEN MATCHED THEN DELETE""".stripMargin).collect()
       }
       assert(err.getMessage.contains("mergeDv"), err.getMessage)
-    } finally spark.sql("DROP TABLE IF EXISTS graft_sql_spec")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
   test("SQL DELETE FROM / UPDATE route through the deletion-vector primitives") {

@@ -1,8 +1,13 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.command.DataWritingCommand
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
 
 /** End-to-end golden test: build the full lake from FIXTURES.md-shaped
   * inputs (B1-B8) and assert output schemas, partition layout, and the
@@ -61,6 +66,22 @@ class LakeSpec extends SparkSpec {
         |""".stripMargin)
     root
   }
+
+  /** A copy of the fixture inputs with the file at `rel` holding `content`. */
+  private def fixturesWith(rel: String, content: String): Path = {
+    val root = Files.createTempDirectory("graft-lake-variant")
+    Files.walk(fixtures).iterator.asScala.foreach { p =>
+      val to = root.resolve(fixtures.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
+    }
+    Files.writeString(root.resolve(rel), content)
+    root
+  }
+
+  /** Every regular file under `dir` by relative path, with its bytes. */
+  private def tree(dir: Path): Map[String, Seq[Byte]] =
+    Files.walk(dir).iterator.asScala.filter(Files.isRegularFile(_))
+      .map(p => dir.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
 
   private lazy val out: Path = Files.createTempDirectory("graft-lake-out")
   private lazy val counts: Map[String, Long] =
@@ -168,5 +189,66 @@ class LakeSpec extends SparkSpec {
     val workerCountries = fact.filter(col("immigration_type") === "worker")
       .select("country").distinct().as[String].collect().toSeq
     assert(workerCountries == Seq("Unknown"))
+  }
+
+  test("a failing gate publishes nothing: no staging left, the previous table intact") {
+    counts // the good lake is in place
+    val before = tree(out.resolve("asylum"))
+    val headerOnly = fixturesWith("refugee_and_migrant_data/asylum.csv",
+      "country,year,num_arrivals,num_accepted_affirmitavely,num_accepted_defensively\n")
+    val e = intercept[IllegalArgumentException] {
+      Lake.build(spark, headerOnly.toString, out.toString)
+    }
+    assert(e.getMessage.contains("table is empty"), e.getMessage)
+    val staged = Files.list(out).iterator.asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("_")).toSeq
+    assert(staged.isEmpty, s"staging left behind: $staged")
+    assert(before.nonEmpty && tree(out.resolve("asylum")) == before)
+  }
+
+  /** A lake built at `n` shuffle partitions, with the (function name,
+    * logical plan) of every SQL execution the build ran.
+    */
+  private def observedBuild(n: Int): (Path, Seq[(String, LogicalPlan)]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, LogicalPlan)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(funcName -> qe.logical)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add(funcName -> qe.logical)
+    }
+    def drain(): Unit = org.apache.spark.graftbench.ListenerDrain.drain(spark.sparkContext)
+    val o = Files.createTempDirectory(s"graft-lake-p$n")
+    drain() // what ran before is delivered before the listener is in place
+    spark.listenerManager.register(listener)
+    try {
+      withShufflePartitions(n)(Lake.build(spark, fixtures.toString, o.toString))
+      drain()
+    } finally spark.listenerManager.unregister(listener)
+    (o, seen.asScala.toSeq)
+  }
+  private lazy val (at1, at7) = (observedBuild(1), observedBuild(7))
+
+  test("the build is single-pass: six write executions and no count") {
+    for ((_, runs) <- Seq(at1, at7)) {
+      val writes = runs.count(_._2.isInstanceOf[DataWritingCommand])
+      assert(writes == 6, s"expected six write executions, saw ${runs.map(_._1)}")
+      assert(!runs.exists(_._1 == "count"), s"a count ran: ${runs.map(_._1)}")
+    }
+  }
+
+  test("outputs do not depend on the shuffle partition count; one part file per leaf") {
+    val (one, seven) = (at1._1, at7._1)
+    Lake.outputDirs.values.foreach { dir =>
+      def rows(o: Path): Seq[String] =
+        spark.read.parquet(o.resolve(dir).toString).collect().map(_.toString).toSeq.sorted
+      assert(rows(one).nonEmpty && rows(one) == rows(seven), s"$dir differs")
+      for (o <- Seq(one, seven); leaf <- Files.walk(o.resolve(dir)).iterator.asScala
+           if Files.isDirectory(leaf)) {
+        val parts = Files.list(leaf).iterator.asScala
+          .count(_.getFileName.toString.startsWith("part-"))
+        assert(parts <= 1, s"$leaf holds $parts part files")
+      }
+    }
   }
 }
