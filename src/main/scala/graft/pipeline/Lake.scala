@@ -4,22 +4,40 @@ import graft.ops.{Conform, Schemas, Sinks}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import java.util.concurrent.{CompletableFuture, CompletionException, LinkedBlockingQueue,
+  ThreadPoolExecutor, TimeUnit}
+import scala.util.{Failure, Success, Try}
+
 /** End-to-end lake build (`/root/reference/scripts/pyspark.py:432-475`):
   * parse the four sources, derive time + fact, quality-gate each of the six
   * outputs, drop staging columns, and write partitioned parquet.
   *
-  * Two engine-level fixes over the reference:
-  *   - each output is ONE job: the gate ([[Conform.quality]]: column order,
-  *     non-empty) is observed during the write itself, and the reported
-  *     row count is the observed one — the reference ran a gate `count()`
-  *     and a `save()` as separate jobs over an uncached plan, recomputing
-  *     the whole lineage twice per table. The write lands in a
-  *     `_`-prefixed staging directory beside the table and replaces the
-  *     table only once the gate passes; a failing gate deletes it, so the
-  *     previous table stays as it was;
-  *   - the gate checks the frame BEFORE the staging-column drop, like the
-  *     reference, but against the registry schema so a
-  *     positionally-corrupted union cannot reach storage.
+  * The reference runs one output after another; at lake scale each step
+  * is a short job, so that chain leaves most cores idle. Here the build is
+  * a small dataflow:
+  *   - the four parses run at the same time, and `extractTimeAndFact`
+  *     runs once asylum, visitor and worker are built;
+  *   - each output's write starts as soon as its frame exists. It is ONE
+  *     job: the gate ([[Conform.quality]]: column order, non-empty) is
+  *     observed during the write, and the reported row count is the
+  *     observed one. The write lands in a `_<table>` staging directory;
+  *   - publishing is all or nothing: once every write has settled, and
+  *     only if all six gates passed, each old table is deleted and its
+  *     staging directory renamed into place. On any failure every staging
+  *     directory is deleted, every table stays as it was, and the first
+  *     failure in output order is thrown.
+  *
+  * The work runs on a pool made for each call, sized to the output list;
+  * its threads are all started on entry and shut down before `build`
+  * returns. A new thread inherits its creator's active session and Spark
+  * local properties (job group, and whatever else the caller set), so
+  * these threads carry the caller's values as they are at the call. A
+  * shared pool would carry those of whichever call made its threads, and
+  * a pool never shut down keeps the JVM alive.
+  *
+  * The gate checks the frame BEFORE the staging-column drop, like the
+  * reference, but against the registry schema so a positionally-corrupted
+  * union cannot reach storage.
   */
 object Lake {
 
@@ -43,29 +61,53 @@ object Lake {
 
   /** Build the full lake; returns per-table row counts as each gate observed them. */
   def build(spark: SparkSession, inputPath: String, outputPath: String): Map[String, Long] = {
-    val country = Pipelines.parseClimate(spark, inputPath)
-    val asylum = Pipelines.parseAsylum(spark, inputPath)
-    val visitor = Pipelines.parseVisitor(spark, inputPath)
-    val worker = Pipelines.parseWorker(spark, inputPath)
-    val (time, fact) = Pipelines.extractTimeAndFact(asylum, visitor, worker)
+    val pool = new ThreadPoolExecutor(outputDirs.size, outputDirs.size, 0L,
+      TimeUnit.MILLISECONDS, new LinkedBlockingQueue[Runnable]())
+    pool.prestartAllCoreThreads()
+    // a CompletableFuture fails on any Throwable; a Scala Future stays
+    // uncompleted on a fatal one (StackOverflowError), and the wait below
+    // would never return
+    def async[T](body: => T) = CompletableFuture.supplyAsync[T](() => body, pool)
+    try {
+      val country = async(Pipelines.parseClimate(spark, inputPath))
+      val asylum = async(Pipelines.parseAsylum(spark, inputPath))
+      val visitor = async(Pipelines.parseVisitor(spark, inputPath))
+      val worker = async(Pipelines.parseWorker(spark, inputPath))
+      val timeFact = CompletableFuture.allOf(asylum, visitor, worker).thenApplyAsync(
+        (_: Void) => Pipelines.extractTimeAndFact(asylum.join(), visitor.join(), worker.join()),
+        pool)
+      val outputs: Seq[(String, CompletableFuture[DataFrame])] = Seq(
+        "country" -> country, "asylum" -> asylum, "visitor" -> visitor, "worker" -> worker,
+        "time" -> timeFact.thenApply(_._1), "fact" -> timeFact.thenApply(_._2))
 
-    val outputs: Seq[(String, DataFrame)] = Seq(
-      "country" -> country, "asylum" -> asylum, "visitor" -> visitor,
-      "worker" -> worker, "time" -> time, "fact" -> fact)
-
-    val fs = new Path(outputPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    outputs.map { case (key, df) =>
-      val table = new Path(outputPath, outputDirs(key))
-      val staging = new Path(outputPath, s"_${outputDirs(key)}")
+      val fs = new Path(outputPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def staging(key: String) = new Path(outputPath, s"_${outputDirs(key)}")
+      val writes = outputs.map { case (key, frame) =>
+        key -> frame.thenApplyAsync((df: DataFrame) =>
+          Conform.gate(df, Schemas.all(key), key, Conform.quality) { gated =>
+            Sinks.writePartitionedParquet(gated.drop(stagingDrops(key): _*),
+              staging(key).toString, Schemas.partitioning(key))
+          }("n_rows"), pool)
+      }
+      // every write settles before anything is published or deleted
+      val settled = writes.map { case (key, w) => key -> Try(w.join()) }
       try {
-        val observed = Conform.gate(df, Schemas.all(key), key, Conform.quality) { gated =>
-          Sinks.writePartitionedParquet(gated.drop(stagingDrops(key): _*),
-            staging.toString, Schemas.partitioning(key))
+        val counts = settled.map {
+          case (key, Success(n)) => key -> n
+          case (_, Failure(e: CompletionException)) => throw e.getCause
+          case (_, Failure(e)) => throw e
         }
-        fs.delete(table, true)
-        require(fs.rename(staging, table), s"lake [$key]: could not promote $staging to $table")
-        key -> observed("n_rows")
-      } finally fs.delete(staging, true)
-    }.toMap
+        counts.foreach { case (key, _) =>
+          val table = new Path(outputPath, outputDirs(key))
+          fs.delete(table, true)
+          require(fs.rename(staging(key), table),
+            s"lake [$key]: could not promote ${staging(key)} to $table")
+        }
+        counts.toMap
+      } finally outputs.foreach { case (key, _) => fs.delete(staging(key), true) }
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.ops.{Cleaning, Conform, Schemas}
+import graft.sources.SasLabels
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -10,10 +11,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Deliberate divergences from the reference, per SURVEY.md §2.11 (document
   * intent, don't replicate broken code):
-  *   - ids are `row_number` over an explicit ordering, not
-  *     `monotonically_increasing_id` — dense, deterministic, reproducible
-  *     across partition layouts (the reference's ids change with cluster
-  *     shape, which is why it needs a composite key downstream).
+  *   - ids are each row's rank in a total order over all its columns
+  *     ([[withDenseId]]: range-partition, sort within partitions,
+  *     `zipWithIndex`), not `monotonically_increasing_id` — dense,
+  *     deterministic, reproducible across partition layouts (the
+  *     reference's ids change with cluster shape, which is why it needs a
+  *     composite key downstream).
   *   - input casts are `try_cast` (null on junk) — the pre-ANSI semantics
   *     the reference implicitly relied on, made explicit.
   *   - no Python UDFs: the state-abbreviation and SAS-date conversions are
@@ -87,12 +90,14 @@ object Pipelines {
 
   /** I94 visitor records: parquet facts + three JSON code tables
     * (FIXTURES.md B3-B6; pyspark.py:210-254). The three code lookups are
-    * broadcast inner joins (lookup-filters); SAS epoch dates expand to
-    * arrival and expiry date parts.
+    * broadcast inner joins (lookup-filters), read with their declared
+    * schemas ([[SasLabels.codeTableSchemas]]), so no inference job runs; SAS
+    * epoch dates expand to arrival and expiry date parts.
     */
   def parseVisitor(spark: SparkSession, input: String): DataFrame = {
     def lookupJson(name: String): DataFrame =
-      spark.read.option("multiLine", true).json(s"$input/i94_visitor_data/$name.json")
+      spark.read.schema(SasLabels.codeTableSchemas(name)).option("multiLine", true)
+        .json(s"$input/i94_visitor_data/$name.json")
 
     val citRes = lookupJson("i94cit_and_i94res").selectExpr("code", "region as country")
     val port = lookupJson("i94port").selectExpr("code",
@@ -136,7 +141,6 @@ object Pipelines {
       .csv(s"$input/legal_immigrant_data/h1b_kaggle.csv")
       .selectExpr("CASE_STATUS as case_status", "EMPLOYER_NAME as employer_name",
         "YEAR as arrival_year", "WORKSITE as worksite")
-      .dropDuplicates()
       .withColumn("visa_class", lit("H-1B"))
       .withColumn("split", split(col("worksite"), ","))
       .withColumn("worksite_city", col("split").getItem(0))
@@ -152,7 +156,6 @@ object Pipelines {
         "EMPLOYER_NAME as employer_name", "EMPLOYER_CITY as employer_city",
         "EMPLOYER_STATE as employer_state", "WORKSITE_CITY as worksite_city",
         "WORKSITE_STATE as worksite_state")
-      .dropDuplicates()
       // the reference's row-alignment gate (pyspark.py:280-286; its state
       // set omits DC, preserved here)
       .filter(length(col("worksite_state")) === 2 &&
@@ -170,7 +173,9 @@ object Pipelines {
       "employment_end_date", "expiry")
     // df2's column set is a superset of df1's; typed null-fill (the
     // reference's _fill_missing_columns with its StringType bug fixed) +
-    // union by name.
+    // union by name. Both sides are row-wise maps and a filter of their
+    // CSVs, so the one dedupe after the union drops every duplicate a
+    // dedupe per source would, and the ids stay the same.
     val unioned = Conform.fillMissingColumns(df1, df2.schema)
       .unionByName(df2, allowMissingColumns = true)
       .dropDuplicates()

@@ -3,6 +3,7 @@ package graft.sources
 import graft.ops.Sinks
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Engine-side ingest for the reference's pre-ETL SAS-label parse
   * (`/root/reference/scripts/parse_immigration_sas.py`) — previously the
@@ -91,6 +92,17 @@ object SasLabels {
     Seq((1L, "Air"), (2L, "Sea"), (3L, "Land"), (9L, "Not reported"))
       .toDF("code", "mode")
   }
+
+  /** The schema of each code table [[writeCodeTables]] writes, by file
+    * name: what a multiLine JSON read would infer from these files (fields
+    * in name order, JSON integers as BIGINT), declared so that a reader
+    * skips the inference job. `code` is numeric for countries and visas,
+    * a string for ports.
+    */
+  val codeTableSchemas: Map[String, StructType] = Map(
+    "i94cit_and_i94res" -> StructType.fromDDL("code BIGINT, region STRING, valid BOOLEAN"),
+    "i94port" -> StructType.fromDDL("code STRING, municipality STRING, region STRING"),
+    "i94visa" -> StructType.fromDDL("code BIGINT, type STRING"))
 
   /** Parse the labels file and write the three code tables
     * `Pipelines.parseVisitor` reads, in the reference's multiLine

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.command.DataWritingCommand
@@ -204,6 +205,80 @@ class LakeSpec extends SparkSpec {
       .filter(_.startsWith("_")).toSeq
     assert(staged.isEmpty, s"staging left behind: $staged")
     assert(before.nonEmpty && tree(out.resolve("asylum")) == before)
+  }
+
+  test("a failing gate publishes no table: all six stay byte-for-byte as they were") {
+    counts // the good lake is in place
+    def tables: Map[String, Map[String, Seq[Byte]]] =
+      Lake.outputDirs.values.map(d => d -> tree(out.resolve(d))).toMap
+    val before = tables
+    val headerOnly = fixturesWith("refugee_and_migrant_data/asylum.csv",
+      "country,year,num_arrivals,num_accepted_affirmitavely,num_accepted_defensively\n")
+    val e = intercept[IllegalArgumentException] {
+      Lake.build(spark, headerOnly.toString, out.toString)
+    }
+    assert(e.getMessage.contains("table is empty"), e.getMessage)
+    val staged = Files.list(out).iterator.asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("_")).toSeq
+    assert(staged.isEmpty, s"staging left behind: $staged")
+    assert(before.values.forall(_.nonEmpty))
+    val rewritten = tables.collect { case (dir, files) if files != before(dir) => dir }
+    assert(rewritten.isEmpty, s"tables rewritten: $rewritten")
+  }
+
+  test("worker duplicates within and across the two CSVs drop out in the one union dedupe") {
+    val kaggle = "legal_immigrant_data/h1b_kaggle.csv"
+    val fy17 = "legal_immigrant_data/H-1B_Disclosure_Data_FY17.csv"
+    def lines(rel: String): Seq[String] =
+      Files.readAllLines(fixtures.resolve(rel)).asScala.toSeq
+    // a kaggle row and an FY17 row with the same projection: no year or
+    // dates, no employer city or state, the same worksite
+    val kaggleRow = "CERTIFIED,INITECH,,\"DALLAS, TEXAS\""
+    val fy17Row = "CERTIFIED,H-1B,,,INITECH,,,DALLAS,TX"
+    val distinct = fixturesWith(kaggle, (lines(kaggle) :+ kaggleRow).mkString("", "\n", "\n"))
+    val dup = fixturesWith(kaggle,
+      (lines(kaggle) ++ lines(kaggle).tail :+ kaggleRow).mkString("", "\n", "\n"))
+    Files.writeString(dup.resolve(fy17),
+      (lines(fy17) ++ lines(fy17).tail :+ fy17Row).mkString("", "\n", "\n"))
+    def rows(in: Path): Seq[String] =
+      Pipelines.parseWorker(spark, in.toString).orderBy("id").collect().map(_.toString).toSeq
+    val expected = rows(distinct)
+    assert(expected.size == 4 && expected.count(_.contains("initech")) == 1, expected)
+    assert(rows(dup) == expected)
+  }
+
+  test("the build runs under the caller's job group and leaves no thread behind") {
+    counts // Spark's own lazily started threads already exist
+    val sc = spark.sparkContext
+    def drain(): Unit = org.apache.spark.graftbench.ListenerDrain.drain(sc)
+    def live: Set[Thread] = Thread.getAllStackTraces.keySet.asScala.toSet
+    // two builds under two groups: threads kept from the first build would
+    // submit the second build's jobs under the first group
+    for (group <- Seq("lake-spec-first", "lake-spec-second")) {
+      val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+      }
+      drain()
+      val before = live
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, "LakeSpec build")
+      try {
+        Lake.build(spark, fixtures.toString, Files.createTempDirectory("graft-lake-group").toString)
+        drain()
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+      val seen = groups.asScala.toSeq
+      assert(seen.nonEmpty && seen.forall(_ == group), s"job groups under $group: $seen")
+      // Spark's own daemon pools may grow during a build; a non-daemon
+      // thread keeps the JVM alive. A pool thread ends just after its
+      // pool reports termination, hence the join.
+      val left = (live -- before).filter { t => !t.isDaemon && { t.join(1000); t.isAlive } }
+      assert(left.isEmpty, s"threads still alive: ${left.map(_.getName)}")
+    }
   }
 
   /** A lake built at `n` shuffle partitions, with the (function name,

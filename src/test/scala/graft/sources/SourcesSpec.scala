@@ -70,6 +70,19 @@ class SourcesSpec extends SparkSpec {
       Seq("code", "country"))
   }
 
+  test("declared code-table schemas are the ones a multiLine read infers") {
+    val out = Files.createTempDirectory("graft-codes-").toString
+    SasLabels.writeCodeTables(spark, sasFile, out, citRange = (2, 4), portRange = (7, 11))
+    for ((name, declared) <- SasLabels.codeTableSchemas) {
+      val path = s"$out/$name.json"
+      assert(spark.read.option("multiLine", true).json(path).schema == declared, name)
+      val inferred = spark.read.option("multiLine", true).json(path)
+        .orderBy("code").collect().toSeq
+      assert(spark.read.schema(declared).option("multiLine", true).json(path)
+        .orderBy("code").collect().toSeq == inferred, name)
+    }
+  }
+
   test("asylumFromCells: years from header row, height slicing, lettered cells → null") {
     // (sheet, row, col, str, num): the grid any xlsx decoder emits
     val cells = Seq(
