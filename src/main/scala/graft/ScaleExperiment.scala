@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.TxLog.WriteSpec
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -115,8 +116,9 @@ object ScaleExperiment {
       val root = java.nio.file.Paths.get(t)
       if (java.nio.file.Files.isDirectory(root))
         deleteRecursively(root)
-      graft.ops.TxLog.appendPartitioned(
-        Tables.documents(spark, dir).select(col("doc_id"), col("lang")), t, "lang")
+      graft.ops.TxLog.write(
+        Tables.documents(spark, dir).select(col("doc_id"), col("lang")), t,
+        WriteSpec(partitionBy = Seq("lang")))
       val sc = graft.ops.TxLog.scan(spark, t,
         graft.ops.TxLog.Prune(parts = Seq("lang" -> Some(Set("en")))))
       val (scanned, total, n) = (sc.scanned, sc.total, sc.orEmpty.count())
@@ -142,10 +144,10 @@ object ScaleExperiment {
       val base = Tables.documents(spark, dir).select(col("doc_id"), col("n_chars"))
       // n_chars-disjoint segments, doc_id interleaving: only the second
       // tracked column's stats can prune the range read
-      graft.ops.TxLog.appendWithStats(
-        base.filter(col("n_chars") < charsCut), t, Seq("doc_id", "n_chars"))
-      graft.ops.TxLog.appendWithStats(
-        base.filter(col("n_chars") >= charsCut), t, Seq("doc_id", "n_chars"))
+      graft.ops.TxLog.write(
+        base.filter(col("n_chars") < charsCut), t, WriteSpec(statsCols = Seq("doc_id", "n_chars")))
+      graft.ops.TxLog.write(
+        base.filter(col("n_chars") >= charsCut), t, WriteSpec(statsCols = Seq("doc_id", "n_chars")))
       val sc = graft.ops.TxLog.scan(spark, t,
         graft.ops.TxLog.Prune(longBounds = Seq(("n_chars", charsCut, Long.MaxValue))))
       val (scanned, total, n) = (sc.scanned, sc.total, sc.orEmpty.count())
@@ -179,8 +181,8 @@ object ScaleExperiment {
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("text"), col("lang"))
       // two segments split on the lang alphabet with STRING stats
-      graft.ops.TxLog.appendWithStats(docs.filter(col("lang") < "fr"), t, "lang")
-      graft.ops.TxLog.appendWithStats(docs.filter(col("lang") >= "fr"), t, "lang")
+      graft.ops.TxLog.write(docs.filter(col("lang") < "fr"), t, WriteSpec(statsCols = Seq("lang")))
+      graft.ops.TxLog.write(docs.filter(col("lang") >= "fr"), t, WriteSpec(statsCols = Seq("lang")))
       val tableBytes = dirBytes(java.nio.file.Paths.get(t, "data"))
       graft.ops.TxLog.cloneShallow(spark, t, c)
       val cloneBytes = dirBytes(java.nio.file.Paths.get(c))

@@ -11,34 +11,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * same either way.
   */
 object Tables {
-  /** Inferred parquet schema per table path — the catalog-metadata
-    * stand-in (r16, guide §1.2/§5: driver work). Without it every
-    * `spark.read.parquet` call re-reads parquet footers to infer the
-    * schema, ~40-50 ms of driver time per table reference; a 7-table
-    * join paid ~0.5 s of pure schema re-inference per run (PlanProbe:
-    * tpch_q8 construct 0.50 s vs scan_parquet 0.06 s). A catalog table
-    * carries its schema as metadata — this map is exactly that, keyed
-    * on the immutable testdata path. Schemas only, never data or
-    * results; first touch still infers from the files.
-    */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]
-
-  /** CONTRACT (ADVICE r16): paths handed to this loader must be IMMUTABLE
-    * for the life of the JVM — the cache has no invalidation, so parquet
-    * regenerated in-process at a cached path would be read under the stale
-    * schema (a user-supplied schema null-fills silently rather than
-    * erroring). True for the driver's testdata dirs. An in-process
-    * regeneration scenario must call [[clearSchemaCache]] after rewriting.
+  /** Tables are read under their footer schema, inferred once per path
+    * ([[graft.ops.FooterSchemas]], r16, guide §1.2/§5: driver work).
+    * Without it every `spark.read.parquet` call re-reads parquet footers
+    * to infer the schema, ~40-50 ms of driver time per table reference;
+    * a 7-table join paid ~0.5 s of pure schema re-inference per run
+    * (PlanProbe: tpch_q8 construct 0.50 s vs scan_parquet 0.06 s). A
+    * catalog table carries its schema as metadata — the memo is exactly
+    * that. It re-checks the path on every lookup, so parquet regenerated
+    * in-process at the same path is read under its new schema.
     */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent(path, p => spark.read.parquet(p).schema)
-    spark.read.schema(schema).parquet(path)
+    spark.read.schema(graft.ops.FooterSchemas.of(spark, path)).parquet(path)
   }
-
-  /** Escape hatch for the immutability contract above. */
-  def clearSchemaCache(): Unit = schemaCache.clear()
 
   def lineitem(s: SparkSession, d: String): DataFrame = apply(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = apply(s, d, "orders")

@@ -35,6 +35,14 @@ import scala.jdk.CollectionConverters._
   *    it read — any concurrent commit conflicts and the loser aborts with
   *    `ConcurrentModificationException`, never publishing a lost update.
   *
+  * Writes: every insert-shaped commit goes through ONE [[write]] whose
+  * [[WriteSpec]] names the mode (append, overwrite, one-partition
+  * replace), the partition columns, the stats and bloom columns, an
+  * optional exactly-once [[Mark]] and an optional evolved schema;
+  * [[append]] and [[overwrite]] are its two common cases. DML (merge,
+  * delete, update), COPY INTO and maintenance (compaction, purge,
+  * restore) commit through their own paths.
+  *
   * Readers resolve their segment list ONCE per snapshot call; because
   * segments are immutable and removes only drop them from the manifest
   * (the bytes stay until vacuum), a snapshot taken before a commit keeps
@@ -655,6 +663,19 @@ object TxLog {
                      asOf: Option[Long] = None): Option[org.apache.spark.sql.types.StructType] =
     stateAt(table, asOf).schema
 
+  /** The schema a snapshot at `rv` reads under: the recorded one, else the
+    * first live segment's footer — the baseline every schema change
+    * (evolve, rename, drop) is decided against.
+    */
+  private def schemaAt(spark: SparkSession, table: String, rv: Long,
+                       what: String): org.apache.spark.sql.types.StructType = {
+    val st = stateAt(table, Some(rv))
+    st.schema.getOrElse {
+      require(st.live.nonEmpty, s"$what empty table $table needs a base schema")
+      FooterSchemas.of(spark, st.live.head)
+    }
+  }
+
   /** SCHEMA EVOLUTION as a metadata commit: record `newSchema` in the
     * manifest so every subsequent read resolves old segments under it —
     * columns a segment predates read as null (the add-column path Delta
@@ -674,53 +695,15 @@ object TxLog {
       Map.empty, () => false, Some(newSchema.json))
   }
 
-  /** APPEND + additive EVOLVE as ONE atomic commit — the shape the
-    * writer's `mergeSchema` option needs (ADVICE r15): committing the
-    * evolve separately from the data leaves a half-applied schema change
-    * if the append then fails (Delta does both in one commit). All of
-    * [[evolve]]'s guards apply (additive, nullable, resurrection rails);
-    * the frame validates against the NEW schema; the commit carries both
-    * the staged segment and the schema, so readers see neither or both.
-    */
-  def appendWithEvolve(df: DataFrame, table: String,
-                       newSchema: org.apache.spark.sql.types.StructType): Long = {
-    val rv = currentVersion(table) // before validation — see append
-    validateEvolve(table, newSchema, rv)
-    df.schema.fields.foreach { f =>
-      newSchema.fields.find(_.name == f.name) match {
-        case None => throw new IllegalArgumentException(
-          s"append to $table carries column '${f.name}' absent from the " +
-            "evolved schema")
-        case Some(tf) if tf.dataType != f.dataType =>
-          throw new IllegalArgumentException(
-            s"append to $table: column '${f.name}' is ${f.dataType.sql} but " +
-              s"the evolved schema records ${tf.dataType.sql}")
-        case _ => ()
-      }
-    }
-    enforceChecks(df, table)
-    val p = stage(df, table)
-    // "append_evolve" is a METADATA-carrying op: concurrent data commits
-    // validated against the old schema must abort (the conflict scan in
-    // commit() includes it), and the change feed treats it insert-shaped
-    commit(table, "append_evolve", Seq(p), Seq.empty, rv,
-      Map.empty, () => false, Some(newSchema.json))
-  }
-
   /** [[evolve]]'s full guard set against the state at `rv`, shared with
-    * [[appendWithEvolve]]: additive-only, nullable adds, and the
-    * resurrection rails for dropped/renamed physical names.
+    * a [[write]] carrying `evolveTo`: additive-only, nullable adds, and
+    * the resurrection rails for dropped/renamed physical names.
     */
   private def validateEvolve(table: String,
                              newSchema: org.apache.spark.sql.types.StructType,
                              rv: Long): Unit = {
     require(rv > 0, s"evolve of uninitialized table $table")
-    val current = recordedSchema(table, Some(rv)).getOrElse {
-      // baseline from the footers of the live segments at rv
-      val files = liveFiles(table, Some(rv))
-      require(files.nonEmpty, s"evolve of empty table $table needs a base schema")
-      org.apache.spark.sql.SparkSession.active.read.parquet(files: _*).schema
-    }
+    val current = schemaAt(SparkSession.active, table, rv, "evolve of")
     current.fields.foreach { f =>
       newSchema.fields.find(_.name == f.name) match {
         case None => throw new IllegalArgumentException(
@@ -794,11 +777,7 @@ object TxLog {
     val rv = currentVersion(table)
     require(rv > 0, s"rename on uninitialized table $table")
     require(oldName != newName, s"rename of $table: '$oldName' to itself")
-    val current = recordedSchema(table, Some(rv)).getOrElse {
-      val files = liveFiles(table, Some(rv))
-      require(files.nonEmpty, s"rename on empty table $table needs a base schema")
-      spark.read.parquet(files: _*).schema
-    }
+    val current = schemaAt(spark, table, rv, "rename on")
     require(current.fieldNames.contains(oldName),
       s"rename of $table: no column '$oldName' (have ${current.fieldNames.mkString(", ")})")
     require(!current.fieldNames.contains(newName),
@@ -838,11 +817,7 @@ object TxLog {
   def dropColumn(spark: SparkSession, table: String, name: String): Long = {
     val rv = currentVersion(table)
     require(rv > 0, s"drop on uninitialized table $table")
-    val current = recordedSchema(table, Some(rv)).getOrElse {
-      val files = liveFiles(table, Some(rv))
-      require(files.nonEmpty, s"drop on empty table $table needs a base schema")
-      spark.read.parquet(files: _*).schema
-    }
+    val current = schemaAt(spark, table, rv, "drop on")
     require(current.fieldNames.contains(name),
       s"drop of $table: no column '$name' (have ${current.fieldNames.mkString(", ")})")
     require(current.fields.length > 1,
@@ -915,8 +890,9 @@ object TxLog {
         case Some(s) => spark.read.schema(s).parquet(files: _*)
         // no recorded schema: the first segment's footer defines it. A
         // later append may omit a column, and Spark would otherwise infer
-        // from whichever footer it happens to list first.
-        case None => spark.read.schema(spark.read.parquet(files.head).schema).parquet(files: _*)
+        // from whichever footer it happens to list first. FooterSchemas
+        // reads each segment's footer once.
+        case None => spark.read.schema(FooterSchemas.of(spark, files.head)).parquet(files: _*)
       }
       coords.fold(base) { case (fp, ri) =>
         base.select(fcol("*") +: coordCols(fp, ri): _*)
@@ -985,8 +961,8 @@ object TxLog {
   private def readSegmentsWithCoords(spark: SparkSession, files: Seq[String],
                                      st: LogState): (DataFrame, String, String) = {
     val schemaOpt = st.schema
-    val logicalNames = schemaOpt.map(_.fieldNames.toSet).getOrElse(
-      spark.read.parquet(files: _*).columns.toSet)
+    val logicalNames = schemaOpt.getOrElse(FooterSchemas.of(spark, files.head))
+      .fieldNames.toSet
     val fp = freshName(logicalNames, "__fp")
     val ri = freshName(logicalNames + fp, "__ri")
     (readFiles(spark, files, schemaOpt, st.renames, Some((fp, ri))), fp, ri)
@@ -1426,9 +1402,12 @@ object TxLog {
   /** Columns the table DECLARES for automatic write-time skipping stats
     * (`graft.statsColumns = "c1,c2"` — the engine-wired spelling of
     * Delta's indexed-columns idea, explicit columns instead of a
-    * positional count): every insert-shaped writer records the one-pass
-    * min/max/rows/NDV record for these columns on the segments it
-    * stages, so data skipping is DECLARED ONCE per table instead of
+    * positional count): every [[write]] (append, overwrite, partition
+    * replace, partitioned, stats, bloom, evolve and marked shapes alike)
+    * and COPY INTO record the one-pass min/max/rows/NDV record for these
+    * columns on the segments they stage — per leaf, on the non-partition
+    * columns, for partitioned layouts — beside whatever columns the call
+    * requested. So data skipping is DECLARED ONCE per table instead of
     * remembered at every call site — which is the only way stats stay
     * complete when writes arrive through the format seam, SQL INSERT,
     * COPY INTO, and streaming sinks. Filtered to columns the frame
@@ -1556,7 +1535,7 @@ object TxLog {
   /** Core CAS loop. `skipIf` is re-evaluated INSIDE every attempt (after
     * reading the head, before the no-overwrite move): when it turns true
     * the commit returns -1 without publishing. This is the
-    * exactly-once hook [[streamingAppend]] needs — a check-then-act
+    * exactly-once hook a [[Mark]] needs — a check-then-act
     * outside the loop lets two zombie drivers replaying the same batch
     * both pass the check and both blind-append (ADVICE r9). Ordering
     * argument: versions are sequential, so if a competing commit lands
@@ -1656,95 +1635,209 @@ object TxLog {
     throw new IllegalStateException(s"$table: commit '$op' starved after 100 CAS attempts")
   }
 
-  /** Blind append: stage + commit, auto-retrying across concurrent heads
-    * (an append conflicts with nothing).
+  /** How a [[write]] lands against the live segments. */
+  sealed trait WriteMode
+
+  /** Add the staged segments; auto-retries across concurrent data heads
+    * (an append conflicts with nothing but metadata commits).
     */
-  def append(df: DataFrame, table: String): Long = {
-    // rv BEFORE validation: the commit's metadata-conflict rule scans
-    // (rv, head] for constraint/evolve commits, so everything this write
-    // was validated against must be ≤ rv — capturing rv after validation
-    // leaves a window where a just-landed CHECK is silently bypassed
-    val rv = currentVersion(table)
-    val w = fillGoverned(df, table)
-    validateWrite(w, table)
-    val p = stage(w, table)
-    val v = commit(table, "append", Seq(p), Seq.empty, rv,
-      autoStats(w.sparkSession, table, w, p))
-    maybeAutoCompact(df.sparkSession, table)
+  case object Append extends WriteMode
+
+  /** Swap the staged segments for the exact live set this writer read
+    * (the copy-on-write MERGE/compaction shape); any concurrent commit
+    * aborts the swap.
+    */
+  case object Overwrite extends WriteMode
+
+  /** Dynamic PARTITION OVERWRITE (Delta's `replaceWhere`, Spark's dynamic
+    * partition-overwrite mode): atomically replace exactly the
+    * `col=value` segments with the staged frame — every other
+    * partition's bytes and history are untouched. The frame must carry
+    * ONLY that partition (checked before staging — a silent
+    * cross-partition overwrite is how lakes lose data). Conflicts like
+    * [[Overwrite]].
+    */
+  final case class ReplacePartition(col: String, value: String) extends WriteMode
+
+  /** An exactly-once mark: the commit's op carries it (`<family><n>`, see
+    * [[MarkOp]]) and a write whose mark is already at or below its
+    * family's high-water mark SKIPS. The check re-runs INSIDE the commit
+    * CAS loop, not just up front: two zombie drivers replaying the same
+    * batch can both pass a front check, and blind appends never conflict
+    * — the batch would land twice (ADVICE r9). With the in-loop check,
+    * the loser of the version race re-reads the log, finds the winner's
+    * manifest, and returns -1; its orphaned staged segment is invisible to
+    * readers and collected by [[vacuum]].
+    */
+  final class Mark private (val family: String, val n: Long) {
+    def op: String = s"$family$n"
+    private[TxLog] def done(table: String): Boolean = highWater(table, family) >= n
+  }
+
+  object Mark {
+    /** A streaming micro-batch (the foreachBatch / sink step): on restart
+      * Spark replays the last unacknowledged batch, which finds its id
+      * committed and skips — a transactional file sink without any
+      * sink-side dedup column. Op `stream_append_b<id>`.
+      */
+    def batch(id: Long): Mark = new Mark("stream_append_b", id)
+
+    /** An IDEMPOTENT WRITER TRANSACTION — Delta's `txn` (appId, version)
+      * action: any batch writer (Airflow retry, speculative re-run,
+      * at-least-once consumer) tags its append with its own ascending
+      * version, and a replay of a committed (appId, version) skips. Each
+      * appId has its own version line. Op `txn:<appId>:v<version>`.
+      */
+    def txn(appId: String, version: Long): Mark = {
+      require(!appId.contains(":"),
+        s"appId '$appId' must not contain ':' (reserved by the txn op encoding)")
+      new Mark(s"txn:$appId:v", version)
+    }
+  }
+
+  /** What one insert-shaped [[write]] does:
+    *  - `mode`: [[Append]], [[Overwrite]] or [[ReplacePartition]];
+    *  - `partitionBy`: stage into nested `c1=v1/.../cN=vN` Hive-layout
+    *    leaves (STRING columns — values become path components), each
+    *    leaf one manifest segment; readers re-derive the columns from the
+    *    path ([[scan]] with [[Prune]] `parts`);
+    *  - `statsCols`: skipping stats recorded beside the table's declared
+    *    `graft.statsColumns` — per segment, or per leaf on the
+    *    non-partition columns;
+    *  - `bloomCol`: a Bloom filter (with min/max) on one key, for point
+    *    lookups where segment key ranges interleave;
+    *  - `mark`: an exactly-once [[Mark]];
+    *  - `evolveTo`: APPEND + additive EVOLVE as ONE atomic commit (the
+    *    writer's `mergeSchema`; ADVICE r15): all of [[evolve]]'s guards
+    *    apply and the frame validates against the new schema.
+    * Only the combinations the engine has always offered are accepted:
+    * `bloomCol` and `evolveTo` on a plain append alone, a mark on an
+    * append without `statsCols` (partitioned for stream batches only), a
+    * partition replace without `partitionBy` or `statsCols`.
+    */
+  final case class WriteSpec(mode: WriteMode = Append,
+                             partitionBy: Seq[String] = Seq.empty,
+                             statsCols: Seq[String] = Seq.empty,
+                             bloomCol: Option[String] = None,
+                             mark: Option[Mark] = None,
+                             evolveTo: Option[org.apache.spark.sql.types.StructType] = None)
+
+  /** THE insert-shaped write: stage the frame as new immutable segments
+    * and publish them in ONE manifest, so readers see all of it or none.
+    *  1. capture the read version BEFORE validation: the commit's
+    *     metadata-conflict rule scans (rv, head] for constraint/evolve
+    *     commits, so everything this write was validated against must be
+    *     ≤ rv — capturing it after leaves a window where a just-landed
+    *     CHECK is silently bypassed;
+    *  2. fill governed columns and validate (or, with `evolveTo`, the
+    *     evolve guards and CHECKs against the new schema);
+    *  3. stage, flat or partitioned;
+    *  4. record the requested ∪ declared stats and bloom;
+    *  5. commit as `append`, `append_evolve`, `overwrite` or the mark's op,
+    *     with the mark re-checked inside the CAS loop;
+    *  6. auto-compact after an append ([[maybeAutoCompact]]).
+    * Returns the committed version, or -1 for a skipped mark.
+    */
+  def write(df: DataFrame, table: String, spec: WriteSpec): Long = {
+    import org.apache.spark.sql.functions.{col => fcol}
+    import spec._
+    val plainAppend = mode == Append && partitionBy.isEmpty
+    require(bloomCol.isEmpty || plainAppend && statsCols.isEmpty && mark.isEmpty,
+      s"write to $table: bloomCol combines only with a plain append")
+    require(evolveTo.isEmpty ||
+      plainAppend && statsCols.isEmpty && bloomCol.isEmpty && mark.isEmpty,
+      s"write to $table: evolveTo combines only with a plain append")
+    require(mark.forall(m => mode == Append && statsCols.isEmpty &&
+      (partitionBy.isEmpty || m.family == "stream_append_b")),
+      s"write to $table: a mark combines only with an append without statsCols")
+    val partCols = mode match {
+      case ReplacePartition(c, _) =>
+        require(partitionBy.isEmpty && statsCols.isEmpty,
+          s"write to $table: a partition replace takes no partitionBy or statsCols")
+        Seq(c)
+      case _ => partitionBy
+    }
+    require(statsCols.intersect(partCols).isEmpty,
+      s"statsCols ${statsCols.intersect(partCols).mkString(",")} are partition " +
+        "columns — partition values are path metadata, already pruned exactly")
+    init(table)
+    if (mode != Append) requireNotAppendOnly(table, "overwrite")
+    if (mark.exists(_.done(table))) return -1L
+    val rv = currentVersion(table) // before validation — see step 1
+    val w = evolveTo.fold {
+      val filled = fillGoverned(df, table, partCols)
+      validateWrite(filled, table)
+      filled
+    } { ns =>
+      validateEvolve(table, ns, rv)
+      df.schema.fields.foreach { f =>
+        ns.fields.find(_.name == f.name) match {
+          case None => throw new IllegalArgumentException(
+            s"append to $table carries column '${f.name}' absent from the " +
+              "evolved schema")
+          case Some(tf) if tf.dataType != f.dataType =>
+            throw new IllegalArgumentException(
+              s"append to $table: column '${f.name}' is ${f.dataType.sql} but " +
+                s"the evolved schema records ${tf.dataType.sql}")
+          case _ => ()
+        }
+      }
+      enforceChecks(df, table)
+      df
+    }
+    partitionBy.foreach(pc => require(w.schema(pc).dataType ==
+      org.apache.spark.sql.types.StringType,
+      s"partition column $pc must be STRING (values become path components)"))
+    val removes = mode match {
+      case Append => Seq.empty[String]
+      case Overwrite => liveFiles(table, Some(rv))
+      case ReplacePartition(c, v) =>
+        // null partition values would silently stage under the Hive default
+        // dir and miss the swap — refuse them with the cross-partition rows
+        // (=!= alone passes nulls: three-valued logic)
+        require(w.filter(fcol(c).isNull || fcol(c) =!= v).isEmpty,
+          s"partition replace of $c=$v got rows of other partitions")
+        // paths store the Hive-ESCAPED value (Spark escapes on write), so the
+        // dir-name match must escape the user's value the same way
+        val escDir = c + "=" + org.apache.spark.sql.catalyst.catalog
+          .ExternalCatalogUtils.escapePathName(v)
+        liveFiles(table, Some(rv)).filter(p => Paths.get(p).getFileName.toString == escDir)
+    }
+    val (base, adds) =
+      if (partCols.isEmpty) { val p = stage(w, table); (p, Seq(p)) }
+      else stagePartitioned(w, table, partCols)
+    val stats =
+      if (partCols.isEmpty) autoStats(w.sparkSession, table, w, base, statsCols, bloomCol)
+      else (statsCols ++ declaredStatsCols(table, w)).distinct.filterNot(partCols.contains) match {
+        case Seq() => Map.empty[String, SegStats]
+        case cols => leafSegStats(w.sparkSession, base, adds, w.schema, partCols, cols)
+      }
+    val op = mark.fold(mode match {
+      case Append => if (evolveTo.isEmpty) "append" else "append_evolve"
+      case _ => "overwrite"
+    })(_.op)
+    // "append_evolve" is a METADATA-carrying op: concurrent data commits
+    // validated against the old schema must abort (the conflict scan in
+    // commit() includes it), and the change feed treats it insert-shaped
+    val v = commit(table, op, adds, removes, rv, stats,
+      skipIf = () => mark.exists(_.done(table)), schemaJson = evolveTo.map(_.json))
+    if (mode == Append && v > 0) maybeAutoCompact(df.sparkSession, table)
     v
   }
 
-  /** Full-table overwrite (the copy-on-write MERGE/compaction shape):
-    * stage the replacement, then atomically swap it for the exact segment
-    * set this writer read. Any concurrent commit aborts the swap.
-    */
-  def overwrite(df: DataFrame, table: String): Long = {
-    init(table)
-    requireNotAppendOnly(table, "overwrite")
-    val rv = currentVersion(table) // before validation — see append
-    val w = fillGoverned(df, table)
-    validateWrite(w, table)
-    val live = liveFiles(table, Some(rv))
-    val p = stage(w, table)
-    commit(table, "overwrite", Seq(p), live, rv,
-      autoStats(w.sparkSession, table, w, p))
-  }
+  /** Blind append of one plain segment: `write` with the default spec. */
+  def append(df: DataFrame, table: String): Long = write(df, table, WriteSpec())
 
-  /** Append with manifest-level min/max stats on `statsCol` — the
-    * Iceberg/Delta data-skipping write path: one extra aggregate at write
-    * time buys every future reader segment pruning WITHOUT opening a
-    * single parquet footer (at 100 TB the manifest scan is driver-side
-    * metadata; the skipped segments are the I/O saved).
-    */
+  /** Full-table overwrite of one plain segment. */
+  def overwrite(df: DataFrame, table: String): Long =
+    write(df, table, WriteSpec(Overwrite))
+
   /** Equi-depth histogram resolution: boundary count is HistBuckets + 1.
     * 32 buckets ≈ 3% selectivity granularity — Spark's own CBO default
     * (`spark.sql.statistics.histogram.numBins` not far off at 254 for
     * column-level ANALYZE; manifests are read per-query, so smaller).
     */
   val HistBuckets = 32
-
-  def appendWithStats(df: DataFrame, table: String, statsCol: String): Long =
-    appendWithStats(df, table, Seq(statsCol))
-
-  /** Multi-column variant: min/max/NDV/histogram recorded for EVERY
-    * declared column, all computed in the SAME single aggregate pass over
-    * the staged segment (Delta/Iceberg record per-file stats for N
-    * columns for the same reason — real tables prune on several keys).
-    * Any of them then drives manifest skipping ([[scan]])
-    * and range selectivity ([[estimatedRangeRows]]).
-    */
-  def appendWithStats(df: DataFrame, table: String, statsCols: Seq[String]): Long = {
-    require(statsCols.nonEmpty, s"appendWithStats($table) needs >= 1 stats column")
-    val rv = currentVersion(table) // before validation — see append
-    val w = fillGoverned(df, table)
-    validateWrite(w, table)
-    val p = stage(w, table)
-    val v = commit(table, "append", Seq(p), Seq.empty, rv,
-      stagedSegStats(df.sparkSession, p, statsCols))
-    maybeAutoCompact(df.sparkSession, table)
-    v
-  }
-
-  /** Full-table overwrite recording skipping stats on the replacement
-    * segment — `mode("overwrite") + option("statsCols", ...)` through the
-    * format seam must not silently drop the stats the user asked for
-    * (ADVICE r13): the staged segment gets the SAME one-pass
-    * min/max/rows/NDV/histogram record as [[appendWithStats]], and the
-    * swap commits them atomically with the removal of the old live set.
-    */
-  def overwriteWithStats(df: DataFrame, table: String,
-                         statsCols: Seq[String]): Long = {
-    require(statsCols.nonEmpty, s"overwriteWithStats($table) needs >= 1 stats column")
-    init(table)
-    requireNotAppendOnly(table, "overwriteWithStats")
-    val rv = currentVersion(table) // before validation — see append
-    val w = fillGoverned(df, table)
-    validateWrite(w, table)
-    val live = liveFiles(table, Some(rv))
-    val p = stage(w, table)
-    commit(table, "overwrite", Seq(p), live, rv,
-      stagedSegStats(df.sparkSession, p, statsCols))
-  }
 
   /** Per-column stats aggregation PLAN, shared by every write-time and
     * ANALYZE stats pass: the aggregate slots for each stats column plus a
@@ -1825,7 +1918,7 @@ object TxLog {
     * m.stats` merge attaches them (later stats win, so re-analyzing
     * refreshes). After it, manifest skipping, `tableRowCount` /
     * `tableMinMax` / `estimatedRangeRows`, and the count(*) optimizer
-    * rule all answer on a table that never saw `appendWithStats` — the
+    * rule all answer on a table never written with stats — the
     * Delta/Iceberg ANALYZE contract. Segments already carrying stats
     * for every requested column are skipped (`force` recomputes all).
     * CAS-conflicts with any concurrent commit: the stats were computed
@@ -2044,25 +2137,11 @@ object TxLog {
       pmod(xxhash64(c.cast("long"), lit(s)), lit(BloomBits.toLong))): _*)
   }
 
-  /** Append carrying BOTH min/max and a Bloom filter on `keyCol`. The
+  /** The bloom + min/max record for one staged segment's `keyCol`. The
     * bloom builds DISTRIBUTED: each row contributes its 3 bit masks,
     * folded by a (word → bit_or) aggregate whose output is at most
     * [[BloomWords]] rows — the only driver-side step is hex-packing that
-    * bounded result into the manifest.
-    */
-  def appendWithBloom(df: DataFrame, table: String, keyCol: String): Long = {
-    val rv = currentVersion(table) // before validation — see append
-    val w = fillGoverned(df, table)
-    validateWrite(w, table)
-    val p = stage(w, table)
-    val stats = bloomStat(df.sparkSession, p, keyCol)
-      .fold(Map.empty[String, SegStats])(b => Map(p -> b))
-    commit(table, "append", Seq(p), Seq.empty, rv, stats)
-  }
-
-  /** The bloom + min/max record for one staged segment's `keyCol` —
-    * [[appendWithBloom]]'s pass, shared with the declared
-    * `graft.bloomColumn` auto-index. None when the column is all-null.
+    * bounded result into the manifest. None when the column is all-null.
     */
   private def bloomStat(spark: SparkSession, p: String,
                         keyCol: String): Option[SegStats] = {
@@ -2099,23 +2178,26 @@ object TxLog {
     }
   }
 
-  /** DECLARED write-time indexing for one plain-staged segment:
-    * [[declaredStatsCols]]' one-pass stats record, plus the
-    * `graft.bloomColumn` bloom (Delta's bloom filter index as a table
+  /** Write-time indexing for one plain-staged segment: the one-pass
+    * stats record for the requested `statsCols` followed by the
+    * [[declaredStatsCols]] (the first column is the primary), plus a
+    * bloom on the requested `bloomCol` or else the declared
+    * `graft.bloomColumn` (Delta's bloom filter index as a table
     * declaration). The bloom-carrying record must be PRIMARY — extras
-    * never carry blooms ([[SegStats]]) — so when both declare, the
+    * never carry blooms ([[SegStats]]) — so when both are set, the
     * bloom column's record is enriched/promoted and every other column
     * rides as an extra.
     */
   private def autoStats(spark: SparkSession, table: String, w: DataFrame,
-                        p: String): Map[String, SegStats] = {
-    val cols = declaredStatsCols(table, w)
-    val bloomCol = tableProperties(table).get("graft.bloomColumn")
-      .map(_.trim).filter(w.columns.contains)
+                        p: String, statsCols: Seq[String] = Seq.empty,
+                        bloomCol: Option[String] = None): Map[String, SegStats] = {
+    val cols = (statsCols ++ declaredStatsCols(table, w)).distinct
+    val bloom = bloomCol.orElse(tableProperties(table).get("graft.bloomColumn")
+      .map(_.trim).filter(w.columns.contains))
     val base =
       if (cols.isEmpty) Map.empty[String, SegStats]
       else stagedSegStats(spark, p, cols)
-    bloomCol.flatMap(k => bloomStat(spark, p, k)) match {
+    bloom.flatMap(k => bloomStat(spark, p, k)) match {
       case None => base
       case Some(b) =>
         base.get(p) match {
@@ -2310,100 +2392,14 @@ object TxLog {
       case _ => true
     }
 
-  /** Hive-style PARTITIONED append: one distributed write fans the frame
-    * into `partCol=value` segment directories (the layout every lake
-    * partitions by), and ONE manifest publishes every partition
-    * atomically — readers never see half the partitions of a load. The
-    * partition value lives in the SEGMENT PATH, exactly as in
-    * Hive/Spark partition discovery, so the manifest format, the
-    * checkpoint fold, deletion vectors, time travel, and vacuum all
-    * compose untouched — partition metadata is path metadata.
-    *
-    * Contract: `partCol` must be a string column (values become path
-    * components; Spark's partitionBy escaping applies), and a table
-    * written partitioned should be read back through
-    * [[scan]] with [[Prune]] `parts` — the physical segments do NOT store
-    * the partition column (partitionBy's layout), the reader re-derives
-    * it from the path. At 100 TB this is the first-order pruning
-    * primitive: an eq-predicate on the partition column reads only its
-    * directory, decided driver-side from the manifest alone.
-    */
-  def appendPartitioned(df: DataFrame, table: String, partCol: String): Long =
-    appendPartitioned(df, table, Seq(partCol))
-
-  /** N-LEVEL variant — `c1=v1/c2=v2/.../cN=vN` nested Hive layout, the
-    * shape of the reference's own flagship write (visitor =
-    * `partitionBy('country','visa_category')`,
-    * `/root/reference/scripts/pyspark.py:306-322`). Each LEAF combination
-    * is one manifest segment, so per-level pruning stays a driver-side
-    * path decision and every lake mechanism (DV, time travel, vacuum,
-    * CAS) composes untouched.
-    */
-  def appendPartitioned(df: DataFrame, table: String,
-                        partCols: Seq[String]): Long = {
-    init(table)
-    val rv = currentVersion(table) // before validation — see append
-    val w = fillGoverned(df, table, partCols)
-    validateWrite(w, table)
-    val (base, leaves) = stagePartitionedMulti(w, table, partCols)
-    val declared = declaredStatsCols(table, w).filterNot(partCols.contains)
-    val stats =
-      if (declared.isEmpty) Map.empty[String, SegStats]
-      else leafSegStats(w.sparkSession, base, leaves, w.schema,
-        partCols, declared)
-    val v = commit(table, "append", leaves, Seq.empty, rv, stats)
-    maybeAutoCompact(df.sparkSession, table)
-    v
-  }
-
-  /** Partitioned append WITH per-leaf column stats — `partitionBy(a, b)`
-    * and `statsCols` finally coexist (VERDICT r13 item 1): partition
-    * values prune by path, the stats columns prune by per-segment
-    * min/max/bloomless stats, recorded per LEAF. All leaves' stats come
-    * from ONE grouped aggregate over the staged bytes (read back under
-    * the frame's schema so partition values parse as the strings they
-    * were written from) — a single job, |leaves| rows to the driver,
-    * metadata-scale at any corpus size.
-    */
-  def appendPartitionedWithStats(df: DataFrame, table: String,
-                                 partCols: Seq[String],
-                                 statsCols: Seq[String]): Long = {
-    require(statsCols.nonEmpty,
-      s"appendPartitionedWithStats($table) needs >= 1 stats column")
-    require(statsCols.intersect(partCols).isEmpty,
-      s"statsCols ${statsCols.intersect(partCols).mkString(",")} are partition " +
-        "columns — partition values are path metadata, already pruned exactly")
-    init(table)
-    val rv = currentVersion(table) // before validation — see append
-    val w = fillGoverned(df, table, partCols)
-    validateWrite(w, table)
-    val (base, leaves) = stagePartitionedMulti(w, table, partCols)
-    val stats = leafSegStats(w.sparkSession, base, leaves, w.schema,
-      partCols, statsCols)
-    val v = commit(table, "append", leaves, Seq.empty, rv, stats)
-    maybeAutoCompact(w.sparkSession, table)
-    v
-  }
-
-  /** Stage a frame as `partCol=value` segment dirs (Hive layout) under
-    * one fresh base; returns the partition subdirs a commit publishes.
-    */
-  private def stagePartitioned(df: DataFrame, table: String,
-                               partCol: String): Seq[String] =
-    stagePartitionedMulti(df, table, Seq(partCol))._2
-
   /** Stage a frame as nested `c1=v1/.../cN=vN` Hive-layout dirs under one
     * fresh base; returns (base, LEAF dirs) — each leaf holds exactly one
     * partition-value combination and is the unit a manifest publishes.
     */
-  private def stagePartitionedMulti(df: DataFrame, table: String,
-                                    partCols: Seq[String]): (String, Seq[String]) = {
-    require(partCols.nonEmpty, s"partitioned write to $table needs >= 1 column")
+  private def stagePartitioned(df: DataFrame, table: String,
+                               partCols: Seq[String]): (String, Seq[String]) = {
     require(partCols.distinct.size == partCols.size,
       s"duplicate partition columns: ${partCols.mkString(", ")}")
-    partCols.foreach(pc => require(df.schema(pc).dataType ==
-      org.apache.spark.sql.types.StringType,
-      s"partition column $pc must be STRING (values become path components)"))
     val base = s"$table/data/${java.util.UUID.randomUUID}"
     df.write.mode(SaveMode.ErrorIfExists).partitionBy(partCols: _*).parquet(base)
     // descend one partition level per column: level i's dirs all match
@@ -2435,7 +2431,7 @@ object TxLog {
     val byVals: Map[Seq[String], Row] = rows.map { r =>
       partCols.indices.map(i =>
         if (r.isNullAt(i)) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-        else r.getString(i)).toSeq -> r
+        else r.get(i).toString).toSeq -> r
     }.toMap
     leaves.flatMap { leaf =>
       byVals.get(segPartValues(leaf, partCols)).map { r =>
@@ -2447,80 +2443,6 @@ object TxLog {
         }
       }
     }.toMap
-  }
-
-  /** Full-table overwrite STAGED PARTITIONED (the `df.write.format("txlog")
-    * .mode("overwrite").partitionBy(c).save(t)` shape): the replacement
-    * fans into `partCol=value` segment dirs like [[appendPartitioned]],
-    * and ONE commit swaps them for the exact live set this writer read —
-    * any concurrent commit aborts the swap, and readers see the old or
-    * the new layout, never a mix.
-    */
-  def overwritePartitioned(df: DataFrame, table: String, partCol: String): Long =
-    overwritePartitioned(df, table, Seq(partCol))
-
-  /** N-level variant, optionally recording per-leaf column stats on the
-    * replacement segments (`statsCols` and `partitionBy` coexist here
-    * exactly as in [[appendPartitionedWithStats]]).
-    */
-  def overwritePartitioned(df: DataFrame, table: String,
-                           partCols: Seq[String],
-                           statsCols: Seq[String] = Seq.empty): Long = {
-    init(table)
-    requireNotAppendOnly(table, "overwritePartitioned")
-    require(statsCols.intersect(partCols).isEmpty,
-      s"statsCols ${statsCols.intersect(partCols).mkString(",")} are partition " +
-        "columns — partition values are path metadata, already pruned exactly")
-    val rv = currentVersion(table) // before validation — see append
-    val w = fillGoverned(df, table, partCols)
-    validateWrite(w, table)
-    val live = liveFiles(table, Some(rv))
-    val (base, leaves) = stagePartitionedMulti(w, table, partCols)
-    val stats =
-      if (statsCols.isEmpty) Map.empty[String, SegStats]
-      else leafSegStats(w.sparkSession, base, leaves, w.schema,
-        partCols, statsCols)
-    commit(table, "overwrite", leaves, live, rv, stats)
-  }
-
-  /** Dynamic PARTITION OVERWRITE (Delta's `replaceWhere` / Spark's
-    * dynamic partition-overwrite mode, through the commit protocol):
-    * atomically replace exactly the `partCol=value` segments with the
-    * staged frame — every other partition's bytes and history are
-    * untouched, and a reader sees the old or the new partition, never a
-    * mix. The frame must carry ONLY the target partition (checked before
-    * staging — a silent cross-partition overwrite is how lakes lose
-    * data). Conflicts like overwrite: the removed set is resolved
-    * against `readVersion`, and any concurrent commit aborts the swap.
-    */
-  def overwritePartition(df: DataFrame, table: String, partCol: String,
-                         value: String): Long = {
-    import org.apache.spark.sql.functions.{col => fcol}
-    init(table)
-    requireNotAppendOnly(table, "overwritePartition")
-    val rv = currentVersion(table) // before validation — see append
-    val w = fillGoverned(df, table, Seq(partCol))
-    validateWrite(w, table)
-    // null partition values would silently stage under the Hive default
-    // dir and miss the swap below — refuse them with the cross-partition
-    // rows (=!= alone passes nulls: three-valued logic)
-    require(w.filter(fcol(partCol).isNull || fcol(partCol) =!= value).isEmpty,
-      s"overwritePartition($partCol=$value) got rows of other partitions")
-    // paths store the Hive-ESCAPED value (Spark escapes on write), so the
-    // dir-name match must escape the user's value the same way
-    val escDir = partCol + "=" + org.apache.spark.sql.catalyst.catalog
-      .ExternalCatalogUtils.escapePathName(value)
-    val old = stateAt(table, Some(rv)).live
-      .filter(p => Paths.get(p).getFileName.toString == escDir)
-    val base = s"$table/data/${java.util.UUID.randomUUID}"
-    w.write.mode(SaveMode.ErrorIfExists).partitionBy(partCol).parquet(base)
-    val subdirs = listClosed(Files.list(Paths.get(base)))
-      .filter(p => Files.isDirectory(p) &&
-        p.getFileName.toString == escDir)
-      .map(_.toString)
-    require(subdirs.size == 1,
-      s"overwritePartition staged ${subdirs.size} dirs for $partCol=$value")
-    commit(table, "overwrite", subdirs, old, rv)
   }
 
   /** The table's partitioned LAYOUT, detected from manifest paths alone:
@@ -2893,7 +2815,7 @@ object TxLog {
     * finds its id committed and SKIPS — checked up front AND inside the
     * commit CAS (a zombie driver that loses the version race re-reads
     * the log and returns -1, its staged segments vacuumable), the same
-    * double-check [[streamingAppend]] uses. A concurrent NON-replay
+    * double-check a [[Mark]]ed [[write]] uses. A concurrent NON-replay
     * commit aborts with ConcurrentModificationException — a DV merge is
     * only valid against the exact snapshot it read; Spark's foreachBatch
     * retries the batch and the retry rebases.
@@ -3341,108 +3263,21 @@ object TxLog {
         "a key may match at most one update row")
   }
 
-  /** Highest micro-batch id ever committed by [[streamingAppend]], or -1:
-    * the `stream_append_b` mark of the log state, so it costs one fold
+  /** Highest micro-batch id ever committed under a [[Mark.batch]], or
+    * -1: the `stream_append_b` mark of the log state, so it costs one fold
     * from the nearest checkpoint and survives [[cleanupLog]] (the
     * checkpoint persists the marks).
     */
   def maxCommittedBatch(table: String): Long =
     highWater(table, "stream_append_b")
 
-  /** Exactly-once streaming sink step (the foreachBatch body): append a
-    * micro-batch as one atomic commit carrying its batch id in the
-    * manifest. On restart Spark replays the last unacknowledged batch —
-    * the replay finds its id already committed and SKIPS, so the
-    * file-sink output is transactional without any sink-side dedup
-    * column. Returns the committed version, or -1 for a skipped replay.
-    *
-    * The already-committed check runs INSIDE the commit CAS loop, not
-    * just up front: two zombie drivers replaying the same batch can both
-    * pass a front check, and blind appends never conflict — the batch
-    * would land twice (ADVICE r9). With the in-loop check, the loser of
-    * the version race re-reads the log, finds the winner's
-    * `stream_append_b<id>` manifest, and returns -1; its orphaned staged
-    * segment is invisible to readers and collected by [[vacuum]].
-    */
-  def streamingAppend(df: DataFrame, table: String, batchId: Long): Long =
-    streamingAppend(df, table, batchId, None)
-
-  /** As above, optionally staging the micro-batch into `partCol=value`
-    * segment dirs (the partitioned streaming sink shape) — the batch-id
-    * dedup and in-CAS zombie check are identical.
-    */
-  def streamingAppend(df: DataFrame, table: String, batchId: Long,
-                      partCol: Option[String]): Long =
-    streamingAppend(df, table, batchId, partCol.toSeq)
-
-  /** N-level partitioned streaming append — `writeStream.format("txlog")
-    * .partitionBy(a, b)` stages each micro-batch into the nested Hive
-    * layout; batch-id dedup and the in-CAS zombie check are identical.
-    */
-  def streamingAppend(df: DataFrame, table: String, batchId: Long,
-                      partCols: Seq[String]): Long = {
-    init(table)
-    if (batchId <= maxCommittedBatch(table)) -1L
-    else {
-      val rv = currentVersion(table) // before validation — see append
-      val w = fillGoverned(df, table, partCols)
-      validateWrite(w, table)
-      val declared = declaredStatsCols(table, w).filterNot(partCols.contains)
-      val (base, adds) =
-        if (partCols.isEmpty) ("", Seq(stage(w, table)))
-        else stagePartitionedMulti(w, table, partCols)
-      val stats =
-        if (partCols.isEmpty) autoStats(w.sparkSession, table, w, adds.head)
-        else if (declared.isEmpty) Map.empty[String, SegStats]
-        else leafSegStats(w.sparkSession, base, adds, w.schema,
-          partCols, declared)
-      val v = commit(table, s"stream_append_b$batchId", adds, Seq.empty,
-        rv, stats,
-        skipIf = () => maxCommittedBatch(table) >= batchId, schemaJson = None)
-      if (v > 0) maybeAutoCompact(df.sparkSession, table)
-      v
-    }
-  }
-
-  /** Latest transaction version committed by `appId` (−1 when none):
-    * the read half of the Delta `txn` action, the app's mark in the log
-    * state (an app's versions ascend, so its mark is its maximum).
+  /** Latest transaction version committed by `appId` under a
+    * [[Mark.txn]] (−1 when none): the read half of the Delta `txn`
+    * action, the app's mark in the log state (an app's versions ascend,
+    * so its mark is its maximum).
     */
   def lastTxnVersion(table: String, appId: String): Long =
     highWater(table, s"txn:$appId:v")
-
-  /** IDEMPOTENT WRITER TRANSACTIONS — Delta's `txn` (appId, version)
-    * action generalized from the streaming sink: any batch writer
-    * (Airflow retry, speculative job re-run, at-least-once queue
-    * consumer) tags its append with its own monotonically increasing
-    * version, and a replay of an already-committed (appId, version)
-    * SKIPS instead of double-appending. Apps are independent: each
-    * appId has its own version line. Same zombie-safety shape as
-    * [[streamingAppend]]: the already-committed check re-runs INSIDE
-    * the commit CAS loop, so two replaying drivers racing for the same
-    * (appId, version) cannot both land — the loser re-reads the log,
-    * finds the winner's `txn:` manifest, and returns −1 (its orphaned
-    * staged segment is invisible and vacuum-collectable).
-    */
-  def idempotentAppend(df: DataFrame, table: String, appId: String,
-                       txnVersion: Long): Long = {
-    require(!appId.contains(":"),
-      s"appId '$appId' must not contain ':' (reserved by the txn op encoding)")
-    init(table)
-    if (txnVersion <= lastTxnVersion(table, appId)) -1L
-    else {
-      val rv = currentVersion(table) // before validation — see append
-      val w = fillGoverned(df, table)
-      validateWrite(w, table)
-      val p = stage(w, table)
-      val v = commit(table, s"txn:$appId:v$txnVersion", Seq(p), Seq.empty,
-        rv, autoStats(w.sparkSession, table, w, p),
-        skipIf = () => lastTxnVersion(table, appId) >= txnVersion,
-        schemaJson = None)
-      if (v > 0) maybeAutoCompact(df.sparkSession, table)
-      v
-    }
-  }
 
   /** Clustered compaction — the OPTIMIZE/ZORDER maintenance op: rewrite
     * the live set into `buckets` RANGE-DISJOINT segments on `clusterCol`
@@ -3899,7 +3734,7 @@ object TxLog {
     *  - PLAIN: top-level `*.parquet` part-files → each file one segment;
     *  - HIVE-PARTITIONED: nested `col=value` dirs → each leaf dir one
     *    segment, so the converted table prunes partitions from the
-    *    manifest exactly like an [[appendPartitioned]]-written one.
+    *    manifest exactly like a partitioned [[write]]'s.
     * A mixed or unrecognized layout refuses loudly.
     *
     * Caveat (same class as [[cloneShallow]]'s): the converted files live

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.ops.{Cleaning, TextOps}
+import graft.ops.TxLog.{Mark, ReplacePartition, WriteSpec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -154,10 +155,10 @@ object StatsQueries extends QueryPack {
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       val odd = base.filter(col("o_orderkey") % 2 === 1)
       val even = base.filter(col("o_orderkey") % 2 === 0)
-      require(graft.ops.TxLog.idempotentAppend(odd, t, "loader", 1L) > 0)
-      require(graft.ops.TxLog.idempotentAppend(odd, t, "loader", 1L) == -1L)
-      require(graft.ops.TxLog.idempotentAppend(even, t, "loader", 2L) > 0)
-      require(graft.ops.TxLog.idempotentAppend(even, t, "loader", 2L) == -1L)
+      require(graft.ops.TxLog.write(odd, t, WriteSpec(mark = Some(Mark.txn("loader", 1L)))) > 0)
+      require(graft.ops.TxLog.write(odd, t, WriteSpec(mark = Some(Mark.txn("loader", 1L)))) == -1L)
+      require(graft.ops.TxLog.write(even, t, WriteSpec(mark = Some(Mark.txn("loader", 2L)))) > 0)
+      require(graft.ops.TxLog.write(even, t, WriteSpec(mark = Some(Mark.txn("loader", 2L)))) == -1L)
       t
     })
 
@@ -391,8 +392,8 @@ object StatsQueries extends QueryPack {
         expr("(o_orderkey div 16) % 16").as("py"),
         Cleaning.cents(col("o_totalprice")).as("cents"))
       (0L to 3L).foreach { b =>
-        graft.ops.TxLog.appendWithStats(
-          base.filter(col("o_orderkey") % 4 === b), t, "o_orderkey")
+        graft.ops.TxLog.write(
+          base.filter(col("o_orderkey") % 4 === b), t, WriteSpec(statsCols = Seq("o_orderkey")))
       }
       graft.ops.TxLog.compactZOrder(s, t, "px", "py", 16)
       t
@@ -413,8 +414,8 @@ object StatsQueries extends QueryPack {
         expr("(o_orderkey div 64) % 8").as("pz"),
         Cleaning.cents(col("o_totalprice")).as("cents"))
       (0L to 3L).foreach { b =>
-        graft.ops.TxLog.appendWithStats(
-          base.filter(col("o_orderkey") % 4 === b), t, "o_orderkey")
+        graft.ops.TxLog.write(
+          base.filter(col("o_orderkey") % 4 === b), t, WriteSpec(statsCols = Seq("o_orderkey")))
       }
       val v = s.sql(s"OPTIMIZE '$t' ZORDER BY (px, py, pz)").head().getLong(0)
       require(v == 5L, s"3-col ZORDER must land as commit 5, got $v")
@@ -437,14 +438,14 @@ object StatsQueries extends QueryPack {
         Cleaning.cents(col("o_totalprice")).as("cents"),
         expr("timestamp(date_add(DATE'2024-01-01', CAST(o_orderkey % 8 AS INT)))")
           .as("ts"))
-      graft.ops.TxLog.appendPartitioned(
+      graft.ops.TxLog.write(
         base.filter(col("o_orderkey") % 2 === 1)
-          .withColumn("day", expr("date_format(ts, 'yyyy-MM-dd')")),
-        t, Seq("day"))
+          .withColumn("day", expr("date_format(ts, 'yyyy-MM-dd')")), t,
+          WriteSpec(partitionBy = Seq("day")))
       s.sql(s"ALTER TABLE '$t' ALTER COLUMN day " +
         "SET GENERATED ALWAYS AS (date_format(ts, 'yyyy-MM-dd'))")
-      graft.ops.TxLog.appendPartitioned(
-        base.filter(col("o_orderkey") % 2 === 0), t, Seq("day"))
+      graft.ops.TxLog.write(
+        base.filter(col("o_orderkey") % 2 === 0), t, WriteSpec(partitionBy = Seq("day")))
       t
     })
 
@@ -501,10 +502,10 @@ object StatsQueries extends QueryPack {
         Cleaning.cents(col("o_totalprice")).as("cents"),
         expr("CAST(o_orderkey % 3 AS STRING)").as("r3"),
         expr("CAST(o_orderkey % 2 AS STRING)").as("r2"))
-      graft.ops.TxLog.appendPartitioned(
-        base.filter(col("o_orderkey") % 4 <= 1), t, Seq("r3", "r2"))
-      graft.ops.TxLog.appendPartitioned(
-        base.filter(col("o_orderkey") % 4 >= 2), t, Seq("r3", "r2"))
+      graft.ops.TxLog.write(
+        base.filter(col("o_orderkey") % 4 <= 1), t, WriteSpec(partitionBy = Seq("r3", "r2")))
+      graft.ops.TxLog.write(
+        base.filter(col("o_orderkey") % 4 >= 2), t, WriteSpec(partitionBy = Seq("r3", "r2")))
       graft.ops.TxLog.deleteWhere(s, t, col("o_orderkey") % 5 === 0)
       s.sql(s"OPTIMIZE '$t'").collect()
       t
@@ -629,8 +630,10 @@ object StatsQueries extends QueryPack {
     txTables.computeIfAbsent((s, "cbo:" + d), _ => {
       val t = s"${graft.ops.Scratch.base}/txcbo_${(d.hashCode & 0xffffff).toHexString}"
       val dim = Tables.nation(s, d).select(col("n_nationkey"), col("n_name"))
-      graft.ops.TxLog.appendWithStats(dim.filter(col("n_nationkey") < 12), t, "n_nationkey")
-      graft.ops.TxLog.appendWithStats(dim.filter(col("n_nationkey") >= 12), t, "n_nationkey")
+      graft.ops.TxLog.write(dim.filter(col("n_nationkey") < 12), t,
+        WriteSpec(statsCols = Seq("n_nationkey")))
+      graft.ops.TxLog.write(dim.filter(col("n_nationkey") >= 12), t,
+        WriteSpec(statsCols = Seq("n_nationkey")))
       t
     })
 
@@ -701,12 +704,12 @@ object StatsQueries extends QueryPack {
       val h = (d.hashCode & 0xffffff).toHexString
       val tO = s"${graft.ops.Scratch.base}/txdimo_$h"
       val tS = s"${graft.ops.Scratch.base}/txdims_$h"
-      graft.ops.TxLog.appendWithStats(
+      graft.ops.TxLog.write(
         Tables.orders(s, d).filter(col("o_orderkey") % 2 === 0)
-          .select(col("o_orderkey")), tO, "o_orderkey")
-      graft.ops.TxLog.appendWithStats(
+          .select(col("o_orderkey")), tO, WriteSpec(statsCols = Seq("o_orderkey")))
+      graft.ops.TxLog.write(
         Tables.supplier(s, d).filter(col("s_suppkey") % 4 === 0)
-          .select(col("s_suppkey")), tS, "s_suppkey")
+          .select(col("s_suppkey")), tS, WriteSpec(statsCols = Seq("s_suppkey")))
       s"$tO|$tS"
     })
     val Array(tO, tS) = key.split('|')
@@ -773,7 +776,7 @@ object StatsQueries extends QueryPack {
   }
 
   /** Histogram-CBO fixture: orders keys interleaved (even/odd) across two
-    * `appendWithStats` segments — min/max can never prune, so any range
+    * stats-carrying segments — min/max can never prune, so any range
     * answer must come from the per-segment EQUI-DEPTH HISTOGRAMS the
     * commits recorded.
     */
@@ -782,8 +785,10 @@ object StatsQueries extends QueryPack {
       val t = s"${graft.ops.Scratch.base}/txhist_${(d.hashCode & 0xffffff).toHexString}"
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
-      graft.ops.TxLog.appendWithStats(base.filter(col("o_orderkey") % 2 === 0), t, "o_orderkey")
-      graft.ops.TxLog.appendWithStats(base.filter(col("o_orderkey") % 2 === 1), t, "o_orderkey")
+      graft.ops.TxLog.write(base.filter(col("o_orderkey") % 2 === 0), t,
+        WriteSpec(statsCols = Seq("o_orderkey")))
+      graft.ops.TxLog.write(base.filter(col("o_orderkey") % 2 === 1), t,
+        WriteSpec(statsCols = Seq("o_orderkey")))
       t
     })
 
@@ -797,8 +802,10 @@ object StatsQueries extends QueryPack {
       val t = s"${graft.ops.Scratch.base}/txpart_${(d.hashCode & 0xffffff).toHexString}"
       val base = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      graft.ops.TxLog.appendPartitioned(base.filter(col("doc_id") % 2 === 0), t, "lang")
-      graft.ops.TxLog.appendPartitioned(base.filter(col("doc_id") % 2 === 1), t, "lang")
+      graft.ops.TxLog.write(base.filter(col("doc_id") % 2 === 0), t,
+        WriteSpec(partitionBy = Seq("lang")))
+      graft.ops.TxLog.write(base.filter(col("doc_id") % 2 === 1), t,
+        WriteSpec(partitionBy = Seq("lang")))
       t
     })
 
@@ -823,18 +830,18 @@ object StatsQueries extends QueryPack {
 
   /** Partition-overwrite fixture: the partitioned load, then lang='en'
     * wholesale-replaced (every n_chars +1000) through ONE atomic
-    * `overwritePartition` commit — other languages' segments untouched.
+    * `ReplacePartition` write — other languages' segments untouched.
     */
   private def txPartOvwTable(s: SparkSession, d: String): String =
     txTables.computeIfAbsent((s, "partovw:" + d), _ => {
       val t = s"${graft.ops.Scratch.base}/txpovw_${(d.hashCode & 0xffffff).toHexString}"
       val base = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      graft.ops.TxLog.appendPartitioned(base, t, "lang")
-      graft.ops.TxLog.overwritePartition(
+      graft.ops.TxLog.write(base, t, WriteSpec(partitionBy = Seq("lang")))
+      graft.ops.TxLog.write(
         base.filter(col("lang") === "en")
-          .withColumn("n_chars", col("n_chars") + 1000L),
-        t, "lang", "en")
+          .withColumn("n_chars", col("n_chars") + 1000L), t,
+          WriteSpec(ReplacePartition("lang", "en")))
       t
     })
 
@@ -863,8 +870,9 @@ object StatsQueries extends QueryPack {
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       val q = base.agg(max("o_orderkey")).head().getLong(0) / 4 + 1
       (0L to 3L).foreach { b =>
-        graft.ops.TxLog.appendWithStats(
-          base.filter(expr(s"o_orderkey div $q") === b), t, "o_orderkey")
+        graft.ops.TxLog.write(
+          base.filter(expr(s"o_orderkey div $q") === b), t,
+          WriteSpec(statsCols = Seq("o_orderkey")))
       }
       t
     })
@@ -889,8 +897,8 @@ object StatsQueries extends QueryPack {
           Cleaning.cents(col("c_acctbal")).as("cents"))
       val q = base.agg(max("c_custkey")).head().getLong(0) / 4 + 1
       (0L to 3L).foreach { b =>
-        graft.ops.TxLog.appendWithStats(
-          base.filter(expr(s"c_custkey div $q") === b), t, "name")
+        graft.ops.TxLog.write(
+          base.filter(expr(s"c_custkey div $q") === b), t, WriteSpec(statsCols = Seq("name")))
       }
       t
     })
@@ -966,8 +974,8 @@ object StatsQueries extends QueryPack {
             lpad(col("o_orderkey").cast("string"), 9, "0")).as("name"),
           Cleaning.cents(col("o_totalprice")).as("cents"))
       (0L to 3L).foreach { b =>
-        graft.ops.TxLog.appendWithBloom(
-          base.filter(col("o_orderkey") % 4 === b), t, "name")
+        graft.ops.TxLog.write(
+          base.filter(col("o_orderkey") % 4 === b), t, WriteSpec(bloomCol = Some("name")))
       }
       t
     })
@@ -982,8 +990,8 @@ object StatsQueries extends QueryPack {
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       (0L to 3L).foreach { b =>
-        graft.ops.TxLog.appendWithBloom(
-          base.filter(col("o_orderkey") % 4 === b), t, "o_orderkey")
+        graft.ops.TxLog.write(
+          base.filter(col("o_orderkey") % 4 === b), t, WriteSpec(bloomCol = Some("o_orderkey")))
       }
       t
     })
@@ -997,8 +1005,8 @@ object StatsQueries extends QueryPack {
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       (0L to 3L).foreach { b =>
-        graft.ops.TxLog.appendWithStats(
-          base.filter(col("o_orderkey") % 4 === b), t, "o_orderkey")
+        graft.ops.TxLog.write(
+          base.filter(col("o_orderkey") % 4 === b), t, WriteSpec(statsCols = Seq("o_orderkey")))
       }
       graft.ops.TxLog.compactClustered(s, t, "o_orderkey", 4)
       t
@@ -2018,7 +2026,7 @@ object StatsQueries extends QueryPack {
     }),
 
     // MANIFEST-STATS-DRIVEN JOIN PLANNING (the ANALYZE/CBO shape —
-    // VERDICT r10 "missing" item 5): appendWithStats records each
+    // VERDICT r10 "missing" item 5): a write with statsCols records each
     // segment's row count and the key's exact NDV in the manifest;
     // tableRowCount/ndvBounds answer from METADATA alone (no segment
     // scanned), and the query picks the broadcast side from that number
@@ -2049,7 +2057,7 @@ object StatsQueries extends QueryPack {
 
     // RANGE SELECTIVITY from manifest EQUI-DEPTH HISTOGRAMS (VERDICT r11
     // item 6 — the other half of join planning beside tableRowCount):
-    // appendWithStats records a 32-bucket equi-depth histogram per
+    // a write with statsCols records a 32-bucket equi-depth histogram per
     // segment; estimatedRangeRows answers `key BETWEEN lo AND hi` from
     // the manifest alone. A ~0.1%-selectivity predicate estimates
     // broadcast-sized → the filtered dim side is broadcast; a

@@ -35,10 +35,10 @@ import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode, SparkSession}
   * segment skipping is a superset guarantee, exactly like parquet
   * row-group skipping.
   *
-  * WRITE: a `CreatableRelationProvider` routing each `SaveMode` to the
-  * matching commit primitive — append / appendPartitioned / overwrite /
-  * overwritePartitioned, with `statsCols` riding the append through
-  * [[TxLog.appendWithStats]]. `partitionBy(...)` arrives through Spark's
+  * WRITE: a `CreatableRelationProvider` turning the `SaveMode` and the
+  * writer's options into one [[TxLog.WriteSpec]] for [[TxLog.write]] —
+  * append or overwrite, `replaceWhere`, `partitionBy`, `statsCols` and
+  * `mergeSchema`. `partitionBy(...)` arrives through Spark's
   * own encoded option (the key `DataFrameWriter` sets for every V1
   * source); N partition columns nest as `c1=v1/.../cN=vN` leaf segments
   * (the reference's own flagship write is two-level —
@@ -62,8 +62,8 @@ final class TxLogBatchSource extends RelationProvider
 
   /** `df.writeStream.format("txlog")` — EXACTLY-ONCE streaming into the
     * lake with zero library API (the Delta sink shape): every micro-batch
-    * lands as one `stream_append_b<id>` commit through
-    * [[TxLog.streamingAppend]], whose batch-id dedup re-checks inside
+    * lands as one `stream_append_b<id>` commit through a [[TxLog.write]]
+    * carrying a [[TxLog.Mark.batch]], whose batch-id dedup re-checks inside
     * the commit CAS — a replayed or zombie batch skips, so restarts
     * never double-append. Append-only (a table accretes commits; use
     * foreachBatch + streamingMergeDv for the upsert shape);
@@ -148,8 +148,7 @@ final class TxLogBatchSource extends RelationProvider
         "txlog batch sink requires .save(tablePath)")))
     val partCols = TxLogBatchSource.partitionColumns(parameters)
     val statsCols = parameters.get("statsCols").orElse(parameters.get("statscols"))
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .filter(_.nonEmpty)
+      .toSeq.flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
     val exists = TxLog.currentVersion(table) > 0
     mode match {
       case SaveMode.ErrorIfExists if exists =>
@@ -160,23 +159,20 @@ final class TxLogBatchSource extends RelationProvider
       case SaveMode.Overwrite =>
         // .option("replaceWhere", "col = 'value'") — Delta's selective
         // overwrite: exactly one partition's segments swap atomically,
-        // every other partition untouched (TxLog.overwritePartition's
-        // cross-partition-row refusal applies). Only the partition-
-        // equality shape is accepted; arbitrary predicates belong to
-        // deleteWhere + append or MERGE.
+        // every other partition untouched (the cross-partition-row
+        // refusal applies). Only the partition-equality shape is
+        // accepted; arbitrary predicates belong to deleteWhere + append
+        // or MERGE, and statsCols with it refuses. Overwrite + statsCols
+        // records skipping stats on the replacement — never silently
+        // dropped (ADVICE r13)
         val replaceWhere = parameters.get("replaceWhere")
           .orElse(parameters.get("replacewhere"))
-        (replaceWhere, partCols, statsCols) match {
-          case (Some(pred), _, _) =>
-            val (c, v) = TxLogBatchSource.parseReplaceWhere(pred)
-            TxLog.overwritePartition(data, table, c, v)
-          case (None, Seq(), None) => TxLog.overwrite(data, table)
-          // overwrite + statsCols records skipping stats on the
-          // replacement — never silently dropped (ADVICE r13)
-          case (None, Seq(), Some(cs)) => TxLog.overwriteWithStats(data, table, cs)
-          case (None, pcs, cs) =>
-            TxLog.overwritePartitioned(data, table, pcs, cs.getOrElse(Seq.empty))
+        val overwrite = replaceWhere.fold[TxLog.WriteMode](TxLog.Overwrite) { pred =>
+          val (c, v) = TxLogBatchSource.parseReplaceWhere(pred)
+          TxLog.ReplacePartition(c, v)
         }
+        TxLog.write(data, table, TxLog.WriteSpec(overwrite,
+          if (replaceWhere.isEmpty) partCols else Seq.empty, statsCols))
       case _ => // Append, or first write under ErrorIfExists/Ignore
         // .option("mergeSchema", true): ADDITIVE auto-evolution on append
         // (Delta's writer option) — new columns land WITH the data in ONE
@@ -205,27 +201,14 @@ final class TxLogBatchSource extends RelationProvider
             if (added.isEmpty) None
             else Some(StructType(current.fields ++ added.map(_.copy(nullable = true))))
           }
-        (partCols, statsCols, evolveTo) match {
-          case (Seq(), None, Some(ns)) => TxLog.appendWithEvolve(data, table, ns)
-          // partitioned/stats merges keep the two-commit path (their
-          // staging shapes don't compose with append_evolve yet); the
-          // evolve is validated first so the failure window only spans
-          // metadata, never half the data
-          case (pcs, cs, Some(ns)) =>
-            TxLog.evolve(table, ns)
-            (pcs, cs) match {
-              case (Seq(), Some(c)) => TxLog.appendWithStats(data, table, c)
-              case (p, None) => TxLog.appendPartitioned(data, table, p)
-              case (p, Some(c)) => TxLog.appendPartitionedWithStats(data, table, p, c)
-            }
-          case (Seq(), None, None) => TxLog.append(data, table)
-          case (Seq(), Some(cs), None) => TxLog.appendWithStats(data, table, cs)
-          case (pcs, None, None) => TxLog.appendPartitioned(data, table, pcs)
-          // partitionBy(a, b, ...) + statsCols: path pruning on the
-          // partition levels, per-leaf min/max/NDV/histogram on the rest
-          case (pcs, Some(cs), None) =>
-            TxLog.appendPartitionedWithStats(data, table, pcs, cs)
-        }
+        // partitioned/stats merges keep the two-commit path (their
+        // staging shapes don't compose with append_evolve yet); the
+        // evolve is validated first so the failure window only spans
+        // metadata, never half the data
+        val oneCommit = partCols.isEmpty && statsCols.isEmpty
+        if (!oneCommit) evolveTo.foreach(TxLog.evolve(table, _))
+        TxLog.write(data, table, TxLog.WriteSpec(partitionBy = partCols,
+          statsCols = statsCols, evolveTo = evolveTo.filter(_ => oneCommit)))
     }
     new TxLogRelation(sqlContext, table, None)
   }
@@ -239,7 +222,8 @@ final class TxLogSink(table: String, partCols: Seq[String])
     // logical plan — any fresh action on it refuses; re-wrap the
     // ALREADY-PLANNED incremental execution (the FileStreamSink pattern)
     val batch = org.apache.spark.sql.graft.StreamBridge.sinkBatch(data)
-    TxLog.streamingAppend(batch, table, batchId, partCols)
+    TxLog.write(batch, table,
+      TxLog.WriteSpec(partitionBy = partCols, mark = Some(TxLog.Mark.batch(batchId))))
   }
   override def toString: String = s"TxLogSink[$table]"
 }
@@ -326,12 +310,8 @@ final class TxLogRelation(ctx: SQLContext, val table: String, val asOf: Option[L
   override def insert(data: DataFrame, overwrite: Boolean): Unit = {
     require(asOf.isEmpty,
       s"INSERT into $table: cannot write through a time-travel relation")
-    (overwrite, partitionCols) match {
-      case (false, Seq()) => TxLog.append(data, table)
-      case (false, pcs) => TxLog.appendPartitioned(data, table, pcs)
-      case (true, Seq()) => TxLog.overwrite(data, table)
-      case (true, pcs) => TxLog.overwritePartitioned(data, table, pcs, Seq.empty)
-    }
+    TxLog.write(data, table, TxLog.WriteSpec(
+      if (overwrite) TxLog.Overwrite else TxLog.Append, partitionCols))
     ()
   }
 
@@ -370,7 +350,7 @@ final class TxLogRelation(ctx: SQLContext, val table: String, val asOf: Option[L
   override def buildScan(requiredColumns: Array[String],
                          filters: Array[Filter]): RDD[Row] = {
     // every column ANY live segment tracks is a pruning candidate —
-    // multi-column stats (appendWithStats with N columns) prune on all.
+    // multi-column stats (a write with N statsCols) prune on all.
     // Stats bounds apply at head only (time travel takes the unpruned
     // path — correctness before skipping); PARTITION pruning is pure
     // path metadata, valid at any version.

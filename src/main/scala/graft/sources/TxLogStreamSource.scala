@@ -20,7 +20,7 @@ import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
   * meaningful across restarts (exactly-once per commit, proven in
   * `TxLogStreamSpec`), and `latestOffset` is one `currentVersion` call —
   * no file listing, no data read. This is the missing read-side of the
-  * lake layer: [[TxLog.streamingAppend]] already gives exactly-once
+  * lake layer: a [[TxLog.Mark.batch]] write already gives exactly-once
   * stream INTO a table; this source gives exactly-once stream OUT, which
   * is how downstream pipelines (index refresh, CDC fan-out, feature
   * materialization) chain off a 100-TB table without rescanning it.
@@ -31,7 +31,7 @@ import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
   *    content identical; SKIPPED (re-emitting rewritten segments would
   *    duplicate every row each time OPTIMIZE runs).
   *  - `txn:<appId>:v<N>` — an idempotent-writer append
-  *    ([[TxLog.idempotentAppend]]); streamed like `append`.
+  *    (a [[TxLog.Mark.txn]] write); streamed like `append`.
   *  - `evolve` / `constraint` / `dropcolumn` / `analyze` — metadata
   *    only; skipped
   *    (the source schema stays pinned at stream start: mid-stream schema

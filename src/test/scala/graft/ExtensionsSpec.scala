@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.TxLog.{Mark, WriteSpec}
 import org.apache.spark.sql.functions._
 
 /** The Catalyst extension layer: SQL-registered native functions and the
@@ -255,8 +256,8 @@ class ExtensionsSpec extends SparkSpec {
     } finally spark.sql("DROP TABLE IF EXISTS graft_ins_spec")
     // partitioned table: INSERT INTO fans back into the Hive layout
     val p = java.nio.file.Files.createTempDirectory("txinsp-").resolve("t").toString
-    graft.ops.TxLog.appendPartitioned(
-      Seq((1L, "en"), (2L, "de")).toDF("n", "lang"), p, "lang")
+    graft.ops.TxLog.write(
+      Seq((1L, "en"), (2L, "de")).toDF("n", "lang"), p, WriteSpec(partitionBy = Seq("lang")))
     spark.sql(s"CREATE TABLE graft_insp_spec USING txlog LOCATION '$p'")
     try {
       spark.sql("INSERT INTO graft_insp_spec VALUES (3, 'fr')")
@@ -435,8 +436,9 @@ class ExtensionsSpec extends SparkSpec {
   test("DESCRIBE DETAIL reports metadata-priced table facts") {
     import spark.implicits._
     val t = java.nio.file.Files.createTempDirectory("txdetail-").resolve("t").toString
-    graft.ops.TxLog.appendWithStats(Seq((1L, 10L), (2L, 20L)).toDF("k", "v"), t, "k")
-    graft.ops.TxLog.appendWithStats(Seq((3L, 30L)).toDF("k", "v"), t, "k")
+    graft.ops.TxLog.write(Seq((1L, 10L), (2L, 20L)).toDF("k", "v"), t,
+      WriteSpec(statsCols = Seq("k")))
+    graft.ops.TxLog.write(Seq((3L, 30L)).toDF("k", "v"), t, WriteSpec(statsCols = Seq("k")))
     val r = spark.sql(s"DESCRIBE DETAIL '$t'").head()
     assert(r.getLong(1) === 2L)        // version
     assert(r.getLong(2) === 2L)        // num_segments
@@ -850,7 +852,8 @@ class ExtensionsSpec extends SparkSpec {
     // library append, format seam, idempotent txn — all record v's stats
     graft.ops.TxLog.append(Seq((1L, 10L)).toDF("k", "v"), t)
     Seq((2L, 20L)).toDF("k", "v").write.format("txlog").mode("append").save(t)
-    graft.ops.TxLog.idempotentAppend(Seq((3L, 30L)).toDF("k", "v"), t, "app", 1L)
+    graft.ops.TxLog.write(Seq((3L, 30L)).toDF("k", "v"), t,
+      WriteSpec(mark = Some(Mark.txn("app", 1L))))
     assert(statsCols() === Seq(Seq("v"), Seq("v"), Seq("v")))
     // streaming sink micro-batches record them too
     val src = java.nio.file.Files.createTempDirectory("txsdecl-src-").toString
@@ -879,15 +882,70 @@ class ExtensionsSpec extends SparkSpec {
     val last = graft.ops.TxLog.liveFilesWithStats(t).last._2.get
     assert(last.col === "k" && last.bloomHex.nonEmpty)
     assert(last.statsFor("v").nonEmpty && last.rows === Some(1L))
+    // every other insert shape records the declared column beside the
+    // ones it asks for (requested first, so they stay primary);
+    // partitioned shapes record it per leaf
+    def declared(name: String, more: String = ""): String = {
+      val d = java.nio.file.Files.createTempDirectory(s"txsdecl-$name-")
+        .resolve("t").toString
+      spark.sql(s"ALTER TABLE '$d' SET TBLPROPERTIES ('graft.statsColumns' = 'v'$more)")
+      d
+    }
+    def tracked(d: String): Seq[Seq[String]] =
+      graft.ops.TxLog.liveFilesWithStats(d).map(_._2.toSeq.flatMap(_.trackedCols))
+    val kv = Seq((1L, 10L), (2L, 20L)).toDF("k", "v")
+    val kvp = Seq((1L, 10L, "a"), (2L, 20L, "b")).toDF("k", "v", "p")
+    // requested stats: append and overwrite
+    val ts = declared("stats")
+    kv.write.format("txlog").mode("append").option("statsCols", "k").save(ts)
+    assert(tracked(ts) === Seq(Seq("k", "v")))
+    kv.write.format("txlog").mode("overwrite").option("statsCols", "k").save(ts)
+    assert(tracked(ts) === Seq(Seq("k", "v")))
+    // partitioned: append with stats, overwrite without (format seam and
+    // SQL INSERT OVERWRITE), one-partition replace
+    val tp = declared("part")
+    kvp.write.format("txlog").mode("append").partitionBy("p")
+      .option("statsCols", "k").save(tp)
+    assert(tracked(tp) === Seq(Seq("k", "v"), Seq("k", "v")))
+    kvp.write.format("txlog").mode("overwrite").partitionBy("p").save(tp)
+    assert(tracked(tp) === Seq(Seq("v"), Seq("v")))
+    new graft.sources.TxLogRelation(spark.sqlContext, tp, None).insert(kvp, overwrite = true)
+    assert(tracked(tp) === Seq(Seq("v"), Seq("v")))
+    Seq((3L, 30L, "a")).toDF("k", "v", "p").write.format("txlog").mode("overwrite")
+      .option("replaceWhere", "p = 'a'").save(tp)
+    assert(graft.ops.TxLog.readManifest(tp, graft.ops.TxLog.currentVersion(tp))
+      .removes.size === 1)
+    assert(tracked(tp) === Seq(Seq("v"), Seq("v")))
+    // append + evolve in one commit
+    val te = declared("evolve")
+    kv.write.format("txlog").mode("append").save(te)
+    Seq((3L, 30L, "x")).toDF("k", "v", "w").write.format("txlog").mode("append")
+      .option("mergeSchema", "true").save(te)
+    assert(graft.ops.TxLog.readManifest(te, graft.ops.TxLog.currentVersion(te)).op ===
+      "append_evolve")
+    assert(tracked(te) === Seq(Seq("v"), Seq("v")))
+    // requested bloom: primary k carries it, v rides as an extra; and the
+    // append auto-compacts once two small segments stand
+    val tb = declared("bloom",
+      ", 'graft.autoCompact.enabled' = 'true', 'graft.autoCompact.minNumFiles' = '2'")
+    graft.ops.TxLog.write(kv, tb, WriteSpec(bloomCol = Some("k")))
+    assert(tracked(tb) === Seq(Seq("k", "v")))
+    assert(graft.ops.TxLog.liveFilesWithStats(tb).head._2.exists(_.bloomHex.nonEmpty))
+    graft.ops.TxLog.write(Seq((3L, 30L)).toDF("k", "v"), tb, WriteSpec(bloomCol = Some("k")))
+    assert(graft.ops.TxLog.liveFiles(tb).size === 1)
+    assert(graft.ops.TxLog.readManifest(tb, graft.ops.TxLog.currentVersion(tb)).op ===
+      "optimize")
   }
 
   test("SQL OPTIMIZE preserves a partitioned layout; fully-deleted chains disappear") {
     import spark.implicits._
     val t = java.nio.file.Files.createTempDirectory("txoptp-").resolve("t").toString
-    graft.ops.TxLog.appendPartitioned(
-      Seq((1L, "a", "x"), (3L, "a", "y")).toDF("k", "p", "q"), t, Seq("p", "q"))
-    graft.ops.TxLog.appendPartitioned(
-      Seq((2L, "a", "x"), (4L, "b", "x")).toDF("k", "p", "q"), t, Seq("p", "q"))
+    graft.ops.TxLog.write(
+      Seq((1L, "a", "x"), (3L, "a", "y")).toDF("k", "p", "q"), t,
+      WriteSpec(partitionBy = Seq("p", "q")))
+    graft.ops.TxLog.write(
+      Seq((2L, "a", "x"), (4L, "b", "x")).toDF("k", "p", "q"), t,
+      WriteSpec(partitionBy = Seq("p", "q")))
     graft.ops.TxLog.deleteWhere(spark, t, col("k") === 3L) // dooms a/y entirely
     val untouched = graft.ops.TxLog.liveFiles(t).filter(_.contains("p=b"))
     spark.sql(s"OPTIMIZE '$t'").collect()
@@ -938,10 +996,10 @@ class ExtensionsSpec extends SparkSpec {
     spark.sql(s"ALTER TABLE '$t2' SET TBLPROPERTIES " +
       "('graft.autoCompact.enabled' = 'true', " +
       "'graft.autoCompact.minNumFiles' = '2')")
-    graft.ops.TxLog.appendPartitioned(
-      Seq((1L, "a"), (2L, "b")).toDF("k", "p"), t2, Seq("p"))
-    graft.ops.TxLog.appendPartitioned(
-      Seq((3L, "a")).toDF("k", "p"), t2, Seq("p"))
+    graft.ops.TxLog.write(
+      Seq((1L, "a"), (2L, "b")).toDF("k", "p"), t2, WriteSpec(partitionBy = Seq("p")))
+    graft.ops.TxLog.write(
+      Seq((3L, "a")).toDF("k", "p"), t2, WriteSpec(partitionBy = Seq("p")))
     val segs = graft.ops.TxLog.liveFiles(t2)
     assert(segs.count(_.contains("p=a")) === 1, segs.mkString("\n")) // compacted
     assert(segs.count(_.contains("p=b")) === 1)
@@ -984,12 +1042,12 @@ class ExtensionsSpec extends SparkSpec {
     val mk = (r: Range) => r.map(i => (i.toLong, s"c${i % 8}_$i", 10L + i))
       .toDF("id", "code", "v")
     // v1: explicit pfx; v2: declare (validates v1); v3: omitted pfx fills
-    graft.ops.TxLog.appendPartitioned(
-      mk(0 until 16).withColumn("pfx", expr("substring(code, 1, 2)")),
-      t, Seq("pfx"))
+    graft.ops.TxLog.write(
+      mk(0 until 16).withColumn("pfx", expr("substring(code, 1, 2)")), t,
+      WriteSpec(partitionBy = Seq("pfx")))
     spark.sql(s"ALTER TABLE '$t' ALTER COLUMN pfx " +
       "SET GENERATED ALWAYS AS (substring(code, 1, 2))")
-    graft.ops.TxLog.appendPartitioned(mk(16 until 32), t, Seq("pfx"))
+    graft.ops.TxLog.write(mk(16 until 32), t, WriteSpec(partitionBy = Seq("pfx")))
     // a filter ONLY on the source column derives the partition values:
     // code in [c2, c3_z] → pfx in {c2, c3} → 4 of 16 leaf segments
     val got = spark.read.format("txlog").load(t)
@@ -1002,9 +1060,9 @@ class ExtensionsSpec extends SparkSpec {
     assert(got.getLong(1) === exp.map(10L + _).sum)
     // a write CARRYING a disagreeing generated value refuses
     val e = intercept[Exception] {
-      graft.ops.TxLog.appendPartitioned(
-        Seq((99L, "c1_99", 1L, "zz")).toDF("id", "code", "v", "pfx"),
-        t, Seq("pfx"))
+      graft.ops.TxLog.write(
+        Seq((99L, "c1_99", 1L, "zz")).toDF("id", "code", "v", "pfx"), t,
+        WriteSpec(partitionBy = Seq("pfx")))
     }
     assert(e.getMessage.contains("GENERATED"), e.getMessage)
     // declaring against a violating history refuses

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.ops.TxLog.WriteSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
@@ -299,8 +300,9 @@ class PropertiesSpec extends SparkSpec {
     // partition columns)
     val part = java.nio.file.Files.createTempDirectory("prop-scan-part-").resolve("t").toString
     // two loads: each leaf gets two segments with their own stats
-    Seq(segRows.take(2), segRows.drop(2)).foreach(r => TxLog.appendPartitionedWithStats(
-      r.flatten.toDF("k", "name", "p", "q"), part, Seq("p", "q"), Seq("k", "name")))
+    Seq(segRows.take(2), segRows.drop(2)).foreach(r => TxLog.write(
+      r.flatten.toDF("k", "name", "p", "q"), part,
+      WriteSpec(partitionBy = Seq("p", "q"), statsCols = Seq("k", "name"))))
     val written = segRows.flatten.toDF("k", "name", "p", "q")
     val partSet = Gen.option(Gen.someOf("a", "b", "x", "y", "z").map(_.toSet))
     val partPrunes = samples(Gen.zip(partSet, partSet, Gen.option(longGen),
@@ -314,10 +316,10 @@ class PropertiesSpec extends SparkSpec {
     // stats segment and a stat-less one; the snapshot is the reference
     val flat = java.nio.file.Files.createTempDirectory("prop-scan-flat-").resolve("t").toString
     val segs = segRows.map(_.map { case (k, n, _, _) => (k, n) }.toDF("k", "name"))
-    TxLog.appendWithBloom(segs(0), flat, "k")
-    TxLog.appendWithBloom(segs(1), flat, "k")
-    TxLog.appendWithBloom(segs(2), flat, "name")
-    TxLog.appendWithStats(segs(3), flat, Seq("k", "name"))
+    TxLog.write(segs(0), flat, WriteSpec(bloomCol = Some("k")))
+    TxLog.write(segs(1), flat, WriteSpec(bloomCol = Some("k")))
+    TxLog.write(segs(2), flat, WriteSpec(bloomCol = Some("name")))
+    TxLog.write(segs(3), flat, WriteSpec(statsCols = Seq("k", "name")))
     TxLog.append(segs(4), flat)
     // two cases of each shape, keys drawn mostly from the rows present
     val keys = Gen.oneOf(segRows.take(2).flatten.map(_._1) ++ Seq(41L, 45L))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.ops.TxLog.{Mark, ReplacePartition, WriteSpec}
 
 import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
 
@@ -161,10 +162,10 @@ class TxLogSpec extends SparkSpec {
 
   test("streaming append is exactly-once across batch replays") {
     val t = freshTable()
-    assert(TxLog.streamingAppend(rows(1L -> 10L), t, batchId = 0L) === 1L)
+    assert(TxLog.write(rows(1L -> 10L), t, WriteSpec(mark = Some(Mark.batch(0L)))) === 1L)
     // a restart replays the unacknowledged batch — the commit must SKIP
-    assert(TxLog.streamingAppend(rows(1L -> 10L), t, batchId = 0L) === -1L)
-    assert(TxLog.streamingAppend(rows(2L -> 20L), t, batchId = 1L) === 2L)
+    assert(TxLog.write(rows(1L -> 10L), t, WriteSpec(mark = Some(Mark.batch(0L)))) === -1L)
+    assert(TxLog.write(rows(2L -> 20L), t, WriteSpec(mark = Some(Mark.batch(1L)))) === 2L)
     assert(TxLog.maxCommittedBatch(t) === 1L)
     assert(TxLog.snapshot(spark, t).count() === 2L, "no duplicate rows from the replay")
     // the skipped replay staged nothing a reader can see; vacuum stays clean
@@ -173,9 +174,9 @@ class TxLogSpec extends SparkSpec {
 
   test("manifest stats prune segments; stat-less segments are kept conservatively") {
     val t = freshTable()
-    TxLog.appendWithStats(rows(1L -> 10L, 5L -> 50L), t, "k")    // k in [1,5]
-    TxLog.appendWithStats(rows(10L -> 100L, 15L -> 150L), t, "k") // k in [10,15]
-    TxLog.appendWithStats(rows(20L -> 200L), t, "k")              // k in [20,20]
+    TxLog.write(rows(1L -> 10L, 5L -> 50L), t, WriteSpec(statsCols = Seq("k")))    // k in [1,5]
+    TxLog.write(rows(10L -> 100L, 15L -> 150L), t, WriteSpec(statsCols = Seq("k"))) // k in [10,15]
+    TxLog.write(rows(20L -> 200L), t, WriteSpec(statsCols = Seq("k")))              // k in [20,20]
     // a range inside the middle segment reads exactly ONE of three
     val (df, scanned, total) = strictScan(t, longRange("k", 9L, 16L))
     assert((scanned, total) === (1, 3))
@@ -194,15 +195,15 @@ class TxLogSpec extends SparkSpec {
 
   private def freshTableWithOneStatSeg(): String = {
     val t = freshTable()
-    TxLog.appendWithStats(rows(1L -> 10L), t, "k")
+    TxLog.write(rows(1L -> 10L), t, WriteSpec(statsCols = Seq("k")))
     t
   }
 
   test("bloom stats prune point lookups across interleaved key ranges") {
     val t = freshTable()
     // modulus split: every segment's [min,max] covers the key space
-    TxLog.appendWithBloom(rows(1L -> 10L, 3L -> 30L, 5L -> 50L), t, "k")  // odd
-    TxLog.appendWithBloom(rows(2L -> 20L, 4L -> 40L, 6L -> 60L), t, "k")  // even
+    TxLog.write(rows(1L -> 10L, 3L -> 30L, 5L -> 50L), t, WriteSpec(bloomCol = Some("k")))  // odd
+    TxLog.write(rows(2L -> 20L, 4L -> 40L, 6L -> 60L), t, WriteSpec(bloomCol = Some("k")))  // even
     val (df, scanned, total) = strictScan(t, Prune.point("k", 4L))
     assert(total === 2)
     assert(scanned === 1, "bloom must prove 4 absent from the odd segment")
@@ -220,8 +221,8 @@ class TxLogSpec extends SparkSpec {
   test("clustered compaction makes an unprunable layout prunable, atomically") {
     val t = freshTable()
     // modulus layout: both segments span keys 1..6 — range stats prune nothing
-    TxLog.appendWithStats(rows(1L -> 10L, 3L -> 30L, 5L -> 50L), t, "k")
-    TxLog.appendWithStats(rows(2L -> 20L, 4L -> 40L, 6L -> 60L), t, "k")
+    TxLog.write(rows(1L -> 10L, 3L -> 30L, 5L -> 50L), t, WriteSpec(statsCols = Seq("k")))
+    TxLog.write(rows(2L -> 20L, 4L -> 40L, 6L -> 60L), t, WriteSpec(statsCols = Seq("k")))
     val (_, s0, t0) = strictScan(t, longRange("k", 1L, 3L))
     assert((s0, t0) === (2, 2), "interleaved ranges: nothing prunable")
     val v = TxLog.compactClustered(spark, t, "k", 2)
@@ -241,8 +242,8 @@ class TxLogSpec extends SparkSpec {
     // cast("long"); an int-keyed table must keep its segments findable.
     val t = freshTable()
     val intRows = Seq((1, 10L), (3, 30L)).toDF("k", "v") // k is IntegerType
-    TxLog.appendWithBloom(intRows, t, "k")
-    TxLog.appendWithBloom(Seq((2, 20L), (4, 40L)).toDF("k", "v"), t, "k")
+    TxLog.write(intRows, t, WriteSpec(bloomCol = Some("k")))
+    TxLog.write(Seq((2, 20L), (4, 40L)).toDF("k", "v"), t, WriteSpec(bloomCol = Some("k")))
     val (df, scanned, total) = strictScan(t, Prune.point("k", 3L))
     assert(total === 2 && scanned === 1, "even segment bloom-pruned, odd kept")
     assert(df.filter(col("k") === 3).count() === 1L,
@@ -274,12 +275,13 @@ class TxLogSpec extends SparkSpec {
     // check now re-runs inside the commit CAS loop; hammer it with
     // concurrent replays of the SAME batch id.
     val t = freshTable()
-    TxLog.streamingAppend(rows(0L -> 0L), t, batchId = 0L)
+    TxLog.write(rows(0L -> 0L), t, WriteSpec(mark = Some(Mark.batch(0L))))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     try {
       val results = (1 to 8).map { i =>
         pool.submit(new java.util.concurrent.Callable[Long] {
-          def call(): Long = TxLog.streamingAppend(rows(1L -> i.toLong), t, batchId = 1L)
+          def call(): Long = TxLog.write(rows(1L -> i.toLong), t,
+            WriteSpec(mark = Some(Mark.batch(1L))))
         })
       }.map(_.get())
       assert(results.count(_ > 0) === 1,
@@ -328,12 +330,12 @@ class TxLogSpec extends SparkSpec {
 
   test("idempotent txn: replays skip, apps are independent, zombie race lands once") {
     val t = freshTable()
-    assert(TxLog.idempotentAppend(rows(1L -> 10L), t, "etl", 1L) > 0)
+    assert(TxLog.write(rows(1L -> 10L), t, WriteSpec(mark = Some(Mark.txn("etl", 1L)))) > 0)
     // a replay of the SAME (appId, version) skips; stale versions skip too
-    assert(TxLog.idempotentAppend(rows(1L -> 99L), t, "etl", 1L) === -1L)
-    assert(TxLog.idempotentAppend(rows(1L -> 99L), t, "etl", 0L) === -1L)
+    assert(TxLog.write(rows(1L -> 99L), t, WriteSpec(mark = Some(Mark.txn("etl", 1L)))) === -1L)
+    assert(TxLog.write(rows(1L -> 99L), t, WriteSpec(mark = Some(Mark.txn("etl", 0L)))) === -1L)
     // a different app has its own version line
-    assert(TxLog.idempotentAppend(rows(2L -> 20L), t, "backfill", 1L) > 0)
+    assert(TxLog.write(rows(2L -> 20L), t, WriteSpec(mark = Some(Mark.txn("backfill", 1L)))) > 0)
     assert(TxLog.lastTxnVersion(t, "etl") === 1L)
     assert(TxLog.lastTxnVersion(t, "backfill") === 1L)
     assert(TxLog.lastTxnVersion(t, "nobody") === -1L)
@@ -342,14 +344,15 @@ class TxLogSpec extends SparkSpec {
     try {
       val results = (1 to 8).map { i =>
         pool.submit(new java.util.concurrent.Callable[Long] {
-          def call(): Long = TxLog.idempotentAppend(rows(3L -> i.toLong), t, "etl", 2L)
+          def call(): Long = TxLog.write(rows(3L -> i.toLong), t,
+            WriteSpec(mark = Some(Mark.txn("etl", 2L))))
         })
       }.map(_.get())
       assert(results.count(_ > 0) === 1, s"txn v2 must commit exactly once, got $results")
     } finally pool.shutdown()
     assert(TxLog.snapshot(spark, t).filter(col("k") === 3L).count() === 1L)
     intercept[IllegalArgumentException] {
-      TxLog.idempotentAppend(rows(9L -> 9L), t, "bad:app", 1L)
+      TxLog.write(rows(9L -> 9L), t, WriteSpec(mark = Some(Mark.txn("bad:app", 1L))))
     }
   }
 
@@ -493,11 +496,11 @@ class TxLogSpec extends SparkSpec {
 
   test("checkpointed snapshot resolution equals the full log fold") {
     val t = freshTable()
-    TxLog.appendWithStats(rows(1L -> 10L), t, "k")            // v1
-    TxLog.appendWithStats(rows(2L -> 20L), t, "k")            // v2
+    TxLog.write(rows(1L -> 10L), t, WriteSpec(statsCols = Seq("k")))            // v1
+    TxLog.write(rows(2L -> 20L), t, WriteSpec(statsCols = Seq("k")))            // v2
     TxLog.overwrite(rows(1L -> 11L, 2L -> 21L), t)            // v3
     assert(TxLog.checkpoint(t) === 3L)
-    TxLog.appendWithStats(rows(3L -> 30L), t, "k")            // v4 (post-ckpt)
+    TxLog.write(rows(3L -> 30L), t, WriteSpec(statsCols = Seq("k")))            // v4 (post-ckpt)
     // head, at-checkpoint, and pre-checkpoint resolutions all equal the
     // full fold of the same log with its checkpoint moved aside
     for (asOf <- Seq(None, Some(4L), Some(3L), Some(2L), Some(1L)))
@@ -522,7 +525,7 @@ class TxLogSpec extends SparkSpec {
     val f1 = land.resolve("f1").toString
     rows(4L -> 40L).write.parquet(f1)
     val t = freshTable()
-    TxLog.appendWithStats(rows(1L -> 10L, 2L -> 20L), t, "k")   // v1
+    TxLog.write(rows(1L -> 10L, 2L -> 20L), t, WriteSpec(statsCols = Seq("k")))   // v1
     TxLog.copyInto(spark, t, Seq(f1))                           // v2: ingest
     TxLog.setProperties(t, Map("owner" -> "ops", "tmp" -> "x",
       "graft.checkpointInterval" -> "100"))                     // v3
@@ -601,15 +604,15 @@ class TxLogSpec extends SparkSpec {
 
   test("stream and txn high-water marks survive log cleanup") {
     val t = freshTable()
-    assert(TxLog.streamingAppend(rows(1L -> 10L), t, 0L) === 1L)
-    assert(TxLog.idempotentAppend(rows(2L -> 20L), t, "app", 1L) === 2L)
+    assert(TxLog.write(rows(1L -> 10L), t, WriteSpec(mark = Some(Mark.batch(0L)))) === 1L)
+    assert(TxLog.write(rows(2L -> 20L), t, WriteSpec(mark = Some(Mark.txn("app", 1L)))) === 2L)
     TxLog.append(rows(3L -> 30L), t)                      // v3
     assert(TxLog.checkpoint(t) === 3L)
     TxLog.cleanupLog(t, Some(0L))
     assert(TxLog.logFloor(t) === 3L, "the manifests carrying the marks are gone")
     // replays of the committed batch and transaction still skip
-    assert(TxLog.streamingAppend(rows(1L -> 10L), t, 0L) === -1L)
-    assert(TxLog.idempotentAppend(rows(2L -> 20L), t, "app", 1L) === -1L)
+    assert(TxLog.write(rows(1L -> 10L), t, WriteSpec(mark = Some(Mark.batch(0L)))) === -1L)
+    assert(TxLog.write(rows(2L -> 20L), t, WriteSpec(mark = Some(Mark.txn("app", 1L)))) === -1L)
     assert(TxLog.snapshot(spark, t).count() === 3L)
     assert((TxLog.maxCommittedBatch(t), TxLog.lastTxnVersion(t, "app"),
       TxLog.maxCommittedMergeBatch(t)) === ((0L, 1L, -1L)))
@@ -634,6 +637,31 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.snapshot(spark, t).as[(Long, Long)].collect().toSeq === Seq(2L -> 20L))
     assert(TxLog.tableProperties(t) === Map("owner" -> "carol"))
     assert(TxLog.liveFiles(t).forall(p => Files.exists(Paths.get(p))))
+  }
+
+  test("a snapshot or time-travel frame over a warm table is built without a job") {
+    val t = freshTable()
+    TxLog.append(rows(1L -> 10L), t)
+    TxLog.append(rows(2L -> 20L), t)
+    TxLog.overwrite(rows(3L -> 30L), t)
+    def frames() =
+      TxLog.snapshot(spark, t) +: (1L to 3L).map(v => TxLog.snapshot(spark, t, Some(v)))
+    frames() // warm: each segment's footer schema is read once
+    val sc = spark.sparkContext
+    val group = "txlog-spec-no-job"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+    }
+    org.apache.spark.graftbench.ListenerDrain.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "TxLogSpec frame build")
+    val built =
+      try { val fs = frames(); org.apache.spark.graftbench.ListenerDrain.drain(sc); fs }
+      finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    assert(jobs.get === 0, "building the frames ran Spark jobs")
+    assert(built.map(_.count()) === Seq(1L, 1L, 2L, 1L))
   }
 
   test("deleteWhere is a pure metadata+marks commit: rows vanish, bytes stay") {
@@ -1141,8 +1169,10 @@ class TxLogSpec extends SparkSpec {
 
   test("manifest ANALYZE stats: row count and NDV bounds answer without a scan") {
     val t = freshTable()
-    TxLog.appendWithStats(rows(1L -> 10L, 2L -> 20L, 2L -> 21L), t, "k") // 3 rows, ndv 2
-    TxLog.appendWithStats(rows(3L -> 30L, 4L -> 40L), t, "k")            // 2 rows, ndv 2
+    TxLog.write(rows(1L -> 10L, 2L -> 20L, 2L -> 21L), t,
+      WriteSpec(statsCols = Seq("k"))) // 3 rows, ndv 2
+    TxLog.write(rows(3L -> 30L, 4L -> 40L), t,
+      WriteSpec(statsCols = Seq("k"))) // 2 rows, ndv 2
     assert(TxLog.tableRowCount(t) === Some(5L))
     // disjoint segments: [max, sum] brackets (and here the sum is exact)
     assert(TxLog.ndvBounds(t, "k") === Some((2L, 4L)))
@@ -1157,7 +1187,7 @@ class TxLogSpec extends SparkSpec {
     // a standing deletion vector makes segment counts an overcount —
     // the metadata answer must refuse, not lie
     val t3 = freshTable()
-    TxLog.appendWithStats(rows(1L -> 10L, 2L -> 20L), t3, "k")
+    TxLog.write(rows(1L -> 10L, 2L -> 20L), t3, WriteSpec(statsCols = Seq("k")))
     assert(TxLog.tableRowCount(t3) === Some(2L))
     TxLog.deleteWhere(spark, t3, col("k") === 1L)
     assert(TxLog.tableRowCount(t3).isEmpty && TxLog.ndvBounds(t3, "k").isEmpty,
@@ -1171,8 +1201,8 @@ class TxLogSpec extends SparkSpec {
     val t = freshTable()
     val df = spark.range(100000).selectExpr("id AS k", "id * 3 AS v")
     // interleaved keys: min/max stats are useless, only histograms answer
-    TxLog.appendWithStats(df.filter(col("k") % 2 === 0), t, "k")
-    TxLog.appendWithStats(df.filter(col("k") % 2 === 1), t, "k")
+    TxLog.write(df.filter(col("k") % 2 === 0), t, WriteSpec(statsCols = Seq("k")))
+    TxLog.write(df.filter(col("k") % 2 === 1), t, WriteSpec(statsCols = Seq("k")))
     // estimates from the manifest alone: true narrow = 100, true wide = 50k
     val estN = TxLog.estimatedRangeRows(t, "k", 0L, 99L).get
     assert(estN > 10 && estN < 1000, s"narrow estimate off: $estN (true 100)")
@@ -1217,8 +1247,8 @@ class TxLogSpec extends SparkSpec {
 
   test("ANALYZE stats survive maintenance rewrites (compact/optimize/zorder)") {
     val t = freshTable()
-    TxLog.appendWithStats(rows(1L -> 10L, 2L -> 20L, 2L -> 21L), t, "k")
-    TxLog.appendWithStats(rows(3L -> 30L, 4L -> 40L), t, "k")
+    TxLog.write(rows(1L -> 10L, 2L -> 20L, 2L -> 21L), t, WriteSpec(statsCols = Seq("k")))
+    TxLog.write(rows(3L -> 30L, 4L -> 40L), t, WriteSpec(statsCols = Seq("k")))
     TxLog.deleteWhere(spark, t, col("k") === 4L)
     assert(TxLog.tableRowCount(t).isEmpty, "DV in force: counts refuse")
     // compact materializes the DV AND re-records rows + min/max/NDV of
@@ -1230,7 +1260,7 @@ class TxLogSpec extends SparkSpec {
     // clustered OPTIMIZE: per-bucket rows+NDV, residual (null/negative
     // keys) carries rows-only sentinel stats — counted, never pruned
     val t2 = freshTable()
-    TxLog.appendWithStats(rows(1L -> 10L, 7L -> 70L, 13L -> 130L), t2, "k")
+    TxLog.write(rows(1L -> 10L, 7L -> 70L, 13L -> 130L), t2, WriteSpec(statsCols = Seq("k")))
     TxLog.append(Seq((Option.empty[java.lang.Long], 99L)).toDF("k", "v"), t2)
     TxLog.compactClustered(spark, t2, "k", 2)
     assert(TxLog.tableRowCount(t2) === Some(4L),
@@ -1240,8 +1270,8 @@ class TxLogSpec extends SparkSpec {
       "range prune still works post-optimize and keeps the residual conservatively")
     // z-order OPTIMIZE: per-segment rows recorded on the synthetic z stats
     val t3 = freshTable()
-    TxLog.appendWithStats(Seq((1L, 1L), (200L, 200L), (900L, 900L))
-      .toDF("k", "v"), t3, "k")
+    TxLog.write(Seq((1L, 1L), (200L, 200L), (900L, 900L))
+      .toDF("k", "v"), t3, WriteSpec(statsCols = Seq("k")))
     TxLog.compactZOrder(spark, t3, "k", "v", 2)
     assert(TxLog.tableRowCount(t3) === Some(3L),
       "rows survive z-order optimize")
@@ -1252,8 +1282,8 @@ class TxLogSpec extends SparkSpec {
     val df = spark.range(1000).selectExpr("id AS k",
       "CASE WHEN id % 3 = 0 THEN 'red' WHEN id % 3 = 1 THEN 'green' ELSE 'blue' END AS color")
     // two loads → two segments per color; ONE manifest per load
-    TxLog.appendPartitioned(df.filter(col("k") < 500), t, "color")
-    TxLog.appendPartitioned(df.filter(col("k") >= 500), t, "color")
+    TxLog.write(df.filter(col("k") < 500), t, WriteSpec(partitionBy = Seq("color")))
+    TxLog.write(df.filter(col("k") >= 500), t, WriteSpec(partitionBy = Seq("color")))
     assert(TxLog.currentVersion(t) === 2L, "each load is one atomic commit")
     assert(TxLog.partitionValues(t, "color") === Seq("blue", "green", "red"))
     // pruned read: 2 of 6 segments, rows exactly the color's slice
@@ -1292,13 +1322,13 @@ class TxLogSpec extends SparkSpec {
     val t = freshTable()
     val df = spark.range(300).selectExpr("id AS k",
       "CASE WHEN id % 3 = 0 THEN 'red' WHEN id % 3 = 1 THEN 'green' ELSE 'blue' END AS color")
-    TxLog.appendPartitioned(df, t, "color")
+    TxLog.write(df, t, WriteSpec(partitionBy = Seq("color")))
     val untouchedBefore = TxLog.tableState(t).segments.map(_._1)
       .filterNot(_.endsWith("color=green")).toSet
     // replace green wholesale with a 10-row reload
     val reload = spark.range(10)
       .selectExpr("id + 1000 AS k", "'green' AS color")
-    TxLog.overwritePartition(reload, t, "color", "green")
+    TxLog.write(reload, t, WriteSpec(ReplacePartition("color", "green")))
     val (greens, s1, t1) = strictScan(t, Prune(parts = Seq("color" -> Some(Set("green")))))
     assert((s1, t1) === ((1, 3)) && greens.count() === 10L)
     assert(greens.agg(org.apache.spark.sql.functions.min("k"))
@@ -1313,7 +1343,7 @@ class TxLogSpec extends SparkSpec {
     val bad = spark.range(2).selectExpr("id AS k",
       "CASE WHEN id = 0 THEN 'green' ELSE 'red' END AS color")
     val e = intercept[IllegalArgumentException](
-      TxLog.overwritePartition(bad, t, "color", "green"))
+      TxLog.write(bad, t, WriteSpec(ReplacePartition("color", "green"))))
     assert(e.getMessage.contains("other partitions"))
     // history: time travel still sees the original green rows
     assert(strictScan(t, Prune(parts = Seq("color" -> Some(Set("green")))),
@@ -1322,8 +1352,8 @@ class TxLogSpec extends SparkSpec {
 
   test("format(\"txlog\") relation: pushdown-driven manifest pruning + time travel") {
     val t = freshTable()
-    TxLog.appendWithStats(rows(1L -> 10L, 2L -> 20L), t, "k")
-    TxLog.appendWithStats(rows(100L -> 1000L, 200L -> 2000L), t, "k")
+    TxLog.write(rows(1L -> 10L, 2L -> 20L), t, WriteSpec(statsCols = Seq("k")))
+    TxLog.write(rows(100L -> 1000L, 200L -> 2000L), t, WriteSpec(statsCols = Seq("k")))
     // optimizer pushes k <= 2 into buildScan → manifest skips segment 2
     graft.sources.TxLogBatchSource.lastPrune = None
     val out = spark.read.format("txlog").load(t)
@@ -1392,8 +1422,8 @@ class TxLogSpec extends SparkSpec {
     val df1 = Seq((1L, 100L), (2L, 200L)).toDF("a", "b")
     val df2 = Seq((50L, 5000L), (60L, 6000L)).toDF("a", "b")
     val t = freshTable()
-    TxLog.appendWithStats(df1, t, Seq("a", "b"))
-    TxLog.appendWithStats(df2, t, Seq("a", "b"))
+    TxLog.write(df1, t, WriteSpec(statsCols = Seq("a", "b")))
+    TxLog.write(df2, t, WriteSpec(statsCols = Seq("a", "b")))
     // stats JSON round-trips both columns
     val st = TxLog.liveFilesWithStats(t).flatMap(_._2)
     assert(st.forall(_.trackedCols === Seq("a", "b")))
@@ -1421,7 +1451,7 @@ class TxLogSpec extends SparkSpec {
 
   test("lenient pruned scan: an all-pruning predicate yields empty, not an error") {
     val t = freshTable()
-    TxLog.appendWithStats(rows(1L -> 10L, 2L -> 20L), t, "k")
+    TxLog.write(rows(1L -> 10L, 2L -> 20L), t, WriteSpec(statsCols = Seq("k")))
     val sc = TxLog.scan(spark, t, longRange("k", 1000L, 2000L))
     val (rel, scanned, total) = (sc.orEmpty, sc.scanned, sc.total)
     assert((scanned, total) === (0, 1))
@@ -1596,7 +1626,7 @@ class TxLogSpec extends SparkSpec {
 
   test("analyze MERGES per-segment stats: prior columns and blooms survive (r13 ADVICE)") {
     val t = freshTable()
-    TxLog.appendWithBloom(rows(1L -> 10L, 2L -> 20L), t, "k") // v1: bloom on k
+    TxLog.write(rows(1L -> 10L, 2L -> 20L), t, WriteSpec(bloomCol = Some("k"))) // v1: bloom on k
     // v2: analyze a DIFFERENT column — must not clobber k's record
     TxLog.analyze(spark, t, Seq("v"), force = true)
     val s = TxLog.liveFilesWithStats(t).flatMap(_._2).head
@@ -1653,8 +1683,8 @@ class TxLogSpec extends SparkSpec {
 
   test("count(*) over format(\"txlog\") answers from the manifest alone") {
     val t = freshTable()
-    TxLog.appendWithStats(rows(1L -> 10L, 2L -> 20L), t, "k")
-    TxLog.appendWithStats(rows(3L -> 30L), t, "k")
+    TxLog.write(rows(1L -> 10L, 2L -> 20L), t, WriteSpec(statsCols = Seq("k")))
+    TxLog.write(rows(3L -> 30L), t, WriteSpec(statsCols = Seq("k")))
     graft.plans.ManifestCountRule.lastAnswered = None
     val df = spark.read.format("txlog").load(t)
     assert(df.count() === 3L)
@@ -1791,7 +1821,7 @@ class TxLogSpec extends SparkSpec {
       .toDF("k", "lang")
     // stats-recording write so the manifest GROUP BY below can answer
     // (plain appendPartitioned records no per-leaf row counts)
-    TxLog.appendPartitionedWithStats(df, t, Seq("lang"), Seq("k"))
+    TxLog.write(df, t, WriteSpec(partitionBy = Seq("lang"), statsCols = Seq("k")))
     // the format read returns the LOGICAL values, null included,
     // under a nullable partition column
     val rel = spark.read.format("txlog").load(t)
@@ -1819,7 +1849,7 @@ class TxLogSpec extends SparkSpec {
     assert(graft.plans.ManifestCountRule.lastAnswered.exists(_._1 == t),
       "the partition-wise manifest aggregate must answer, with NULL intact")
     // dynamic partition overwrite matches the ESCAPED directory
-    TxLog.overwritePartition(Seq((10L, "a:b")).toDF("k", "lang"), t, "lang", "a:b")
+    TxLog.write(Seq((10L, "a:b")).toDF("k", "lang"), t, WriteSpec(ReplacePartition("lang", "a:b")))
     assert(spark.read.format("txlog").load(t)
       .filter(col("lang") === "a:b").select("k").as[Long].collect().toSeq ===
       Seq(10L))
@@ -1832,7 +1862,8 @@ class TxLogSpec extends SparkSpec {
 
   test("evolved partitioned table: relation schema has no duplicate columns") {
     val t = freshTable()
-    TxLog.appendPartitioned(Seq((1L, "en"), (2L, "fr")).toDF("k", "lang"), t, "lang")
+    TxLog.write(Seq((1L, "en"), (2L, "fr")).toDF("k", "lang"), t,
+      WriteSpec(partitionBy = Seq("lang")))
     // evolve records a schema that NAMES the partition column (the shape
     // validateWrite requires for partitioned appends after evolution)
     TxLog.evolve(t, org.apache.spark.sql.types.StructType(Seq(
@@ -1906,8 +1937,8 @@ class TxLogSpec extends SparkSpec {
 
   test("string stats: strMin/strMax round-trip the manifest and prune string ranges") {
     val t = freshTable()
-    TxLog.appendWithStats(strRows("apple" -> 1L, "cherry" -> 2L), t, "name")
-    TxLog.appendWithStats(strRows("mango" -> 3L, "peach" -> 4L), t, "name")
+    TxLog.write(strRows("apple" -> 1L, "cherry" -> 2L), t, WriteSpec(statsCols = Seq("name")))
+    TxLog.write(strRows("mango" -> 3L, "peach" -> 4L), t, WriteSpec(statsCols = Seq("name")))
     // recorded bounds are the exact lexicographic min/max per segment
     val per = TxLog.liveFilesWithStats(t).flatMap(_._2)
       .flatMap(_.statsFor("name")).sortBy(_.strMin)
@@ -1927,8 +1958,8 @@ class TxLogSpec extends SparkSpec {
 
   test("format(\"txlog\") pushes string range predicates into segment skipping") {
     val t = freshTable()
-    TxLog.appendWithStats(strRows("alpha" -> 1L, "delta" -> 2L), t, "name")
-    TxLog.appendWithStats(strRows("omega" -> 3L, "sigma" -> 4L), t, "name")
+    TxLog.write(strRows("alpha" -> 1L, "delta" -> 2L), t, WriteSpec(statsCols = Seq("name")))
+    TxLog.write(strRows("omega" -> 3L, "sigma" -> 4L), t, WriteSpec(statsCols = Seq("name")))
     val got = spark.read.format("txlog").load(t)
       .filter(col("name") >= "n" && col("name") < "p")
       .select("name").as[String].collect().toSeq
@@ -1939,8 +1970,8 @@ class TxLogSpec extends SparkSpec {
 
   test("shallow clone: one manifest, shared segments, independent divergence") {
     val src = freshTable()
-    TxLog.appendWithStats(rows(1L -> 10L, 2L -> 20L), src, "k")
-    TxLog.appendWithStats(rows(3L -> 30L, 4L -> 40L), src, "k")
+    TxLog.write(rows(1L -> 10L, 2L -> 20L), src, WriteSpec(statsCols = Seq("k")))
+    TxLog.write(rows(3L -> 30L, 4L -> 40L), src, WriteSpec(statsCols = Seq("k")))
     val dst = freshTable()
     assert(TxLog.cloneShallow(spark, src, dst) === 1L)
     // zero data bytes moved: the clone's first commit REFERENCES the
@@ -2178,8 +2209,8 @@ class TxLogSpec extends SparkSpec {
   test("string-key bloom: point lookup prunes interleaved segments; long probe never consults it") {
     val t = freshTable()
     // interleaved name ranges: both segments span a..z, only the bloom prunes
-    TxLog.appendWithBloom(strRows("alpha" -> 1L, "zeta" -> 2L), t, "name")
-    TxLog.appendWithBloom(strRows("beta" -> 3L, "zulu" -> 4L), t, "name")
+    TxLog.write(strRows("alpha" -> 1L, "zeta" -> 2L), t, WriteSpec(bloomCol = Some("name")))
+    TxLog.write(strRows("beta" -> 3L, "zulu" -> 4L), t, WriteSpec(bloomCol = Some("name")))
     val per = TxLog.liveFilesWithStats(t).flatMap(_._2)
     assert(per.forall(s => s.isString && s.bloomHex.nonEmpty))
     val (df, scanned, total) = strictScan(t, Prune.point("name", "beta"))
@@ -2240,8 +2271,8 @@ class TxLogSpec extends SparkSpec {
     val pua = ""
     val emojiLo = "😀" // U+1F600
     val emojiHi = "😈" // U+1F608
-    TxLog.appendWithStats(strRows(s"${pua}a" -> 1L, s"${pua}z" -> 2L), t, "name")
-    TxLog.appendWithStats(strRows(emojiLo -> 3L, emojiHi -> 4L), t, "name")
+    TxLog.write(strRows(s"${pua}a" -> 1L, s"${pua}z" -> 2L), t, WriteSpec(statsCols = Seq("name")))
+    TxLog.write(strRows(emojiLo -> 3L, emojiHi -> 4L), t, WriteSpec(statsCols = Seq("name")))
     // the table-wide MAX folds under UTF8 order: the emoji, not the PUA
     // string a Java fold would pick
     assert(TxLog.tableMinMaxString(t, "name") === Some((s"${pua}a", emojiHi)))

@@ -293,4 +293,15 @@ class SourcesSpec extends SparkSpec {
     assert(prunedSize > 0 && prunedSize < fullSize,
       s"pruned scan must report a smaller size: $prunedSize vs $fullSize")
   }
+
+  test("a Tables path rewritten in-process is read under its new schema") {
+    val dir = Files.createTempDirectory("graft-tables-").toString
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$dir/orders.parquet")
+    assert(graft.Tables.orders(spark, dir).columns.toSeq == Seq("k", "v"))
+    Seq((2L, "b", 3.5)).toDF("k", "v", "w").write.mode("overwrite")
+      .parquet(s"$dir/orders.parquet")
+    val again = graft.Tables.orders(spark, dir)
+    assert(again.columns.toSeq == Seq("k", "v", "w"))
+    assert(again.as[(Long, String, Double)].collect().toSeq == Seq((2L, "b", 3.5)))
+  }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.ops.TxLog.{Mark, WriteSpec}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
@@ -561,7 +562,7 @@ class StreamingSpec extends SparkSpec {
     val q = mem.toDF().select(col("event_id"), col("user_id"))
       .writeStream.outputMode("append")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
-        graft.ops.TxLog.streamingAppend(df, t, id); ()
+        graft.ops.TxLog.write(df, t, WriteSpec(mark = Some(Mark.batch(id)))); ()
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     try q.processAllAvailable() finally q.stop()
@@ -569,8 +570,8 @@ class StreamingSpec extends SparkSpec {
     assert(graft.ops.TxLog.maxCommittedBatch(t) >= 0L)
     // simulate the post-restart replay of the last batch: skipped, no dups
     val last = graft.ops.TxLog.maxCommittedBatch(t)
-    val replay = graft.ops.TxLog.streamingAppend(
-      Seq((1L, 1L)).toDF("event_id", "user_id"), t, last)
+    val replay = graft.ops.TxLog.write(
+      Seq((1L, 1L)).toDF("event_id", "user_id"), t, WriteSpec(mark = Some(Mark.batch(last))))
     assert(replay === -1L && graft.ops.TxLog.snapshot(spark, t).count() === 2L)
   }
 

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.ops.TxLog
+import graft.ops.TxLog.{Mark, WriteSpec}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
@@ -206,7 +207,7 @@ class TxLogStreamSpec extends SparkSpec {
     assert(TxLog.snapshot(spark, dst).as[(Long, Long)].collect().toMap
       === Map(1L -> 10L, 2L -> 20L, 3L -> 30L))
     // a zombie replay of an already-committed batch id skips
-    assert(TxLog.streamingAppend(rows(9L -> 90L), dst, 1L) === -1L)
+    assert(TxLog.write(rows(9L -> 90L), dst, WriteSpec(mark = Some(Mark.batch(1L)))) === -1L)
     assert(TxLog.snapshot(spark, dst).count() === 3L)
   }
 
