@@ -16,11 +16,24 @@ object Sinks {
     * partition value is written by one task — one file of a useful size
     * per directory instead of one small file per task and value — while
     * AQE still splits a skewed value across tasks.
+    *
+    * A `file://` write goes through [[graft.sources.ForklessLocalFileSystem]]:
+    * without libhadoop, Hadoop's local filesystem forks a `chmod` process
+    * for every file and directory it creates, most of them on executor
+    * task threads. The filesystem class is a per-write option, like the
+    * committer of [[writeDirectObjectStore]], so it reaches the driver's
+    * and the tasks' configuration of this write only; the cache is off for
+    * it so that no other write is handed the cached instance. Other
+    * schemes ignore the `fs.file.*` keys.
     */
-  def writePartitionedParquet(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    if (partitionCols.isEmpty) df.write.mode(SaveMode.Overwrite).parquet(path)
-    else df.hint("rebalance", partitionCols.map(col): _*)
-      .write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(path)
+  def writePartitionedParquet(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
+    val clustered =
+      if (partitionCols.isEmpty) df else df.hint("rebalance", partitionCols.map(col): _*)
+    val w = clustered.write.mode(SaveMode.Overwrite)
+      .option("fs.file.impl", classOf[graft.sources.ForklessLocalFileSystem].getName)
+      .option("fs.file.impl.disable.cache", "true")
+    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(path)
+  }
 
   /** Dynamic partition overwrite: replace ONLY the partitions present in
     * `df`, leaving every other partition directory untouched — the

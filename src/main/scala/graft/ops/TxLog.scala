@@ -2197,6 +2197,14 @@ object TxLog {
     val base =
       if (cols.isEmpty) Map.empty[String, SegStats]
       else stagedSegStats(spark, p, cols)
+    withBloom(spark, p, base, bloom)
+  }
+
+  /** `base` with segment `p`'s Bloom filter on `bloom` added: the bloom
+    * column's record is enriched, or created, and promoted to primary.
+    */
+  private def withBloom(spark: SparkSession, p: String, base: Map[String, SegStats],
+                        bloom: Option[String]): Map[String, SegStats] =
     bloom.flatMap(k => bloomStat(spark, p, k)) match {
       case None => base
       case Some(b) =>
@@ -2211,7 +2219,6 @@ object TxLog {
             Map(p -> primary.copy(extra = others))
         }
     }
-  }
 
   private def bloomMightContain(hex: String, positions: Seq[Long]): Boolean =
     positions.forall { pos =>
@@ -3209,34 +3216,37 @@ object TxLog {
   }
 
   /** ANALYZE stats for a maintenance-rewritten segment: re-record the row
-    * count (+ min/max/NDV of the tracked column when the pre-rewrite live
-    * set agrees on one that still exists) so [[tableRowCount]] /
-    * [[ndvBounds]] keep answering after OPTIMIZE instead of silently
-    * dying on the first stats-less rewrite (ADVICE r11). Rows-only
-    * entries use the sentinel col `""` — every pruning consumer keeps a
-    * segment whose stats col differs from the requested one, so a
-    * sentinel entry is never used to skip anything.
+    * count and every column the pre-rewrite live set tracked that still
+    * exists, with min/max/NDV and the equi-depth histogram, plus the
+    * Bloom filter on the column that carried one. So [[tableRowCount]] /
+    * [[ndvBounds]], [[estimatedRangeRows]] and bloom point lookups answer
+    * the same after OPTIMIZE as before it (ADVICE r11). Rows-only entries
+    * use the sentinel col `""` — every pruning consumer keeps a segment
+    * whose stats col differs from the requested one, so a sentinel entry
+    * is never used to skip anything.
     */
   private def rewriteStats(spark: SparkSession, p: String, st: LogState,
                            op: String): Map[String, SegStats] = {
     import org.apache.spark.sql.functions.{count, lit}
-    val tracked = st.segments.flatMap(_._2).flatMap(_.trackedCols).distinct
+    val prior = st.segments.flatMap(_._2)
+    val tracked = prior.flatMap(_.trackedCols).distinct
     val seg = spark.read.parquet(p)
     val present = tracked.filter(seg.columns.contains)
-    if (present.isEmpty) Map(p -> rowsOnlyStats(seg.count()))
-    else {
-      // every pre-rewrite tracked column re-recorded in ONE agg pass —
-      // OPTIMIZE must not shrink the multi-column skipping surface
-      val (aggs0, readStats) = statsAggPlan(seg.schema, present, withHist = false)
-      val aggs = count(lit(1)) +: aggs0
-      val r = seg.agg(aggs.head, aggs.tail: _*).head()
-      val n = r.getLong(0)
-      val per = readStats(r, 1, n)
-      per match {
-        case Seq() => Map(p -> rowsOnlyStats(n))
-        case h +: t => Map(p -> h.copy(extra = t))
+    val base =
+      if (present.isEmpty) Map(p -> rowsOnlyStats(seg.count()))
+      else {
+        // every pre-rewrite tracked column re-recorded in ONE agg pass —
+        // OPTIMIZE must not shrink the multi-column skipping surface
+        val (aggs0, readStats) = statsAggPlan(seg.schema, present, withHist = true)
+        val aggs = count(lit(1)) +: aggs0
+        val r = seg.agg(aggs.head, aggs.tail: _*).head()
+        val n = r.getLong(0)
+        readStats(r, 1, n) match {
+          case Seq() => Map(p -> rowsOnlyStats(n))
+          case h +: t => Map(p -> h.copy(extra = t))
+        }
       }
-    }
+    withBloom(spark, p, base, prior.find(_.bloomHex.nonEmpty).map(_.col))
   }
 
   private def rowsOnlyStats(rows: Long): SegStats =

@@ -2,10 +2,10 @@ package graft.pipeline
 
 import graft.ops.{Conform, Schemas, Sinks}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 
-import java.util.concurrent.{CompletableFuture, CompletionException, LinkedBlockingQueue,
-  ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentLinkedQueue,
+  LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 import scala.util.{Failure, Success, Try}
 
 /** End-to-end lake build (`/root/reference/scripts/pyspark.py:432-475`):
@@ -17,6 +17,13 @@ import scala.util.{Failure, Success, Try}
   * a small dataflow:
   *   - the four parses run at the same time, and `extractTimeAndFact`
   *     runs once asylum, visitor and worker are built;
+  *   - asylum, visitor and worker each feed three writes (their own, time
+  *     and fact), so each is wrapped in a lazy `localCheckpoint`: the
+  *     first write to need a partition computes and stores it, and the
+  *     other two read the stored block. Each source's scans, dedupe
+  *     shuffle and code-table broadcasts run once per build, not three
+  *     times. Once every write has settled, on success and on failure,
+  *     `build` unpersists those RDDs itself (the `GraphOps` idiom);
   *   - each output's write starts as soon as its frame exists. It is ONE
   *     job: the gate ([[Conform.quality]]: column order, non-empty) is
   *     observed during the write, and the reported row count is the
@@ -68,11 +75,22 @@ object Lake {
     // uncompleted on a fatal one (StackOverflowError), and the wait below
     // would never return
     def async[T](body: => T) = CompletableFuture.supplyAsync[T](() => body, pool)
+    // asylum, visitor and worker each feed three writes: stored once, read
+    // thrice. Each parsed frame is kept beside its checkpoint until the end:
+    // a task that started before the checkpoint cut the lineage still
+    // reports to that plan's metrics, which must not be collected by then.
+    val checkpoints = new ConcurrentLinkedQueue[(DataFrame, DataFrame)]()
+    def shared(parse: (SparkSession, String) => DataFrame) = async {
+      val parsed = parse(spark, inputPath)
+      val stored = parsed.localCheckpoint(eager = false)
+      checkpoints.add(parsed -> stored)
+      stored
+    }
     try {
       val country = async(Pipelines.parseClimate(spark, inputPath))
-      val asylum = async(Pipelines.parseAsylum(spark, inputPath))
-      val visitor = async(Pipelines.parseVisitor(spark, inputPath))
-      val worker = async(Pipelines.parseWorker(spark, inputPath))
+      val asylum = shared(Pipelines.parseAsylum)
+      val visitor = shared(Pipelines.parseVisitor)
+      val worker = shared(Pipelines.parseWorker)
       val timeFact = CompletableFuture.allOf(asylum, visitor, worker).thenApplyAsync(
         (_: Void) => Pipelines.extractTimeAndFact(asylum.join(), visitor.join(), worker.join()),
         pool)
@@ -108,6 +126,11 @@ object Lake {
     } finally {
       pool.shutdown()
       pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      // no write reads them any more: release the stored blocks now, not
+      // whenever a GC lets the ContextCleaner find them
+      checkpoints.forEach { case (_, stored) =>
+        GraftSqlBridge.checkpointRdd(stored).foreach(_.unpersist(blocking = false))
+      }
     }
   }
 }

@@ -2,6 +2,10 @@ package graft.ops
 
 import graft.SparkSpec
 
+import java.nio.file.{Files, Path}
+import java.nio.file.attribute.PosixFilePermissions
+import scala.jdk.CollectionConverters._
+
 class SinksSpec extends SparkSpec {
   import spark.implicits._
 
@@ -33,5 +37,37 @@ class SinksSpec extends SparkSpec {
       .as[(Long, String, Long)].collect().sorted.toSeq
     // A rows replaced; N and R untouched (static overwrite would drop them)
     assert(got == Seq((1L, "A", 11L), (2L, "N", 20L), (3L, "R", 30L), (4L, "A", 44L)))
+  }
+
+  test("a partitioned local write starts no process and sets the stock permissions") {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import org.apache.spark.sql.functions.col
+    val df = Seq((1L, "A"), (2L, "N"), (3L, "A")).toDF("id", "flag")
+    val (ours, stock) =
+      (Files.createTempDirectory("graft-sink-ours-"), Files.createTempDirectory("graft-sink-stock-"))
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try {
+      Sinks.writePartitionedParquet(df, ours.toString, Seq("flag"))
+      // the same write through the session's stock file:// filesystem
+      df.hint("rebalance", col("flag")).write.mode("overwrite")
+        .partitionBy("flag").parquet(stock.toString)
+    } finally rec.stop()
+    val dump = Files.createTempFile("graft-sink-", ".jfr")
+    try rec.dump(dump) finally rec.close()
+    val commands = RecordingFile.readAllEvents(dump).asScala.map(_.getString("command")).toSeq
+    assert(!commands.exists(_.contains(ours.toString)), s"forked for the sink write: $commands")
+    // the recording does see forks where the stock filesystem makes them
+    if (!org.apache.hadoop.io.nativeio.NativeIO.isAvailable)
+      assert(commands.exists(_.contains(stock.toString)), "no fork recorded for the stock write")
+    // every file and directory, part-file ids aside, with its permissions
+    def perms(root: Path): Map[String, String] =
+      Files.walk(root).iterator.asScala.map { p =>
+        root.relativize(p).toString.replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "ID") ->
+          PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+      }.toMap
+    assert(perms(ours).size > 4 && perms(ours) == perms(stock))
   }
 }

@@ -218,6 +218,38 @@ class TxLogSpec extends SparkSpec {
     assert((scanned2, total2) === (2, 3))
   }
 
+  test("compaction keeps Bloom filters and histograms: compact, compactSmall, auto-compact") {
+    // both segments span 1..20, so only a Bloom filter proves 5 absent
+    def bloomTable(props: Map[String, String] = Map.empty): String = {
+      val t = freshTable()
+      // the declared stats column records k's histogram beside its bloom
+      TxLog.setProperties(t, props + ("graft.statsColumns" -> "k"))
+      val spec = WriteSpec(bloomCol = Some("k"))
+      TxLog.write(rows(1L -> 10L, 20L -> 200L), t, spec)
+      TxLog.write(rows(2L -> 20L, 19L -> 190L), t, spec)
+      t
+    }
+    def lookups(t: String, segments: Int): Unit = {
+      val (df, scanned, total) = strictScan(t, Prune.point("k", 19L))
+      assert((scanned, total) === (1, segments))
+      assert(df.filter(col("k") === 19L).as[(Long, Long)].collect().toSeq === Seq((19L, 190L)))
+      intercept[IllegalArgumentException](strictScan(t, Prune.point("k", 5L)))
+      assert(TxLog.estimatedRangeRows(t, "k", 0L, 99L).exists(e => math.abs(e - 4.0) < 1e-9))
+    }
+    val c = bloomTable()
+    lookups(c, 2)
+    TxLog.compact(spark, c)
+    lookups(c, 1)
+    val s = bloomTable()
+    TxLog.compactSmall(spark, s, Long.MaxValue, minNumFiles = 2L)
+    lookups(s, 1)
+    // the second append compacts the two small segments on its own
+    val a = bloomTable(Map("graft.autoCompact.enabled" -> "true",
+      "graft.autoCompact.minNumFiles" -> "2"))
+    assert(TxLog.readManifest(a, TxLog.currentVersion(a)).op === "optimize")
+    lookups(a, 1)
+  }
+
   test("clustered compaction makes an unprunable layout prunable, atomically") {
     val t = freshTable()
     // modulus layout: both segments span keys 1..6 — range stats prune nothing

@@ -326,4 +326,41 @@ class LakeSpec extends SparkSpec {
       }
     }
   }
+
+  test("each shared source is scanned by one execution per build; nothing stays persisted") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    counts // the good lake is in place
+    val helper = new AdaptiveSparkPlanHelper {}
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[Set[String]]()
+    def record(qe: QueryExecution): Unit = scans.add(helper.collectWithSubqueries(qe.executedPlan) {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.getName)
+    }.flatten.toSet)
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = record(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = record(qe)
+    }
+    val sc = spark.sparkContext
+    def drain(): Unit = org.apache.spark.graftbench.ListenerDrain.drain(sc)
+    def persisted: Set[Int] = sc.getPersistentRDDs.keySet.toSet
+    val shared = Seq("sas_data", "i94cit_and_i94res.json", "i94port.json", "i94visa.json")
+    val headerOnly = fixturesWith("refugee_and_migrant_data/asylum.csv",
+      "country,year,num_arrivals,num_accepted_affirmitavely,num_accepted_defensively\n")
+    for (good <- Seq(true, false)) {
+      drain()
+      scans.clear()
+      val before = persisted
+      spark.listenerManager.register(listener)
+      try {
+        val o = Files.createTempDirectory("graft-lake-scans").toString
+        if (good) Lake.build(spark, fixtures.toString, o)
+        else intercept[IllegalArgumentException](Lake.build(spark, headerOnly.toString, o))
+        drain()
+      } finally spark.listenerManager.unregister(listener)
+      val perSource = shared.map(f => f -> scans.asScala.count(_.contains(f))).toMap
+      assert(perSource.values.forall(_ == 1), s"executions scanning each source: $perSource")
+      val left = persisted -- before
+      assert(left.isEmpty, s"RDDs still persisted after the build: $left")
+    }
+  }
 }
