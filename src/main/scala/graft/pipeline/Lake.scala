@@ -18,12 +18,14 @@ import scala.util.{Failure, Success, Try}
   *   - the four parses run at the same time, and `extractTimeAndFact`
   *     runs once asylum, visitor and worker are built;
   *   - asylum, visitor and worker each feed three writes (their own, time
-  *     and fact), so each is wrapped in a lazy `localCheckpoint`: the
-  *     first write to need a partition computes and stores it, and the
-  *     other two read the stored block. Each source's scans, dedupe
-  *     shuffle and code-table broadcasts run once per build, not three
-  *     times. Once every write has settled, on success and on failure,
-  *     `build` unpersists those RDDs itself (the `GraphOps` idiom);
+  *     and fact), so each is stored by an eager `localCheckpoint` before
+  *     any write reads it. Each source's scans, dedupe shuffle and
+  *     code-table broadcasts run once per build, not three times, and no
+  *     write's task waits on a block that another write's task is still
+  *     computing: what a write runs does not depend on which write reaches
+  *     a partition first. Once every write has settled, on success and on
+  *     failure, `build` unpersists those RDDs itself (the `GraphOps` idiom)
+  *     and waits for the blocks to go, so none outlives the call;
   *   - each output's write starts as soon as its frame exists. It is ONE
   *     job: the gate ([[Conform.quality]]: column order, non-empty) is
   *     observed during the write, and the reported row count is the
@@ -75,15 +77,12 @@ object Lake {
     // uncompleted on a fatal one (StackOverflowError), and the wait below
     // would never return
     def async[T](body: => T) = CompletableFuture.supplyAsync[T](() => body, pool)
-    // asylum, visitor and worker each feed three writes: stored once, read
-    // thrice. Each parsed frame is kept beside its checkpoint until the end:
-    // a task that started before the checkpoint cut the lineage still
-    // reports to that plan's metrics, which must not be collected by then.
-    val checkpoints = new ConcurrentLinkedQueue[(DataFrame, DataFrame)]()
+    // asylum, visitor and worker each feed three writes: stored once, in
+    // one job, before any of the three starts; read thrice
+    val checkpoints = new ConcurrentLinkedQueue[DataFrame]()
     def shared(parse: (SparkSession, String) => DataFrame) = async {
-      val parsed = parse(spark, inputPath)
-      val stored = parsed.localCheckpoint(eager = false)
-      checkpoints.add(parsed -> stored)
+      val stored = parse(spark, inputPath).localCheckpoint(eager = true)
+      checkpoints.add(stored)
       stored
     }
     try {
@@ -127,9 +126,10 @@ object Lake {
       pool.shutdown()
       pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
       // no write reads them any more: release the stored blocks now, not
-      // whenever a GC lets the ContextCleaner find them
-      checkpoints.forEach { case (_, stored) =>
-        GraftSqlBridge.checkpointRdd(stored).foreach(_.unpersist(blocking = false))
+      // whenever a GC lets the ContextCleaner find them, and before the
+      // call returns, not while the caller's next job runs
+      checkpoints.forEach { stored =>
+        GraftSqlBridge.checkpointRdd(stored).foreach(_.unpersist(blocking = true))
       }
     }
   }
