@@ -6,17 +6,20 @@ import org.apache.spark.sql.types.StructType
 import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 import java.nio.file.{Files, Paths}
 
-/** The parquet footer schema of one path — a TxLog segment or a
-  * [[graft.Tables]] table — read once and then served from memory.
-  * Inferring it costs a Spark job plus a listing, and without the memo
-  * every snapshot, time-travel build and table reference paid it again.
+/** The parquet footer schema of one path — a TxLog segment, a
+  * [[graft.Tables]] table or a scratch artifact — read once and then
+  * served from memory. It is the schema `spark.read.parquet(path)` infers,
+  * read from one footer on the driver
+  * ([[org.apache.spark.sql.GraftSqlBridge.parquetSchema]]), so no Spark
+  * job runs; the memo spares the listing and the footer read on every
+  * snapshot, time-travel build and table reference.
   *
   * An entry is guarded by the path's file key (inode) and mtime, re-read
   * on every lookup (one `stat`): a path deleted and rewritten in place,
   * even with a new schema, gets a new inode or mtime and is inferred
   * afresh. At most [[MaxEntries]] schemas are held, least recently used
   * evicted first. A path that cannot be stat'ed (gone, or not a local
-  * path) is inferred uncached, failing exactly as Spark's own read does.
+  * path) is read uncached.
   */
 object FooterSchemas {
   private final case class Entry(fileKey: AnyRef, mtime: FileTime, schema: StructType)
@@ -34,11 +37,12 @@ object FooterSchemas {
     val attrs =
       try Some(Files.readAttributes(Paths.get(path), classOf[BasicFileAttributes]))
       catch { case _: java.io.IOException | _: java.nio.file.InvalidPathException => None }
-    attrs.fold(spark.read.parquet(path).schema) { a =>
+    def read = org.apache.spark.sql.GraftSqlBridge.parquetSchema(spark, path)
+    attrs.fold(read) { a =>
       Option(memo.get(path))
         .filter(e => e.fileKey == a.fileKey && e.mtime == a.lastModifiedTime)
         .fold {
-          val s = spark.read.parquet(path).schema
+          val s = read
           memo.put(path, Entry(a.fileKey, a.lastModifiedTime, s))
           s
         }(_.schema)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Sinks and format round-trips.
@@ -20,20 +20,25 @@ object Sinks {
     * A `file://` write goes through [[graft.sources.ForklessLocalFileSystem]]:
     * without libhadoop, Hadoop's local filesystem forks a `chmod` process
     * for every file and directory it creates, most of them on executor
-    * task threads. The filesystem class is a per-write option, like the
-    * committer of [[writeDirectObjectStore]], so it reaches the driver's
-    * and the tasks' configuration of this write only; the cache is off for
-    * it so that no other write is handed the cached instance. Other
-    * schemes ignore the `fs.file.*` keys.
+    * task threads (see [[forkless]]).
     */
   def writePartitionedParquet(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
     val clustered =
       if (partitionCols.isEmpty) df else df.hint("rebalance", partitionCols.map(col): _*)
-    val w = clustered.write.mode(SaveMode.Overwrite)
-      .option("fs.file.impl", classOf[graft.sources.ForklessLocalFileSystem].getName)
-      .option("fs.file.impl.disable.cache", "true")
+    val w = forkless(clustered.write.mode(SaveMode.Overwrite))
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(path)
   }
+
+  /** `w` with [[graft.sources.ForklessLocalFileSystem]] as its `file://`
+    * filesystem. The class is a per-write option, like the committer of
+    * [[writeDirectObjectStore]], so it reaches the driver's and the tasks'
+    * configuration of this write only; the cache is off for it so that no
+    * other write is handed the cached instance. Other schemes ignore the
+    * `fs.file.*` keys.
+    */
+  def forkless[T](w: DataFrameWriter[T]): DataFrameWriter[T] =
+    w.option("fs.file.impl", classOf[graft.sources.ForklessLocalFileSystem].getName)
+      .option("fs.file.impl.disable.cache", "true")
 
   /** Dynamic partition overwrite: replace ONLY the partitions present in
     * `df`, leaving every other partition directory untouched — the
@@ -113,29 +118,18 @@ object Sinks {
     spark.read.text(scratch)
   }
 
-  /** Bucketed managed-table write: rows hash-partitioned into `buckets`
-    * files per partition by `bucketCol` and sorted within buckets. Two
-    * tables bucketed the same way join WITHOUT a shuffle (co-located
-    * join) — the pre-partitioning strategy for repeatedly-joined 100 TB
-    * fact tables. Requires saveAsTable (bucket metadata lives in the
-    * catalog, not the parquet files).
+  /** Bucketed table write: rows hash-partitioned into `buckets` files per
+    * partition by `bucketCol` and sorted within buckets. Two tables
+    * bucketed the same way join WITHOUT a shuffle (co-located join) — the
+    * pre-partitioning strategy for repeatedly-joined 100 TB fact tables.
+    * Requires saveAsTable (bucket metadata lives in the catalog, not the
+    * parquet files). The table is external, its files at `path`, which
+    * must not exist.
     */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String, buckets: Int): Unit = {
-    val spark = df.sparkSession
-    // a managed table's location can survive a previous JVM whose
-    // in-memory catalog is gone; drop both the entry and the directory or
-    // saveAsTable fails with LOCATION_ALREADY_EXISTS
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val loc = new org.apache.hadoop.fs.Path(s"$warehouse/$table")
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)
-  }
+  def writeBucketed(df: DataFrame, table: String, path: String,
+                    bucketCol: String, buckets: Int): Unit =
+    df.write.bucketBy(buckets, bucketCol).sortBy(bucketCol)
+      .format("parquet").option("path", path).saveAsTable(table)
 
   /** Round-trip a frame through CSV (header, schema re-inferred on read) —
     * exercises the reference's CSV ingest path (pyspark.py:177,195,265,277)

@@ -663,18 +663,34 @@ object TxLog {
                      asOf: Option[Long] = None): Option[org.apache.spark.sql.types.StructType] =
     stateAt(table, asOf).schema
 
-  /** The schema a snapshot at `rv` reads under: the recorded one, else the
-    * first live segment's footer — the baseline every schema change
-    * (evolve, rename, drop) is decided against.
+  /** The schema a snapshot at `rv` reads under ([[readSchema]]) — the
+    * baseline every schema change (evolve, rename, drop) is decided
+    * against.
     */
   private def schemaAt(spark: SparkSession, table: String, rv: Long,
                        what: String): org.apache.spark.sql.types.StructType = {
     val st = stateAt(table, Some(rv))
-    st.schema.getOrElse {
-      require(st.live.nonEmpty, s"$what empty table $table needs a base schema")
-      FooterSchemas.of(spark, st.live.head)
-    }
+    require(st.schema.nonEmpty || st.live.nonEmpty, s"$what empty table $table needs a base schema")
+    readSchema(spark, st)
   }
+
+  /** The schema of a table that records none: every column of the live
+    * segments' footers, in first-seen order. Writes to such a table are
+    * not checked against any schema, so an append may omit a column or
+    * carry a new one, and any segment, the first included, may be the
+    * narrow one. A column that two segments type differently fails here.
+    */
+  private def footerUnion(spark: SparkSession,
+                          files: Seq[String]): org.apache.spark.sql.types.StructType =
+    files.map(FooterSchemas.of(spark, _)).reduce { (acc, seg) =>
+      seg.fields.foldLeft(acc) { (u, f) =>
+        u.find(_.name == f.name).fold(u.add(f)) { g =>
+          require(g.dataType == f.dataType, s"segments type column '${f.name}' as both " +
+            s"${g.dataType.sql} and ${f.dataType.sql}: evolve the table to one schema")
+          u
+        }
+      }
+    }
 
   /** SCHEMA EVOLUTION as a metadata commit: record `newSchema` in the
     * manifest so every subsequent read resolves old segments under it —
@@ -878,28 +894,23 @@ object TxLog {
       if (r.newName == nn && r.segs.contains(file)) r.oldName else nn
     })
 
+  /** `files` read under `logical`, the table's schema (never inferred:
+    * Spark would infer from whichever footer it happens to list first),
+    * each segment through its physical column names.
+    */
   private def readFiles(spark: SparkSession, files: Seq[String],
-                        schemaOpt: Option[org.apache.spark.sql.types.StructType],
-                        renames: Seq[Rename] = Seq.empty,
+                        logical: org.apache.spark.sql.types.StructType,
+                        renames: Seq[Rename],
                         coords: Option[(String, String)] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col => fcol}
     def coordCols(fp: String, ri: String) = Seq(
       fcol("_metadata.file_path").as(fp), fcol("_metadata.row_index").as(ri))
     if (renames.isEmpty) {
-      val base = schemaOpt match {
-        case Some(s) => spark.read.schema(s).parquet(files: _*)
-        // no recorded schema: the first segment's footer defines it. A
-        // later append may omit a column, and Spark would otherwise infer
-        // from whichever footer it happens to list first. FooterSchemas
-        // reads each segment's footer once.
-        case None => spark.read.schema(FooterSchemas.of(spark, files.head)).parquet(files: _*)
-      }
+      val base = spark.read.schema(logical).parquet(files: _*)
       coords.fold(base) { case (fp, ri) =>
         base.select(fcol("*") +: coordCols(fp, ri): _*)
       }
     } else {
-      val logical = schemaOpt.getOrElse(throw new IllegalStateException(
-        "rename-mapped read requires the recorded schema (rename commits always record one)"))
       def physicalName(file: String, logicalName: String): String =
         renames.reverseIterator.foldLeft(logicalName) { (n, r) =>
           if (r.newName == n && r.segs.contains(file)) r.oldName else n
@@ -940,7 +951,7 @@ object TxLog {
     */
   private def readSegments(spark: SparkSession, files: Seq[String],
                            st: LogState): DataFrame =
-    if (st.dv.isEmpty) readFiles(spark, files, st.schema, st.renames)
+    if (st.dv.isEmpty) readFiles(spark, files, readSchema(spark, st), st.renames)
     else {
       import org.apache.spark.sql.functions.{col => fcol}
       val (rel, fp, ri) = readSegmentsWithCoords(spark, files, st)
@@ -960,13 +971,18 @@ object TxLog {
     */
   private def readSegmentsWithCoords(spark: SparkSession, files: Seq[String],
                                      st: LogState): (DataFrame, String, String) = {
-    val schemaOpt = st.schema
-    val logicalNames = schemaOpt.getOrElse(FooterSchemas.of(spark, files.head))
-      .fieldNames.toSet
-    val fp = freshName(logicalNames, "__fp")
-    val ri = freshName(logicalNames + fp, "__ri")
-    (readFiles(spark, files, schemaOpt, st.renames, Some((fp, ri))), fp, ri)
+    val schema = readSchema(spark, st)
+    val fp = freshName(schema.fieldNames.toSet, "__fp")
+    val ri = freshName(schema.fieldNames.toSet + fp, "__ri")
+    (readFiles(spark, files, schema, st.renames, Some((fp, ri))), fp, ri)
   }
+
+  /** The schema every read of `st`'s segments, or of a subset of them,
+    * is under: the recorded one (every rename commit records one), else
+    * [[footerUnion]] of all live segments.
+    */
+  private def readSchema(spark: SparkSession, st: LogState): org.apache.spark.sql.types.StructType =
+    st.schema.getOrElse(footerUnion(spark, st.live))
 
   /** Helper-column name guaranteed absent from `taken`: the preferred
     * name, suffixed with '_' until free. Deterministic, and collision-
@@ -1516,9 +1532,14 @@ object TxLog {
   def stage(df: DataFrame, table: String): String = {
     init(table)
     val p = s"$table/data/${java.util.UUID.randomUUID}"
-    df.write.mode(SaveMode.ErrorIfExists).parquet(p)
+    segmentWriter(df).parquet(p)
     p
   }
+
+  /** The writer of every staged segment: a fresh directory (it must not
+    * exist), written without forking a process per file (Sinks.forkless).
+    */
+  private def segmentWriter(df: DataFrame) = Sinks.forkless(df.write.mode(SaveMode.ErrorIfExists))
 
   /** Publish a commit built against `readVersion`. CAS loop on the
     * version file; see the object doc for the conflict rules.
@@ -2408,7 +2429,7 @@ object TxLog {
     require(partCols.distinct.size == partCols.size,
       s"duplicate partition columns: ${partCols.mkString(", ")}")
     val base = s"$table/data/${java.util.UUID.randomUUID}"
-    df.write.mode(SaveMode.ErrorIfExists).partitionBy(partCols: _*).parquet(base)
+    segmentWriter(df).partitionBy(partCols: _*).parquet(base)
     // descend one partition level per column: level i's dirs all match
     // `partCols(i)=`; whatever survives the full descent is a leaf
     val leaves = partCols.foldLeft(List(Paths.get(base))) { (dirs, pc) =>
@@ -2896,7 +2917,7 @@ object TxLog {
     val part = visible.drop(fp, ri)
     // re-stage under the SAME escaped leaf so the layout survives
     val p = s"$table/data/${java.util.UUID.randomUUID}/$escDir"
-    part.write.mode(SaveMode.ErrorIfExists).parquet(p)
+    segmentWriter(part).parquet(p)
     // marks on untouched segments survive as the replacement chain;
     // coordinates record the scan's URI form, so match by containment —
     // WITH a trailing '/' boundary: bare contains(t) also matches a
@@ -2970,7 +2991,7 @@ object TxLog {
             fcol(ri) === fcol(dri), "left_anti")
         }
       val p = s"$base/$c"
-      visible.drop(fp, ri).write.mode(SaveMode.ErrorIfExists).parquet(p)
+      segmentWriter(visible.drop(fp, ri)).parquet(p)
       p
     }
     // a fully-deleted chain rewrites to zero rows — it disappears
@@ -3164,7 +3185,7 @@ object TxLog {
         val p =
           if (leaf.isEmpty) s"$table/data/${java.util.UUID.randomUUID}"
           else s"$table/data/${java.util.UUID.randomUUID}/$leaf"
-        visible.write.mode(SaveMode.ErrorIfExists).parquet(p)
+        segmentWriter(visible).parquet(p)
         p
     }
     // the stats pass also counts rows: a group whose rows were ALL

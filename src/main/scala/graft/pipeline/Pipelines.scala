@@ -1,9 +1,9 @@
 package graft.pipeline
 
-import graft.ops.{Cleaning, Conform, Schemas}
+import graft.ops.{Cleaning, Conform, FooterSchemas, Schemas}
 import graft.sources.SasLabels
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 
 /** The reference's four per-source parse pipelines re-expressed as pure
   * DataFrame compositions (`/root/reference/scripts/pyspark.py:170-303`),
@@ -53,15 +53,24 @@ object Pipelines {
       val (joined, id) = (new JoinedRow, new GenericInternalRow(1))
       it.map { case (row, idx) => id.setLong(0, idx); joined(row, id): InternalRow }
     }
-    org.apache.spark.sql.GraftSqlBridge.internalDf(sorted.sparkSession, rows, schema)
+    GraftSqlBridge.internalDf(sorted.sparkSession, rows, schema)
+  }
+
+  /** A CSV read with a header line and every column a string: the schema
+    * Spark would infer, named from the header line on the driver, so
+    * building the plan runs no inference job.
+    */
+  private def readCsv(spark: SparkSession, path: String): DataFrame = {
+    val options = Map("header" -> "true")
+    spark.read.options(options)
+      .schema(GraftSqlBridge.csvHeaderSchema(spark, path, options)).csv(path)
   }
 
   /** Asylum CSVs (pre-summed per country/year, FIXTURES.md B1;
     * pyspark.py:170-183).
     */
   def parseAsylum(spark: SparkSession, input: String): DataFrame = {
-    val raw = spark.read.option("header", true)
-      .csv(s"$input/refugee_and_migrant_data/*.csv")
+    val raw = readCsv(spark, s"$input/refugee_and_migrant_data/*.csv")
       .dropDuplicates()
     // total order over ALL columns → ids reproducible even when rows tie
     // on (country, year); assigned via the distributed zip-index path
@@ -77,8 +86,7 @@ object Pipelines {
     * double so ANSI mode doesn't reject the fraction.
     */
   def parseClimate(spark: SparkSession, input: String): DataFrame = {
-    val df = spark.read.option("header", true)
-      .csv(s"$input/climate_data/*.csv")
+    val df = readCsv(spark, s"$input/climate_data/*.csv")
       .selectExpr("dt", "AverageTemperature as avg_temperature",
         "AverageTemperatureUncertainty as avg_temperature_uncertainty",
         "Country as country")
@@ -113,7 +121,8 @@ object Pipelines {
       "municipality as port_of_entry_municipality", "region as port_of_entry_region")
     val visa = lookupJson("i94visa").selectExpr("code", "type as visa_category")
 
-    val base = spark.read.parquet(s"$input/i94_visitor_data/sas_data")
+    val sas = s"$input/i94_visitor_data/sas_data"
+    val base = spark.read.schema(FooterSchemas.of(spark, sas)).parquet(sas)
       .selectExpr("cicid as id", "i94res", "i94port", "arrdate", "i94visa",
         "i94addr as visiting_state", "depdate", "visatype as visa_type")
       .dropDuplicates()
@@ -146,8 +155,7 @@ object Pipelines {
     * state, row-alignment-gated), unioned after typed null-fill.
     */
   def parseWorker(spark: SparkSession, input: String): DataFrame = {
-    val df1 = spark.read.option("header", true)
-      .csv(s"$input/legal_immigrant_data/h1b_kaggle.csv")
+    val df1 = readCsv(spark, s"$input/legal_immigrant_data/h1b_kaggle.csv")
       .selectExpr("CASE_STATUS as case_status", "EMPLOYER_NAME as employer_name",
         "YEAR as arrival_year", "WORKSITE as worksite")
       .withColumn("visa_class", lit("H-1B"))
@@ -157,8 +165,7 @@ object Pipelines {
       .drop("split", "worksite")
 
     val validStates = Cleaning.stateAbbrev.values.toSeq.filterNot(_ == "DC")
-    val df2raw = spark.read.option("header", true)
-      .csv(s"$input/legal_immigrant_data/H-1B_Disclosure_Data_FY17.csv")
+    val df2raw = readCsv(spark, s"$input/legal_immigrant_data/H-1B_Disclosure_Data_FY17.csv")
       .selectExpr("CASE_STATUS as case_status", "VISA_CLASS as visa_class",
         "EMPLOYMENT_START_DATE as employment_start_date",
         "EMPLOYMENT_END_DATE as employment_end_date",

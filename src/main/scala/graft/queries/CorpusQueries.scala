@@ -115,13 +115,9 @@ object CorpusQueries extends QueryPack {
     * immutable segment list once (a rebuild overwriting the index can
     * never tear a pinned search; TxLogSpec pins that property).
     */
-  private val annTables =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, String)]()
   private def annTxTables(s: SparkSession, d: String): (String, String) =
-    annTables.computeIfAbsent((s, d), _ => {
-      val tag = (d.hashCode & 0xffffff).toHexString
-      val tc = s"${graft.ops.Scratch.base}/anncorpus_$tag"
-      val ti = s"${graft.ops.Scratch.base}/annindex_$tag"
+    Scratch.once("ann", s, d) { t =>
+      val (tc, ti) = (t + "_corpus", t + "_index")
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding").as("v"))
       graft.ops.TxLog.append(e.filter(col("vec_id") >= 8 && col("vec_id") < 300), tc)
       graft.ops.TxLog.append(e.filter(col("vec_id") >= 300), tc)
@@ -130,7 +126,7 @@ object CorpusQueries extends QueryPack {
       graft.ops.TxLog.append(cent0, ti)
       graft.ops.TxLog.overwrite(kmTrainedCentroids(s, d), ti)
       (tc, ti)
-    })
+    }
 
   /** INCREMENTAL ANN index maintenance fixture (VERDICT r10 item 4):
     * three TxLog tables — corpus, index (centroids), CODES. The index is
@@ -143,14 +139,9 @@ object CorpusQueries extends QueryPack {
     * union-of-code-appends ≡ full reassignment of the union corpus — the
     * oracle computes that full rebuild closed-form.
     */
-  private val annIncr = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String, String)]()
   private def annIncrTables(s: SparkSession, d: String): (String, String, String) =
-    annIncr.computeIfAbsent((s, d), _ => {
-      val tag = (d.hashCode & 0xffffff).toHexString
-      val tc = s"${graft.ops.Scratch.base}/annicorpus_$tag"
-      val ti = s"${graft.ops.Scratch.base}/anniindex_$tag"
-      val tk = s"${graft.ops.Scratch.base}/annicodes_$tag"
+    Scratch.once("anni", s, d) { t =>
+      val (tc, ti, tk) = (t + "_corpus", t + "_index", t + "_codes")
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding").as("v"))
       val base = e.filter(col("vec_id") >= 8 && col("vec_id") < 300)
       val batch = e.filter(col("vec_id") >= 300)
@@ -167,7 +158,7 @@ object CorpusQueries extends QueryPack {
       graft.ops.TxLog.append(
         kmAssign(batch, committed).select(col("vec_id"), col("bucket")), tk) // codes v2
       (tc, ti, tk)
-    })
+    }
 
   /** Per-doc BPE tokenization result (shared by bpe_encode and
     * pack_token_bins_bpe): whitespace vs BPE token counts + the token-id
@@ -274,7 +265,7 @@ object CorpusQueries extends QueryPack {
     // shuffle of 1 row per partition per iteration; the feature scan
     // re-reads the materialized (y, x1, x2) projection, never raw text.
     "quality_logreg" -> ((s, d) => {
-      val f = graft.ops.Scratch.materialize("logregfeat", s, d) {
+      val f = Scratch.materialize("logregfeat", s, d) {
         Tables.documents(s, d).select(
           expr("CASE WHEN instr(text, 'spark') > 0 THEN 1.0 ELSE 0.0 END").as("y"),
           expr("least(length(text), 2000) / 2000.0").as("x1"),

@@ -82,10 +82,6 @@ object LlmQueries extends QueryPack {
     * query and the corpus-clean pipeline read the same labels.
     */
   private def ccLabels(s: SparkSession, d: String): DataFrame = {
-    // bands materialize BEFORE the cc_labels build: Scratch.materialize
-    // inside another's mapping fn is a nested computeIfAbsent on one map
-    // ("Recursive update" when the keys share a bin — found via the r9
-    // full-suite flake)
     val b = minhashBands(s, d)
     Scratch.materialize("cc_labels", s, d) {
       val pairs = b.as("x").join(b.as("y"),

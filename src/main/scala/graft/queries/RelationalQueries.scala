@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.ops.{Cleaning, Conform, Sinks}
+import graft.ops.{Cleaning, Conform, Scratch, Sinks}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StructType}
 
@@ -16,10 +16,6 @@ object RelationalQueries extends QueryPack {
 
   private def scratch(name: String): String =
     s"${sys.props("java.io.tmpdir")}/graft-scratch-$runNonce/$name"
-
-  // bucketed tables written once per (session, dir) — see join_bucketed
-  private val bucketedTables = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), (String, String)]
 
   val queries: Map[String, Q] = Map(
     // §7.1 flagship: the reference's code-lookup join heart
@@ -660,23 +656,19 @@ object RelationalQueries extends QueryPack {
     // pre-partitioning answer for fact tables joined on the same key
     // every day: pay the shuffle once at write time, never at read time.
     "join_bucketed" -> ((s, d) => {
-      // Table names carry the run nonce (a concurrent Verify + Bench pair
-      // otherwise races on DROP TABLE + dir delete while the other JVM
-      // reads — same fix as the scratch dirs above) plus a dir
-      // discriminator, and the WRITE runs once per (session, dir): the
-      // whole point of bucketing is paying the shuffle at write time once,
-      // so re-running the query (bench reps) must not re-pay it.
-      val (liT, ordT) = bucketedTables.getOrElseUpdate((s, d), {
-        val tag = s"${runNonce}_${(d.hashCode & 0xffffff).toHexString}"
-        val (liT, ordT) = (s"graft_li_bkt_$tag", s"graft_ord_bkt_$tag")
+      // The WRITE runs once per (session, dir), a Scratch registry entry:
+      // the whole point of bucketing is paying the shuffle at write time
+      // once, so re-running the query (bench reps) must not re-pay it.
+      val (liT, ordT) = Scratch.once("bkt", s, d) { t =>
+        val (li, ord) = (t + "_lineitem", t + "_orders")
         Sinks.writeBucketed(Tables.lineitem(s, d)
           .select("l_orderkey", "l_quantity", "l_returnflag"),
-          liT, "l_orderkey", 8)
+          Scratch.tableName(li), li, "l_orderkey", 8)
         Sinks.writeBucketed(Tables.orders(s, d)
           .select("o_orderkey", "o_orderstatus"),
-          ordT, "o_orderkey", 8)
-        (liT, ordT)
-      })
+          Scratch.tableName(ord), ord, "o_orderkey", 8)
+        (Scratch.tableName(li), Scratch.tableName(ord))
+      }
       // merge hint: at test scale AQE would broadcast the small side and
       // bypass the bucket demo; at fact-table scale SMJ is the plan
       // anyway — and with matching buckets it needs NO exchange.

@@ -4,7 +4,7 @@ import graft.Tables
 import graft.ops.{Scratch, TextOps}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Round-5 depth pack: the remaining "would you trust this at 100 TB"
   * operator families — dynamic partition pruning, distributed graph
@@ -26,15 +26,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object ScaleQueries extends QueryPack {
 
-  private val runNonce: String = java.util.UUID.randomUUID.toString.take(8)
-
-  // partitioned fact + dim table written once per (session, sf-dir)
-  private val dppTables = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, String)]
-  // two-schema dataset written once per (session, sf-dir)
-  private val mergeSchemaDirs = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   /** Orders partitioned by o_orderpriority plus a tiny priority-dimension
     * table, both written to scratch once per (session, dir). The dim MUST
     * be an on-disk scan (not a literal LocalRelation): Catalyst's
@@ -44,18 +35,15 @@ object ScaleQueries extends QueryPack {
     */
   private def dppPair(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     import s.implicits._
-    val (factPath, dimPath) = dppTables.getOrElseUpdate((s, d), {
-      val base = s"${sys.props("java.io.tmpdir")}/graft-scratch-$runNonce"
-      val f = s"$base/dpp_orders_${(d.hashCode & 0xffffff).toHexString}"
-      val dm = s"$base/dpp_pridim_${(d.hashCode & 0xffffff).toHexString}"
-      Tables.orders(s, d).write.mode(SaveMode.Overwrite)
-        .partitionBy("o_orderpriority").parquet(f)
+    val (factPath, dimPath) = Scratch.once("dpp", s, d) { t =>
+      val (f, dm) = (t + "_orders", t + "_pridim")
+      Tables.orders(s, d).write.partitionBy("o_orderpriority").parquet(f)
       Seq(("1-URGENT", "hot"), ("2-HIGH", "hot"), ("3-MEDIUM", "warm"),
         ("4-NOT SPECIFIED", "cold"), ("5-LOW", "cold"))
         .toDF("pri", "urgency_class")
-        .write.mode(SaveMode.Overwrite).parquet(dm)
+        .write.parquet(dm)
       (f, dm)
-    })
+    }
     (s.read.parquet(factPath), s.read.parquet(dimPath))
   }
 
@@ -337,56 +325,36 @@ object ScaleQueries extends QueryPack {
 
     // TPC-H Q21 (suppliers who kept orders waiting): the hardest
     // correlation shape — one EXISTS and one NOT EXISTS against the same
-    // fact with inequality on the correlated key. Both decorrelate to
-    // hash joins on l_orderkey (semi, then anti) with the supplier
-    // inequality and lateness as residuals; lateness is the same >60-day
-    // ship-after-order proxy on both engines.
+    // fact with inequality on the correlated key. Lateness is the same
+    // >60-day ship-after-order proxy on both engines.
     "tpch_q21" -> ((s, d) => {
       val l = Tables.lineitem(s, d)
       val o = Tables.orders(s, d).filter(col("o_orderstatus") === "F")
       val sup = Tables.supplier(s, d)
-      // r16 (guide §2.4/§3): the EXISTS/NOT-EXISTS pair used to run as a
-      // left-semi plus a left-anti join, re-scanning and re-shuffling the
-      // fact twice on top of the base pass (3 lineitem scans, 2 extra
-      // exchanges). Both quantifiers collapse into ONE per-order
-      // aggregate because the base row's own supplier is always a member
-      // of the sets being tested:
-      //   - EXISTS (other supplier in the order): base's supplier is in
-      //     the order's supplier set, so "another exists" ⇔
-      //     countDistinct(supplier) ≥ 2;
-      //   - NOT EXISTS (other LATE supplier): the base filter makes the
-      //     base row itself late, so its supplier is in the late set, and
-      //     "no other late" ⇔ countDistinct(late supplier) = 1.
-      // Exact same rows out (oracle keeps the EXISTS spelling; verified
-      // value-identical at sf0.001/sf0.01). One fact aggregation replaces
-      // the two join passes: lineitem scans drop 3 → 2, and ONE
-      // fact-sized re-shuffle disappears — a SCALE property (it
-      // materializes when lineitem no longer fits broadcast; at sf0.1 the
-      // before-plan ran all-broadcast, so the after-plan's SMJ of the
-      // base branch makes local wall time parity, plans/r16/tpch_q21_*,
-      // VERDICT r16 "what's wrong" #1). The lineitem-scan count is the
-      // pinned regression guard (PlanShapeSpec).
-      val lo = l.join(o, l("l_orderkey") === o("o_orderkey"))
-      // The NOT-EXISTS encoding (nlate == 1) is only sound if the base
-      // row itself counts as late, i.e. this predicate is THE SAME
-      // expression in the aggregate and in the base filter — one shared
-      // Column so the two sides cannot drift (ADVICE r16).
+      // The EXISTS/NOT-EXISTS pair folds into ONE per-order aggregate,
+      // because the base row's own supplier is always a member of the
+      // sets being tested:
+      //   - EXISTS (other supplier in the order): the base row's supplier
+      //     is in the order's supplier set, so "another exists" ⇔ the set
+      //     has ≥ 2 members;
+      //   - NOT EXISTS (other LATE supplier): the base row is itself late,
+      //     so its supplier is in the late set, and "no other late" ⇔ the
+      //     late set has exactly 1 member.
+      // The late lines of a surviving order are then exactly its base
+      // rows, all of the one late supplier: the list of late suppliers
+      // explodes into them. collect_set/collect_list skip nulls, as the
+      // `<>` of EXISTS never matches a null supplier. The fact is scanned
+      // once (PlanShapeSpec pins it); the oracle keeps the EXISTS
+      // spelling.
       val isLate = l("l_shipdate") > o("o_orderdate") + expr("INTERVAL 60 DAYS")
-      // distinct (order, supplier) pairs first — a plain hash aggregate
-      // with map-side partials (no Expand: two countDistincts with
-      // different filters would plan a 2-way Expand over the fact) —
-      // then per-order counts over the tiny pair table.
-      val perOrder = lo
-        .groupBy(l("l_orderkey").as("p_ok"), l("l_suppkey").as("p_sk"))
-        .agg(max(when(isLate, 1L).otherwise(0L)).as("is_late"))
-        .groupBy(col("p_ok"))
-        .agg(count(lit(1)).as("nsupp"), sum("is_late").as("nlate"))
-      val base = lo
-        .filter(isLate)
-        .join(sup, l("l_suppkey") === sup("s_suppkey"))
-        .select(col("l_orderkey").as("b_ok"), col("s_name"))
-      base.join(perOrder, col("b_ok") === col("p_ok"))
-        .filter(col("nsupp") >= 2 && col("nlate") === 1)
+      l.join(o, l("l_orderkey") === o("o_orderkey"))
+        .groupBy(l("l_orderkey"))
+        .agg(collect_set(l("l_suppkey")).as("supps"),
+          collect_set(when(isLate, l("l_suppkey"))).as("late_supps"),
+          collect_list(when(isLate, l("l_suppkey"))).as("late_lines"))
+        .filter(size(col("supps")) >= 2 && size(col("late_supps")) === 1)
+        .select(explode(col("late_lines")).as("b_sk"))
+        .join(sup, col("b_sk") === sup("s_suppkey"))
         .groupBy(col("s_name"))
         .agg(count(lit(1)).as("numwait"))
         .orderBy(col("numwait").desc, col("s_name"))
@@ -723,11 +691,6 @@ object ScaleQueries extends QueryPack {
     // shuffles total, never an iteration-until-convergence driver loop.
     // The community histogram is the modularity-pipeline input.
     "graph_lpa_communities" -> ((s, d) => {
-      // materialize the edge artifact BEFORE entering the lpa_sym build:
-      // a Scratch.materialize call inside another's mapping function is a
-      // nested ConcurrentHashMap.computeIfAbsent on the same map, which
-      // throws "Recursive update" when the two keys share a hash bin
-      // (caught as a flaky full-suite failure in r9)
       val e = copurchaseEdges(s, d)
       val sym = Scratch.materialize("lpa_sym", s, d) {
         e.select(col("u"), col("v"))
@@ -1066,18 +1029,17 @@ object ScaleQueries extends QueryPack {
     // pipeline hits. The aggregate proves old rows carry NULL and new rows
     // carry data. Footer merging is distributed; nothing driver-side.
     "scan_merge_schema" -> ((s, d) => {
-      val base = mergeSchemaDirs.getOrElseUpdate((s, d), {
-        val b = s"${sys.props("java.io.tmpdir")}/graft-scratch-$runNonce/merge_schema_${(d.hashCode & 0xffffff).toHexString}"
+      val base = Scratch.once("merge_schema", s, d) { b =>
         val o = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderstatus"),
             expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
         o.filter(col("o_orderkey") % 2 === 0)
           .select("o_orderkey", "price_cents")
-          .write.mode(SaveMode.Overwrite).parquet(s"$b/batch=v1")
+          .write.parquet(s"$b/batch=v1")
         o.filter(col("o_orderkey") % 2 === 1)
-          .write.mode(SaveMode.Overwrite).parquet(s"$b/batch=v2")
+          .write.parquet(s"$b/batch=v2")
         b
-      })
+      }
       s.read.option("mergeSchema", "true").parquet(base)
         .groupBy("batch")
         .agg(count(lit(1)).as("n"),

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.ops.{Cleaning, TextOps}
+import graft.ops.{Cleaning, Scratch, TextOps}
 import graft.ops.TxLog.{Mark, ReplacePartition, WriteSpec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -37,14 +37,11 @@ object StatsQueries extends QueryPack {
 
   /** TxLog demo table, built ONCE per (session, dir) by three committed
     * transactions; both lake_txlog queries read it through the manifest
-    * log. computeIfAbsent gives exactly-once build under concurrent first
-    * callers (same discipline as ops.Scratch).
+    * log. Every TxLog fixture below is an entry of the [[Scratch]]
+    * registry.
     */
-  private val txTables =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
   private def txTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txtable_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txtable", s, d) { t =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       graft.ops.TxLog.append(base.filter(col("o_orderkey") % 2 === 1), t)
@@ -54,7 +51,7 @@ object StatsQueries extends QueryPack {
           when(col("o_orderkey") % 5 === 0, col("cents") + 500L).otherwise(col("cents")))
       graft.ops.TxLog.overwrite(merged, t)
       t
-    })
+    }
 
   /** Schema-evolution TxLog table: odd keys appended under the 2-column
     * base schema (v1), an `evolve` commit adds nullable `priority` (v2),
@@ -63,8 +60,7 @@ object StatsQueries extends QueryPack {
     * post-evolve ones under the recorded schema.
     */
   private def txEvolveTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "evolve:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txevolve_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txevolve", s, d) { t =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"),
           col("o_orderpriority"))
@@ -80,7 +76,7 @@ object StatsQueries extends QueryPack {
         base.filter(col("o_orderkey") % 2 === 0)
           .withColumnRenamed("o_orderpriority", "priority"), t)
       t
-    })
+    }
 
   /** Column-mapping fixture: segments written under THREE physical names
     * for the same logical column — "cents" (v1), renamed to "price_cents"
@@ -89,8 +85,7 @@ object StatsQueries extends QueryPack {
     * under the final logical name with zero data rewritten.
     */
   private def txRenameTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "rename:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txrename_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txrename", s, d) { t =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       graft.ops.TxLog.append(base.filter(col("o_orderkey") % 2 === 1), t) // v1
@@ -99,7 +94,7 @@ object StatsQueries extends QueryPack {
         .withColumnRenamed("cents", "price_cents"), t)                   // v3
       graft.ops.TxLog.renameColumn(s, t, "price_cents", "amount_cents")  // v4
       t
-    })
+    }
 
   /** Drop-column fixture: v1 appends 3 columns for the odd keys, v2
     * DROPS `o_orderpriority` (metadata-only — the v1 segments keep the
@@ -108,8 +103,7 @@ object StatsQueries extends QueryPack {
     * travel to v1 still sees 3.
     */
   private def txDropTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "dropcol:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txdrop_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txdrop", s, d) { t =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"),
           col("o_orderpriority"))
@@ -118,7 +112,7 @@ object StatsQueries extends QueryPack {
       graft.ops.TxLog.append(
         base.filter(col("o_orderkey") % 2 === 0).drop("o_orderpriority"), t) // v3
       t
-    })
+    }
 
   /** Timestamp-travel fixture: two appends whose IN-MANIFEST `ts`
     * stamps are pinned to known epochs (v1 → t=1,000s, v2 → t=2,000s)
@@ -129,8 +123,7 @@ object StatsQueries extends QueryPack {
     * publish stamps (see TxLog.versionAtTimestamp's monotonicity rule).
     */
   private def txTsTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "tstravel:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txts_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txts", s, d) { t =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       val v1 = graft.ops.TxLog.append(base.filter(col("o_orderkey") % 2 === 1), t)
@@ -141,7 +134,7 @@ object StatsQueries extends QueryPack {
           .replaceAll("\"ts\":\\d+", s""""ts":$ts"""))
       }
       t
-    })
+    }
 
   /** Idempotent-txn fixture: a "loader" app writes the odd keys as its
     * txn v1 and the even keys as v2, with each write REPLAYED once (an
@@ -149,8 +142,7 @@ object StatsQueries extends QueryPack {
     * every row exactly once.
     */
   private def txIdemTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "idem:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txidem_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txidem", s, d) { t =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       val odd = base.filter(col("o_orderkey") % 2 === 1)
@@ -160,15 +152,14 @@ object StatsQueries extends QueryPack {
       require(graft.ops.TxLog.write(even, t, WriteSpec(mark = Some(Mark.txn("loader", 2L)))) > 0)
       require(graft.ops.TxLog.write(even, t, WriteSpec(mark = Some(Mark.txn("loader", 2L)))) == -1L)
       t
-    })
+    }
 
   /** Checkpointed TxLog table: the txTable transaction sequence with a
     * manifest-log CHECKPOINT written mid-history (after v2), so head
     * resolution replays checkpoint + 1 manifest instead of 3.
     */
   private def txCheckpointTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "ckpt:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txckpt_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txckpt", s, d) { t =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       graft.ops.TxLog.append(base.filter(col("o_orderkey") % 2 === 1), t)
@@ -179,7 +170,7 @@ object StatsQueries extends QueryPack {
           when(col("o_orderkey") % 5 === 0, col("cents") + 500L).otherwise(col("cents")))
       graft.ops.TxLog.overwrite(merged, t)
       t
-    })
+    }
 
   /** Second TxLog table: base appended, then `merge_upsert`'s exact update
     * set applied THROUGH `TxLog.merge` — one atomic copy-on-write commit
@@ -187,8 +178,7 @@ object StatsQueries extends QueryPack {
     * (session, dir) so re-reads are idempotent.
     */
   private def txMergeTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "merge:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txmerge_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txmerge", s, d) { t =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("o_orderstatus"))
@@ -203,7 +193,7 @@ object StatsQueries extends QueryPack {
               lit("N").as("o_orderstatus")))
       graft.ops.TxLog.merge(s, updates, t, "o_orderkey")
       t
-    })
+    }
 
   /** Pure-SQL lake fixture (VERDICT r14 items 6–7): base committed
     * through the log, registered in the session catalog via
@@ -213,10 +203,8 @@ object StatsQueries extends QueryPack {
     * table name (queries read through `spark.sql`, no library API).
     */
   private def txSqlTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "sql:" + d), _ => {
-      val h = (d.hashCode & 0xffffff).toHexString
-      val t = s"${graft.ops.Scratch.base}/txsql_$h"
-      val tbl = s"graft_sql_$h"
+    Scratch.once("txsql", s, d) { t =>
+      val tbl = Scratch.tableName(t)
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       graft.ops.TxLog.append(base, t)
@@ -230,7 +218,7 @@ object StatsQueries extends QueryPack {
            |WHEN NOT MATCHED THEN INSERT *""".stripMargin).head().getLong(0)
       require(v == 2L, s"SQL MERGE must land as commit 2, got $v")
       tbl
-    })
+    }
 
   /** Row-level SQL DML fixture (VERDICT r15 item 1): base committed
     * through the log, registered in the session catalog, then mutated
@@ -240,10 +228,8 @@ object StatsQueries extends QueryPack {
     * rewritten by either statement; queries read back via spark.sql only.
     */
   private def txSqlDmlTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "sqldml:" + d), _ => {
-      val h = (d.hashCode & 0xffffff).toHexString
-      val t = s"${graft.ops.Scratch.base}/txsqldml_$h"
-      val tbl = s"graft_dml_$h"
+    Scratch.once("txsqldml", s, d) { t =>
+      val tbl = Scratch.tableName(t)
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       graft.ops.TxLog.append(base, t)
@@ -256,7 +242,7 @@ object StatsQueries extends QueryPack {
         .head().getLong(0)
       require(v3 == 3L, s"SQL DELETE must land as commit 3, got $v3")
       tbl
-    })
+    }
 
   /** CONVERT TO TXLOG fixture (the migration operator): orders written
     * as a PLAIN Spark hive-partitioned parquet layout (no log), converted
@@ -265,8 +251,7 @@ object StatsQueries extends QueryPack {
     * top, proving the converted table is a first-class lake table.
     */
   private def txConvertTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "convert:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txconvert_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txconvert", s, d) { t =>
       Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"),
           col("o_orderstatus"))
@@ -275,7 +260,7 @@ object StatsQueries extends QueryPack {
       require(v == 1L, s"convert must land as commit 1, got $v")
       graft.ops.TxLog.deleteWhere(s, t, col("o_orderkey") % 7 === 0)
       t
-    })
+    }
 
   /** Partition-scoped OPTIMIZE fixture: orders partitioned by status as
     * two appends (two segments per status leaf), a DV delete crossing
@@ -284,8 +269,7 @@ object StatsQueries extends QueryPack {
     * leaf keeps its exact segments and its standing deletes.
     */
   private def txOptWhereTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "optwhere:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txoptwhere_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txoptwhere", s, d) { t =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"),
           col("o_orderstatus"))
@@ -297,7 +281,7 @@ object StatsQueries extends QueryPack {
       val v = s.sql(s"OPTIMIZE '$t' WHERE o_orderstatus = 'F'").head().getLong(0)
       require(v == 4L, s"partition optimize must land as commit 4, got $v")
       t
-    })
+    }
 
   /** SQL INSERT fixture: odds committed through the library (v1), evens
     * arriving via `INSERT INTO … SELECT` through the V1 relation's
@@ -305,10 +289,8 @@ object StatsQueries extends QueryPack {
     * CREATE TABLE. Returns the catalog name.
     */
   private def txSqlInsertTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "sqlins:" + d), _ => {
-      val h = (d.hashCode & 0xffffff).toHexString
-      val t = s"${graft.ops.Scratch.base}/txsqlins_$h"
-      val tbl = s"graft_ins_$h"
+    Scratch.once("txsqlins", s, d) { t =>
+      val tbl = Scratch.tableName(t)
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       graft.ops.TxLog.append(base.filter(col("o_orderkey") % 2 === 1), t)
@@ -320,7 +302,7 @@ object StatsQueries extends QueryPack {
         graft.ops.TxLog.readManifest(t, 2L).op == "append",
         "INSERT INTO must land as one append commit")
       tbl
-    })
+    }
 
   /** ALTER TABLE SQL fixture (VERDICT r15 item 4): the full schema-
     * evolution lifecycle driven through the quoted-path ALTER statements
@@ -330,8 +312,7 @@ object StatsQueries extends QueryPack {
     * move until the append.
     */
   private def txSqlAlterTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "sqlalter:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txsqlalter_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txsqlalter", s, d) { t =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       graft.ops.TxLog.append(base, t) // v1
@@ -348,7 +329,7 @@ object StatsQueries extends QueryPack {
           .select((col("o_orderkey") + 20000000L).as("o_orderkey"),
             col("cents"), lit("new").as("label")), t)
       t
-    })
+    }
 
   /** Merge-on-read TxLog table: base appended, then merge_upsert's exact
     * update set applied through `TxLog.mergeDv` — deletion-vector marks +
@@ -358,8 +339,7 @@ object StatsQueries extends QueryPack {
     * rewrite) is pinned in TxLogSpec.
     */
   private def txDvTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "dv:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txdv_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txdv", s, d) { t =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("o_orderstatus"))
@@ -375,7 +355,7 @@ object StatsQueries extends QueryPack {
       graft.ops.TxLog.mergeDv(s, updates, t, "o_orderkey")
       graft.ops.TxLog.deleteWhere(s, t, col("o_orderkey") % 13 === 0)
       t
-    })
+    }
 
   /** Z-order TxLog table: orders carrying two derived 4-bit dimensions
     * (px = key%16, py = (key div 16)%16 — both fully populated for any
@@ -385,8 +365,7 @@ object StatsQueries extends QueryPack {
     * segments — each exactly one aligned 4×4 box of the (px, py) plane.
     */
   private def txZOrderTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "zorder:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txzorder_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txzorder", s, d) { t =>
       val base = Tables.orders(s, d).select(col("o_orderkey"),
         (col("o_orderkey") % 16).as("px"),
         expr("(o_orderkey div 16) % 16").as("py"),
@@ -397,7 +376,7 @@ object StatsQueries extends QueryPack {
       }
       graft.ops.TxLog.compactZOrder(s, t, "px", "py", 16)
       t
-    })
+    }
 
   /** THREE-column z-order fixture (VERDICT r15 item 5): 3-bit derived
     * dims (px, py, pz) = key base-8 digits — all 512 combos populated at
@@ -406,8 +385,7 @@ object StatsQueries extends QueryPack {
     * z-contiguous segments, each one aligned cell of the 3-D z-curve.
     */
   private def txZOrder3Table(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "zorder3:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txzorder3_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txzorder3", s, d) { t =>
       val base = Tables.orders(s, d).select(col("o_orderkey"),
         (col("o_orderkey") % 8).as("px"),
         expr("(o_orderkey div 8) % 8").as("py"),
@@ -420,7 +398,7 @@ object StatsQueries extends QueryPack {
       val v = s.sql(s"OPTIMIZE '$t' ZORDER BY (px, py, pz)").head().getLong(0)
       require(v == 5L, s"3-col ZORDER must land as commit 5, got $v")
       t
-    })
+    }
 
   /** GENERATED-partition TxLog table: v1 appends the ODD keys with
     * `day` computed explicitly (8-day synthetic calendar off the order
@@ -432,8 +410,7 @@ object StatsQueries extends QueryPack {
     * each append stages exactly 4 leaves (8 live segments total).
     */
   private def txGeneratedTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "generated:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txgen_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txgen", s, d) { t =>
       val base = Tables.orders(s, d).select(col("o_orderkey"),
         Cleaning.cents(col("o_totalprice")).as("cents"),
         expr("timestamp(date_add(DATE'2024-01-01', CAST(o_orderkey % 8 AS INT)))")
@@ -447,7 +424,7 @@ object StatsQueries extends QueryPack {
       graft.ops.TxLog.write(
         base.filter(col("o_orderkey") % 2 === 0), t, WriteSpec(partitionBy = Seq("day")))
       t
-    })
+    }
 
   /** Column-defaults TxLog table: odd keys appended carrying
     * `src='seed'`, then `src` gets DEFAULT 'backfill' and NOT NULL (both
@@ -456,8 +433,7 @@ object StatsQueries extends QueryPack {
     * check.
     */
   private def txDefaultsTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "defaults:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txdef_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txdef", s, d) { t =>
       val base = Tables.orders(s, d).select(col("o_orderkey"),
         Cleaning.cents(col("o_totalprice")).as("cents"))
       graft.ops.TxLog.append(
@@ -467,7 +443,7 @@ object StatsQueries extends QueryPack {
       s.sql(s"ALTER TABLE '$t' ALTER COLUMN src SET NOT NULL")
       graft.ops.TxLog.append(base.filter(col("o_orderkey") % 2 === 0), t)
       t
-    })
+    }
 
   /** AUTO-COMPACT TxLog table: the table declares
     * `graft.autoCompact.enabled=true, minNumFiles=3`, then four
@@ -477,8 +453,7 @@ object StatsQueries extends QueryPack {
     * (merged + new < threshold). Fully deterministic history.
     */
   private def txAutoCompactTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "autocompact:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txauto_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txauto", s, d) { t =>
       val base = Tables.orders(s, d).select(col("o_orderkey"),
         Cleaning.cents(col("o_totalprice")).as("cents"))
       graft.ops.TxLog.setProperties(t, Map(
@@ -488,7 +463,7 @@ object StatsQueries extends QueryPack {
         graft.ops.TxLog.append(base.filter(col("o_orderkey") % 4 === (k % 4)), t))
       graft.ops.TxLog.append(base.filter(col("o_orderkey") % 4 === 0L), t)
       t
-    })
+    }
 
   /** Partitioned-OPTIMIZE TxLog table: a NESTED `r3=?/r2=?` layout (6
     * chains), fragmented by two half-splits (okey mod 4), with a DV
@@ -496,8 +471,7 @@ object StatsQueries extends QueryPack {
     * WITHIN each chain, never across.
     */
   private def txOptPartTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "optpart:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txoptp_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txoptp", s, d) { t =>
       val base = Tables.orders(s, d).select(col("o_orderkey"),
         Cleaning.cents(col("o_totalprice")).as("cents"),
         expr("CAST(o_orderkey % 3 AS STRING)").as("r3"),
@@ -509,7 +483,7 @@ object StatsQueries extends QueryPack {
       graft.ops.TxLog.deleteWhere(s, t, col("o_orderkey") % 5 === 0)
       s.sql(s"OPTIMIZE '$t'").collect()
       t
-    })
+    }
 
   /** Declared-stats TxLog table: `graft.statsColumns = 'r'` is set ONCE,
     * then four range-split appends arrive through the bare FORMAT SEAM
@@ -517,8 +491,7 @@ object StatsQueries extends QueryPack {
     * option anywhere — the property records the skipping stats.
     */
   private def txStatsDeclTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "statsdecl:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txsdecl_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txsdecl", s, d) { t =>
       val base = Tables.orders(s, d).select(col("o_orderkey"),
         Cleaning.cents(col("o_totalprice")).as("cents"),
         (col("o_orderkey") % 100).as("r"))
@@ -528,7 +501,7 @@ object StatsQueries extends QueryPack {
           .write.format("txlog").mode("append").save(t)
       }
       t
-    })
+    }
 
   /** RESTORE TxLog table: odds (v1), evens (v2), a DV delete of keys %5
     * (v3), then RESTORE to v2 (v4) — the delete-only history where
@@ -536,8 +509,7 @@ object StatsQueries extends QueryPack {
     * clear through; the fold-rule edge TxLogSpec pins).
     */
   private def txRestoreTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "restore:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txrestore_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txrestore", s, d) { t =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       graft.ops.TxLog.append(base.filter(col("o_orderkey") % 2 === 1), t)
@@ -545,7 +517,7 @@ object StatsQueries extends QueryPack {
       graft.ops.TxLog.deleteWhere(s, t, col("o_orderkey") % 5 === 0)
       graft.ops.TxLog.restore(s, t, 2L)
       t
-    })
+    }
 
   /** VACUUM TxLog table: base appended (v1), overwritten with +7 cents
     * (v2), one crash-orphaned staged segment, then `vacuum` keeping only
@@ -554,8 +526,7 @@ object StatsQueries extends QueryPack {
     * below the horizon.
     */
   private def txVacuumTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "vacuum:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txvacuum_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txvacuum", s, d) { t =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       graft.ops.TxLog.append(base, t)
@@ -564,7 +535,7 @@ object StatsQueries extends QueryPack {
       val collected = graft.ops.TxLog.vacuum(t, keepVersionsFrom = 2L, minAgeMillis = 0L)
       require(collected.size == 2, s"vacuum must collect v1 segment + orphan, got $collected")
       t
-    })
+    }
 
   /** CHECK-constraint TxLog table: odd keys appended, a `cents >= 0`
     * constraint added (validated against existing rows), then the even
@@ -572,15 +543,14 @@ object StatsQueries extends QueryPack {
     * frames is pinned in TxLogSpec.
     */
   private def txConstraintTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "check:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txcheck_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txcheck", s, d) { t =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       graft.ops.TxLog.append(base.filter(col("o_orderkey") % 2 === 1), t)
       graft.ops.TxLog.addConstraint(s, t, "cents_non_negative", "cents >= 0")
       graft.ops.TxLog.append(base.filter(col("o_orderkey") % 2 === 0), t)
       t
-    })
+    }
 
   /** TBLPROPERTIES + DROP CONSTRAINT lifecycle table: properties set
     * twice (last write wins per key), one unset, a CHECK added then
@@ -588,8 +558,7 @@ object StatsQueries extends QueryPack {
     * after — proving enforcement is lifted from the drop's version on.
     */
   private def txPropsTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "props:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txprops_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txprops", s, d) { t =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       graft.ops.TxLog.append(base, t)
@@ -604,15 +573,14 @@ object StatsQueries extends QueryPack {
       import s.implicits._
       graft.ops.TxLog.append(Seq((-1L, -12345L)).toDF("o_orderkey", "cents"), t)
       t
-    })
+    }
 
   /** REORG APPLY (PURGE) table: odd keys in segment 1, even in segment
     * 2; a delete marking only odd keys, then a purge — exactly segment 1
     * rewritten, segment 2 referenced untouched, the chain cleared.
     */
   private def txPurgeTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "purge:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txpurge_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txpurge", s, d) { t =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       graft.ops.TxLog.append(base.filter(col("o_orderkey") % 2 === 1), t)
@@ -620,22 +588,21 @@ object StatsQueries extends QueryPack {
       graft.ops.TxLog.deleteWhere(s, t, col("o_orderkey") % 10 === 1)
       graft.ops.TxLog.purge(s, t)
       t
-    })
+    }
 
   /** ANALYZE-stats TxLog dim table: nation split into two appends, each
     * committed with row-count + exact-NDV manifest stats — the metadata
     * the CBO-shape query plans its join from without scanning a byte.
     */
   private def txCboTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "cbo:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txcbo_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txcbo", s, d) { t =>
       val dim = Tables.nation(s, d).select(col("n_nationkey"), col("n_name"))
       graft.ops.TxLog.write(dim.filter(col("n_nationkey") < 12), t,
         WriteSpec(statsCols = Seq("n_nationkey")))
       graft.ops.TxLog.write(dim.filter(col("n_nationkey") >= 12), t,
         WriteSpec(statsCols = Seq("n_nationkey")))
       t
-    })
+    }
 
   /** Writer-API fixture (VERDICT r12 item 2): the table is built ONLY
     * through `df.write.format("txlog")` — ErrorIfExists first commit,
@@ -643,8 +610,7 @@ object StatsQueries extends QueryPack {
     * no-op. Exactly 2 committed versions prove the mode semantics.
     */
   private def txWriterTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "writer:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txwrite_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txwrite", s, d) { t =>
       val base = Tables.orders(s, d).select(col("o_orderkey"),
         Cleaning.cents(col("o_totalprice")).as("cents"))
       base.filter(col("o_orderkey") % 2 === 0).write.format("txlog").save(t)
@@ -653,7 +619,7 @@ object StatsQueries extends QueryPack {
       base.limit(5).withColumn("cents", lit(-1L))
         .write.format("txlog").mode("ignore").save(t)
       t
-    })
+    }
 
   /** Multi-column-stats fixture (VERDICT r12 item 3): two segments split
     * on the CENTS median through the writer API with
@@ -662,8 +628,7 @@ object StatsQueries extends QueryPack {
     * SECOND tracked column's manifest stats did it.
     */
   private def txMultiStatsTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "multistats:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txmulti_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txmulti", s, d) { t =>
       val base = Tables.orders(s, d).select(col("o_orderkey"),
         Cleaning.cents(col("o_totalprice")).as("cents"))
       base.filter(col("cents") < MultiStatsCut).write.format("txlog")
@@ -671,7 +636,7 @@ object StatsQueries extends QueryPack {
       base.filter(col("cents") >= MultiStatsCut).write.format("txlog")
         .mode("append").option("statsCols", "o_orderkey,cents").save(t)
       t
-    })
+    }
 
   /** cents split point for [[txMultiStatsTable]] — inside the
     * o_totalprice range at every SF (prices run ~85k…56M cents).
@@ -684,37 +649,31 @@ object StatsQueries extends QueryPack {
     * bytes move.
     */
   private def txAnalyzeTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "analyze:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txanalyze_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txanalyze", s, d) { t =>
       val base = Tables.orders(s, d).select(col("o_orderkey"),
         Cleaning.cents(col("o_totalprice")).as("cents"))
       graft.ops.TxLog.append(base.filter(col("cents") < MultiStatsCut), t)
       graft.ops.TxLog.append(base.filter(col("cents") >= MultiStatsCut), t)
       graft.ops.TxLog.analyze(s, t, Seq("o_orderkey", "cents"))
       t
-    })
+    }
 
   /** 3-table CBO fixture (VERDICT r12 item 7): two filtered dimension
     * tables committed with ANALYZE stats — supplier slice (always the
     * smaller) and orders slice — whose manifest row counts drive the
     * JOIN ORDER against the lineitem fact.
     */
-  private[graft] def txDim3Tables(s: SparkSession, d: String): (String, String) = {
-    val key = txTables.computeIfAbsent((s, "dim3:" + d), _ => {
-      val h = (d.hashCode & 0xffffff).toHexString
-      val tO = s"${graft.ops.Scratch.base}/txdimo_$h"
-      val tS = s"${graft.ops.Scratch.base}/txdims_$h"
+  private[graft] def txDim3Tables(s: SparkSession, d: String): (String, String) =
+    Scratch.once("txdim", s, d) { t =>
+      val (tO, tS) = (t + "_orders", t + "_supplier")
       graft.ops.TxLog.write(
         Tables.orders(s, d).filter(col("o_orderkey") % 2 === 0)
           .select(col("o_orderkey")), tO, WriteSpec(statsCols = Seq("o_orderkey")))
       graft.ops.TxLog.write(
         Tables.supplier(s, d).filter(col("s_suppkey") % 4 === 0)
           .select(col("s_suppkey")), tS, WriteSpec(statsCols = Seq("s_suppkey")))
-      s"$tO|$tS"
-    })
-    val Array(tO, tS) = key.split('|')
-    (tO, tS)
-  }
+      (tO, tS)
+    }
 
   /** Stats-ordered 3-table join (the CBO payoff beyond broadcast-side
     * choice): the fact joins its dimensions SMALLEST-FIRST by manifest
@@ -781,8 +740,7 @@ object StatsQueries extends QueryPack {
     * commits recorded.
     */
   private def txHistTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "hist:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txhist_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txhist", s, d) { t =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       graft.ops.TxLog.write(base.filter(col("o_orderkey") % 2 === 0), t,
@@ -790,7 +748,7 @@ object StatsQueries extends QueryPack {
       graft.ops.TxLog.write(base.filter(col("o_orderkey") % 2 === 1), t,
         WriteSpec(statsCols = Seq("o_orderkey")))
       t
-    })
+    }
 
   /** Hive-style partitioned TxLog fixture: documents partitioned by
     * `lang`, loaded in two halves — 5 langs × 2 loads = 10 segments,
@@ -798,8 +756,7 @@ object StatsQueries extends QueryPack {
     * paths, so pruning is a driver-side manifest decision.
     */
   private def txPartTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "part:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txpart_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txpart", s, d) { t =>
       val base = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
       graft.ops.TxLog.write(base.filter(col("doc_id") % 2 === 0), t,
@@ -807,7 +764,7 @@ object StatsQueries extends QueryPack {
       graft.ops.TxLog.write(base.filter(col("doc_id") % 2 === 1), t,
         WriteSpec(partitionBy = Seq("lang")))
       t
-    })
+    }
 
   /** TWO-LEVEL partitioned TxLog fixture, written through the FORMAT seam
     * (`df.write.format("txlog").partitionBy("lang", "src")`) — the
@@ -817,8 +774,7 @@ object StatsQueries extends QueryPack {
     * same write, so path pruning and per-leaf column stats coexist.
     */
   private def txPart2Table(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "part2:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txpart2_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txpart2", s, d) { t =>
       Tables.documents(s, d)
         .select(col("doc_id"), col("lang"),
           when(col("doc_id") % 2 === 0, "web").otherwise("book").as("src"),
@@ -826,15 +782,14 @@ object StatsQueries extends QueryPack {
         .write.format("txlog").mode("append")
         .partitionBy("lang", "src").option("statsCols", "doc_id").save(t)
       t
-    })
+    }
 
   /** Partition-overwrite fixture: the partitioned load, then lang='en'
     * wholesale-replaced (every n_chars +1000) through ONE atomic
     * `ReplacePartition` write — other languages' segments untouched.
     */
   private def txPartOvwTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "partovw:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txpovw_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txpovw", s, d) { t =>
       val base = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
       graft.ops.TxLog.write(base, t, WriteSpec(partitionBy = Seq("lang")))
@@ -843,29 +798,27 @@ object StatsQueries extends QueryPack {
           .withColumn("n_chars", col("n_chars") + 1000L), t,
           WriteSpec(ReplacePartition("lang", "en")))
       t
-    })
+    }
 
   /** Third TxLog table: two appends then `TxLog.compact` — the version
     * history the compaction query reads back.
     */
   private def txCompactTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "compact:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txcompact_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txcompact", s, d) { t =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       graft.ops.TxLog.append(base.filter(col("o_orderkey") % 2 === 1), t)
       graft.ops.TxLog.append(base.filter(col("o_orderkey") % 2 === 0), t)
       graft.ops.TxLog.compact(s, t)
       t
-    })
+    }
 
   /** Fourth TxLog table: 4 range-disjoint appends with manifest min/max
     * stats on o_orderkey — the data-skipping layout the pruned-scan
     * query reads.
     */
   private def txStatsTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "stats:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txstats_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txstats", s, d) { t =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       val q = base.agg(max("o_orderkey")).head().getLong(0) / 4 + 1
@@ -875,7 +828,7 @@ object StatsQueries extends QueryPack {
           WriteSpec(statsCols = Seq("o_orderkey")))
       }
       t
-    })
+    }
 
   /** STRING-stats TxLog table: customer split into 4 custkey-quartile
     * appends with manifest stats on a KEY-DERIVED zero-padded name
@@ -888,8 +841,7 @@ object StatsQueries extends QueryPack {
     * manifest alone, exactly like the long-stats table.
     */
   private def txStrStatsTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "strstats:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txstrstats_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txstrstats", s, d) { t =>
       val base = Tables.customer(s, d)
         .select(col("c_custkey"),
           concat(lit("Customer#"),
@@ -901,7 +853,7 @@ object StatsQueries extends QueryPack {
           base.filter(expr(s"c_custkey div $q") === b), t, WriteSpec(statsCols = Seq("name")))
       }
       t
-    })
+    }
 
   /** mergeSchema fixture: evens appended under the base (key, cents)
     * schema, then odds appended with a NEW `big` column under
@@ -909,8 +861,7 @@ object StatsQueries extends QueryPack {
     * evolve, so the old segments read back null-filled.
     */
   private def txMergeSchemaTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "mergeschema:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txmsch_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txmsch", s, d) { t =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       base.filter(col("o_orderkey") % 2 === 0)
@@ -920,7 +871,7 @@ object StatsQueries extends QueryPack {
         .write.format("txlog").mode("append")
         .option("mergeSchema", "true").save(t)
       t
-    })
+    }
 
   /** SHALLOW-CLONE fixture: the 4-segment stats table cloned by
     * reference (one manifest, zero bytes copied), then the even keys
@@ -928,13 +879,11 @@ object StatsQueries extends QueryPack {
     * source's segments or history.
     */
   private def txCloneTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "clone:" + d), _ => {
-      val src = txStatsTable(s, d)
-      val t = s"${graft.ops.Scratch.base}/txclone_${(d.hashCode & 0xffffff).toHexString}"
-      graft.ops.TxLog.cloneShallow(s, src, t)
+    Scratch.once("txclone", s, d) { t =>
+      graft.ops.TxLog.cloneShallow(s, txStatsTable(s, d), t)
       graft.ops.TxLog.deleteWhere(s, t, col("o_orderkey") % 2 === 0)
       t
-    })
+    }
 
   /** COPY INTO fixture: a 3-file landing zone (orders key-thirds), then
     * three ingest calls — first two files, then all three (only the new
@@ -942,9 +891,8 @@ object StatsQueries extends QueryPack {
     * manifests already names every file).
     */
   private def txCopyTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "copy:" + d), _ => {
-      val land = s"${graft.ops.Scratch.base}/txland_${(d.hashCode & 0xffffff).toHexString}"
-      val t = s"${graft.ops.Scratch.base}/txcopy_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txcopy", s, d) { t =>
+      val land = t + "_landing"
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       val q = base.agg(max("o_orderkey")).head().getLong(0) / 3 + 1
@@ -957,7 +905,7 @@ object StatsQueries extends QueryPack {
       graft.ops.TxLog.copyInto(s, t, files)
       graft.ops.TxLog.copyInto(s, t, files) // idempotent: no commit
       t
-    })
+    }
 
   /** STRING-bloom TxLog table: 4 appends split by o_orderkey % 4 with a
     * key-derived zero-padded string key — every segment's lexicographic
@@ -966,8 +914,7 @@ object StatsQueries extends QueryPack {
     * prune a point lookup.
     */
   private def txBloomStrTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "bloomstr:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txbloomstr_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txbloomstr", s, d) { t =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"),
           concat(lit("Order#"),
@@ -978,15 +925,14 @@ object StatsQueries extends QueryPack {
           base.filter(col("o_orderkey") % 4 === b), t, WriteSpec(bloomCol = Some("name")))
       }
       t
-    })
+    }
 
   /** Fifth TxLog table: 4 appends split by o_orderkey % 4 — INTERLEAVED
     * key ranges, so min/max stats cannot prune a point lookup and only
     * the per-segment Bloom filter can.
     */
   private def txBloomTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "bloom:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txbloom_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txbloom", s, d) { t =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       (0L to 3L).foreach { b =>
@@ -994,14 +940,13 @@ object StatsQueries extends QueryPack {
           base.filter(col("o_orderkey") % 4 === b), t, WriteSpec(bloomCol = Some("o_orderkey")))
       }
       t
-    })
+    }
 
   /** Sixth TxLog table: modulus-split appends (unprunable layout) then
     * ONE clustered compaction — the before/after the optimize query reads.
     */
   private def txOptimizeTable(s: SparkSession, d: String): String =
-    txTables.computeIfAbsent((s, "optimize:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txopt_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txopt", s, d) { t =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
       (0L to 3L).foreach { b =>
@@ -1010,7 +955,7 @@ object StatsQueries extends QueryPack {
       }
       graft.ops.TxLog.compactClustered(s, t, "o_orderkey", 4)
       t
-    })
+    }
 
   val queries: Map[String, Q] = Map(
     // FULL OUTER join with unmatched rows on BOTH sides: low-nation
@@ -1169,7 +1114,7 @@ object StatsQueries extends QueryPack {
       // referencing the agg frame from all 6 pair selects re-executed the
       // full scan+aggregate per pair (6 fact scans; the r11 sf1 run
       // measured it 25x at 10x rows before this fix)
-      val a = graft.ops.Scratch.materialize("corr_matrix_moments", s, d) {
+      val a = Scratch.materialize("corr_matrix_moments", s, d) {
         b.agg(sums.head, sums.tail: _*)
       }
       def pairRow(x: String, y: String) =
@@ -2486,11 +2431,8 @@ object StatsQueries extends QueryPack {
     // through the catalog name — no library API touched.
     "sql_txlog_clone" -> ((s, d) => {
       val src = txStatsTable(s, d)
-      val h = (d.hashCode & 0xffffff).toHexString
-      val tbl = s"graft_clone_$h"
-      txTables.computeIfAbsent((s, "sqlclone:" + d), _ => {
-        val t = s"${graft.ops.Scratch.base}/txsqlclone_$h"
-        val land = s"${graft.ops.Scratch.base}/txsqlland_$h"
+      val (tbl, land) = Scratch.once("txsqlclone", s, d) { t =>
+        val (tbl, land) = (Scratch.tableName(t), t + "_landing")
         Tables.orders(s, d)
           .select(col("o_orderkey"), Cleaning.cents(col("o_totalprice")).as("cents"))
           .filter(col("o_orderkey") % 2 === 0)
@@ -2499,12 +2441,10 @@ object StatsQueries extends QueryPack {
           .head().getLong(0)
         require(v == 1L, s"SQL shallow clone must land as commit 1, got $v")
         s.sql(s"COPY INTO $tbl FROM '$land'")
-        t
-      })
+        (tbl, land)
+      }
       // idempotency surfaced in-band: a re-run COPY INTO ingests nothing
-      val recopy = s.sql(
-        s"COPY INTO $tbl FROM '${graft.ops.Scratch.base}/txsqlland_$h'")
-        .head().getLong(1)
+      val recopy = s.sql(s"COPY INTO $tbl FROM '$land'").head().getLong(1)
       s.sql(s"SELECT COUNT(*) AS n_rows, SUM(cents) AS sum_cents FROM $tbl")
         .select(col("n_rows"), col("sum_cents"),
           lit(recopy).as("recopy_ingested"))
@@ -3077,7 +3017,7 @@ object StatsQueries extends QueryPack {
     // twice — once for the median, once for the join), and the MAD's
     // weighted-median window runs once instead of twice.
     "stats_mad_outliers" -> ((s, d) => {
-      val dev = graft.ops.Scratch.materialize("mad_dev", s, d) {
+      val dev = Scratch.materialize("mad_dev", s, d) {
         val ev = Tables.events(s, d)
           .select(col("event_type"), col("event_id"),
             Cleaning.cents(col("value")).as("v"))

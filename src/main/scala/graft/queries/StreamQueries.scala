@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.ops.Scratch
 import graft.streaming.Streams
 import org.apache.spark.sql.functions._
 
@@ -13,36 +14,32 @@ import org.apache.spark.sql.functions._
   */
 object StreamQueries extends QueryPack {
 
+  private val sinkSeq = new java.util.concurrent.atomic.AtomicInteger
+
   /** TxLog fixture for the `txlog-stream` source gate: orders split into
     * two append commits (v1 = odd keys, v2 = even), built once per
     * (session, sfDir) — the stream replays exactly these two commits.
     */
-  private val txStreamTables =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), String]
-  private val sinkSeq = new java.util.concurrent.atomic.AtomicInteger
-
   private def txStreamTable(s: org.apache.spark.sql.SparkSession, d: String): String =
-    txStreamTables.computeIfAbsent((s, d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txstream_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txstream", s, d) { t =>
       val base = Tables.orders(s, d).select(col("o_orderkey"),
         graft.ops.Cleaning.cents(col("o_totalprice")).as("cents"))
       graft.ops.TxLog.append(base.filter(col("o_orderkey") % 2 === 1), t)
       graft.ops.TxLog.append(base.filter(col("o_orderkey") % 2 === 0), t)
       t
-    })
+    }
 
   /** Rate-limit fixture: FOUR one-segment commits (order-key mod 4), so
     * `maxFilesPerTrigger=1` must drain as exactly four micro-batches.
     */
   private def txRateTable(s: org.apache.spark.sql.SparkSession, d: String): String =
-    txStreamTables.computeIfAbsent((s, "rate:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txrate_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txrate", s, d) { t =>
       val base = Tables.orders(s, d).select(col("o_orderkey"),
         graft.ops.Cleaning.cents(col("o_totalprice")).as("cents"))
       (0L to 3L).foreach(k =>
         graft.ops.TxLog.append(base.filter(col("o_orderkey") % 4 === k), t))
       t
-    })
+    }
 
   /** The consolidated transformWithState TRIAD run — ONE RocksDB stream
     * over the txlog fixture feeds all three stateful-primitive oracles
@@ -55,7 +52,7 @@ object StreamQueries extends QueryPack {
     */
   private def twsTriad(s: org.apache.spark.sql.SparkSession,
                        d: String): org.apache.spark.sql.DataFrame =
-    graft.ops.Scratch.materialize("tws_triad", s, d) {
+    Scratch.materialize("tws_triad", s, d) {
       val t = txStreamTable(s, d)
       val qn = s"tws_triad_${sinkSeq.incrementAndGet()}"
       val ns = s.newSession()
@@ -145,9 +142,8 @@ object StreamQueries extends QueryPack {
     * across exactly 2 commits. Runs once per (session, sfDir).
     */
   private def txSinkTable(s: org.apache.spark.sql.SparkSession, d: String): String =
-    txStreamTables.computeIfAbsent((s, "sink:" + d), _ => {
+    Scratch.once("txsink", s, d) { t =>
       val src = txStreamTable(s, d)
-      val t = s"${graft.ops.Scratch.base}/txsink_${(d.hashCode & 0xffffff).toHexString}"
       val ns = s.newSession()
       ns.conf.set("spark.sql.shuffle.partitions", "4")
       val q = ns.readStream.format("txlog-stream")
@@ -159,7 +155,7 @@ object StreamQueries extends QueryPack {
         .start(t)
       try q.awaitTermination() finally q.stop()
       t
-    })
+    }
 
   /** Streaming-CDC-upsert fixture: base appended, then three CDC
     * micro-batches applied through `TxLog.streamingMergeDv` — each one
@@ -169,8 +165,7 @@ object StreamQueries extends QueryPack {
     * derived from the base, so the head is latest-wins closed-form.
     */
   private def txUpsertTable(s: org.apache.spark.sql.SparkSession, d: String): String =
-    txStreamTables.computeIfAbsent((s, "upsert:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txupsert_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txupsert", s, d) { t =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
       graft.ops.TxLog.append(base, t)
@@ -192,15 +187,14 @@ object StreamQueries extends QueryPack {
         "replayed batch must skip")
       require(graft.ops.TxLog.streamingMergeDv(s, b2, t, "o_orderkey", 2L) > 0)
       t
-    })
+    }
 
   /** CDC fixture: one append (v1), then a DV merge that rewrites every
     * o_orderkey % 5 == 0 row with cents+500 (v2) — the rewrite-shaped
     * history the change-feed stream must diff into update pre/post rows.
     */
   private def txCdfTable(s: org.apache.spark.sql.SparkSession, d: String): String =
-    txStreamTables.computeIfAbsent((s, "cdf:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txcdf_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txcdf", s, d) { t =>
       val base = Tables.orders(s, d).select(col("o_orderkey"),
         graft.ops.Cleaning.cents(col("o_totalprice")).as("cents"))
       graft.ops.TxLog.append(base, t)
@@ -209,7 +203,7 @@ object StreamQueries extends QueryPack {
           .withColumn("cents", col("cents") + 500L),
         t, "o_orderkey")
       t
-    })
+    }
 
   /** Timestamp-bounded CDF fixture: the cdf table's history plus a third
     * commit (a second DV merge on the %7 keys), with each version's
@@ -219,8 +213,7 @@ object StreamQueries extends QueryPack {
     * the middle commit deterministically.
     */
   private def txCdfTsTable(s: org.apache.spark.sql.SparkSession, d: String): String =
-    txStreamTables.computeIfAbsent((s, "cdfts:" + d), _ => {
-      val t = s"${graft.ops.Scratch.base}/txcdfts_${(d.hashCode & 0xffffff).toHexString}"
+    Scratch.once("txcdfts", s, d) { t =>
       val base = Tables.orders(s, d).select(col("o_orderkey"),
         graft.ops.Cleaning.cents(col("o_totalprice")).as("cents"))
       val v1 = graft.ops.TxLog.append(base, t)
@@ -238,7 +231,7 @@ object StreamQueries extends QueryPack {
           .replaceAll("\"ts\":\\d+", s""""ts":$ts"""))
       }
       t
-    })
+    }
 
   /** Update-mode SINK fixture: a source table of two append commits (all
     * orders, then the %5 keys with cents+500) streamed through
@@ -248,10 +241,8 @@ object StreamQueries extends QueryPack {
     */
   private def txUpsertSinkTable(s: org.apache.spark.sql.SparkSession,
                                 d: String): String =
-    txStreamTables.computeIfAbsent((s, "upsink:" + d), _ => {
-      val h = (d.hashCode & 0xffffff).toHexString
-      val src = s"${graft.ops.Scratch.base}/txupsrc_$h"
-      val dst = s"${graft.ops.Scratch.base}/txupdst_$h"
+    Scratch.once("txupsink", s, d) { t =>
+      val (src, dst) = (t + "_source", t + "_sink")
       val base = Tables.orders(s, d).select(col("o_orderkey"),
         graft.ops.Cleaning.cents(col("o_totalprice")).as("cents"))
       graft.ops.TxLog.append(base, src)
@@ -271,7 +262,7 @@ object StreamQueries extends QueryPack {
       require(graft.ops.TxLog.maxCommittedAnyBatch(dst) == 1L,
         "two rate-limited micro-batches must have landed")
       dst
-    })
+    }
 
   val queries: Map[String, Q] = Map(
     // NATIVE UPDATE-MODE SINK (VERDICT r13 item 6):
@@ -297,7 +288,7 @@ object StreamQueries extends QueryPack {
       // the REAL streaming run happens once per (session, sfDir) — the
       // gate's reduced rows are log-sized, so bench reps replay a scratch
       // scan instead of re-running the stream (the tws-gates discipline)
-      graft.ops.Scratch.materialize("txlog_cdf_gate", s, d) {
+      Scratch.materialize("txlog_cdf_gate", s, d) {
         val t = txCdfTable(s, d)
         val qn = s"txlog_cdf_${sinkSeq.incrementAndGet()}"
         val ns = s.newSession()
@@ -500,7 +491,7 @@ object StreamQueries extends QueryPack {
       // the run sleeps 1.5 s between batches BY DESIGN (the TTL gap) —
       // materialize the reduced rows once per (session, sfDir) so bench
       // reps don't re-pay the idle
-      graft.ops.Scratch.materialize("tws_ttl", s, d) {
+      Scratch.materialize("tws_ttl", s, d) {
         twsTtlRun(s, d)
       }.orderBy("k")),
 

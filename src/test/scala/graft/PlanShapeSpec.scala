@@ -235,10 +235,9 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q21's quantifier pair folds to one per-order aggregate, no fact re-joins") {
-    // r16: the EXISTS/NOT-EXISTS pair no longer runs as semi+anti joins
-    // re-shuffling lineitem twice — both quantifiers fold into one
-    // per-(order, supplier) hash aggregate (distinct pairs, map-side
-    // combinable) whose per-order counts join back once on the orderkey.
+    // the EXISTS/NOT-EXISTS pair runs neither as semi+anti joins
+    // re-shuffling lineitem twice nor as a second fact pass joined back:
+    // one per-order aggregate of supplier sets over lineitem ⋈ orders.
     // Pin: no semi/anti fact passes, no Expand (the rejected filtered-
     // countDistinct form), and everything stays on equi paths.
     val p = plan("tpch_q21")
@@ -248,13 +247,13 @@ class PlanShapeSpec extends SparkSpec {
       s"pair aggregate regressed to a multi-countDistinct Expand:\n${p.take(800)}")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"correlated join fell off the equi path:\n${p.take(800)}")
-    // the SCALE property this rebuild bought (one fewer fact pass): at
-    // most 2 lineitem scans — the sf0.1 exchange count is an accident of
-    // broadcast thresholds, the scan count is structural (VERDICT r16 #1)
+    // the SCALE property: exactly one lineitem scan — the sf0.1 exchange
+    // count is an accident of broadcast thresholds, the scan count is
+    // structural
     val lineitemScans = p.linesIterator.count(ln =>
       ln.contains("FileScan parquet") && ln.contains("lineitem"))
-    assert(lineitemScans <= 2,
-      s"q21 regressed to $lineitemScans lineitem scans (max 2):\n${p.take(800)}")
+    assert(lineitemScans == 1,
+      s"q21 regressed to $lineitemScans lineitem scans (want 1):\n${p.take(800)}")
   }
 
   test("q19's OR-of-ANDs predicate keeps the partkey equi-join") {

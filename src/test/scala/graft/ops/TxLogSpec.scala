@@ -2340,4 +2340,23 @@ class TxLogSpec extends SparkSpec {
     TxLog.compact(spark, t)
     assert(TxLog.tableMinMaxString(t, "name") === Some(("kiwi", "pear")))
   }
+
+  test("a table with no recorded schema whose first segment is the narrow one reads every column") {
+    val t = freshTable()
+    TxLog.append(Seq((1L, 10L), (2L, 20L)).toDF("k", "v"), t)
+    // no recorded schema, so the wider append is not checked against one
+    TxLog.append(Seq((3L, 30L, "c"), (4L, 40L, "d")).toDF("k", "v", "tag"), t)
+    assert(TxLog.recordedSchema(t).isEmpty)
+    assert(spark.read.parquet(TxLog.liveFiles(t).head).columns.toSeq == Seq("k", "v"))
+    def read = {
+      val df = TxLog.snapshot(spark, t)
+      assert(df.columns.toSeq == Seq("k", "v", "tag"))
+      df.orderBy("k").as[(Long, Long, Option[String])].collect().toSeq
+    }
+    assert(read == Seq((1L, 10L, None), (2L, 20L, None), (3L, 30L, Some("c")), (4L, 40L, Some("d"))))
+    // the deletion-vector path reads with row coordinates, under the same schema
+    TxLog.deleteWhere(spark, t, $"tag" === "c")
+    assert(TxLog.tableState(t).dv.nonEmpty, "the delete must land as deletion-vector marks")
+    assert(read == Seq((1L, 10L, None), (2L, 20L, None), (4L, 40L, Some("d"))))
+  }
 }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.SparkSpec
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.command.DataWritingCommand
@@ -245,6 +246,37 @@ class LakeSpec extends SparkSpec {
     val expected = rows(distinct)
     assert(expected.size == 4 && expected.count(_.contains("initech")) == 1, expected)
     assert(rows(dup) == expected)
+  }
+
+  test("each lake input reads under the schema Spark infers") {
+    val in = fixtures.toString
+    val header = Map("header" -> "true")
+    Seq("refugee_and_migrant_data/*.csv", "climate_data/*.csv",
+      "legal_immigrant_data/h1b_kaggle.csv",
+      "legal_immigrant_data/H-1B_Disclosure_Data_FY17.csv").map(f => s"$in/$f").foreach { p =>
+      assert(GraftSqlBridge.csvHeaderSchema(spark, p, header) ==
+        spark.read.options(header).csv(p).schema, p)
+    }
+    val sas = s"$in/i94_visitor_data/sas_data"
+    assert(GraftSqlBridge.parquetSchema(spark, sas) == spark.read.parquet(sas).schema)
+  }
+
+  test("building the parse plans runs no csv or parquet inference job") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(e.stageInfos.map(_.name).mkString(","))
+    }
+    org.apache.spark.graftbench.ListenerDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      Seq(Pipelines.parseAsylum _, Pipelines.parseClimate _, Pipelines.parseVisitor _,
+        Pipelines.parseWorker _).foreach(parse => parse(spark, fixtures.toString))
+      org.apache.spark.graftbench.ListenerDrain.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    val inference = jobs.asScala.filter(j => j.startsWith("csv at") || j.startsWith("parquet at"))
+    assert(inference.isEmpty, s"inference jobs: $inference (all jobs: $jobs)")
   }
 
   test("the build runs under the caller's job group and leaves no thread behind") {
